@@ -2118,7 +2118,7 @@ _ORACLE["pack_sequences"] = """
                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS goff
       FROM t
     )
-    SELECT doc_id, tokens, goff AS global_offset,
+    SELECT doc_id, tokens, goff::BIGINT AS global_offset,
            (goff // 1024)::BIGINT AS seq_id,
            (goff % 1024)::BIGINT AS offset_in_seq
     FROM o ORDER BY doc_id

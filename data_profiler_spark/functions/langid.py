@@ -13,7 +13,6 @@ UDF budget (model inference cannot be expressed as built-ins).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -38,13 +37,3 @@ def langid_udf(texts: pd.Series) -> pd.DataFrame:
 def log_perplexity_udf(texts: pd.Series) -> pd.Series:
     model = perplexity_model()
     return pd.Series(model.log_perplexity_batch(texts.fillna("").tolist()))
-
-
-def with_langid(df, text_col: str = "text"):
-    return df.withColumn("_lid", langid_udf(F.col(text_col))).select(
-        "*", F.col("_lid.lang_pred").alias("lang_pred"), F.col("_lid.margin").alias("lang_margin")
-    ).drop("_lid")
-
-
-def log_perplexity(text_col: str = "text") -> Column:
-    return log_perplexity_udf(F.col(text_col))

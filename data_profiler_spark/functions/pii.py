@@ -67,8 +67,3 @@ def pii_counts_expr(c: Column) -> Column:
         fields.append(F.regexp_count(cur, F.lit(pattern)).alias(name))
         cur = F.regexp_replace(cur, pattern, repl)
     return F.struct(*fields)
-
-
-def with_scrubbed(df, text_col: str = "text", out_col: str = "scrubbed_text"):
-    c = F.col(text_col)
-    return df.withColumn(out_col, scrub_expr(c)).withColumn("pii_counts", pii_counts_expr(c))

@@ -74,8 +74,8 @@ _DOC_CHUNK = 2048  # bounds the (chunk × dim) dense matrix to ~32 MB
 
 
 def doc_matrix(texts: list[str], dim: int = LANGID_DIM) -> np.ndarray:
-    """(N, dim) L2-normalized hashed-trigram matrix — the batch-vectorized
-    twin of ``doc_vector`` (identical rows; empty docs stay zero)."""
+    """(N, dim) L2-normalized hashed-trigram matrix, one row per text
+    (empty docs stay zero)."""
     N = len(texts)
     M = np.zeros((N, dim), dtype=np.float64)
     for lo in range(0, N, _DOC_CHUNK):
@@ -87,14 +87,6 @@ def doc_matrix(texts: list[str], dim: int = LANGID_DIM) -> np.ndarray:
     norms = np.linalg.norm(M, axis=1)
     norms[norms == 0] = 1.0
     return M / norms[:, None]
-
-
-def doc_vector(text: str) -> np.ndarray:
-    """L2-normalized hashed-trigram count vector (single-doc form)."""
-    buckets = _ngram_buckets(text, 3, LANGID_DIM)
-    v = np.bincount(buckets, minlength=LANGID_DIM).astype(np.float64)
-    norm = np.linalg.norm(v)
-    return v / norm if norm > 0 else v
 
 
 @dataclass

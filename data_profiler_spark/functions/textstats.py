@@ -101,14 +101,6 @@ def signals_from_parts(c: Column, words: Column, lines: Column) -> Column:
     )
 
 
-def signals_expr(text_col: str = "text") -> Column:
-    """Single-Column form of the signal struct (inline words/lines trees —
-    convenient for ad-hoc use; plans should prefer :func:`with_signals`,
-    which materializes the shared arrays first)."""
-    c = F.col(text_col)
-    return signals_from_parts(c, words_expr(c), lines_expr(c))
-
-
 def with_signals(df: DataFrame, text_col: str = "text", out: str = "signals") -> DataFrame:
     """Tree-size-friendly path: words/lines land in their own projection
     (multi-referenced expensive aliases survive CollapseProject), signals

@@ -9,8 +9,8 @@ the same call sites go through this thin seam:
   catalog implementation at runtime.
 * ``write_partitioned(df, target, partition_cols, mode)`` — ``writeTo``
   (Iceberg, transactional snapshot per call) when the target is a catalog
-  table, ``DataFrameWriter.parquet`` with dynamic partition overwrite
-  otherwise (idempotent per-partition replace — the closest
+  table, ``DataFrameWriter.parquet`` (zstd) with dynamic partition
+  overwrite otherwise (idempotent per-partition replace — the closest
   filesystem-level analog of an Iceberg overwrite snapshot).
 * ``snapshot_history(spark, target)`` — Iceberg ``.snapshots`` metadata
   table when available; the run-manifest JSON otherwise (the pipeline
@@ -27,6 +27,12 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+# Codec of the parquet fallback: Iceberg's default Parquet codec, so the
+# sandbox writes what the table target writes. Set on this writer only; a
+# session-wide spark.sql.parquet.compression.codec would also change every
+# other parquet the engine writes.
+PARQUET_CODEC = "zstd"
 
 
 def iceberg_available(spark: SparkSession, catalog: str = "spark_catalog") -> bool:
@@ -66,6 +72,7 @@ def write_partitioned(
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     (
         df.write.mode("overwrite" if mode != "append" else "append")
+        .option("compression", PARQUET_CODEC)
         .partitionBy(*partition_cols)
         .parquet(target)
     )

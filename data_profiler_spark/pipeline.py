@@ -5,7 +5,8 @@ becomes one declarative DataFrame DAG per batch:
 
     pages → signals (JVM expressions) → langid + perplexity (pandas UDFs)
           → PII scrub + counts (JVM regex chain) → keep/drop decision
-          → partitioned write + per-batch metrics + manifest commit
+          → output contract (raw text/html dropped) → partitioned zstd write
+          → per-batch metrics + manifest commit
 
 Scoring is a single narrow map stage — zero shuffles; Catalyst fuses all
 expression work into one whole-stage-codegen span around the two Arrow
@@ -62,6 +63,12 @@ REQUIRED_INPUT_COLUMNS = ("url", "warc_ts", "text", "lang")
 # partition; an explicit sentinel keeps such rows first-class.
 NULL_MONTH = "unknown"
 
+# The output contract: a run writes keep/drop decisions plus scrubbed text,
+# i.e. score_pages output minus the raw payload columns. The unscrubbed
+# text and html are the PII the scrubber exists to remove, and most of the
+# bytes a run would otherwise write (BASELINE.md "Output contract").
+RAW_PAYLOAD_COLUMNS = ("text", "html")
+
 
 def url_salt(n_buckets: int = SALT_BUCKETS):
     """Salted partition key: pmod(xxhash64(url), n) — spreads hot hosts
@@ -97,12 +104,21 @@ def score_pages(df: DataFrame, keep_langs: tuple[str, ...] = rules.KEEP_LANGS) -
     )
 
 
+def output_contract(scored: DataFrame) -> DataFrame:
+    """The columns a run writes: ``scored`` minus :data:`RAW_PAYLOAD_COLUMNS`
+    (absent ones are ignored). The batch writer and the streaming
+    foreachBatch writer both apply it; ``score_pages`` itself still
+    returns ``text``."""
+    return scored.drop(*RAW_PAYLOAD_COLUMNS)
+
+
 def _metric_exprs() -> list:
     """Profiler-style exact metric expressions — row counts, keep counts,
-    null rates, score histogram (north rule 'per-partition lineage +
-    profiler-style exact metrics'). Used twice: as an ``observe()`` on the
-    write pass (run totals, zero extra scans) and as a ``groupBy(month)``
-    agg over the written output (per-month manifest entries)."""
+    null rates, score histogram and one drop count per ``rules.RULE_ORDER``
+    code (north rule 'per-partition lineage + profiler-style exact
+    metrics'). Aggregated by ``groupBy(month)`` over the written output, so
+    they read only :func:`output_contract` columns (per-month manifest
+    entries)."""
     ppl = F.col("log_ppl")
     bins = [
         F.sum(
@@ -113,9 +129,14 @@ def _metric_exprs() -> list:
     return [
         F.count(F.lit(1)).alias("rows"),
         F.sum(F.col("keep").cast("long")).alias("kept"),
-        F.sum(F.col("text").isNull().cast("long")).alias("null_text"),
+        # the scrub preserves nulls, so this is the raw text's null count
+        F.sum(F.col("scrubbed_text").isNull().cast("long")).alias("null_text"),
         F.sum((F.col("lang_pred") != F.col("lang")).cast("long")).alias("langid_disagree"),
         *bins,
+        *[
+            F.sum(F.array_contains("drop_reasons", code).cast("long")).alias(f"drop_{code}")
+            for code in rules.RULE_ORDER
+        ],
     ]
 
 
@@ -366,9 +387,11 @@ class QualityFilterPipeline:
         t0 = time.time()
         self._stage_start(manifest, "score_write")
         # the observation rides the write scan: months actually written this
-        # run + the input content fingerprint, at zero extra passes
+        # run + the input content fingerprint, at zero extra passes. It sees
+        # the raw text; output_contract drops text/html above it, before the
+        # salted shuffle, so neither is shuffled or written.
         obs = Observation()  # auto-named: unique per run() invocation
-        scored = (
+        scored = output_contract(
             score_pages(batch, self.keep_langs)
             .withColumn("month", month)
             .withColumn("salt", url_salt(self._resolve_salt(batch, audit, run_id)))

@@ -13,8 +13,9 @@ What streaming adds on top:
   windows + watermark bound the state store; at 10^12 docs/day the state is
   windows × langs, not documents.
 * **foreachBatch sink** — each micro-batch reuses the batch writer
-  (salted repartition + partitioned parquet), so exactly-once-per-batch
-  file output and the batch pipeline's layout guarantees carry over.
+  (output contract + salted repartition + zstd parquet), so
+  exactly-once-per-batch file output and the batch pipeline's layout
+  guarantees carry over.
 """
 
 from __future__ import annotations
@@ -22,7 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..pipeline import score_pages, url_salt
+from ..io.catalog import PARQUET_CODEC
+from ..pipeline import output_contract, score_pages, url_salt
 
 
 def score_stream(stream_df: DataFrame) -> DataFrame:
@@ -70,11 +72,12 @@ def start_scoring_stream(
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         (
-            score_pages(batch_df)
+            output_contract(score_pages(batch_df))
             .withColumn("salt", url_salt(salt_buckets))
             .repartition(F.col("salt"))
             .drop("salt")
             .write.mode("append")
+            .option("compression", PARQUET_CODEC)
             .parquet(output_path)
         )
 

@@ -85,6 +85,19 @@ def test_run_write_and_resume(pages, tmp_path):
     assert "keep" in written.columns and "scrubbed_text" in written.columns
     # partitioned by month on disk
     assert any(d.startswith("month=") for d in os.listdir(os.path.join(out, "data")))
+    # per-rule drop counts: each month's manifest count equals the count
+    # recomputed from the drop_reasons that were written for that month
+    from collections import Counter
+
+    from data_profiler_spark.rules import RULE_ORDER
+
+    want: dict[str, Counter] = {}
+    for r in written.select("month", "drop_reasons").collect():
+        want.setdefault(r["month"], Counter()).update(r["drop_reasons"])
+    assert sum(sum(c.values()) for c in want.values()) > 0
+    for b in res1.batches:
+        got = {code: b["metrics"][f"drop_{code}"] for code in RULE_ORDER}
+        assert got == {code: want[b["month"]][code] for code in RULE_ORDER}, b["month"]
 
     # resume: all batches skipped, nothing rewritten
     res2 = pipe.run(pages, run_id="r1")
@@ -99,6 +112,44 @@ def test_run_write_and_resume(pages, tmp_path):
     res3 = pipe.run(pages, run_id="r1")
     assert len(res3.batches) == 1
     assert pages.sparkSession.read.parquet(os.path.join(out, "data")).count() == pages.count()
+
+
+def test_written_rows_hold_no_raw_payload(pages, tmp_path):
+    """The output contract: batch and stream writers drop the raw text and
+    html, so none of the input's email or SSN strings reach disk."""
+    import re
+
+    import pyarrow.parquet as pq
+
+    from data_profiler_spark.functions.pii import PATTERNS
+    from data_profiler_spark.streaming.scoring import start_scoring_stream
+
+    spark = pages.sparkSession
+    src = str(tmp_path / "src")
+    pages.filter(F.col("warc_ts") < F.lit("2023-04-01")).write.parquet(src)
+    regexes = [re.compile(p) for name, p, _ in PATTERNS if name in ("email", "ssn")]
+    raw = {
+        m.group(0)
+        for (text,) in spark.read.parquet(src).select("text").collect()
+        for rx in regexes
+        for m in rx.finditer(text or "")
+    }
+    assert raw, "fixture slice holds no email/SSN to look for"
+
+    QualityFilterPipeline(spark, str(tmp_path / "batch")).run(
+        spark.read.parquet(src), run_id="c1"
+    )
+    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+    q = start_scoring_stream(stream, str(tmp_path / "stream"), str(tmp_path / "ckpt"))
+    q.awaitTermination(300)
+
+    for out in (tmp_path / "batch" / "data", tmp_path / "stream"):
+        table = pq.read_table(out)
+        assert not {"text", "html"} & set(table.column_names), out
+        assert "scrubbed_text" in table.column_names
+        dumped = str(table.to_pylist())
+        leaked = sum(v in dumped for v in raw)
+        assert not leaked, f"{out}: {leaked} raw email/SSN strings written"
 
 
 def test_stage_progress_audit_and_crash_resume(pages, tmp_path):

@@ -120,10 +120,11 @@ def test_stream_batch_scoring_parity(spark, pages_dir, tmp_path):
     identical to the batch path on the same fixture — structural greenness
     (row counts, columns) doesn't rule out the foreachBatch lift changing
     a value (e.g. a salt column leaking, a UDF seeing different batch
-    shapes). exceptAll in both directions over every column, including
-    the model scores, which must be per-row deterministic regardless of
+    shapes). exceptAll in both directions over every written column (the
+    batch side goes through the same output contract), including the
+    model scores, which must be per-row deterministic regardless of
     partitioning."""
-    from data_profiler_spark.pipeline import score_pages
+    from data_profiler_spark.pipeline import output_contract, score_pages
 
     out = str(tmp_path / "parity_out")
     ckpt = str(tmp_path / "parity_ckpt")
@@ -133,7 +134,7 @@ def test_stream_batch_scoring_parity(spark, pages_dir, tmp_path):
     q.awaitTermination(300)
 
     streamed = spark.read.parquet(out)
-    batch = score_pages(spark.read.parquet(pages_dir))
+    batch = output_contract(score_pages(spark.read.parquet(pages_dir)))
     assert sorted(streamed.columns) == sorted(batch.columns)
     cols = sorted(batch.columns)
     assert streamed.select(cols).exceptAll(batch.select(cols)).count() == 0
