@@ -431,17 +431,13 @@ def q_ngram_jaccard_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the exact near-dup pair graph (J >= 0.8):
     (doc_id, group_id=min id of component) — oracle is a DuckDB recursive
-    transitive closure over the same pairs. Runs the pointer-jumping
-    engine explicitly so the driver oracle-checks that path; the
-    large-star/small-star engine (the library default since its measured
-    across-the-board win — see near_dup_components docstring) is
-    oracle-checked through near_dup_keep and value-compared against jump
-    in tests/test_dedup_similarity.py."""
+    transitive closure over the same pairs. Runs the large-star/small-star
+    engine, the only one near_dup_components has."""
     from data_profiler_spark.operators import dedup
 
     df = _t(spark, sf_dir, "documents")
     pairs = dedup.ngram_jaccard_pairs(df, "doc_id", "text", threshold=0.8, max_shingle_df=None)
-    return dedup.near_dup_components(pairs, method="jump").orderBy("doc_id")
+    return dedup.near_dup_components(pairs).orderBy("doc_id")
 
 
 def q_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -517,8 +513,9 @@ def q_shingle_df_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_near_dup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end dedup keep list: exact Jaccard pairs → connected
-    components (pointer-jumping min-label) → drop non-representative
-    members. The oracle recomputes the closure recursively in DuckDB."""
+    components (large-star/small-star, group = min id) → drop
+    non-representative members. The oracle recomputes the closure
+    recursively in DuckDB."""
     from data_profiler_spark.operators import dedup
 
     df = _t(spark, sf_dir, "documents")

@@ -14,10 +14,11 @@ Design for 10^12 documents:
   num_bands × docs) → candidate pairs → exact-Jaccard verification on the
   candidates only. Cost is O(docs × bands + candidate_pairs), never
   O(docs²).
-* **SimHash** — banded Hamming join. With ``bits`` split into ``bands``
-  equal slices, any pair with Hamming distance < ``bands`` shares at least
-  one identical slice (pigeonhole), so the banded join is **lossless** for
-  ``max_hamming <= bands - 1`` — exact result, join-shaped cost.
+* **SimHash** — banded Hamming join. With the 64-bit signature split into
+  ``SIMHASH_PAIR_BANDS`` equal slices, any pair with Hamming distance <
+  that band count shares at least one identical slice (pigeonhole), so the
+  banded join is **lossless** for ``max_hamming <= bands - 1`` — exact
+  result, join-shaped cost.
 * **n-gram Jaccard (exact all-pairs)** — inverted-index join on shingle
   (explode → self-join → distinct pairs → verify). Exact for any
   threshold > 0 since J(a,b) > 0 requires a shared shingle. At web scale,
@@ -32,20 +33,19 @@ and the same computation is expressible in any ANSI engine (the DuckDB
 oracle runs the identical scheme). ``hash_fn="xxhash64"`` switches to
 numeric 64-bit minhashes — the production configuration (cheaper per
 shingle, JVM-native, not oracle-expressible; candidate quality is the same
-S-curve, verified in tests against the exact join). SimHash bit *i* of a
-token is the high bit of hex char *i* of its md5.
+S-curve, verified in tests against the exact join). :func:`simhash_pairs`
+hashes tokens with xxhash64 (bit *i* of a token's signature vote is bit *i*
+of its hash); md5 appears in SimHash only for the oracle-checked 16-bit
+signature (:func:`simhash_from_hashes`), where bit *i* is the high bit of
+hex char *i* of the token's md5.
 """
 
 from __future__ import annotations
-
-import logging
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from data_profiler_spark.operators.checkpoints import materialize
-
-_LOG = logging.getLogger(__name__)
 
 _WS = "[ \\t\\n\\x0B\\f\\r]+"
 
@@ -200,39 +200,6 @@ def _verify_pairs(cand: DataFrame, sets: DataFrame, id_col: str, threshold: floa
 
 DEFAULT_MAX_BAND_DF = 10_000
 
-# Hot-bucket lists bigger than this are joined with a plain shuffle join
-# instead of a forced broadcast: the list's cardinality is bounded only by
-# n_docs * num_bands / max_band_df, which at the 10^12-doc scale the cap
-# defends can reach millions of rows — a forced F.broadcast there bypasses
-# autoBroadcastJoinThreshold and OOMs the driver in the exact regime the
-# guardrail exists for. 1M rows of (int, 32-char key, long) ≈ 60 MB
-# broadcast — the sane ceiling for executor-memory-resident build sides.
-HOT_BROADCAST_MAX_BUCKETS = 1_000_000
-
-
-def _band_occupancy_aggs(bdf_col: str, cap: int | None) -> list[Column]:
-    """The band-bucket occupancy aggregate columns shared by
-    :func:`band_df_report` and ``minhash_lsh_pairs(precheck=True)``:
-    bucket totals, hot-bucket count, and the uncapped-vs-capped candidate
-    mass. C(df,2) is carried in decimal(38,0), not long: one 10^10-doc
-    duplicate family gives ~5e19 uncapped candidates > 2^63 — the exact
-    detonation case the report exists to expose would overflow (ANSI
-    exception, or a silent negative with ANSI off). Decimal keeps the
-    count exact to 10^38; the product is even so the /2 is exact integer
-    division."""
-    cap_lit = F.lit(cap if cap is not None else 2**62)
-    bdf_dec = F.col(bdf_col).cast("decimal(38,0)")
-    pairwise = (bdf_dec * (bdf_dec - F.lit(1)) / F.lit(2)).cast("decimal(38,0)")
-    return [
-        F.count(F.lit(1)).alias("total_buckets"),
-        F.sum((F.col(bdf_col) > cap_lit).cast("long")).alias("hot_buckets"),
-        F.max(bdf_col).alias("max_bucket_docs"),
-        F.sum(pairwise).cast("decimal(38,0)").alias("uncapped_candidates"),
-        F.sum(F.when(F.col(bdf_col) > cap_lit, bdf_dec - F.lit(1)).otherwise(pairwise))
-        .cast("decimal(38,0)")
-        .alias("capped_candidates"),
-    ]
-
 
 def minhash_lsh_pairs(
     df: DataFrame,
@@ -245,9 +212,6 @@ def minhash_lsh_pairs(
     union_exact_candidates: bool = False,
     hash_fn: str = "md5",
     max_band_df: int | None = DEFAULT_MAX_BAND_DF,
-    precheck: bool = False,
-    audit=None,
-    run_id: str = "adhoc",
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash+LSH, verified with exact Jaccard.
 
@@ -305,22 +269,6 @@ def minhash_lsh_pairs(
     data-dependent build side (zero hot buckets ⇒ an empty build side
     that AQE broadcast-converts, every row unmarked, result identical to
     skipping the join).
-
-    ``precheck=True`` is the eager, OBSERVABLE mode — by definition
-    "measure before you pay": one guard job over the checkpointed bands
-    (the minhash is not recomputed) carries the full
-    :func:`band_df_report` occupancy aggregate; hot-bucket count, max
-    bucket size, and predicted uncapped-vs-capped candidate mass are
-    logged and — when an :class:`~data_profiler_spark.io.audit.AuditLog`
-    is passed via ``audit=``/``run_id=`` — appended to the run's audit
-    JSONL as an ``lsh_band_precheck`` event (counts only, PII-free), so
-    "what did the guardrail change" is answerable from the run artifacts
-    alone. The counted size also certifies ``hot == 0`` plans as exactly
-    the uncapped plan (marking join elided) and bounds the hot-list
-    broadcast at :data:`HOT_BROADCAST_MAX_BUCKETS` rows — beyond that it
-    falls back to a plain shuffle join (AQE splits any skewed probe
-    partitions) instead of forcing an unbounded broadcast past
-    ``autoBroadcastJoinThreshold``.
     """
     sets = _shingle_sets(df, id_col, text_col, shingle)
     # Two-step projection (shingles → signature → bands) so each band key
@@ -360,61 +308,14 @@ def minhash_lsh_pairs(
             F.count(F.lit(1)).alias("_bdf"), F.min("_id").alias("_rep")
         )
         hot = freq.filter(F.col("_bdf") > max_band_df).select("band_id", "key", "_rep")
-        build = hot
-        apply_marking = True
-        if precheck:
-            # The ONE mode that runs a job at build time — precheck is by
-            # definition "measure before you pay": the guard agg (over the
-            # checkpointed bands, so the minhash is not recomputed) carries
-            # the full occupancy report, certifies hot==0 plans as exactly
-            # the uncapped plan, and bounds the hot-list broadcast by a
-            # counted size instead of trusting AQE.
-            stats = freq.agg(*_band_occupancy_aggs("_bdf", max_band_df)).collect()[0]
-            hot_n = int(stats["hot_buckets"] or 0)
-            event = {
-                "max_band_df": max_band_df,
-                "total_buckets": int(stats["total_buckets"]),
-                "hot_buckets": hot_n,
-                "max_bucket_docs": int(stats["max_bucket_docs"] or 0),
-                "uncapped_candidates": str(stats["uncapped_candidates"] or 0),
-                "capped_candidates": str(stats["capped_candidates"] or 0),
-            }
-            if audit is not None:
-                audit.event("lsh_band_precheck", run_id, **event)
-            if hot_n:
-                _LOG.warning(
-                    "minhash_lsh_pairs: %d band buckets exceed max_band_df=%d "
-                    "(max bucket %d docs) — routing them through star edges; "
-                    "candidate mass %s -> %s",
-                    hot_n,
-                    max_band_df,
-                    event["max_bucket_docs"],
-                    event["uncapped_candidates"],
-                    event["capped_candidates"],
-                )
-            # Bounded broadcast: forcing an arbitrarily large hot list past
-            # autoBroadcastJoinThreshold would OOM in the exact regime the
-            # cap defends; past the bound, a plain shuffle join (hot
-            # partitions linear in bucket size, AQE-splittable) is correct.
-            apply_marking = hot_n > 0
-            if hot_n and hot_n <= HOT_BROADCAST_MAX_BUCKETS:
-                build = F.broadcast(hot)
-        # Without precheck the guard stays LAZY: plan construction runs no
-        # Spark job (explain()/plan inspection stays free, and building the
-        # DataFrame without executing it costs nothing). The marking join is
-        # always in the plan — with zero hot buckets its build side is
-        # empty, AQE broadcast-converts it at runtime, and the left-join
-        # leaves every row unmarked, so the result is identical to the
-        # certified skip. Runtime statistics (AQE), not a forced hint,
-        # decide broadcast-vs-shuffle for the data-dependent hot list.
-        if apply_marking:
-            marked = melted.join(build, ["band_id", "key"], "left")
-            star = (
-                marked.filter(F.col("_rep").isNotNull() & (F.col("_id") != F.col("_rep")))
-                # _rep is the bucket min ⇒ id1 < id2 holds by construction
-                .select(F.col("_rep").alias("id1"), F.col("_id").alias("id2"))
-            )
-            melted = marked.filter(F.col("_rep").isNull()).select("_id", "band_id", "key")
+        # lazy guard (see docstring): no broadcast hint, AQE decides
+        marked = melted.join(hot, ["band_id", "key"], "left")
+        star = (
+            marked.filter(F.col("_rep").isNotNull() & (F.col("_id") != F.col("_rep")))
+            # _rep is the bucket min ⇒ id1 < id2 holds by construction
+            .select(F.col("_rep").alias("id1"), F.col("_id").alias("id2"))
+        )
+        melted = marked.filter(F.col("_rep").isNull()).select("_id", "band_id", "key")
     a = melted.select(F.col("_id").alias("id1"), "band_id", "key")
     b = melted.select(F.col("_id").alias("id2"), "band_id", "key")
     cand = a.join(b, ["band_id", "key"]).filter(F.col("id1") < F.col("id2")).select("id1", "id2")
@@ -463,7 +364,23 @@ def band_df_report(
     )
     melted = bands.select("_id", F.posexplode_outer("_bands").alias("band_id", "key"))
     freq = melted.groupBy("band_id", "key").agg(F.count(F.lit(1)).alias("bdf"))
-    return freq.agg(*_band_occupancy_aggs("bdf", max_band_df))
+    # C(df,2) is carried in decimal(38,0), not long: one 10^10-doc duplicate
+    # family gives ~5e19 uncapped candidates > 2^63 — the exact detonation
+    # case the report exists to expose would overflow (ANSI exception, or a
+    # silent negative with ANSI off). Decimal keeps the count exact to
+    # 10^38; the product is even so the /2 is exact integer division.
+    cap = F.lit(max_band_df if max_band_df is not None else 2**62)
+    bdf_dec = F.col("bdf").cast("decimal(38,0)")
+    pairwise = (bdf_dec * (bdf_dec - F.lit(1)) / F.lit(2)).cast("decimal(38,0)")
+    return freq.agg(
+        F.count(F.lit(1)).alias("total_buckets"),
+        F.sum((F.col("bdf") > cap).cast("long")).alias("hot_buckets"),
+        F.max("bdf").alias("max_bucket_docs"),
+        F.sum(pairwise).cast("decimal(38,0)").alias("uncapped_candidates"),
+        F.sum(F.when(F.col("bdf") > cap, bdf_dec - F.lit(1)).otherwise(pairwise))
+        .cast("decimal(38,0)")
+        .alias("capped_candidates"),
+    )
 
 
 DEFAULT_MAX_SHINGLE_DF = 10_000
@@ -609,57 +526,19 @@ SIMHASH_BITS = 16
 _HI_HEX = ("8", "9", "a", "b", "c", "d", "e", "f")
 
 
-def simhash_from_tokens(toks: Column, bits: int = SIMHASH_BITS) -> Column:
-    """SimHash from a (materialized) distinct-token array column. Pass an
-    attribute reference, not an inline expression — the ``bits`` vote
-    expressions each reference the array, and an inline tree would be
-    duplicated ``bits`` times in codegen.
-
-    NOTE: each vote bit recomputes ``md5(t)`` over the array (codegen
-    does NOT common-subexpression-eliminate the per-bit lambdas —
-    measured 2.4× on the 64-bit variant). Plan-building call sites should
-    materialize ``transform(toks, md5)`` as its own projection and use
-    :func:`simhash_from_hashes`; this expression form stays for
-    single-expression contexts and the oracle fixture."""
-    n = F.size(toks)
-    votes = [
-        F.size(F.filter(toks, lambda t: F.substring(F.md5(t), i + 1, 1).isin(*_HI_HEX)))
-        for i in range(bits)
-    ]
-    return F.concat(*[F.when(v * 2 > n, F.lit("1")).otherwise(F.lit("0")) for v in votes])
-
-
 def simhash_from_hashes(hx: Column, n: Column, bits: int = SIMHASH_BITS) -> Column:
-    """SimHash bit string from a MATERIALIZED array of md5-hex token
-    hashes (``transform(toks, md5)`` aliased in a prior projection) and
-    the token count. Hashing runs once per token instead of once per
-    (token, bit) — same result as :func:`simhash_from_tokens`."""
+    """SimHash as a ``bits``-char '0'/'1' string from a MATERIALIZED array
+    of md5-hex token hashes (``transform(toks, md5)`` aliased in a prior
+    projection) and the token count: bit *i* = majority vote over tokens
+    of the high bit of hex char *i*. Hashing runs once per token instead
+    of once per (token, bit). This md5-string form exists for the
+    oracle-checked ``simhash_signatures`` query; :func:`simhash_pairs`
+    uses the packed xxhash64 signature."""
     votes = [
         F.size(F.filter(hx, lambda h: F.substring(h, i + 1, 1).isin(*_HI_HEX)))
         for i in range(bits)
     ]
     return F.concat(*[F.when(v * 2 > n, F.lit("1")).otherwise(F.lit("0")) for v in votes])
-
-
-def simhash_expr(c: Column, bits: int = SIMHASH_BITS) -> Column:
-    """SimHash over distinct tokens as a ``bits``-char '0'/'1' string.
-
-    Bit i = majority vote over tokens of (high bit of hex char i of
-    md5(token)). A string representation keeps the computation expressible
-    in any engine; at production scale the same votes pack into a long via
-    ``conv``. 16 bits suffice for banded Hamming-<=3 joins; widen ``bits``
-    (md5 yields 128) for finer granularity. Prefer materializing the token
-    array and calling :func:`simhash_from_tokens` in plans (tree size).
-    """
-    return simhash_from_tokens(F.array_distinct(tokens_expr(c)), bits)
-
-
-def hamming_expr(a: Column, b: Column, bits: int = SIMHASH_BITS) -> Column:
-    """Hamming distance between two equal-length bit strings."""
-    out = F.lit(0)
-    for i in range(bits):
-        out = out + (F.substring(a, i + 1, 1) != F.substring(b, i + 1, 1)).cast("int")
-    return out
 
 
 SIMHASH_PAIR_BITS = 64
@@ -704,30 +583,25 @@ def simhash_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    bits: int = SIMHASH_PAIR_BITS,
-    bands: int = SIMHASH_PAIR_BANDS,
     max_hamming: int = 3,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Near-dup pairs with simhash Hamming distance <= max_hamming.
 
-    Banded join: ``bands`` equal slices of the signature; a pair within
-    ``max_hamming <= bands - 1`` differing bits must agree on >= 1 whole
-    slice (pigeonhole) — candidate generation is LOSSLESS, so the result
-    equals the brute-force O(n^2) scan at join cost.
+    Banded join: ``SIMHASH_PAIR_BANDS`` equal slices of the signature; a
+    pair within ``max_hamming <= bands - 1`` differing bits must agree on
+    >= 1 whole slice (pigeonhole) — candidate generation is LOSSLESS, so
+    the result equals the brute-force O(n^2) scan at join cost.
 
-    The default is the SCALE configuration: 64-bit packed-long signatures
-    (:func:`simhash64_from_tokens`), 8 bands of 8 bits — each band key
-    ranges over 2^8 values so a corpus of n docs self-joins ~n²/(2·2^8)
-    per band WHEN signatures are uniform, vs the 16-bit/4-band legacy
-    config whose 4-bit band keys (16 values) put ~n/16 of the corpus in
-    every bucket (~n²/64 joined rows at ANY corpus size — the
-    fixture-tuned default round 2 flagged). Band keys and the Hamming
-    verdict are pure long arithmetic (``shiftright``/``bit_count``), no
-    strings. ``hash_fn='md5'`` keeps the legacy string-signature path
-    (ANSI-expressible, used by the oracle fixture at ``bits=16``)."""
+    Signatures are 64-bit packed longs (:func:`simhash64_from_hashes`
+    over xxhash64 token hashes), 8 bands of 8 bits — each band key ranges
+    over 2^8 values so a corpus of n docs self-joins ~n²/(2·2^8) per band
+    WHEN signatures are uniform, vs the ~n²/64 joined rows at ANY corpus
+    size that 4-bit band keys (16 values) would give. Band keys and the
+    Hamming verdict are pure long arithmetic (``shiftright``/``bit_count``),
+    no strings."""
+    bands = SIMHASH_PAIR_BANDS
     assert max_hamming <= bands - 1, "banded join only lossless for max_hamming <= bands-1"
-    width = bits // bands
+    width = SIMHASH_PAIR_BITS // bands
     toks = (
         _widen(df)
         .select(
@@ -735,43 +609,24 @@ def simhash_pairs(
             F.array_distinct(tokens_expr(F.col(text_col))).alias("_toks"),
         )
     )
-    if hash_fn == "xxhash64":
-        # materialize the token-hash array: the 64 vote filters otherwise
-        # each re-hash every token (no codegen CSE; measured 2.4×)
-        hashed = toks.select(
-            "_id",
-            F.transform("_toks", lambda t: F.xxhash64(t)).alias("_hs"),
-            F.size("_toks").alias("_n"),
-        )
-        sh = hashed.select(
-            "_id", simhash64_from_hashes(F.col("_hs"), F.col("_n"), bits).alias("_sim")
-        )
-        mask = F.lit((1 << width) - 1)
-        band_cols = F.array(
-            *[
-                F.shiftright(F.col("_sim"), b * width)
-                .bitwiseAND(mask)
-                .bitwiseOR(F.lit((b + 1) << width))
-                for b in range(bands)
-            ]
-        )
-        hamming = F.bit_count(F.col("_s1").bitwiseXOR(F.col("_s2")))
-    else:
-        hashed = toks.select(
-            "_id",
-            F.transform("_toks", lambda t: F.md5(t)).alias("_hx"),
-            F.size("_toks").alias("_n"),
-        )
-        sh = hashed.select(
-            "_id", simhash_from_hashes(F.col("_hx"), F.col("_n"), bits).alias("_sim")
-        )
-        band_cols = F.array(
-            *[
-                F.concat(F.lit(f"{b}:"), F.substring("_sim", b * width + 1, width))
-                for b in range(bands)
-            ]
-        )
-        hamming = hamming_expr(F.col("_s1"), F.col("_s2"), bits)
+    # materialize the token-hash array: the 64 vote filters otherwise
+    # each re-hash every token (no codegen CSE; measured 2.4×)
+    hashed = toks.select(
+        "_id",
+        F.transform("_toks", lambda t: F.xxhash64(t)).alias("_hs"),
+        F.size("_toks").alias("_n"),
+    )
+    sh = hashed.select("_id", simhash64_from_hashes(F.col("_hs"), F.col("_n")).alias("_sim"))
+    mask = F.lit((1 << width) - 1)
+    band_cols = F.array(
+        *[
+            F.shiftright(F.col("_sim"), b * width)
+            .bitwiseAND(mask)
+            .bitwiseOR(F.lit((b + 1) << width))
+            for b in range(bands)
+        ]
+    )
+    hamming = F.bit_count(F.col("_s1").bitwiseXOR(F.col("_s2")))
     # explode_outer: see minhash_lsh_pairs — avoids the implicit size()>0
     # pushdown filter that would serialize simhash computation at the scan.
     melted = sh.select("_id", "_sim", F.explode_outer(band_cols).alias("key"))
@@ -799,43 +654,24 @@ def near_dup_components(
     (:func:`minhash_lsh_pairs` etc.) and "keep one representative per
     cluster" that an at-scale dedup pipeline actually executes.
 
-    Two interchangeable engines (identical output — value-equality tested
-    on hand/random/real graphs):
+    Engine: alternating large-star/small-star contraction (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC'14): each round
+    re-points every vertex's strictly-larger neighbors (large-star) then
+    its smaller-or-equal neighbors (small-star) at the neighborhood
+    minimum — two groupBy-min + join rounds over the EDGE set, provably
+    O(log n) rounds on ANY graph. ``method`` accepts only ``"star"``.
 
-    ``method='star'`` (DEFAULT) — alternating large-star/small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14): each round re-points every vertex's
-    strictly-larger neighbors (large-star) then its smaller-or-equal
-    neighbors (small-star) at the neighborhood minimum — two groupBy-min
-    + join rounds over the EDGE set, provably O(log n) rounds on ANY
-    graph. Measured faster-or-equal on EVERY tested shape at the same
-    round count (8 cores): 30k-chain 16.8 s vs jump 25.7 s, 20k star
-    family 1.7 vs 2.2 s, dense cliques tie, 100k-edge adversarial mix
-    (chain+expander+family) 22.8 vs 50.7 s — the per-round work (two
-    groupBys) beats jump's join+groupBy+shortcut everywhere measured,
-    which is why it's the default despite jump's vertex-sized state.
-
-    ``method='jump'`` — min-label propagation WITH pointer jumping: each
-    iteration (a) pushes the smallest known label across edges (join +
-    groupBy-min) and then (b) shortcuts through the label graph —
-    ``label ← label[label]`` — doubling propagation distance per round,
-    so convergence is O(log diameter): a 1000-edge chain closes in ~10
-    rounds (tested). Its working state is the VERTEX-sized label table
-    (star's is edge-sized until contraction shrinks it), which can matter
-    when edges ≫ vertices and executor storage is the binding constraint.
-
-    Both: one driver ``count()``/checksum per round detects convergence
-    (inherent to any fixed-point loop); each round's state is materialized
-    (reliable ``checkpoint`` when a checkpoint dir is configured, else
+    One driver checksum per round detects convergence (inherent to any
+    fixed-point loop); each round's state is materialized (reliable
+    ``checkpoint`` when a checkpoint dir is configured, else
     ``localCheckpoint`` — see ``operators.checkpoints``) so the plan
-    doesn't grow with iterations. Skewed
-    keys (a giant component concentrates its root's key) are absorbed by
-    AQE skew-join splitting (on in session.py).
+    doesn't grow with iterations. Skewed keys (a giant component
+    concentrates its root's key) are absorbed by AQE skew-join splitting
+    (on in session.py).
     """
-    if method == "star":
-        labels, _ = _star_components_with_rounds(pairs, max_iter)
-        return labels
-    labels, _ = _components_with_rounds(pairs, max_iter)
+    if method != "star":
+        raise ValueError(f"near_dup_components: unknown method {method!r} (only 'star')")
+    labels, _ = _star_components_with_rounds(pairs, max_iter)
     return labels
 
 
@@ -915,54 +751,6 @@ def _star_components_with_rounds(
         verts.join(parents, "doc_id", "left").select(
             "doc_id", F.coalesce(F.col("_p"), F.col("doc_id")).alias("group_id")
         ),
-        rounds,
-    )
-
-
-def _components_with_rounds(pairs: DataFrame, max_iter: int = 50) -> tuple[DataFrame, int]:
-    """(components, rounds-to-converge) — see :func:`near_dup_components`."""
-    edges = pairs.select(F.col("id1").alias("a"), F.col("id2").alias("b"))
-    edges = materialize(
-        edges.unionByName(edges.select(F.col("b").alias("a"), F.col("a").alias("b"))),
-        eager=True,
-    )
-    labels = materialize(
-        edges.select(F.col("a").alias("v"))
-        .distinct()
-        .select("v", F.col("v").alias("label")),
-        eager=True,
-    )
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
-        neigh = (
-            edges.join(labels.withColumnRenamed("v", "a"), "a")
-            .groupBy("b")
-            .agg(F.min("label").alias("nl"))
-            .withColumnRenamed("b", "v")
-        )
-        cand = labels.join(neigh, "v", "left").select(
-            "v",
-            F.least(F.col("label"), F.coalesce(F.col("nl"), F.col("label"))).alias("cl"),
-            F.col("label"),
-        )
-        # pointer jumping: cl ← min(cl, label[cl]) — label values are
-        # vertex ids, so one self-join resolves the current label OF the
-        # candidate label, halving the remaining chain every round
-        lk = labels.select(F.col("v").alias("cl"), F.col("label").alias("cll"))
-        updated = cand.join(lk, "cl", "left").select(
-            "v",
-            F.least(F.col("cl"), F.coalesce(F.col("cll"), F.col("cl"))).alias("new_label"),
-            F.col("label"),
-        )
-        changed = updated.filter(F.col("new_label") < F.col("label")).count()
-        labels = materialize(
-            updated.select("v", F.col("new_label").alias("label")), eager=True
-        )
-        if changed == 0:
-            break
-    return (
-        labels.select(F.col("v").alias("doc_id"), F.col("label").alias("group_id")),
         rounds,
     )
 

@@ -243,7 +243,10 @@ class _Handler(BaseHTTPRequestHandler):
         # build the session BEFORE creating the run dir: a session-build
         # failure must not leave an orphan dir that permanently 409s the id
         spark = self.server.spark()
-        os.makedirs(d)
+        try:
+            os.makedirs(d)
+        except FileExistsError:  # a concurrent POST took the id meanwhile
+            return self._error(409, f"Run {run_id} already exists")
         created_at = datetime.now(timezone.utc).isoformat()
 
         def _job():

@@ -133,7 +133,7 @@ def main() -> None:
         pairs = dedup.minhash_lsh_pairs(
             df, "doc_id", "text", hash_fn="xxhash64", threshold=0.8, max_band_df=256
         ).localCheckpoint()  # isolate the components loop from pair generation
-        return dedup.near_dup_components(pairs, method="star").count()
+        return dedup.near_dup_components(pairs).count()
 
     def op_corpus_clean(df, eval_set):
         docs = df.select("doc_id", "url", "text")

@@ -125,11 +125,9 @@ def test_shingle_df_report_quantifies_cap(spark):
 
 def test_simhash_banded_join_is_lossless(spark, docs):
     """Banded simhash join (pigeonhole-lossless for hamming <= bands-1)
-    must equal the brute-force O(n^2) scan — at the PRODUCTION default
-    (packed 64-bit xxhash64 signatures, 8 bands) and at the legacy
-    md5-string oracle config."""
+    must equal the brute-force O(n^2) scan over the packed 64-bit
+    xxhash64 signatures, 8 bands."""
     sub = docs.limit(80).cache()
-    # production default: packed longs, bit_count hamming
     banded = {
         (r["id1"], r["id2"], r["hamming"])
         for r in dedup.simhash_pairs(sub, max_hamming=3).collect()
@@ -151,25 +149,6 @@ def test_simhash_banded_join_is_lossless(spark, docs):
         .collect()
     }
     assert banded == brute
-    # legacy md5-string config (oracle fixture)
-    banded16 = {
-        (r["id1"], r["id2"], r["hamming"])
-        for r in dedup.simhash_pairs(
-            sub, bits=16, bands=4, max_hamming=3, hash_fn="md5"
-        ).collect()
-    }
-    sh16 = sub.select(F.col("doc_id").alias("_id"), dedup.simhash_expr(F.col("text")).alias("s"))
-    a16 = sh16.select(F.col("_id").alias("id1"), F.col("s").alias("s1"))
-    b16 = sh16.select(F.col("_id").alias("id2"), F.col("s").alias("s2"))
-    brute16 = {
-        (r["id1"], r["id2"], r["hamming"])
-        for r in a16.crossJoin(b16)
-        .filter(F.col("id1") < F.col("id2"))
-        .select("id1", "id2", dedup.hamming_expr(F.col("s1"), F.col("s2")).alias("hamming"))
-        .filter(F.col("hamming") <= 3)
-        .collect()
-    }
-    assert banded16 == brute16
     sub.unpersist()
 
 
@@ -209,9 +188,9 @@ def test_simhash_band_key_space_scales_with_bits(docs):
 
 
 def test_near_dup_components_and_keep_list(spark, docs):
-    """Min-label propagation must find exact connected components (chain +
-    separate pair + untouched singletons), and the keep list drops exactly
-    the non-representative members."""
+    """The star engine must find exact connected components (chain +
+    separate pair + untouched singletons) labelled by their min id, and
+    the keep list drops exactly the non-representative members."""
     pairs = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "id1 long, id2 long")
     comp = {r["doc_id"]: r["group_id"] for r in dedup.near_dup_components(pairs).collect()}
     assert comp == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5}
@@ -227,24 +206,28 @@ def test_near_dup_components_and_keep_list(spark, docs):
     assert all(g in members and g <= d for d, g in got.items())
 
 
-def test_components_chain_converges_in_log_rounds(spark):
-    """Judge r2 #7: pointer jumping must close a 1000-edge chain (the
-    adversarial worst case for plain min-label propagation, which needs
-    diameter=1000 rounds) in ~log2(n) rounds."""
-    from data_profiler_spark.operators.dedup import _components_with_rounds
+def _union_find_components(edges):
+    """Reference components: {doc_id: min id of its component} by a
+    pure-Python union-find over the collected edge list."""
+    parent = {}
 
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(1000)], "id1 long, id2 long"
-    )
-    comp, rounds = _components_with_rounds(chain, max_iter=50)
-    got = {r["doc_id"]: r["group_id"] for r in comp.collect()}
-    assert len(got) == 1001 and set(got.values()) == {0}
-    assert rounds <= 12, f"chain took {rounds} rounds (want O(log n) ≈ 10)"
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}
 
 
-def test_star_components_match_jump_engine(spark, docs):
-    """large-star/small-star (method='star') must produce byte-identical
-    components to pointer jumping on: the hand-built graph, a random
+def test_star_components_match_union_find(spark, docs):
+    """The star engine's components must equal a pure-Python union-find
+    over the same edges on: the hand-built graph, a random
     Erdős–Rényi-ish graph (the adversarial shape star is FOR), and the
     real fixture's near-dup pairs."""
     import random
@@ -263,19 +246,17 @@ def test_star_components_match_jump_engine(spark, docs):
     rnd = spark.createDataFrame(rnd_edges, "id1 long, id2 long")
     real = dedup.ngram_jaccard_pairs(docs, threshold=0.8, max_shingle_df=None)
     for pairs in (hand, rnd, real):
-        jump = {r["doc_id"]: r["group_id"] for r in dedup.near_dup_components(pairs).collect()}
-        star = {
-            r["doc_id"]: r["group_id"]
-            for r in dedup.near_dup_components(pairs, method="star").collect()
-        }
-        assert star == jump
+        edges = [(r["id1"], r["id2"]) for r in pairs.collect()]
+        star = {r["doc_id"]: r["group_id"] for r in dedup.near_dup_components(pairs).collect()}
+        assert star == _union_find_components(edges)
+    with pytest.raises(ValueError, match="only 'star'"):
+        dedup.near_dup_components(hand, method="label")
 
 
 def test_star_components_chain_rounds(spark):
-    """Judge r3 #6: the star engine must close the 1000-edge chain in
-    O(log n) alternation rounds (provably O(log n) on ANY graph — the
-    property pointer jumping only has for label-distance, not frontier
-    growth)."""
+    """Judge r3 #6: the star engine must close the 1000-edge chain (the
+    adversarial worst case for plain min-label propagation, which needs
+    diameter=1000 rounds) in O(log n) alternation rounds."""
     from data_profiler_spark.operators.dedup import _star_components_with_rounds
 
     chain = spark.createDataFrame(
@@ -553,28 +534,11 @@ def test_embedding_near_dup_empty_and_dim_param(emb, spark):
     assert with_dim == inferred
 
 
-def test_minhash_hot_join_shuffle_fallback(spark, monkeypatch):
-    """In precheck mode, past HOT_BROADCAST_MAX_BUCKETS the hot-bucket
-    excision joins with a plain shuffle join instead of a forced broadcast
-    (an unbounded F.broadcast would bypass autoBroadcastJoinThreshold and
-    OOM in the exact >cap regime the guardrail defends). Forcing the bound
-    to 0 must leave the star-edge output identical."""
-    family = [(i, "massive duplicated boilerplate page body text here") for i in range(300)]
-    singles = [(900, "one of a kind document alpha content")]
-    df = spark.createDataFrame(family + singles, "doc_id long, text string")
-    monkeypatch.setattr(dedup, "HOT_BROADCAST_MAX_BUCKETS", 0)
-    rows = dedup.minhash_lsh_pairs(
-        df, threshold=0.8, max_band_df=32, precheck=True
-    ).collect()
-    assert {(r["id1"], r["id2"]) for r in rows} == {(0, i) for i in range(1, 300)}
-    assert all(r["jaccard"] == 1.0 for r in rows)
-
-
 def test_minhash_plan_build_runs_no_job_by_default(spark):
-    """Without precheck, constructing the capped plan must run NO Spark
-    job (the guard is lazy): building over a frame whose text column
-    raises on EVALUATION succeeds, and only an action detonates it. Keeps
-    explain()/plan inspection free and the plan-builder pure."""
+    """Constructing the capped plan must run NO Spark job (the guard is
+    lazy): building over a frame whose text column raises on EVALUATION
+    succeeds, and only an action detonates it. Keeps explain()/plan
+    inspection free and the plan-builder pure."""
     df = spark.range(8).select(
         F.col("id").alias("doc_id"),
         F.when(F.col("id") >= 0, F.raise_error(F.lit("evaluated at build time")))

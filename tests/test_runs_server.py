@@ -174,6 +174,42 @@ def test_create_run_end_to_end(server, workspace, spark, tmp_path):
     assert e.value.code == 409
 
 
+def test_concurrent_create_same_run_id_conflicts(tmp_path):
+    """Two concurrent POST /runs with one run_id both pass the existence
+    check while the (cold, slow) session builds; exactly one may create
+    the run (201) and the other must get a 409, not a 500 from makedirs.
+    No Spark: the factory returns None, so the winner's launched job fails
+    fast into its server_error.json."""
+    both_arrived = threading.Barrier(2, timeout=30)
+    srv = runs_server.serve(str(tmp_path), port=0, spark_factory=lambda: None)
+    build = srv.spark
+
+    def held_build():
+        both_arrived.wait()  # both requests are past the isdir check
+        return build()
+
+    srv.spark = held_build
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    codes = []
+
+    def post():
+        try:
+            codes.append(_post_json(srv, "/runs", {"input": "missing", "run_id": "r-race"})[0])
+        except urllib.error.HTTPError as e:
+            codes.append(e.code)
+
+    posts = [threading.Thread(target=post) for _ in range(2)]
+    try:
+        for p in posts:
+            p.start()
+        for p in posts:
+            p.join(60)
+    finally:
+        srv.shutdown()
+        srv.server_close()
+    assert sorted(codes) == [201, 409]
+
+
 def test_traversal_and_limit_validation(server, workspace):
     """Plain ``.``/``..`` run ids match the char-class but resolve to the
     workspace root / its parent — they must 404, not serve files outside

@@ -180,36 +180,3 @@ def test_band_cap_linear_on_dup_family(skew_pages):
     anchor = min(fam_ids)
     assert all(r["id1"] == anchor and r["jaccard"] == 1.0 for r in fam_pairs)
 
-
-def test_band_precheck_writes_audit_event(skew_pages, tmp_path):
-    """minhash_lsh_pairs(precheck=True) turns the band guardrail from
-    opt-in hygiene into pipeline behavior: the occupancy report runs as
-    the (eager) guard job at call time and lands in the run's audit JSONL
-    as an ``lsh_band_precheck`` event — counts only, PII-free — so a
-    capped run is observable from artifacts alone. The duplicate family
-    in the stress fixture guarantees hot buckets."""
-    from data_profiler_spark.io.audit import AuditLog
-
-    audit = AuditLog(str(tmp_path))
-    # the guard job + event fire at plan-build time; no collect needed
-    dedup.minhash_lsh_pairs(
-        skew_pages,
-        hash_fn="xxhash64",
-        threshold=0.8,
-        max_band_df=64,
-        precheck=True,
-        audit=audit,
-        run_id="stress-1",
-    )
-    evs = [e for e in audit.events() if e["event"] == "lsh_band_precheck"]
-    assert len(evs) == 1
-    ev = evs[0]
-    fam = skew_pages.filter(F.col("quality_class") == "dup_family").count()
-    assert ev["run_id"] == "stress-1"
-    assert ev["max_band_df"] == 64
-    assert ev["hot_buckets"] >= 1
-    assert ev["max_bucket_docs"] >= fam
-    # decimal candidate masses travel as strings (exact past 2^63)
-    assert int(ev["capped_candidates"]) < int(ev["uncapped_candidates"]) / 10
-    # PII-free discipline: counts/ids only, never bucket keys or text
-    assert not any(k in ev for k in ("key", "text", "line", "url"))
