@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from data_profiler_spark.functions.textstats import words_expr
 from data_profiler_spark.operators import profiler as P
 from data_profiler_spark.operators import validators as V
 
@@ -38,39 +39,33 @@ def entry(spark: SparkSession) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def q_profile_nchars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1-A4: exact numeric profile (Welford stats + exact percentiles)."""
+    """A1-A4: exact numeric profile (Welford stats + exact percentiles),
+    ``profiler.numeric_stats_exprs``."""
     df = _t(spark, sf_dir, "documents")
-    q = F.percentile("n_chars", F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75)))
-    return df.agg(
-        F.count("n_chars").alias("cnt"),
-        (F.count(F.lit(1)) - F.count("n_chars")).alias("null_cnt"),
-        F.min("n_chars").alias("min_v"),
-        F.max("n_chars").alias("max_v"),
-        F.round(F.avg("n_chars"), 6).alias("mean_v"),
-        F.round(F.stddev_samp("n_chars"), 6).alias("stddev_v"),
-        F.round(q[0], 6).alias("p25"),
-        F.round(q[1], 6).alias("p50"),
-        F.round(q[2], 6).alias("p75"),
+    q = F.col("n_chars_quantiles")
+    return df.agg(*P.numeric_stats_exprs("n_chars")).select(
+        F.col("n_chars_count").alias("cnt"),
+        F.col("n_chars_null_count").alias("null_cnt"),
+        F.col("n_chars_min").alias("min_v"),
+        F.col("n_chars_max").alias("max_v"),
+        F.round("n_chars_mean", 6).alias("mean_v"),
+        F.round("n_chars_stddev", 6).alias("stddev_v"),
+        *[
+            F.round(q[P.QUANTILES.index(p)], 6).alias(name)
+            for p, name in ((0.25, "p25"), (0.5, "p50"), (0.75, "p75"))
+        ],
     )
 
 
 def q_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A8/A17: exact per-column distinct + null counts (melted semantics)."""
+    """A8/A17: exact per-column distinct + null counts,
+    ``profiler.distinct_report``."""
     df = _t(spark, sf_dir, "documents")
-    parts = []
-    for c in ["lang", "source", "text"]:
-        sc = F.trim(F.col(c).cast("string"))
-        parts.append(
-            df.agg(
-                F.lit(c).alias("column_name"),
-                F.count_distinct(F.when(sc.isNotNull() & (sc != ""), sc)).alias("distinct_cnt"),
-                F.sum((F.col(c).isNull() | (sc == "")).cast("long")).alias("null_cnt"),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return P.distinct_report(df, ["lang", "source", "text"]).select(
+        "column_name",
+        F.col("distinct_count").alias("distinct_cnt"),
+        F.col("null_count").alias("null_cnt"),
+    )
 
 
 def q_top10_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -97,15 +92,15 @@ def q_hist_nchars(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_string_stats_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A10/P9: string length stats + char-class flags."""
+    """A10/P9: string length stats + char-class flags,
+    ``profiler.string_stats_exprs``."""
     df = _t(spark, sf_dir, "documents")
-    c = F.col("text")
-    return df.agg(
-        F.min(F.length(c)).alias("min_len"),
-        F.max(F.length(c)).alias("max_len"),
-        F.round(F.avg(F.length(c)), 6).alias("avg_len"),
-        F.max(c.rlike("[^\\x00-\\x7F]").cast("int")).alias("has_non_ascii"),
-        F.max(c.rlike("[0-9]").cast("int")).alias("has_digit"),
+    return df.agg(*P.string_stats_exprs("text")).select(
+        F.col("text_min_length").alias("min_len"),
+        F.col("text_max_length").alias("max_len"),
+        F.round("text_avg_length", 6).alias("avg_len"),
+        F.col("text_has_non_ascii").alias("has_non_ascii"),
+        F.col("text_has_digit").alias("has_digit"),
     )
 
 
@@ -123,19 +118,19 @@ def _money_col():
 
 
 def q_money_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A11/P3: strict money validity + categorized violation counts."""
+    """A11/P3: strict money validity + categorized violation counts,
+    ``validators.money_rollup_exprs`` (the column has no null-like values,
+    so its valid/invalid split covers every row, as the oracle's does)."""
     df = _t(spark, sf_dir, "lineitem").withColumn("amount", _money_col())
-    c = F.col("amount")
-    valid = V.is_money(c)
-    return df.agg(
-        F.sum(valid.cast("long")).alias("valid_cnt"),
-        F.sum((~valid).cast("long")).alias("invalid_cnt"),
-        F.sum(c.contains("$").cast("long")).alias("dollar_cnt"),
-        F.sum(c.contains(",").cast("long")).alias("comma_cnt"),
-        F.sum((c.contains("(") | c.contains(")")).cast("long")).alias("paren_cnt"),
-        F.sum((c.rlike("^[0-9]+(\\.[0-9]*)?$") & ~c.rlike("^[0-9]+\\.[0-9]{2}$")).cast("long")).alias("wrong_dec_cnt"),
-        F.min(F.when(valid, c.cast("decimal(18,2)"))).cast("double").alias("min_valid"),
-        F.max(F.when(valid, c.cast("decimal(18,2)"))).cast("double").alias("max_valid"),
+    return df.agg(*V.money_rollup_exprs("amount")).select(
+        F.col("amount_valid_count").alias("valid_cnt"),
+        F.col("amount_invalid_count").alias("invalid_cnt"),
+        F.col("amount_dollar_sign_count").alias("dollar_cnt"),
+        F.col("amount_comma_count").alias("comma_cnt"),
+        F.col("amount_parentheses_count").alias("paren_cnt"),
+        F.col("amount_wrong_decimals_count").alias("wrong_dec_cnt"),
+        F.col("amount_min_valid").cast("double").alias("min_valid"),
+        F.col("amount_max_valid").cast("double").alias("max_valid"),
     )
 
 
@@ -151,21 +146,22 @@ def _date_col():
     )
 
 
+def _ds_fmt(name: str):
+    """Per-format count column of ``V.date_format_counts_exprs("ds")``."""
+    return F.col(f"`ds_fmt_{name}`")
+
+
 def q_date_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A12/A14: per-format parse counts + out-of-range years (<1900)."""
+    """A12/A14: per-format parse counts + out-of-range years (<1900),
+    ``validators.date_format_counts_exprs`` + ``out_of_range_date_count_expr``."""
     df = _t(spark, sf_dir, "orders").withColumn("ds", _date_col())
-    c = F.col("ds")
-    fmts = dict((n, (p, s)) for n, p, s in V.DATE_FORMATS)
-    ymd = V.parsed_date(c, *fmts["YYYYMMDD"])
-    iso = V.parsed_date(c, *fmts["YYYY-MM-DD"])
-    mdy = V.parsed_date(c, *fmts["MM/DD/YYYY"])
-    mdy2 = V.parsed_date(c, *fmts["MM-DD-YYYY"])
-    return df.agg(
-        F.sum(ymd.isNotNull().cast("long")).alias("fmt_yyyymmdd"),
-        F.sum(iso.isNotNull().cast("long")).alias("fmt_iso"),
-        F.sum(mdy.isNotNull().cast("long")).alias("fmt_mdy_slash"),
-        F.sum(mdy2.isNotNull().cast("long")).alias("fmt_mdy_dash"),
-        F.sum((ymd.isNotNull() & ~V.is_date_in_range(ymd)).cast("long")).alias("out_of_range"),
+    counts = V.date_format_counts_exprs("ds")
+    return df.agg(*counts, V.out_of_range_date_count_expr("ds", "YYYYMMDD")).select(
+        _ds_fmt("YYYYMMDD").alias("fmt_yyyymmdd"),
+        _ds_fmt("YYYY-MM-DD").alias("fmt_iso"),
+        _ds_fmt("MM/DD/YYYY").alias("fmt_mdy_slash"),
+        _ds_fmt("MM-DD-YYYY").alias("fmt_mdy_dash"),
+        F.col("ds_out_of_range_count").alias("out_of_range"),
     )
 
 
@@ -207,17 +203,11 @@ def q_date_formats_ext(spark: SparkSession, sf_dir: str) -> DataFrame:
     ambiguity crediting (profile.py:699-700,851-859) — DD/MM credited only
     when no MM/DD value exists; has_ambiguity per the reference rule."""
     df = _t(spark, sf_dir, "orders").withColumn("ds", _date_ext_col())
-    c = F.col("ds")
-    fmts = dict((n, (p, s)) for n, p, s in V.DATE_FORMATS)
-    dt = V.parsed_date(c, *fmts["YYYY-MM-DD HH:MM:SS"])
-    iso = V.parsed_date(c, *fmts["YYYY-MM-DD"])
-    mdy = V.parsed_date(c, *fmts["MM/DD/YYYY"])
-    dmy = V.parsed_date(c, V.DD_MM_YYYY[1], V.DD_MM_YYYY[2])
-    agg = df.agg(
-        F.sum(dt.isNotNull().cast("long")).alias("fmt_datetime"),
-        F.sum(iso.isNotNull().cast("long")).alias("fmt_iso"),
-        F.sum(mdy.isNotNull().cast("long")).alias("fmt_mdy"),
-        F.sum(dmy.isNotNull().cast("long")).alias("fmt_dmy_raw"),
+    agg = df.agg(*V.date_format_counts_exprs("ds")).select(
+        _ds_fmt("YYYY-MM-DD HH:MM:SS").alias("fmt_datetime"),
+        _ds_fmt("YYYY-MM-DD").alias("fmt_iso"),
+        _ds_fmt("MM/DD/YYYY").alias("fmt_mdy"),
+        _ds_fmt(V.DD_MM_YYYY[0]).alias("fmt_dmy_raw"),
     )
     credited = F.when(F.col("fmt_mdy") > 0, F.lit(0)).otherwise(F.col("fmt_dmy_raw"))
     n_formats = (
@@ -284,13 +274,10 @@ def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WS = "[ \\t\\n\\x0B\\f\\r]+"
-
-
 def q_token_stats_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Text analysis: whitespace token counts per lang (engine tokenizer)."""
     df = _t(spark, sf_dir, "documents")
-    words = F.filter(F.split(F.col("text"), _WS), lambda w: w != "")
+    words = words_expr(F.col("text"))
     return (
         df.groupBy("lang")
         .agg(
@@ -306,7 +293,7 @@ def q_stopword_hits_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_profiler_spark import rules
 
     df = _t(spark, sf_dir, "documents")
-    words = F.filter(F.split(F.col("text"), _WS), lambda w: w != "")
+    words = words_expr(F.col("text"))
     hits = F.size(F.array_intersect(F.array(*[F.lit(s) for s in rules.STOPWORDS]), F.transform(words, F.lower)))
     return df.groupBy("source").agg(
         F.round(F.avg(hits), 6).alias("avg_stopword_hits"),
@@ -314,58 +301,53 @@ def q_stopword_hits_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_EMAIL_RE = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-
-
 def q_pii_email_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII detection counts (counts-not-values discipline) per source."""
+    from data_profiler_spark.functions.pii import PATTERNS
+
+    email = next(pat for name, pat, _ in PATTERNS if name == "email")
     df = _t(spark, sf_dir, "documents")
     return df.groupBy("source").agg(
-        F.sum(F.col("text").rlike(_EMAIL_RE).cast("long")).alias("docs_with_email"),
-        F.sum(F.regexp_count("text", F.lit(_EMAIL_RE))).alias("email_matches"),
+        F.sum(F.col("text").rlike(email).cast("long")).alias("docs_with_email"),
+        F.sum(F.regexp_count("text", F.lit(email))).alias("email_matches"),
     )
 
 
 def _fingerprint():
-    words = F.filter(F.split(F.col("text"), _WS), lambda w: w != "")
-    return F.concat_ws(" ", F.slice(words, 1, 5))
+    return F.concat_ws(" ", F.slice(words_expr(F.col("text")), 1, 5))
 
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup: keep min doc_id per 5-word-prefix fingerprint."""
+    """Exact dedup (``dedup.exact_dedup``, sha256 content key) over the
+    5-word-prefix fingerprint: keep min doc_id per fingerprint."""
+    from data_profiler_spark.operators import dedup
+
     df = _t(spark, sf_dir, "documents").withColumn("fp", _fingerprint())
-    return df.groupBy("fp").agg(F.min("doc_id").alias("kept_doc_id")).select("kept_doc_id")
+    return dedup.exact_dedup(df, text_col="fp").select(F.col("kept_id").alias("kept_doc_id"))
 
 
 def q_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A20: duplicate groups (count > 1) on the fingerprint key, top 10."""
+    """A20: duplicate groups (count > 1) on the fingerprint key, top 10,
+    ``keys.duplicate_groups`` (which skips blank keys; the fixtures have no
+    blank fingerprint)."""
+    from data_profiler_spark.operators import keys as K
+
     df = _t(spark, sf_dir, "documents").withColumn("fp", _fingerprint())
-    return (
-        df.groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("dup_cnt"), F.min("doc_id").alias("first_doc_id"))
-        .filter(F.col("dup_cnt") > 1)
-        .orderBy(F.desc("dup_cnt"), F.asc("fp"))
-        .limit(10)
-        .select(F.md5("fp").alias("fp_hash"), "dup_cnt", "first_doc_id")
+    return K.duplicate_groups(df, ["fp"], top=10, id_col="doc_id").select(
+        F.md5("fp").alias("fp_hash"),
+        F.col("dup_count").alias("dup_cnt"),
+        F.col("example_ids")[0].alias("first_doc_id"),
     )
 
 
 def q_ann_cosine_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Similarity search: brute-force exact cosine top-10 vs vec_id=0."""
+    """Similarity search: brute-force exact cosine top-10 vs vec_id=0
+    (``similarity.brute_force_topk``, 6-dp cosine)."""
+    from data_profiler_spark.operators import similarity
+
     df = _t(spark, sf_dir, "embeddings")
-    qv = df.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0]
-    qcol = F.array(*[F.lit(float(x)) for x in qv])
-    a = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    dot = F.aggregate(F.zip_with(a, qcol, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-    na = F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
-    nq = float(sum(float(x) * float(x) for x in qv) ** 0.5)
-    sim = dot / (na * F.lit(nq))
-    return (
-        df.filter(F.col("vec_id") != 0)
-        .select("vec_id", F.round(sim, 4).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(10)
-    )
+    qv = [float(x) for x in df.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0]]
+    return similarity.brute_force_topk(df.filter(F.col("vec_id") != 0), qv, 10)
 
 
 def q_candidate_key_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -445,7 +427,7 @@ def q_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_profiler_spark.operators import dedup
 
     df = _t(spark, sf_dir, "documents")
-    toks = df.select(F.array_distinct(dedup.tokens_expr(F.col("text"))).alias("toks"))
+    toks = df.select(F.array_distinct(words_expr(F.col("text"))).alias("toks"))
     hashed = toks.select(
         F.transform("toks", lambda t: F.md5(t)).alias("hx"),
         F.size("toks").alias("n"),
@@ -486,15 +468,10 @@ def q_ivf_centroid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in similarity.label_centroids(df).collect()
     ]
     cents.sort()
-    a = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    scored = F.array(
-        *[
-            F.struct(similarity.cosine_expr(a, similarity._lit_vec(v)).alias("sim"), F.lit(int(l)).alias("cell"))
-            for l, v in cents
-        ]
-    )
+    assigned = similarity.centroid_assign(df, cents).select("vec_id", "cell")
     return (
-        df.select("label", F.array_max(scored)["cell"].alias("cell"))
+        df.select("vec_id", "label")
+        .join(assigned, "vec_id")
         .groupBy("label", "cell")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -536,7 +513,7 @@ def q_grid_occupancy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     df = _t(spark, sf_dir, "embeddings")
     return similarity.grid_occupancy_report(
-        df, threshold=0.9, n_projections=2, direction_mode="random", seed=7, dim=64
+        df, threshold=0.9, n_projections=2, direction_mode="random", dim=64
     )
 
 
@@ -845,11 +822,10 @@ def q_token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a deterministic pseudo-uniform function of the text so both
     engines rank identically; ties broken by md5(doc_id)."""
     from data_profiler_spark.operators import sampling
-    from data_profiler_spark.operators.dedup import tokens_expr
 
     docs = _t(spark, sf_dir, "documents")
     prio = F.pmod(F.length("text"), F.lit(997)) / F.lit(996.0)
-    toks = F.size(tokens_expr(F.col("text")))
+    toks = F.size(words_expr(F.col("text")))
     sel = sampling.token_budget_sample(docs, 12000, priority=prio, tokens=toks, bins=256)
     return sel.select("doc_id", F.round("priority", 6).alias("priority"), "tokens")
 
@@ -969,11 +945,10 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """operators/packing.py::pack_sequences — GPT-style concat-then-chunk
     packing assignment (global token offsets in md5 order, seq_len=1024)
     computed with bucketed prefix sums, never a global sort."""
-    from data_profiler_spark.operators.dedup import tokens_expr
     from data_profiler_spark.operators.packing import pack_sequences
 
     docs = _t(spark, sf_dir, "documents")
-    tk = F.size(tokens_expr(F.col("text")))
+    tk = F.size(words_expr(F.col("text")))
     return pack_sequences(docs, tk, seq_len=1024).orderBy("doc_id")
 
 
@@ -1382,9 +1357,9 @@ _ORACLE: dict[str, str] = {
     "ann_cosine_top10": """
         WITH q AS (SELECT embedding::DOUBLE[] AS qe FROM embeddings WHERE vec_id = 0)
         SELECT vec_id,
-               round(list_cosine_similarity(embedding::DOUBLE[], q.qe), 4) AS cosine
+               round(list_cosine_similarity(embedding::DOUBLE[], q.qe), 6) AS cosine
         FROM embeddings, q WHERE vec_id <> 0
-        ORDER BY list_cosine_similarity(embedding::DOUBLE[], q.qe) DESC, vec_id ASC
+        ORDER BY cosine DESC, vec_id ASC
         LIMIT 10
     """,
     "candidate_key_ratios": """

@@ -14,8 +14,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from . import corpus
-
-_WS = "[ \\t\\n\\x0B\\f\\r]+"
+from .textstats import words_expr
 
 # Per-language marker words: the most-frequent function words per language
 # (prefix of the seeded corpus inventories — deterministic, public words).
@@ -27,7 +26,7 @@ LANG_PRIORITY = ("en", "fr", "es", "de", "it")
 
 
 def _lower_tokens(c: Column) -> Column:
-    return F.transform(F.filter(F.split(c, _WS), lambda w: w != ""), F.lower)
+    return F.transform(words_expr(c), F.lower)
 
 
 def lang_marker_hits_expr(c: Column, lang: str) -> Column:
@@ -59,16 +58,12 @@ def bpe_token_count_expr(c: Column) -> Column:
     return F.size(F.regexp_extract_all(c, F.lit(BPE_TOKEN_RE), F.lit(0)))
 
 
-def whitespace_token_count_expr(c: Column) -> Column:
-    return F.size(F.filter(F.split(c, _WS), lambda w: w != ""))
-
-
 def quality_score_expr(c: Column) -> Column:
     """Composite document quality score in [0, 1]: equal-weight blend of
     length-band membership, stopword evidence, alphabetic-word fraction,
     and punctuation sparsity. A scoring (not gating) counterpart of the
     keep/drop rules in rules.py — useful for threshold sweeps/histograms."""
-    toks = F.filter(F.split(c, _WS), lambda w: w != "")
+    toks = words_expr(c)
     wc = F.size(toks)
     stop = F.array(*[F.lit(s) for s in LANG_MARKERS["en"][:10]])
     stop_hits = F.size(F.array_intersect(stop, F.transform(toks, F.lower)))

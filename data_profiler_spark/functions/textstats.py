@@ -27,6 +27,8 @@ _WS = "[ \\t\\n\\x0B\\f\\r]+"
 
 
 def words_expr(c: Column) -> Column:
+    """ASCII-whitespace tokens, empties dropped — the engine's one
+    tokenizer (dedup, corpus, textanalysis and the oracle queries call it)."""
     return F.filter(F.split(c, _WS), lambda w: w != "")
 
 

@@ -39,9 +39,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_profiler_spark.functions.textstats import words_expr
 from data_profiler_spark.operators.checkpoints import materialize
-
-from data_profiler_spark.operators.dedup import tokens_expr
 
 # ---------------------------------------------------------------------------
 # C4-style cross-corpus line dedup
@@ -255,17 +254,11 @@ def word_ngrams_from_tokens(toks: Column, n: int) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def word_ngrams_expr(c: Column, n: int) -> Column:
-    """Single-expression n-gram form (tokenizes inline; plan-building
-    call sites materialize tokens and use ``word_ngrams_from_tokens``)."""
-    return word_ngrams_from_tokens(tokens_expr(c), n)
-
-
 def eval_ngram_set(eval_df: DataFrame, text_col: str = "text", n: int = 13) -> DataFrame:
     """Distinct word n-grams of the evaluation set, as a one-column DF
     (``ngram``). Small by construction (eval suites are thousands of
     docs) — callers broadcast it."""
-    toks = eval_df.select(tokens_expr(F.col(text_col)).alias("_tk"))
+    toks = eval_df.select(words_expr(F.col(text_col)).alias("_tk"))
     return (
         toks.select(F.explode(word_ngrams_from_tokens(F.col("_tk"), n)).alias("ngram"))
         .distinct()
@@ -294,7 +287,7 @@ def contamination_report(
     shuffles its n-grams.
     """
     evl = F.broadcast(eval_ngram_set(eval_df, text_col=text_col, n=n))
-    toks = corpus.select(F.col(id_col), tokens_expr(F.col(text_col)).alias("_tk"))
+    toks = corpus.select(F.col(id_col), words_expr(F.col(text_col)).alias("_tk"))
     exploded = toks.select(
         F.col(id_col),
         F.posexplode_outer(word_ngrams_from_tokens(F.col("_tk"), n)).alias("_i", "ngram"),
@@ -478,7 +471,7 @@ def duplicated_span_report(
     """
     toks = df.select(
         F.col(id_col),
-        F.slice(tokens_expr(F.col(text_col)), 1, max_tokens).alias("_tk"),
+        F.slice(words_expr(F.col(text_col)), 1, max_tokens).alias("_tk"),
     )
     hashed = toks.select(
         F.col(id_col), all_span_hashes_from_tokens(F.col("_tk"), window).alias("_hs")

@@ -45,9 +45,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from data_profiler_spark.functions.textstats import words_expr
 from data_profiler_spark.operators.checkpoints import materialize
-
-_WS = "[ \\t\\n\\x0B\\f\\r]+"
 
 DEFAULT_NUM_PERM = 16
 DEFAULT_ROWS_PER_BAND = 2
@@ -97,12 +96,6 @@ def _widen(df: DataFrame) -> DataFrame:
     return df
 
 
-def tokens_expr(c: Column) -> Column:
-    """ASCII-whitespace tokens, empties dropped (same split semantics as
-    functions/textstats.py — one tokenizer across the engine)."""
-    return F.filter(F.split(c, _WS), lambda w: w != "")
-
-
 def shingles_from_tokens(toks: Column, n: int = DEFAULT_SHINGLE) -> Column:
     """Distinct word n-gram shingles from a MATERIALIZED token-array
     attribute; docs shorter than n words fall back to one whole-text
@@ -123,7 +116,7 @@ def shingles_expr(c: Column, n: int = DEFAULT_SHINGLE) -> Column:
     """Single-expression shingle form (tokenization inline — convenient
     for tests/oracles; plan-building call sites use ``_shingle_sets`` /
     :func:`shingles_from_tokens` to tokenize once)."""
-    return shingles_from_tokens(tokens_expr(c), n)
+    return shingles_from_tokens(words_expr(c), n)
 
 
 def _minhash_one(sh: Column, perm: int, hash_fn: str = "md5") -> Column:
@@ -178,7 +171,7 @@ def jaccard_expr(a: Column, b: Column) -> Column:
 
 def _shingle_sets(df: DataFrame, id_col: str, text_col: str, shingle: int) -> DataFrame:
     toks = _widen(df).select(
-        F.col(id_col).alias("_id"), tokens_expr(F.col(text_col)).alias("_tk")
+        F.col(id_col).alias("_id"), words_expr(F.col(text_col)).alias("_tk")
     )
     return toks.select("_id", shingles_from_tokens(F.col("_tk"), shingle).alias("_sh"))
 
@@ -606,7 +599,7 @@ def simhash_pairs(
         _widen(df)
         .select(
             F.col(id_col).alias("_id"),
-            F.array_distinct(tokens_expr(F.col(text_col))).alias("_toks"),
+            F.array_distinct(words_expr(F.col(text_col))).alias("_toks"),
         )
     )
     # materialize the token-hash array: the 64 vote filters otherwise

@@ -1,22 +1,14 @@
 """Similarity search over embedding columns (array<float>).
 
-Three tiers, smallest-to-largest scale:
-
-* **Brute-force cosine top-k** — exact baseline. One narrow map computing
-  the dot product against a broadcast query vector (a literal array — no
-  join, no shuffle), then ``orderBy(desc).limit(k)`` which Spark compiles
-  to TakeOrderedAndProject (per-partition heap + driver merge, never a
-  full sort).
-* **Hyperplane-LSH-bucketed ANN** — scale path for query-time lookups:
-  each vector gets a ``planes``-bit sign bucket; a query probes its own
-  bucket plus all buckets within ``probe_hamming`` bit flips, ranking only
-  those vectors. Index build is one narrow map; probing reads a small
-  bucket-pruned slice. Recall is tunable via planes/probes (tested against
-  the exact baseline in tests/test_dedup_similarity.py).
-* **IVF-style coarse quantization** — k centroids from a groupBy-avg over
-  a labeled (or k-means-assigned) column; vectors are searched only within
-  the nearest ``nprobe`` cells. ``centroid_assign`` below builds the
-  assignment table (one broadcast of k×d floats + one narrow map).
+* **Brute-force cosine top-k** — the one exact search path. One narrow map
+  computing the dot product against a broadcast query vector (a literal
+  array — no join, no shuffle), then ``orderBy(desc).limit(k)`` which Spark
+  compiles to TakeOrderedAndProject (per-partition heap + driver merge,
+  never a full sort).
+* **IVF coarse-quantizer codebook** — k centroids from a groupBy-avg over a
+  labeled column (:func:`label_centroids`) or seeded k-means
+  (:func:`kmeans_centroids`); :func:`centroid_assign` maps each vector to
+  its cell (one broadcast of k×d floats + one narrow map).
 * **Projection-grid near-dup blocking** — ``embedding_near_dup_pairs``:
   all-pairs cosine >= t as a LOSSLESS equi-join (triangle-inequality grid
   cells; see its docstring). Exact result, join-shaped cost — the default
@@ -88,7 +80,7 @@ def brute_force_topk(
 
 
 # --------------------------------------------------------------------------
-# Hyperplane LSH
+# Seeded hyperplanes (grid directions, method='lsh' bands)
 # --------------------------------------------------------------------------
 
 def random_hyperplanes(dim: int, planes: int, seed: int = 42) -> list[list[float]]:
@@ -106,54 +98,6 @@ def random_hyperplanes(dim: int, planes: int, seed: int = 42) -> list[list[float
             row.append((x / 0x80000000) - 1.0)
         out.append(row)
     return out
-
-
-def lsh_bucket_expr(vec: Column, hyperplanes: list[list[float]]) -> Column:
-    """Sign-bit bucket string, one char per hyperplane."""
-    a = _as_double(vec)
-    bits = [
-        F.when(dot_expr(a, _lit_vec(h)) >= 0, F.lit("1")).otherwise(F.lit("0"))
-        for h in hyperplanes
-    ]
-    return F.concat(*bits)
-
-
-def _probe_buckets(bucket: str, probe_hamming: int) -> list[str]:
-    """The query bucket plus every bucket within probe_hamming bit flips."""
-    out = [bucket]
-    n = len(bucket)
-    for dist in range(1, probe_hamming + 1):
-        for idxs in itertools.combinations(range(n), dist):
-            b = list(bucket)
-            for i in idxs:
-                b[i] = "0" if b[i] == "1" else "1"
-            out.append("".join(b))
-    return out
-
-
-def ann_lsh_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    planes: int = 8,
-    probe_hamming: int = 2,
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate cosine top-k: rank only vectors in the query's LSH
-    bucket neighborhood. On a real deployment the bucket column is
-    precomputed and the table partitioned by it — the probe then becomes a
-    partition-pruned scan of ~(probes/2^planes) of the data."""
-    dim = len(query_vec)
-    hp = random_hyperplanes(dim, planes, seed)
-    qbits = "".join(
-        "1" if sum(q * h for q, h in zip(query_vec, hrow)) >= 0 else "0" for hrow in hp
-    )
-    buckets = _probe_buckets(qbits, probe_hamming)
-    bucketed = df.withColumn("_bucket", lsh_bucket_expr(F.col(vec_col), hp))
-    pruned = bucketed.filter(F.col("_bucket").isin(buckets))
-    return brute_force_topk(pruned, query_vec, k, id_col, vec_col)
 
 
 # --------------------------------------------------------------------------
@@ -198,42 +142,6 @@ def centroid_assign(
     )
 
 
-def ivf_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    centroids: list[tuple[int, list[float]]],
-    k: int = 10,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """End-to-end IVF search: rank cells by query→centroid cosine
-    DRIVER-side (k×d floats — no cluster work), keep the ``nprobe``
-    nearest cells, assign-and-filter vectors to those cells in one narrow
-    map, exact cosine top-k within. On a real deployment the cell column
-    is precomputed (:func:`centroid_assign`) and the table partitioned by
-    it, so the probe is a partition-pruned scan of ~nprobe/k-cells of the
-    data; here the assignment argmax rides the same scan."""
-    def cos(a: list[float], b: list[float]) -> float:
-        na = sum(x * x for x in a) ** 0.5 or 1.0
-        nb = sum(x * x for x in b) ** 0.5 or 1.0
-        return sum(x * y for x, y in zip(a, b)) / (na * nb)
-
-    probe_cells = [
-        int(lbl)
-        for lbl, vec in sorted(centroids, key=lambda c: -cos(query_vec, c[1]))[:nprobe]
-    ]
-    a = _as_double(F.col(vec_col))
-    scored = F.array(
-        *[
-            F.struct(cosine_expr(a, _lit_vec(vec)).alias("sim"), F.lit(int(lbl)).alias("cell"))
-            for lbl, vec in centroids
-        ]
-    )
-    pruned = df.filter(F.array_max(scored)["cell"].isin(probe_cells))
-    return brute_force_topk(pruned, query_vec, k, id_col, vec_col)
-
-
 def kmeans_centroids(
     df: DataFrame,
     k: int = 4,
@@ -248,8 +156,8 @@ def kmeans_centroids(
     identical unrolled iterations — ``__spark_entry__.kmeans_cells``).
 
     A real 100-TB corpus has no labels, so the codebook that
-    :func:`centroid_assign` / :func:`ivf_topk` consume must come from the
-    data itself. Design choices, each shared with the oracle:
+    :func:`centroid_assign` consumes must come from the data itself.
+    Design choices, each shared with the oracle:
 
     * **Init**: the ``k`` rows with smallest ``md5(seed || vec_id)``
       (hash-order sampling — deterministic, engine-agnostic, no RNG
@@ -396,12 +304,17 @@ def principal_directions(
     return out
 
 
+# method="lsh" banding: p sign planes per band, b bands, seeded planes
+LSH_PLANES_PER_BAND = 8
+LSH_BANDS = 16
+LSH_SEED = 7
+
+
 def _resolve_grid(
     df: DataFrame,
     threshold: float,
     vec_col: str,
     n_projections: int,
-    seed: int,
     dim: int | None,
     directions: list[list[float]] | None,
     direction_mode: str,
@@ -422,7 +335,7 @@ def _resolve_grid(
         if dirs is None:
             return None
     else:
-        dirs = projection_directions(dim, n_projections, seed)
+        dirs = projection_directions(dim, n_projections)
     return width, dim, dirs
 
 
@@ -458,14 +371,9 @@ def embedding_near_dup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_projections: int = 2,
-    seed: int = 7,
     round_to: int = 6,
     method: str = "grid",
     dim: int | None = None,
-    directions: list[list[float]] | None = None,
-    direction_mode: str = "pca",
-    planes_per_band: int = 8,
-    bands: int = 16,
     verify_salt: int = 1,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs via LOSSLESS projection-grid blocking.
@@ -485,16 +393,14 @@ def embedding_near_dup_pairs(
     happens once, in the final select, so the result is identical to the
     brute-force reference at every threshold).
 
-    Directions default to PRINCIPAL directions of the normalized vectors
-    (``direction_mode='pca'``, one extra moment-gathering pass — see
+    The grid projects onto the PRINCIPAL directions of the normalized
+    vectors (one extra moment-gathering pass — see
     :func:`principal_directions` for why random directions silently lose
-    all pruning at realistic embedding dims). ``direction_mode='random'``
-    keeps the seeded random directions (no extra pass); ``directions=``
-    supplies precomputed ones (fit once, reuse across runs — the at-scale
-    deployment shape). The RESULT is identical under any unit directions
-    (lossless blocking); only the join cost changes. Check the blocking
-    factor BEFORE paying the join with :func:`grid_occupancy_report` (same
-    grid, same directions — the analog of ``dedup.shingle_df_report``).
+    all pruning at realistic embedding dims). The RESULT is identical under
+    any unit directions (lossless blocking); only the join cost changes.
+    Check the blocking factor BEFORE paying the join with
+    :func:`grid_occupancy_report` (same grid; it also takes seeded random
+    or precomputed directions — the analog of ``dedup.shingle_df_report``).
 
     Pass ``dim=`` when known (skips a ``first()`` driver job); an empty
     input returns an empty pairs DataFrame either way. NULL embeddings
@@ -513,11 +419,11 @@ def embedding_near_dup_pairs(
     t = 0.9 — measured, BASELINE.md). When :func:`grid_occupancy_report`
     shows ``blocking_factor`` near 1 under EVERY direction choice, no
     lossless grid helps; use ``method='lsh'`` — banded sign-hyperplane LSH
-    candidates (a pair collides when any band's ``planes_per_band`` sign
-    bits all agree) with the SAME fused exact-cosine verification, so
+    candidates (a pair collides when any band's ``LSH_PLANES_PER_BAND``
+    sign bits all agree) with the SAME fused exact-cosine verification, so
     false positives are impossible and the only approximation is candidate
     recall: Pr[detect] = 1-(1-(1-θ/π)^p)^b — 0.996 at t = 0.9 and ~0.004
-    per random orthogonal pair with the defaults (p=8, b=16), i.e.
+    per random orthogonal pair with p=8 planes per band and b=16 bands, i.e.
     ~250× candidate pruning on isotropic data. Recall is measured against
     the exact join in tests (planted near-dups), the reference recall
     contract of the MinHash path applied to embeddings.
@@ -554,11 +460,11 @@ def embedding_near_dup_pairs(
         # so the join key is numeric, never a string build.
         import numpy as _np
 
+        n_bands, ppb = LSH_BANDS, LSH_PLANES_PER_BAND
         planes_mat = _np.array(
-            random_hyperplanes(dim, planes_per_band * bands, seed), dtype=_np.float64
+            random_hyperplanes(dim, ppb * n_bands, LSH_SEED), dtype=_np.float64
         ).T  # d × (p·b)
-        pw = _np.left_shift(1, _np.arange(planes_per_band, dtype=_np.int64))
-        n_bands, ppb = bands, planes_per_band
+        pw = _np.left_shift(1, _np.arange(ppb, dtype=_np.int64))
 
         @F.pandas_udf("array<long>")
         def _band_keys(vs: pd.Series) -> pd.Series:
@@ -598,7 +504,9 @@ def embedding_near_dup_pairs(
             .select("id1", "id2", F.round("_cos", round_to).alias("cosine"))
             .distinct()
         )
-    grid = _resolve_grid(df, threshold, vec_col, n_projections, seed, dim, directions, direction_mode)
+    grid = _resolve_grid(
+        df, threshold, vec_col, n_projections, dim, directions=None, direction_mode="pca"
+    )
     if grid is None:
         return df.sparkSession.createDataFrame([], empty_schema)
     width, dim, dirs = grid
@@ -688,7 +596,6 @@ def grid_occupancy_report(
     threshold: float = 0.9,
     vec_col: str = "embedding",
     n_projections: int = 2,
-    seed: int = 7,
     dim: int | None = None,
     directions: list[list[float]] | None = None,
     direction_mode: str = "pca",
@@ -708,7 +615,7 @@ def grid_occupancy_report(
     are exact for the run they predict. NULL embeddings are excluded,
     matching the pairs function."""
     df = df.filter(F.col(vec_col).isNotNull())
-    grid = _resolve_grid(df, threshold, vec_col, n_projections, seed, dim, directions, direction_mode)
+    grid = _resolve_grid(df, threshold, vec_col, n_projections, dim, directions, direction_mode)
     spark = df.sparkSession
     if grid is None:
         return spark.range(1).select(

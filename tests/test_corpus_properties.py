@@ -11,6 +11,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from data_profiler_spark.functions.textstats import words_expr
 from data_profiler_spark.operators import corpus, sampling
 
 _LINE = st.text(alphabet="ab X-", min_size=0, max_size=8)
@@ -127,7 +128,7 @@ def test_winnow_fingerprints_match_python_reference(spark, token_lists):
     from pyspark.sql import functions as F
 
     toks = df.select(
-        "doc_id", corpus.tokens_expr(F.col("text")).alias("_tk")
+        "doc_id", words_expr(F.col("text")).alias("_tk")
     )
     hashed = toks.select(
         "doc_id", corpus.all_span_hashes_from_tokens(F.col("_tk"), 5).alias("_hs")

@@ -1,11 +1,13 @@
 """Dedup + similarity operators: LSH recall vs exact, lossless simhash
-banding, ANN recall vs brute force, exact-dedup invariants."""
+banding, IVF codebooks, lossless embedding near-dup blocking, exact-dedup
+invariants."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
+from data_profiler_spark.functions.textstats import words_expr
 from data_profiler_spark.operators import dedup, similarity
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -135,7 +137,7 @@ def test_simhash_banded_join_is_lossless(spark, docs):
     sh = sub.select(
         F.col("doc_id").alias("_id"),
         dedup.simhash64_from_tokens(
-            F.array_distinct(dedup.tokens_expr(F.col("text")))
+            F.array_distinct(words_expr(F.col("text")))
         ).alias("s"),
     )
     a = sh.select(F.col("_id").alias("id1"), F.col("s").alias("s1"))
@@ -165,7 +167,7 @@ def test_simhash_band_key_space_scales_with_bits(docs):
     sub = docs.limit(200)
     sh = sub.select(
         dedup.simhash64_from_tokens(
-            F.array_distinct(dedup.tokens_expr(F.col("text")))
+            F.array_distinct(words_expr(F.col("text")))
         ).alias("s")
     )
     width = SIMHASH_PAIR_BITS // SIMHASH_PAIR_BANDS
@@ -299,27 +301,6 @@ def test_exact_dedup_partitions_rows(docs):
     assert all(r["kept_id"] < 100000 for r in dup_groups)
 
 
-def test_ann_lsh_recall_vs_brute_force(emb):
-    qv = [float(x) for x in emb.filter("vec_id = 7").select("embedding").first()[0]]
-    exact = [r["vec_id"] for r in similarity.brute_force_topk(emb.filter("vec_id <> 7"), qv, 10).collect()]
-    approx = [
-        r["vec_id"]
-        for r in similarity.ann_lsh_topk(
-            emb.filter("vec_id <> 7"), qv, 10, planes=6, probe_hamming=2
-        ).collect()
-    ]
-    recall = len(set(exact) & set(approx)) / 10
-    assert recall >= 0.4, f"recall@10={recall}"
-    # the probe must actually prune: far fewer candidates than rows
-    hp = similarity.random_hyperplanes(len(qv), 6)
-    qb = "".join("1" if sum(q * h for q, h in zip(qv, hrow)) >= 0 else "0" for hrow in hp)
-    buckets = similarity._probe_buckets(qb, 2)
-    pruned = emb.withColumn("_b", similarity.lsh_bucket_expr(F.col("embedding"), hp)).filter(
-        F.col("_b").isin(buckets)
-    )
-    assert pruned.count() < emb.count()
-
-
 def test_ivf_centroids_separate_labels(emb):
     """Nearest-centroid assignment must carry real signal vs the generating
     label (the fixture's clusters are loose — cosine accuracy ≈ 0.37 vs 0.10
@@ -339,8 +320,8 @@ def test_ivf_centroids_separate_labels(emb):
 
 def test_kmeans_codebook_deterministic_and_usable(emb):
     """Judge r2 #4: unsupervised (label-free) IVF codebook — seeded Lloyd
-    k-means must be run-to-run deterministic, partition the data, and give
-    an ivf_topk recall comparable to the label-seeded codebook."""
+    k-means must be run-to-run deterministic and partition the data (the
+    codebook values themselves are checked by oracle ``kmeans_cells``)."""
     c1 = similarity.kmeans_centroids(emb, k=4, iters=3, seed=42)
     c2 = similarity.kmeans_centroids(emb, k=4, iters=3, seed=42)
     assert c1 == c2, "k-means not deterministic under a fixed seed"
@@ -349,34 +330,6 @@ def test_kmeans_codebook_deterministic_and_usable(emb):
     assert assigned.count() == emb.count()
     sizes = [r["cnt"] for r in assigned.groupBy("cell").agg(F.count(F.lit(1)).alias("cnt")).collect()]
     assert len(sizes) >= 2 and max(sizes) < emb.count()  # real partitioning
-    # learned codebook drives the same end-to-end search path
-    qv = [float(x) for x in emb.filter("vec_id = 3").select("embedding").first()[0]]
-    base = emb.filter("vec_id <> 3")
-    exact = [r["vec_id"] for r in similarity.brute_force_topk(base, qv, 10).collect()]
-    approx = [
-        r["vec_id"] for r in similarity.ivf_topk(base, qv, c1, k=10, nprobe=2).collect()
-    ]
-    recall = len(set(exact) & set(approx)) / 10
-    assert recall >= 0.4, f"learned-codebook ivf recall@10={recall}"
-
-
-def test_ivf_topk_recall_and_pruning(emb):
-    """End-to-end IVF search: better-than-chance recall vs the exact
-    baseline while scanning only the probed cells."""
-    qv = [float(x) for x in emb.filter("vec_id = 3").select("embedding").first()[0]]
-    cents = [
-        (r["label"], [float(x) for x in r["centroid"]])
-        for r in similarity.label_centroids(emb).collect()
-    ]
-    base = emb.filter("vec_id <> 3")
-    exact = [r["vec_id"] for r in similarity.brute_force_topk(base, qv, 10).collect()]
-    got = [r["vec_id"] for r in similarity.ivf_topk(base, qv, cents, 10, nprobe=3).collect()]
-    assert len(got) == 10
-    recall = len(set(exact) & set(got)) / 10
-    assert recall >= 0.4, f"ivf recall@10={recall}"
-    # full probe (nprobe = all cells) must equal the exact baseline
-    full = [r["vec_id"] for r in similarity.ivf_topk(base, qv, cents, 10, nprobe=len(cents)).collect()]
-    assert full == exact
 
 
 def test_embedding_near_dup_symmetric_bound(emb):

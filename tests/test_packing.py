@@ -32,9 +32,9 @@ def test_pack_matches_global_reference(spark):
 
 
 def test_pack_offsets_are_gapless_and_deterministic(documents):
-    from data_profiler_spark.operators.dedup import tokens_expr
+    from data_profiler_spark.functions.textstats import words_expr
 
-    tk = F.size(tokens_expr(F.col("text")))
+    tk = F.size(words_expr(F.col("text")))
     out1 = pack_sequences(documents, tk, seq_len=1024).collect()
     out2 = pack_sequences(documents, tk, seq_len=1024).collect()
     assert sorted(map(tuple, out1)) == sorted(map(tuple, out2))
