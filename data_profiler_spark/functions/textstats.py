@@ -79,11 +79,15 @@ def signals_from_parts(c: Column, words: Column, lines: Column) -> Column:
     dup_line_frac = F.when(
         lc > 0, 1.0 - F.size(F.array_distinct(lines)) / lc
     ).otherwise(F.lit(0.0))
-    # 2-gram repetition: total 2-gram count is just wc-1, so the transform
-    # is referenced ONCE (inside array_distinct) — no tree duplication.
-    two_grams = F.transform(
-        F.sequence(F.lit(1), wc - 1),
-        lambda i: F.concat_ws(" ", F.slice(words, i, 2)),
+    # 2-gram repetition: total 2-gram count is just wc-1, so the 2-gram
+    # array is referenced ONCE (inside array_distinct). Zipping two shifted
+    # slices allocates two arrays per doc; a 2-element slice per word
+    # position took ~3x as long at 20k docs (BASELINE.md).
+    n = F.greatest(wc - 1, F.lit(0))
+    two_grams = F.zip_with(
+        F.slice(words, 1, n),
+        F.slice(words, 2, n),
+        lambda a, b: F.concat(a, F.lit(" "), b),
     )
     dup_2gram_frac = F.when(
         wc >= 2, 1.0 - F.size(F.array_distinct(two_grams)) / (wc - 1)

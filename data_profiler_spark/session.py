@@ -10,18 +10,67 @@ At 100 TB these same settings hold: AQE picks the real shuffle
 parallelism from map-side statistics, so `spark.sql.shuffle.partitions`
 only needs to be a sane upper bound (cluster cores × 2-3), and skew
 handling is runtime, not hand-tuned.
+
+Python workers start through the package's ``worker_python`` launcher
+(``install_worker_launcher``). Spark puts ``$SPARK_HOME/python/lib/
+pyspark.zip`` and the spark-core jar on every worker's PYTHONPATH, and
+PySpark calls ``importlib.invalidate_caches()`` once per task, which on
+CPython 3.11 re-reads each archive's whole directory (1,328 and 5,359
+entries) in every zipimporter. The launcher drops both entries, so workers
+import the identical pyspark build from site-packages: an identity pandas
+UDF's python CPU per task fell from ~0.26 to ~0.045 s (16 tasks, local[4];
+BASELINE.md). It is installed only when the driver imported pyspark from
+outside ``$SPARK_HOME/python`` and the ``SPARK_HOME`` jars are that same
+version; otherwise the worker start is left as it was.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 from pathlib import Path as _Path
 
+import pyspark
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
+
+_LAUNCHER = str(_Path(__file__).with_name("worker_python"))
+# where the launcher finds the interpreter PYSPARK_PYTHON named before
+_LAUNCHER_TARGET = "_DPS_WORKER_PYTHON"
 
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+
+
+def install_worker_launcher() -> None:
+    """Point ``PYSPARK_PYTHON`` at the ``worker_python`` launcher, which
+    runs the interpreter it named before (default ``python3``) without
+    ``pyspark.zip`` or the spark-core jar on PYTHONPATH. PySpark reads the
+    env var, not the ``spark.pyspark.python`` conf, and workers inherit
+    the JVM's environment, so this acts only before the JVM starts.
+
+    A pre-set ``PYSPARK_PYTHON`` is wrapped, not kept; one that already
+    names the launcher is left alone. Nothing changes when the driver's
+    pyspark is Spark's own copy under ``$SPARK_HOME/python`` (as findspark
+    sets up), which workers could then not import, or when
+    ``$SPARK_HOME/jars`` lacks the spark-core build of
+    ``pyspark.__version__``, since a worker of another version could fail
+    the handshake."""
+    if os.environ.get("PYSPARK_PYTHON") == _LAUNCHER or SparkContext._gateway is not None:
+        return
+    home = _find_spark_home()
+    jar = f"spark-core_*-{pyspark.__version__}.jar"
+    if (
+        os.access(_LAUNCHER, os.X_OK)
+        and not _Path(pyspark.__file__).resolve().is_relative_to(
+            _Path(home, "python").resolve()
+        )
+        and glob.glob(os.path.join(home, "jars", jar))
+    ):
+        os.environ[_LAUNCHER_TARGET] = os.environ.get("PYSPARK_PYTHON", "python3")
+        os.environ["PYSPARK_PYTHON"] = _LAUNCHER
 
 
 def get_spark(
@@ -80,6 +129,7 @@ def get_spark(
         .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_", "-1")
         .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", "268435456")
     )
+    install_worker_launcher()
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

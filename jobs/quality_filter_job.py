@@ -36,6 +36,11 @@ from pyspark.sql import SparkSession
 def build_session(app_name: str, local_cores: int | None) -> SparkSession:
     b = SparkSession.builder.appName(app_name)
     if local_cores:  # sandbox/smoke only; omit under spark-submit
+        from data_profiler_spark.session import install_worker_launcher
+
+        # local workers start like get_spark's; on a cluster the cluster
+        # owns the worker environment
+        install_worker_launcher()
         b = b.master(f"local[{local_cores}]")
     b = (
         b.config("spark.sql.adaptive.enabled", "true")

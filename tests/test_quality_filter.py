@@ -101,7 +101,9 @@ def test_determinism_same_doc():
 def test_dup_2gram_rule_fires(spark):
     """Gopher-style n-gram repetition (north_star 'repetition n-gram dedup
     counts'): looped boilerplate trips dup_2grams, clean prose doesn't, and
-    the Spark expression agrees with the labeler on both."""
+    the Spark expression agrees with the labeler on both and on the
+    boundaries: no words, one word (no 2-grams), one 2-gram, a repeat,
+    and an interleaved repeat."""
     from pyspark.sql import functions as F
 
     from data_profiler_spark.functions.textstats import (
@@ -114,7 +116,8 @@ def test_dup_2gram_rule_fires(spark):
         "The quick brown fox jumps over the lazy dog and then rests with a "
         "friend in the shade of an old oak tree near the river bank."
     )
-    df = spark.createDataFrame([(0, looped), (1, clean)], "doc_id int, text string")
+    texts = [looped, clean, "", "a", "a a", "a a a", "a b a b c"]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id int, text string")
     out = {
         r["doc_id"]: r
         for r in with_signals(df)
@@ -123,11 +126,14 @@ def test_dup_2gram_rule_fires(spark):
     }
     assert "dup_2grams" in out[0]["reasons"]
     assert "dup_2grams" not in out[1]["reasons"]
-    for i, text in ((0, looped), (1, clean)):
+    for i, text in enumerate(texts):
         sig = ref.signals(text)
         got = out[i]["signals"].asDict()["dup_2gram_fraction"]
-        assert got == pytest.approx(sig["dup_2gram_fraction"], abs=1e-9)
+        assert got == pytest.approx(sig["dup_2gram_fraction"], abs=1e-9), text
     assert out[0]["signals"]["dup_2gram_fraction"] > 0.9
+    assert [out[i]["signals"]["dup_2gram_fraction"] for i in (2, 3, 4, 5)] == [
+        0.0, 0.0, 0.0, 0.5
+    ]
 
 
 def test_mean_line_length_rule_fires(spark):

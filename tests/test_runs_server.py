@@ -210,6 +210,49 @@ def test_concurrent_create_same_run_id_conflicts(tmp_path):
     assert sorted(codes) == [201, 409]
 
 
+def test_concurrent_create_distinct_run_ids_both_complete(server, workspace, spark, tmp_path):
+    """Two concurrent POST /runs with different run ids share one session
+    and both complete, each with its own manifest and audit log."""
+    from data_profiler_spark.synth import pages_df
+
+    inp = str(tmp_path / "pages.parquet")
+    pages_df(spark, 60, seed=11, partitions=4).write.parquet(inp)
+    ids = ("r-one", "r-two")
+    codes = []
+
+    def post(run_id):
+        codes.append(_post_json(server, "/runs", {"input": inp, "run_id": run_id})[0])
+
+    posts = [threading.Thread(target=post, args=(rid,)) for rid in ids]
+    for p in posts:
+        p.start()
+    for p in posts:
+        p.join(60)
+    assert codes == [201, 201]
+
+    deadline = time.time() + 180
+    states = {}
+    while time.time() < deadline:
+        for rid in ids:
+            try:
+                states[rid] = _get_json(server, f"/runs/{rid}/status")[1]["state"]
+            except urllib.error.HTTPError:
+                pass  # manifest not written yet
+        if set(states.values()) <= {"completed", "failed"} and len(states) == 2:
+            break
+        time.sleep(0.5)
+    for rid in ids:
+        d = workspace / rid
+        err = d / "server_error.json"
+        assert not err.exists(), err.read_text()
+        assert states.get(rid) == "completed", states
+        manifest = json.loads((d / "manifest.json").read_text())
+        assert manifest["run_id"] == rid and manifest["state"] == "completed"
+        events = [json.loads(line) for line in (d / "audit.jsonl").read_text().splitlines()]
+        assert events and {e["run_id"] for e in events} == {rid}
+        assert "run_created" in {e["event"] for e in events}
+
+
 def test_traversal_and_limit_validation(server, workspace):
     """Plain ``.``/``..`` run ids match the char-class but resolve to the
     workspace root / its parent — they must 404, not serve files outside
