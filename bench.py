@@ -10,7 +10,9 @@ estimator under multiplicative noise), and a pure-JVM ``host_marker_sec``
 reference workload is recorded so round-over-round deltas are
 attributable to the engine vs host noise. Cross-round comparisons should
 use ``stable_subset_total_sec`` (frozen round-3 query set) and the
-``queries_marker_normalized`` per-query values. The per-query maps go to
+``queries_marker_normalized`` per-query values. ``codegen_compiles`` is
+the JVM's Janino compile count over the timed passes: a warm plan that
+stays in the codegen cache compiles nothing. The per-query maps go to
 the side file ``bench_queries.json`` in the working directory, named by
 the line's ``queries_file``, so the line stays under 2000 characters.
 
@@ -376,10 +378,26 @@ def main() -> None:
 
     import __spark_entry__ as entry_mod
     from data_profiler_spark.pipeline import score_pages
-    from data_profiler_spark.session import get_spark
+    from data_profiler_spark.session import codegen_compiles, get_spark
     from data_profiler_spark.synth import pages_df
 
     spark = get_spark(app_name="bench", cores=CPUS)
+    timed_compiles = 0
+
+    def best_of_2(run) -> float:
+        """Best wall time of two timed passes of ``run``. Their Janino
+        compiles add to ``timed_compiles``: every plan already ran once
+        warm, so a nonzero count means warm plans were recompiled
+        (see session.ENGINE_CONF)."""
+        nonlocal timed_compiles
+        c0 = codegen_compiles(spark)
+        best = float("inf")
+        for _ in range(2):
+            t0 = time.time()
+            run()
+            best = min(best, time.time() - t0)
+        timed_compiles += codegen_compiles(spark) - c0
+        return best
 
     def host_marker() -> float:
         """Pure-JVM reference workload (sha2 over a generated range — no
@@ -440,12 +458,7 @@ def main() -> None:
         # per-query regressions that min-of-2 mostly absorbs. (r3/r4
         # totals were single-pass: suite totals are ≤-biased vs them;
         # compare rounds via stable_subset + marker-normalized fields.)
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.time()
-            qs[name](spark, SF_DIR).collect()
-            best = min(best, time.time() - t0)
-        timings[name] = round(best, 3)
+        timings[name] = round(best_of_2(lambda: qs[name](spark, SF_DIR).collect()), 3)
         print(f"# {name}: {timings[name]}s", file=sys.stderr, flush=True)
 
     # quality-filter scoring throughput (generate excluded via cache+count;
@@ -456,11 +469,9 @@ def main() -> None:
     score_pages(warm).write.mode("overwrite").format("noop").save()
     # best of 2 timed runs (same estimator as --scaling): one transient
     # neighbor-throttling burst otherwise dominates the headline number
-    score_sec = float("inf")
-    for _ in range(2):
-        t0 = time.time()
-        score_pages(pages).write.mode("overwrite").format("noop").save()
-        score_sec = min(score_sec, time.time() - t0)
+    score_sec = best_of_2(
+        lambda: score_pages(pages).write.mode("overwrite").format("noop").save()
+    )
     timings["quality_filter_score"] = round(score_sec, 3)
     print(f"# quality_filter_score: {score_sec:.2f}s", file=sys.stderr, flush=True)
     # release the 200k-page cache BEFORE the skew twins: their published
@@ -536,23 +547,24 @@ def main() -> None:
         # and a single host-noise burst on one twin fabricates a skew
         # "regression" (measured: a 2.1× salted-write ratio in one
         # contended window that a quiet re-run showed was ~1.0)
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.time()
-            fn(df)
-            best = min(best, time.time() - t0)
-        timings[name] = round(best, 3)
+        timings[name] = round(best_of_2(lambda: fn(df)), 3)
         print(f"# {name}: {timings[name]}s", file=sys.stderr, flush=True)
     skew.unpersist()
     uniform.unpersist()
 
-    headline, side = headline_payload(timings, marker_sec, marker_bw_sec, alloc_marker_sec)
+    headline, side = headline_payload(
+        timings, marker_sec, marker_bw_sec, alloc_marker_sec, timed_compiles
+    )
     with open(QUERIES_PATH, "w") as f:
         json.dump(side, f, indent=1)
     print(json.dumps(headline))
 
 def headline_payload(
-    timings: dict[str, float], marker_sec: float, marker_bw_sec: float, alloc_marker_sec: float
+    timings: dict[str, float],
+    marker_sec: float,
+    marker_bw_sec: float,
+    alloc_marker_sec: float,
+    codegen_compiles: int,
 ) -> tuple[dict, dict]:
     """(headline, side) for the default suite. The headline holds only
     scalars plus the three-entry skew ratios, so the final stdout line
@@ -611,6 +623,8 @@ def headline_payload(
         ),
         "skew_n": SKEW_N,
         "skew_vs_uniform_ratio": skew_ratios,
+        # Janino compiles in the timed passes (see session.ENGINE_CONF)
+        "codegen_compiles": codegen_compiles,
     }
     return headline, {"queries": timings, "queries_marker_normalized": q_norm}
 

@@ -42,7 +42,7 @@ hex char *i* of the token's md5.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from data_profiler_spark.functions.textstats import words_expr
@@ -654,9 +654,10 @@ def near_dup_components(
     minimum — two groupBy-min + join rounds over the EDGE set, provably
     O(log n) rounds on ANY graph. ``method`` accepts only ``"star"``.
 
-    One driver checksum per round detects convergence (inherent to any
-    fixed-point loop); each round's state is materialized (reliable
-    ``checkpoint`` when a checkpoint dir is configured, else
+    A (count, checksum) of the edge set, observed on the round's
+    materializing job, detects convergence (inherent to any fixed-point
+    loop), so a round runs one job. Each round's state is materialized
+    (reliable ``checkpoint`` when a checkpoint dir is configured, else
     ``localCheckpoint`` — see ``operators.checkpoints``) so the plan
     doesn't grow with iterations. Skewed keys (a giant component
     concentrates its root's key) are absorbed by AQE skew-join splitting
@@ -681,24 +682,34 @@ def _star_components_with_rounds(
     u > v, keep connectivity, and strictly shrink the potential function
     Σ dist-to-root, reaching the star fixed point (every u directly on
     its component min) in O(log n) rounds. Convergence = (count, xxhash
-    checksum) of the edge set unchanged — one tiny agg per half-round.
+    checksum) of the edge set unchanged, observed on the job that
+    materializes the round.
     """
-    edges = (
-        pairs.select(
-            F.greatest("id1", "id2").alias("u"), F.least("id1", "id2").alias("v")
-        )
-        .distinct()
-    )
-    edges = materialize(edges, eager=True)
-
-    def _sig(e: DataFrame) -> tuple:
+    def _materialize(e: DataFrame) -> tuple[DataFrame, tuple]:
+        # The (count, checksum) rides the materializing job as an
+        # observation: one job per round instead of a second agg job.
         # bit_xor, not sum: a set checksum that can't hit ANSI-mode long
-        # overflow (edges are distinct, so xor is order- and dup-free)
-        r = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.bit_xor(F.xxhash64("u", "v")).alias("h"),
-        ).collect()[0]
-        return (r["n"], r["h"])
+        # overflow (edges are distinct, so xor is order- and dup-free).
+        obs = Observation()
+        out = materialize(
+            e.observe(
+                obs,
+                F.count(F.lit(1)).alias("n"),
+                F.bit_xor(F.xxhash64("u", "v")).alias("h"),
+            ),
+            eager=True,
+        )
+        try:
+            r = obs.get
+        except Exception:
+            # AQE can replace an empty edge set with an empty LocalRelation;
+            # CollectMetrics then never runs and the observation comes back
+            # schemaless (toPyRow asserts). Confirm the emptiness from the
+            # materialized rows; (0, None) is what the agg gives on none.
+            if not out.isEmpty():
+                raise
+            return out, (0, None)
+        return out, (r["n"], r["h"])
 
     def _large_star(e: DataFrame) -> DataFrame:
         bid = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -721,12 +732,15 @@ def _star_components_with_rounds(
         self_edge = mins.select(F.col("u"), F.col("m").alias("v"))
         return repointed.unionByName(self_edge).distinct()
 
-    sig = _sig(edges)
+    edges, sig = _materialize(
+        pairs.select(
+            F.greatest("id1", "id2").alias("u"), F.least("id1", "id2").alias("v")
+        ).distinct()
+    )
     rounds = 0
     for _ in range(max_iter):
         rounds += 1
-        edges = materialize(_small_star(_large_star(edges)), eager=True)
-        new_sig = _sig(edges)
+        edges, new_sig = _materialize(_small_star(_large_star(edges)))
         if new_sig == sig:
             break
         sig = new_sig

@@ -1,10 +1,14 @@
 """SparkSession factory.
 
-One place to pin the execution config that the whole engine assumes:
-AQE on (runtime shuffle coalescing + skew-join splitting), Arrow on
-(vectorized pandas-UDF transfer), UTC session timezone (oracle parity
-with DuckDB), shuffle partitions sized to cores rather than the
-200-partition default.
+One place to pin the execution config that the whole engine assumes
+(``ENGINE_CONF``, applied by ``get_spark`` and by the spark-submit jobs'
+``build_session``): AQE on (runtime shuffle coalescing + skew-join
+splitting), Arrow on (vectorized pandas-UDF transfer), UTC session
+timezone (oracle parity with DuckDB), and a generated-code cache that
+holds the engine's whole working set of whole-stage-codegen classes, so a
+warm re-run of a plan finds its classes compiled (``codegen_compiles``
+reads the JVM's compile count). ``get_spark`` also sizes shuffle partitions to cores rather than
+the 200-partition default.
 
 At 100 TB these same settings hold: AQE picks the real shuffle
 parallelism from map-side statistics, so `spark.sql.shuffle.partitions`
@@ -73,6 +77,55 @@ def install_worker_launcher() -> None:
         os.environ["PYSPARK_PYTHON"] = _LAUNCHER
 
 
+# Every engine session's execution config, local or under spark-submit;
+# master, cores, memory and local paths stay with each session builder.
+ENGINE_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+    # Generated-class cache sized above the engine's working set. With the
+    # cache unbounded, one traced perfbench run (filter_run, dedup_skew,
+    # profile_output) Janino-compiled 234 classes and one bench.py suite
+    # 449. At the default of 100 entries one dedup_skew iteration (~115
+    # classes) evicted its own plans, so every warm iteration compiled
+    # ~65 classes again and C2 re-JITted each new class (BASELINE.md).
+    # Static: read when the JVM first generates code, so builder-only.
+    "spark.sql.codegen.cache.maxEntries": "1000",
+    # One BLAS thread per python worker: N workers × default BLAS
+    # threadpool (ncores each) oversubscribes the box quadratically —
+    # measured 2× wall-clock on the langid matmul at local[32]. Task
+    # parallelism comes from Spark, not from nested BLAS threads.
+    "spark.executorEnv.OPENBLAS_NUM_THREADS": "1",
+    "spark.executorEnv.OMP_NUM_THREADS": "1",
+    "spark.executorEnv.MKL_NUM_THREADS": "1",
+    # Retain python-worker allocator arenas: each Arrow/pandas-UDF
+    # batch allocates multi-MB numpy/Arrow buffers that glibc serves
+    # via mmap and returns to the OS on free, so EVERY batch re-pays
+    # first-touch page faults. On an overcommitted hypervisor those
+    # faults stall ~100× (measured here: first-touch cumsum over 50 MB
+    # 103 s vs 0.1 s re-touch, with flat CPU markers and zero PSI —
+    # the host supplies pages slowly under outside load). Disabling
+    # malloc trim and raising the mmap threshold keeps freed batch
+    # buffers in the worker's heap, paying the fault once per worker
+    # instead of once per batch: measured best-of-4 scoring 13.6 s →
+    # 9.3 s in a contended window (BASELINE.md round 4). Steady-state
+    # RSS is bounded by the worker's peak batch footprint, which
+    # worker reuse (default on) already implies.
+    "spark.executorEnv.MALLOC_TRIM_THRESHOLD_": "-1",
+    "spark.executorEnv.MALLOC_MMAP_THRESHOLD_": "268435456",
+}
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Janino compiles this JVM has run so far. A warm plan re-run adds 0
+    while its generated classes fit the codegen cache (``ENGINE_CONF``)."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def get_spark(
     app_name: str = "data_profiler_spark",
     cores: int | None = None,
@@ -90,12 +143,6 @@ def get_spark(
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or max(2 * n, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.io.tmpdir=/tmp")
@@ -106,32 +153,8 @@ def get_spark(
             "spark.executorEnv.PYTHONPATH",
             str(_Path(__file__).resolve().parents[1]),
         )
-        # One BLAS thread per python worker: N workers × default BLAS
-        # threadpool (ncores each) oversubscribes the box quadratically —
-        # measured 2× wall-clock on the langid matmul at local[32]. Task
-        # parallelism comes from Spark, not from nested BLAS threads.
-        .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
-        .config("spark.executorEnv.OMP_NUM_THREADS", "1")
-        .config("spark.executorEnv.MKL_NUM_THREADS", "1")
-        # Retain python-worker allocator arenas: each Arrow/pandas-UDF
-        # batch allocates multi-MB numpy/Arrow buffers that glibc serves
-        # via mmap and returns to the OS on free, so EVERY batch re-pays
-        # first-touch page faults. On an overcommitted hypervisor those
-        # faults stall ~100× (measured here: first-touch cumsum over 50 MB
-        # 103 s vs 0.1 s re-touch, with flat CPU markers and zero PSI —
-        # the host supplies pages slowly under outside load). Disabling
-        # malloc trim and raising the mmap threshold keeps freed batch
-        # buffers in the worker's heap, paying the fault once per worker
-        # instead of once per batch: measured best-of-4 scoring 13.6 s →
-        # 9.3 s in a contended window (BASELINE.md round 4). Steady-state
-        # RSS is bounded by the worker's peak batch footprint, which
-        # worker reuse (default on) already implies.
-        .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_", "-1")
-        .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", "268435456")
     )
     install_worker_launcher()
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    spark = builder.config(map={**ENGINE_CONF, **(extra_conf or {})}).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

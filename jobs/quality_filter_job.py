@@ -11,10 +11,11 @@ Cluster launch (north rule: multi-executor via --py-files):
         --run-id run-2026-08-16
 
 The session builder here deliberately sets NO master and no local-only
-config: spark-submit / the cluster manager owns executor topology, so the
-same file runs at N and 4N executors unchanged — the scaling-efficiency
-evidence in BASELINE.md is this job at two parallelism levels. Resume: the
-run manifest lives in --output; re-submitting with the same --run-id skips
+config, only the engine's shared ``session.ENGINE_CONF``: spark-submit /
+the cluster manager owns executor topology, so the same file runs at N
+and 4N executors unchanged — the scaling-efficiency evidence in
+BASELINE.md is this job at two parallelism levels. Resume: the run
+manifest lives in --output; re-submitting with the same --run-id skips
 completed batches (QualityFilterPipeline.run).
 
 In-sandbox smoke (no cluster):
@@ -34,27 +35,15 @@ from pyspark.sql import SparkSession
 
 
 def build_session(app_name: str, local_cores: int | None) -> SparkSession:
+    from data_profiler_spark.session import ENGINE_CONF, install_worker_launcher
+
     b = SparkSession.builder.appName(app_name)
     if local_cores:  # sandbox/smoke only; omit under spark-submit
-        from data_profiler_spark.session import install_worker_launcher
-
         # local workers start like get_spark's; on a cluster the cluster
         # owns the worker environment
         install_worker_launcher()
         b = b.master(f"local[{local_cores}]")
-    b = (
-        b.config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # retain python-worker allocator arenas — pay Arrow/numpy batch
-        # buffers' first-touch page faults once per worker, not per batch
-        # (rationale + measurements: data_profiler_spark/session.py)
-        .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_", "-1")
-        .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", "268435456")
-    )
-    return b.getOrCreate()
+    return b.config(map=ENGINE_CONF).getOrCreate()
 
 
 def main(argv: list[str] | None = None) -> int:

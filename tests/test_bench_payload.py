@@ -18,8 +18,9 @@ def test_headline_line_fits_capture():
     names = bench.BENCH_QUERIES + ["quality_filter_score"] + SKEW_TWINS
     # worst-case widths: every timing a long float
     timings = {n: 1234.567 + i for i, n in enumerate(names)}
-    headline, side = bench.headline_payload(timings, 0.753, 0.256, 0.081)
+    headline, side = bench.headline_payload(timings, 0.753, 0.256, 0.081, 123456)
     assert len(json.dumps(headline)) < 2000
+    assert headline["codegen_compiles"] == 123456
     assert "queries" not in headline and "queries_marker_normalized" not in headline
     assert side["queries"] == timings
     assert set(side["queries_marker_normalized"]) == set(names)
