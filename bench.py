@@ -4,17 +4,20 @@ Default: headline queries + the quality-filter scoring pipeline at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
 ``local[$SPARK_GRAFT_CPUS]``. Every query gets a warm pass (codegen +
 page-cache + python-worker spin-up excluded) then best-of-2 timed passes
-(round 5 — the host stalls in multi-second bursts that fabricated the
-round-4 per-query "regressions"; min-of-N is the repo's standard
-estimator under multiplicative noise), and a pure-JVM ``host_marker_sec``
-reference workload is recorded so round-over-round deltas are
-attributable to the engine vs host noise. Cross-round comparisons should
-use ``stable_subset_total_sec`` (frozen round-3 query set) and the
-``queries_marker_normalized`` per-query values. ``codegen_compiles`` is
+(the host stalls in multi-second bursts; min-of-N is the repo's
+estimator under multiplicative noise). Pure-JVM ``host_marker_sec``
+reference workloads run in the same window, so round-over-round deltas
+are attributable to the engine vs host noise. Cross-round comparisons
+should use ``stable_subset_total_sec`` (frozen round-3 query set) and the
+``queries_marker_normalized`` per-query values. ``cpu_frac`` is executor
+CPU time over executor run time in the timed passes: a host window that
+keeps tasks off the CPU lowers it, while extra engine work raises both
+times together. ``codegen_compiles`` is
 the JVM's Janino compile count over the timed passes: a warm plan that
-stays in the codegen cache compiles nothing. The per-query maps go to
-the side file ``bench_queries.json`` in the working directory, named by
-the line's ``queries_file``, so the line stays under 2000 characters.
+stays in the codegen cache compiles nothing. The per-query maps
+(seconds, ``cpu_s``, ``cpu_frac``) go to the side file
+``bench_queries.json`` in the working directory, named by the line's
+``queries_file``, so the line stays under 2000 characters.
 
 ``--scaling``: runs the scoring job at two parallelism levels
 (``$SPARK_GRAFT_SCALE_CORES``, default ``local[2]`` vs ``local[8]`` —
@@ -22,19 +25,20 @@ see the SCALE_CORES comment for why not 8 vs 32 on this host) on
 identical input — a FIXED number of interleaved A/B pairs
 (``$SPARK_GRAFT_SCALE_PAIRS``, default 3), best per level — and reports
 docs/sec at both + scaling efficiency = (T_N / T_4N) / 4 (north-rule
-evidence; measured numbers in BASELINE.md). Every round also times a
-pure-JVM reference job in the same window; the JSON carries all rounds,
-the markers, and ``vs_jvm_reference`` (engine scaling relative to raw
-JVM compute, which cancels the shared host's multiplicative noise).
+evidence; measured numbers in BASELINE.md). Every round also times the
+markers in the same window; the JSON carries all rounds, the markers,
+and ``vs_jvm_reference`` (engine scaling relative to raw JVM compute,
+which cancels the shared host's multiplicative noise).
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
 import time
+import uuid
+from contextlib import contextmanager
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
@@ -122,34 +126,6 @@ BENCH_OVERRIDES = {
     "embedding_near_dup_t09": _embedding_near_dup_t09,
 }
 
-BENCH_QUERIES = [
-    "profile_nchars",
-    "distinct_counts",
-    "top10_lang",
-    "hist_nchars",
-    "money_validation",
-    "tpch_q1",
-    "top10_customers_revenue",
-    "events_hourly",
-    "token_stats_by_lang",
-    "dedup_exact",
-    "ann_cosine_top10",
-    "minhash_lsh_dedup",
-    "ngram_jaccard_dup",
-    "ngram_jaccard_capped",
-    "simhash_signatures",
-    "simhash_pairs",
-    "embedding_near_dup",
-    "embedding_near_dup_t09",
-    "user_sessions",
-    "line_dedup_docs",
-    "token_budget_sample",
-    "html_extract_roundtrip",
-    "incremental_dedup",
-    "duplicated_spans",
-    "quality_score_by_source",
-]
-
 # The 26 entries BENCH_r03.json carried (BENCH_QUERIES at round 3 +
 # quality_filter_score). Later rounds add entries (skew twins, new
 # operators), which makes raw suite TOTALS incomparable round-over-round;
@@ -182,44 +158,57 @@ STABLE_SUBSET = [
     "quality_score_by_source",
     "quality_filter_score",
 ]
+# the registry queries the suite times: the frozen set's, in its order;
+# a new query is appended here, never to STABLE_SUBSET
+BENCH_QUERIES = [n for n in STABLE_SUBSET if n != "quality_filter_score"]
 
 
-def _jvm_marker(spark, cores: int) -> float:
-    """Pure-JVM reference workload (sha2 fold over a range) timed in the
-    SAME session/window as a scoring round. Ratio engine/marker cancels
-    multiplicative host noise (a throttled window slows both identically),
-    so marker-relative scaling is meaningful even when raw wall times are
-    neighbor-dominated."""
+def best_of_2(run) -> float:
+    """Best wall time of two passes of ``run``. The host stalls in
+    multi-second bursts (identical plans re-run seconds apart swung
+    0.59 s → 3.42 s, BASELINE.md), and min-of-N is the repo's estimator
+    under that multiplicative noise."""
+    best = float("inf")
+    for _ in range(2):
+        t0 = time.time()
+        run()
+        best = min(best, time.time() - t0)
+    return best
+
+
+def host_marker(spark, partitions: int) -> float:
+    """Pure-JVM reference workload (sha2 fold over a generated range — no
+    I/O, no Python), timed in the SAME session/window as the engine. Its
+    wall time moves only with host noise, so the ratio engine/marker
+    cancels multiplicative host noise (a throttled window slows both
+    identically). Callers keep the partition counts the quiet references
+    were measured with: the suite passes CPUS, ``--scaling`` and
+    scripts/scale_step.py pass cores * 2."""
     from pyspark.sql import functions as F
 
     t0 = time.time()
-    spark.range(0, 20_000_000, 1, cores * 2).select(
+    spark.range(0, 20_000_000, 1, partitions).select(
         F.max(F.sha2(F.col("id").cast("string"), 256)).alias("h")
     ).collect()
     return time.time() - t0
 
 
-def _jvm_bw_marker(spark, cores: int) -> float:
-    """Memory-BANDWIDTH-bound reference for a scaling round (same design
-    as the headline suite's host_marker_bw): sha2 streamed over a large
-    cached string column. Sessions 6/7 (BASELINE.md) showed local[8]
-    engine rounds capped while the cache-resident compute marker stayed
-    flat — bandwidth contention is invisible to it — so --scaling rounds
-    record BOTH markers and bandwidth-capped windows are identifiable
-    from the JSON alone."""
+def host_marker_bw(spark, partitions: int) -> float:
+    """Memory-BANDWIDTH-bound reference workload: sha2 over a large cached
+    string column streams ~500 MB through the hash per pass, so its wall
+    time moves with DRAM contention that the cache-resident compute marker
+    cannot see (BASELINE.md sessions 6/7: local[8] engine rounds capped
+    while the compute marker stayed flat). Together the two markers tell
+    compute-throttled from bandwidth-throttled windows."""
     from pyspark.sql import functions as F
 
     big = (
-        spark.range(0, 2_000_000, 1, cores * 2)
+        spark.range(0, 2_000_000, 1, partitions)
         .select(F.repeat(F.sha2(F.col("id").cast("string"), 256), 4).alias("s"))
         .cache()
     )
-    big.count()
-    best = float("inf")
-    for _ in range(2):
-        t0 = time.time()
-        big.select(F.max(F.sha2(F.col("s"), 256)).alias("h")).collect()
-        best = min(best, time.time() - t0)
+    big.count()  # materialize outside the timed window
+    best = best_of_2(lambda: big.select(F.max(F.sha2(F.col("s"), 256)).alias("h")).collect())
     big.unpersist()
     return best
 
@@ -244,44 +233,82 @@ def _alloc_marker() -> float:
     return time.time() - t0
 
 
-def _run_score_round(cores: int, n_docs: int) -> float:
-    """Steady-state scoring throughput at ``local[cores]``: best timed run
-    of score(cached pages) → noop sink. Excluded from the timed window:
-    input generation (cache+count), whole-stage codegen compile, and
-    per-worker model training (full-shape warm-up pass — a small df with
-    the SAME partition count warms every python worker; limit(N) would
-    warm a single task).
+@contextmanager
+def stage_metrics(spark):
+    """Per-stage executor metrics of exactly the jobs run in the ``with``
+    body. On exit the yielded list gets one dict per stage: ``run_s`` and
+    ``cpu_s`` (executor run and CPU time over its tasks) and
+    ``shuffle_write_bytes``. The body runs under its own job group; the
+    listener bus is drained and that group's stages are read from Spark's
+    status store, so the UI can stay off. ``perfbench/meter.py`` keeps its
+    own copy: the benchmark measures from outside this file."""
+    sc = spark.sparkContext
+    group = f"bench-{uuid.uuid4().hex}"
+    stages: list[dict] = []
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        yield stages
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    tracker, gw = sc.statusTracker(), sc._gateway
+    ids = {s for j in tracker.getJobIdsForGroup(group) for s in tracker.getJobInfo(j).stageIds}
+    for sid in sorted(ids):
+        found = jsc.statusStore().stageData(
+            sid, False, gw.jvm.java.util.ArrayList(), False, gw.new_array(gw.jvm.double, 0)
+        )
+        attempts = [found.apply(i) for i in range(found.size())]
+        stages.append({
+            "run_s": sum(a.executorRunTime() for a in attempts) / 1e3,
+            "cpu_s": sum(a.executorCpuTime() for a in attempts) / 1e9,
+            "shuffle_write_bytes": sum(a.shuffleWriteBytes() for a in attempts),
+        })
+
+
+def time_scoring(spark, n_docs: int, partitions: int, timer=best_of_2) -> float:
+    """Steady-state scoring time: ``timer`` over score(cached pages) → noop
+    sink. Excluded from the timed window: input generation (cache+count),
+    whole-stage codegen compile, and per-worker model training (full-shape
+    warm-up pass — a small df with the SAME partition count warms every
+    python worker; limit(N) would warm a single task).
 
     The sink is ``noop``, not parquet: this box has ONE local disk, and a
     parquet sink caps both parallelism levels at the same ~30 MB/s —
     measuring the disk, not the engine. On a real cluster the sink is
     distributed storage that scales with executors, so engine throughput
     is the honest scaling signal available in this sandbox (the parquet
-    path is exercised and timed by the main bench + pipeline tests)."""
+    path is exercised and timed by the pipeline tests and perfbench)."""
+    from data_profiler_spark.pipeline import score_pages
+    from data_profiler_spark.synth import pages_df
+
+    pages = pages_df(spark, n_docs, partitions=partitions).cache()
+    pages.count()
+    warm = pages_df(spark, partitions * 10, partitions=partitions)
+    score_pages(warm).write.mode("overwrite").format("noop").save()
+    sec = timer(lambda: score_pages(pages).write.mode("overwrite").format("noop").save())
+    pages.unpersist()
+    return sec
+
+
+def _run_score_round(cores: int, n_docs: int) -> tuple[float, float, float]:
+    """(scoring sec, compute marker sec, bandwidth marker sec) for one
+    ``--scaling`` round at ``local[cores]``, markers and scoring in one
+    fresh session over ``cores * 2`` partitions."""
     from pyspark.sql import SparkSession
 
-    from data_profiler_spark.pipeline import score_pages
     from data_profiler_spark.session import get_spark
-    from data_profiler_spark.synth import pages_df
 
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()
     spark = get_spark(app_name=f"bench_score_{cores}", cores=cores)
-    pages = pages_df(spark, n_docs, partitions=cores * 2).cache()
-    pages.count()
-    warm = pages_df(spark, cores * 20, partitions=cores * 2)
-    score_pages(warm).write.mode("overwrite").format("noop").save()
-    _jvm_marker(spark, cores)  # codegen warm-up for the marker job
-    marker = _jvm_marker(spark, cores)
-    bw_marker = _jvm_bw_marker(spark, cores)
-    best = float("inf")
-    for _ in range(2):
-        t0 = time.time()
-        score_pages(pages).write.mode("overwrite").format("noop").save()
-        best = min(best, time.time() - t0)
+    host_marker(spark, cores * 2)  # codegen warm-up for the marker job
+    marker = host_marker(spark, cores * 2)
+    bw_marker = host_marker_bw(spark, cores * 2)
+    elapsed = time_scoring(spark, n_docs, cores * 2)
     spark.stop()
-    return best, marker, bw_marker
+    return elapsed, marker, bw_marker
 
 
 def main() -> None:
@@ -306,30 +333,24 @@ def main() -> None:
         # of interleaved pairs (no early stop on reaching the target —
         # optional stopping would bias the reported efficiency upward) and
         # the efficiency from all rounds is the honest estimator.
-        results: dict[int, float] = {}
-        rounds: dict[str, list[float]] = {str(SCALE_LO): [], str(SCALE_HI): []}
-        markers: dict[str, list[float]] = {str(SCALE_LO): [], str(SCALE_HI): []}
-        bw_markers: dict[str, list[float]] = {str(SCALE_LO): [], str(SCALE_HI): []}
+        # cores -> one (scoring sec, compute marker, bw marker) per round
+        raw: dict[int, list[tuple[float, float, float]]] = {SCALE_LO: [], SCALE_HI: []}
         alloc_markers: list[float] = []
-        ratios: dict[int, list[float]] = {SCALE_LO: [], SCALE_HI: []}
         n_pairs = int(os.environ.get("SPARK_GRAFT_SCALE_PAIRS", "3"))
         for _pair in range(n_pairs):
             for cores in (SCALE_LO, SCALE_HI):
                 elapsed, marker, bw_marker = _run_score_round(cores, SCALE_N)
+                raw[cores].append((elapsed, marker, bw_marker))
                 alloc = _alloc_marker()
                 alloc_markers.append(round(alloc, 2))
-                results[cores] = min(results.get(cores, float("inf")), elapsed)
-                rounds[str(cores)].append(round(elapsed, 2))
-                markers[str(cores)].append(round(marker, 2))
-                bw_markers[str(cores)].append(round(bw_marker, 2))
-                ratios[cores].append(elapsed / marker)
                 print(
                     f"# local[{cores}]: {elapsed:.2f}s (marker {marker:.2f}s, "
                     f"bw {bw_marker:.2f}s, alloc {alloc:.2f}s)",
                     file=sys.stderr,
                     flush=True,
                 )
-        eff = (results[SCALE_LO] / results[SCALE_HI]) / (SCALE_HI / SCALE_LO)
+        t_lo, t_hi = (min(r[0] for r in raw[c]) for c in (SCALE_LO, SCALE_HI))
+        eff = (t_lo / t_hi) / (SCALE_HI / SCALE_LO)
         # Marker-relative scaling: R = engine_time / same-round JVM-reference
         # time — to first order both slow down together under host
         # throttling, so R is window-normalized. MEDIAN per level (min
@@ -338,9 +359,14 @@ def main() -> None:
         # pure-JVM reference workload between the two levels; >= 1 means
         # no worse. The marker is short, so residual within-round noise
         # remains — read alongside `rounds`/`jvm_markers`.
-        med = lambda xs: sorted(xs)[len(xs) // 2]  # noqa: E731
-        vs_ref = med(ratios[SCALE_LO]) / med(ratios[SCALE_HI])
-        t8, t32 = results[SCALE_LO], results[SCALE_HI]
+        med_ratio = {
+            c: sorted(e / m for e, m, _ in raw[c])[len(raw[c]) // 2] for c in raw
+        }
+        vs_ref = med_ratio[SCALE_LO] / med_ratio[SCALE_HI]
+
+        def per_round(i: int) -> dict[str, list[float]]:
+            return {str(c): [round(r[i], 2) for r in raw[c]] for c in raw}
+
         print(
             json.dumps(
                 {
@@ -349,19 +375,19 @@ def main() -> None:
                     "unit": "efficiency",
                     "sf": SCALE_N,
                     "queries": {
-                        f"docs_per_sec_local{SCALE_LO}": round(SCALE_N / t8, 1),
-                        f"docs_per_sec_local{SCALE_HI}": round(SCALE_N / t32, 1),
-                        f"t_local{SCALE_LO}_sec": round(t8, 2),
-                        f"t_local{SCALE_HI}_sec": round(t32, 2),
+                        f"docs_per_sec_local{SCALE_LO}": round(SCALE_N / t_lo, 1),
+                        f"docs_per_sec_local{SCALE_HI}": round(SCALE_N / t_hi, 1),
+                        f"t_local{SCALE_LO}_sec": round(t_lo, 2),
+                        f"t_local{SCALE_HI}_sec": round(t_hi, 2),
                     },
                     # every round's wall time, in order — min-per-level is
                     # the estimator, but a reader can see which windows
                     # were host-throttled (all levels flatten together)
-                    "rounds": rounds,
-                    "jvm_markers": markers,
+                    "rounds": per_round(0),
+                    "jvm_markers": per_round(1),
                     # bandwidth-bound twin (sessions 6/7: local[8] rounds
                     # capped while the cache-resident marker stayed flat)
-                    "jvm_bw_markers": bw_markers,
+                    "jvm_bw_markers": per_round(2),
                     # first-touch page-fault reference per round (quiet
                     # ~0.05-0.1 s; round-4 discovery: hypervisor page
                     # provisioning can stall 100x while BOTH jvm markers
@@ -377,107 +403,51 @@ def main() -> None:
         return
 
     import __spark_entry__ as entry_mod
-    from data_profiler_spark.pipeline import score_pages
     from data_profiler_spark.session import codegen_compiles, get_spark
-    from data_profiler_spark.synth import pages_df
 
     spark = get_spark(app_name="bench", cores=CPUS)
     timed_compiles = 0
+    # name -> best-of-2 "sec", executor "cpu_s"/"run_s" per timed pass (mean of 2)
+    measured: dict[str, dict[str, float]] = {}
 
-    def best_of_2(run) -> float:
-        """Best wall time of two timed passes of ``run``. Their Janino
+    def timed(name: str, run) -> float:
+        """Best of two passes of ``run``, recorded under ``name`` with the
+        per-pass executor CPU and run time of its stages. Their Janino
         compiles add to ``timed_compiles``: every plan already ran once
         warm, so a nonzero count means warm plans were recompiled
         (see session.ENGINE_CONF)."""
         nonlocal timed_compiles
         c0 = codegen_compiles(spark)
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.time()
-            run()
-            best = min(best, time.time() - t0)
+        with stage_metrics(spark) as stages:
+            sec = best_of_2(run)
         timed_compiles += codegen_compiles(spark) - c0
-        return best
+        cpu_s = sum(s["cpu_s"] for s in stages) / 2
+        run_s = sum(s["run_s"] for s in stages) / 2
+        measured[name] = {"sec": round(sec, 3), "cpu_s": cpu_s, "run_s": run_s}
+        print(f"# {name}: {sec:.3f}s, cpu_s {cpu_s:.3f}", file=sys.stderr, flush=True)
+        return sec
 
-    def host_marker() -> float:
-        """Pure-JVM reference workload (sha2 over a generated range — no
-        I/O, no Python): its wall time moves ONLY with host noise, so
-        round-over-round deltas in the suite can be attributed (engine vs
-        neighbors). Recorded in the output JSON."""
-        from pyspark.sql import functions as F
-
-        t0 = time.time()
-        spark.range(0, 20_000_000, 1, CPUS).select(
-            F.max(F.sha2(F.col("id").cast("string"), 256)).alias("h")
-        ).collect()
-        return round(time.time() - t0, 3)
-
-    def host_marker_bw() -> float:
-        """Memory-BANDWIDTH-bound reference workload: sha2 over a large
-        cached string column streams ~500 MB through the hash per pass, so
-        its wall time moves with DRAM contention that the cache-resident
-        compute marker cannot see (BASELINE.md's stage-isolated diagnosis:
-        neighbor bandwidth pressure caps streaming stages while compute
-        stays fast). Together the two markers bracket host noise:
-        compute-throttled vs bandwidth-throttled windows are
-        distinguishable from the JSON alone."""
-        from pyspark.sql import functions as F
-
-        big = (
-            spark.range(0, 2_000_000, 1, CPUS)
-            .select(F.repeat(F.sha2(F.col("id").cast("string"), 256), 4).alias("s"))
-            .cache()
-        )
-        big.count()  # materialize outside the timed window
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.time()
-            big.select(F.max(F.sha2(F.col("s"), 256)).alias("h")).collect()
-            best = min(best, time.time() - t0)
-        big.unpersist()
-        return round(best, 3)
-
-    host_marker()  # codegen warm-up for the marker itself
-    marker_sec = host_marker()
-    marker_bw_sec = host_marker_bw()
+    host_marker(spark, CPUS)  # codegen warm-up for the marker itself
+    marker_sec = round(host_marker(spark, CPUS), 3)
+    marker_bw_sec = round(host_marker_bw(spark, CPUS), 3)
     alloc_marker_sec = round(_alloc_marker(), 3)
     qs = entry_mod.queries()
     qs.update(BENCH_OVERRIDES)
-    timings: dict[str, float] = {}
     for name in BENCH_QUERIES:
         # warm pass first: codegen compile + OS page cache + python worker
-        # spin-up excluded from the timed window (the --scaling path always
-        # measured warm; this makes the headline suite comparable across
-        # rounds too).
+        # spin-up excluded from the timed window. Then best-of-2 (round 5):
+        # a single timed pass fabricated per-query regressions out of host
+        # stalls. (r3/r4 totals were single-pass: suite totals are
+        # ≤-biased vs them; compare rounds via stable_subset +
+        # marker-normalized fields.)
         qs[name](spark, SF_DIR).collect()
-        # best-of-2 (round 5): the same estimator --scaling, scoring, and
-        # the skew twins already use. The round-4/5 adjudication of the
-        # two "regressed" rows (BASELINE.md) showed the host stalls in
-        # multi-second bursts — identical plans re-run seconds apart
-        # swing 0.59 s → 3.42 s — so a single timed pass fabricates
-        # per-query regressions that min-of-2 mostly absorbs. (r3/r4
-        # totals were single-pass: suite totals are ≤-biased vs them;
-        # compare rounds via stable_subset + marker-normalized fields.)
-        timings[name] = round(best_of_2(lambda: qs[name](spark, SF_DIR).collect()), 3)
-        print(f"# {name}: {timings[name]}s", file=sys.stderr, flush=True)
+        timed(name, lambda: qs[name](spark, SF_DIR).collect())
 
-    # quality-filter scoring throughput (generate excluded via cache+count;
-    # warm-up covers all python workers + codegen, see _run_score_job)
-    pages = pages_df(spark, PAGES_N, partitions=CPUS * 2).cache()
-    pages.count()
-    warm = pages_df(spark, CPUS * 20, partitions=CPUS * 2)
-    score_pages(warm).write.mode("overwrite").format("noop").save()
-    # best of 2 timed runs (same estimator as --scaling): one transient
-    # neighbor-throttling burst otherwise dominates the headline number
-    score_sec = best_of_2(
-        lambda: score_pages(pages).write.mode("overwrite").format("noop").save()
-    )
-    timings["quality_filter_score"] = round(score_sec, 3)
-    print(f"# quality_filter_score: {score_sec:.2f}s", file=sys.stderr, flush=True)
-    # release the 200k-page cache BEFORE the skew twins: their published
+    # quality-filter scoring throughput (same helper as --scaling); it
+    # releases its page cache BEFORE the skew twins: their published
     # artifact is a ratio, and gigabytes of unrelated cached blocks
     # competing for storage memory is avoidable noise on it
-    pages.unpersist()
+    time_scoring(spark, PAGES_N, CPUS * 2, lambda run: timed("quality_filter_score", run))
 
     # ---- skew-stress entries (VERDICT r3 #1): the same operators timed
     # on the uniform fixture vs synth.skewed_pages_df (hot host ~35 %,
@@ -486,13 +456,13 @@ def main() -> None:
     # defenses (map-side-combinable line counts, max_band_df star routing,
     # url-hash salting) hold — not just the design assertion. Same volume
     # both sides (SKEW_N, smaller than PAGES_N to keep the suite fast);
-    # suite convention: warm pass, then one timed pass.
+    # suite convention: warm pass, then best of 2.
     from pyspark.sql import functions as F
 
     from data_profiler_spark.operators.corpus import line_dedup
     from data_profiler_spark.operators.dedup import minhash_lsh_pairs
-    from data_profiler_spark.pipeline import NULL_MONTH, url_salt
-    from data_profiler_spark.synth import skewed_pages_df
+    from data_profiler_spark.pipeline import NULL_MONTH, score_pages, url_salt
+    from data_profiler_spark.synth import pages_df, skewed_pages_df
 
     skew = skewed_pages_df(spark, SKEW_N, partitions=CPUS * 2).cache()
     skew.count()
@@ -547,30 +517,40 @@ def main() -> None:
         # and a single host-noise burst on one twin fabricates a skew
         # "regression" (measured: a 2.1× salted-write ratio in one
         # contended window that a quiet re-run showed was ~1.0)
-        timings[name] = round(best_of_2(lambda: fn(df)), 3)
-        print(f"# {name}: {timings[name]}s", file=sys.stderr, flush=True)
+        timed(name, lambda: fn(df))
     skew.unpersist()
     uniform.unpersist()
 
     headline, side = headline_payload(
-        timings, marker_sec, marker_bw_sec, alloc_marker_sec, timed_compiles
+        measured, marker_sec, marker_bw_sec, alloc_marker_sec, timed_compiles
     )
     with open(QUERIES_PATH, "w") as f:
         json.dump(side, f, indent=1)
     print(json.dumps(headline))
 
+def _cpu_frac(measured) -> float | None:
+    """Executor CPU time / executor run time over ``measured`` records:
+    DS2's useful-time share. A stalled host window stretches run time but
+    not CPU time, so the share drops; an engine regression moves both."""
+    measured = list(measured)
+    run_s = sum(m["run_s"] for m in measured)
+    return round(sum(m["cpu_s"] for m in measured) / run_s, 3) if run_s > 0 else None
+
+
 def headline_payload(
-    timings: dict[str, float],
+    measured: dict[str, dict[str, float]],
     marker_sec: float,
     marker_bw_sec: float,
     alloc_marker_sec: float,
     codegen_compiles: int,
 ) -> tuple[dict, dict]:
-    """(headline, side) for the default suite. The headline holds only
-    scalars plus the three-entry skew ratios, so the final stdout line
-    stays short enough for a 2000-char capture to parse; the per-query
-    maps (``queries`` and ``queries_marker_normalized``) go to the side
-    file at ``QUERIES_PATH``."""
+    """(headline, side) for the default suite from ``measured`` (name ->
+    ``sec``, ``cpu_s``, ``run_s``; see ``main``'s ``timed``). The headline
+    holds only scalars plus the three-entry skew ratios, so the final
+    stdout line stays short enough for a 2000-char capture to parse; the
+    per-query maps (``queries``, ``queries_marker_normalized``, ``cpu_s``
+    and ``cpu_frac``) go to the side file at ``QUERIES_PATH``."""
+    timings = {n: m["sec"] for n, m in measured.items()}
     total = round(sum(timings.values()), 3)
     score_sec = timings["quality_filter_score"]
     # Marker-normalized totals: scale the wall time to what a QUIET host
@@ -625,8 +605,15 @@ def headline_payload(
         "skew_vs_uniform_ratio": skew_ratios,
         # Janino compiles in the timed passes (see session.ENGINE_CONF)
         "codegen_compiles": codegen_compiles,
+        "cpu_frac": _cpu_frac(measured.values()),
     }
-    return headline, {"queries": timings, "queries_marker_normalized": q_norm}
+    return headline, {
+        "queries": timings,
+        "queries_marker_normalized": q_norm,
+        "cpu_s": {n: round(m["cpu_s"], 3) for n, m in measured.items()},
+        "cpu_frac": {n: _cpu_frac([m]) for n, m in measured.items()},
+    }
+
 
 if __name__ == "__main__":
     main()

@@ -401,7 +401,6 @@ class QualityFilterPipeline:
                 *input_fingerprint_exprs(["url", "warc_ts", "text"]),
             )
         )
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # repartition on (month, salt): skew defusal AND at most one file
         # per (month, salt-bucket) — without month in the key every task
         # could hold rows of every month and fan out #tasks × #months files.

@@ -12,10 +12,11 @@ What streaming adds on top:
   counts with late-data tolerance on ``warc_ts`` (event time). Tumbling
   windows + watermark bound the state store; at 10^12 docs/day the state is
   windows × langs, not documents.
-* **foreachBatch sink** — each micro-batch reuses the batch writer
-  (output contract + salted repartition + zstd parquet), so
-  exactly-once-per-batch file output and the batch pipeline's layout
-  guarantees carry over.
+* **foreachBatch sink** — each micro-batch gets the output contract and
+  a salted repartition, then goes through the batch writer
+  (``catalog.write_partitioned`` in append mode, zstd parquet or Iceberg
+  append), so exactly-once-per-batch file output and the batch
+  pipeline's layout guarantees carry over.
 """
 
 from __future__ import annotations
@@ -23,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..io.catalog import PARQUET_CODEC
+from ..io import catalog
 from ..pipeline import output_contract, score_pages, url_salt
 
 
@@ -71,14 +72,14 @@ def start_scoring_stream(
     micro-batches."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
+        catalog.write_partitioned(
             output_contract(score_pages(batch_df))
             .withColumn("salt", url_salt(salt_buckets))
             .repartition(F.col("salt"))
-            .drop("salt")
-            .write.mode("append")
-            .option("compression", PARQUET_CODEC)
-            .parquet(output_path)
+            .drop("salt"),
+            output_path,
+            [],
+            mode="append",
         )
 
     writer = stream_df.writeStream.foreachBatch(write_batch).option(

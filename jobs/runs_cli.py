@@ -55,6 +55,8 @@ def _run_status_view(m: dict) -> dict:
     stages = m.get("stages", [])
     started = [s.get("started_at") for s in stages if s.get("started_at")]
     finished = [s.get("finished_at") for s in stages if s.get("finished_at")]
+    # the pipeline nests per-month counters under "metrics"; accept a flat
+    # "rows" too so hand-rolled manifests stay listable
     rows = sum(
         ((b or {}).get("metrics") or {}).get("rows", (b or {}).get("rows", 0))
         for b in m.get("completed_batches", {}).values()
@@ -82,19 +84,15 @@ def _run_summary(run_dir: str) -> dict | None:
     if m is None:
         return None
     stages = m.get("stages", [])
+    view = _run_status_view(m)
     return {
         # reference RunStatus field names first (list_runs returns
         # List[RunStatus]); CLI-native extras after
-        **_run_status_view(m),
+        **view,
         "path": run_dir,
         "progress": m.get("progress", 0.0),
         "months_committed": len(m.get("completed_batches", {})),
-        # the pipeline nests per-month counters under "metrics"; accept a
-        # flat "rows" too so hand-rolled manifests stay listable
-        "rows": sum(
-            ((b or {}).get("metrics") or {}).get("rows", (b or {}).get("rows", 0))
-            for b in m.get("completed_batches", {}).values()
-        ),
+        "rows": view["row_count"],
         "last_stage": stages[-1]["stage"] if stages else None,
         "updated_at": max(
             (s.get("finished_at") or s.get("started_at") or "" for s in stages),

@@ -22,12 +22,12 @@ Operators (the VERDICT-named family):
   inline: URL blocklist -> decontamination screen -> normalize ->
   repeated-span kill -> cross-corpus line dedup (skew_safe).
 
-Shuffle volume comes from the Spark UI REST API (``spark.ui.enabled``
-is flipped on for this session only): for each op we diff the completed
-stage list and record the max and total shuffle-write bytes of its new
-stages. Expected shape at 10x: wall time ~linear (10-15x given the
-banded joins' n * bands candidate streams), shuffle bytes ~linear; a
-superlinear shuffle means a quadratic candidate path escaped a cap.
+Shuffle volume comes from ``bench.stage_metrics`` (job group + Spark's
+status store, UI off): for one run of each op we record the max and
+total shuffle-write bytes of its stages. Expected shape at 10x: wall time
+~linear (10-15x given the banded joins' n * bands candidate streams),
+shuffle bytes ~linear; a superlinear shuffle means a quadratic candidate
+path escaped a cap.
 
 Window quality: compute/bw markers before and after (see BASELINE.md
 conventions — on this host, absolute times are only meaningful next to
@@ -44,40 +44,12 @@ import argparse
 import json
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, ".")
 
 from pyspark.sql import functions as F
 
-
-def _rest(base: str, path: str) -> list | dict:
-    with urllib.request.urlopen(f"{base}/api/v1{path}") as r:
-        return json.load(r)
-
-
-def _ui_base(spark) -> str:
-    # NEVER hardcode :4040 — when another Spark app holds it, this session
-    # binds 4041+ and a hardcoded port would silently read the OTHER app's
-    # stage metrics (every diff empty, shuffle bytes reported as 0).
-    url = spark.sparkContext.uiWebUrl
-    if not url:
-        raise RuntimeError("Spark UI is disabled; pass spark.ui.enabled=true")
-    return url
-
-
-def _app_id(base: str) -> str:
-    return _rest(base, "/applications")[0]["id"]
-
-
-def _stages(base: str, app: str) -> dict[int, dict]:
-    out = {}
-    for s in _rest(base, f"/applications/{app}/stages?status=complete"):
-        out[s["stageId"]] = {
-            "w": s.get("shuffleWriteBytes", 0),
-            "r": s.get("shuffleReadBytes", 0),
-        }
-    return out
+import bench
 
 
 def _markers(spark, cpus: int) -> dict:
@@ -85,11 +57,9 @@ def _markers(spark, cpus: int) -> dict:
     # (bench.QUIET_MARKER_SEC etc.) are calibrated against THOSE exact
     # workloads, and a drifting copy would silently break marker-relative
     # comparisons across the repo's measurement artifacts.
-    import bench
-
     return {
-        "compute": round(bench._jvm_marker(spark, cpus), 3),
-        "bw": round(bench._jvm_bw_marker(spark, cpus), 3),
+        "compute": round(bench.host_marker(spark, cpus * 2), 3),
+        "bw": round(bench.host_marker_bw(spark, cpus * 2), 3),
     }
 
 
@@ -104,13 +74,7 @@ def main() -> None:
     from data_profiler_spark.session import get_spark
     from data_profiler_spark.synth import pages_df, skewed_pages_df
 
-    spark = get_spark(
-        app_name="scale_step",
-        cores=args.cpus,
-        extra_conf={"spark.ui.enabled": "true"},
-    )
-    ui = _ui_base(spark)
-    app = _app_id(ui)
+    spark = get_spark(app_name="scale_step", cores=args.cpus)
     cpus = args.cpus
 
     def op_minhash(df):
@@ -186,22 +150,21 @@ def main() -> None:
             fn()  # warm: codegen + caches
             # Shuffle accounting brackets exactly ONE run — "sec" is a
             # single run's wall time too, so the published bytes and
-            # seconds describe the same unit of work (a diff spanning the
+            # seconds describe the same unit of work (stages spanning the
             # whole best-of-2 loop would double the absolutes).
-            before = _stages(ui, app)
-            t0 = time.time()
-            rows = fn()
-            best = time.time() - t0
-            after = _stages(ui, app)
+            with bench.stage_metrics(spark) as stages:
+                t0 = time.time()
+                rows = fn()
+                best = time.time() - t0
             t0 = time.time()  # best-of-2 (bursty host; BASELINE.md)
             fn()
             best = min(best, time.time() - t0)
-            new = [v for k, v in after.items() if k not in before]
+            written = [s["shuffle_write_bytes"] for s in stages]
             level["ops"][name] = {
                 "sec": round(best, 3),
                 "rows": rows,
-                "peak_stage_shuffle_write_bytes": max((s["w"] for s in new), default=0),
-                "total_shuffle_write_bytes": sum(s["w"] for s in new),
+                "peak_stage_shuffle_write_bytes": max(written, default=0),
+                "total_shuffle_write_bytes": sum(written),
             }
             print(f"# n={n} {name}: {level['ops'][name]}", file=sys.stderr, flush=True)
         # Candidate-mass decomposition: if the minhash shuffle ratio is
