@@ -35,6 +35,7 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import time
 import uuid
@@ -293,36 +294,39 @@ def time_scoring(spark, n_docs: int, partitions: int, timer=best_of_2) -> float:
 
 def _run_score_round(cores: int, n_docs: int) -> tuple[float, float, float]:
     """(scoring sec, compute marker sec, bandwidth marker sec) for one
-    ``--scaling`` round at ``local[cores]``, markers and scoring in one
-    fresh session over ``cores * 2`` partitions."""
-    from pyspark.sql import SparkSession
-
-    from data_profiler_spark.session import get_spark
-
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
-    spark = get_spark(app_name=f"bench_score_{cores}", cores=cores)
-    host_marker(spark, cores * 2)  # codegen warm-up for the marker job
-    marker = host_marker(spark, cores * 2)
-    bw_marker = host_marker_bw(spark, cores * 2)
-    elapsed = time_scoring(spark, n_docs, cores * 2)
-    spark.stop()
-    return elapsed, marker, bw_marker
+    ``--scaling`` round at ``local[cores]``: a child process
+    (``--score-subprocess``) times the markers and scoring in its own
+    session over ``cores * 2`` partitions. A session stopped and rebuilt
+    in one process left the JVM sending accumulator updates to the stopped
+    context, one failed socket write per UDF task in the timed window."""
+    out = subprocess.run(
+        [sys.executable, __file__, "--score-subprocess", str(cores), str(n_docs)],
+        stdout=subprocess.PIPE,
+        text=True,
+        check=True,
+    ).stdout
+    r = json.loads(out.strip().splitlines()[-1])
+    return r["elapsed"], r["marker"], r["bw_marker"]
 
 
 def main() -> None:
-    if "--score-subprocess" in sys.argv:
-        cores = int(sys.argv[sys.argv.index("--score-subprocess") + 1])
-        n = int(sys.argv[sys.argv.index("--score-subprocess") + 2])
-        elapsed, marker, bw_marker = _run_score_round(cores, n)
+    if "--score-subprocess" in sys.argv:  # one _run_score_round child
+        from data_profiler_spark.session import get_spark
+
+        i = sys.argv.index("--score-subprocess")
+        cores, n = int(sys.argv[i + 1]), int(sys.argv[i + 2])
+        spark = get_spark(app_name=f"bench_score_{cores}", cores=cores)
+        host_marker(spark, cores * 2)  # codegen warm-up for the marker job
+        marker = host_marker(spark, cores * 2)
+        bw_marker = host_marker_bw(spark, cores * 2)
+        elapsed = time_scoring(spark, n, cores * 2)
+        spark.stop()
         print(json.dumps({"elapsed": elapsed, "marker": marker, "bw_marker": bw_marker}))
         return
 
     if "--scaling" in sys.argv:
-        # Interleaved A/B/A/B rounds in one process (SparkContext restarted
-        # per round — the JVM and its codegen cache survive): the host is a
-        # shared VM with time-varying capacity, so back-to-back same-level
+        # Interleaved A/B/A/B rounds, one child process each: the host is
+        # a shared VM with time-varying capacity, so back-to-back same-level
         # rounds would confound parallelism with neighbor noise. Min per
         # level is the steady-state number.
         # The shared host's deliverable CPU fluctuates over tens of minutes

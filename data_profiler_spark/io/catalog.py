@@ -5,8 +5,6 @@ partitioned Iceberg tables on a real cluster (north rule: transactional
 commits, snapshot resume). This sandbox ships no Iceberg runtime jars, so
 the same call sites go through this thin seam:
 
-* ``iceberg_available(spark)`` — detects the SparkSessionExtensions /
-  catalog implementation at runtime.
 * ``write_partitioned(df, target, partition_cols, mode)`` — ``writeTo``
   (Iceberg, transactional snapshot per call) when the target is a catalog
   table, ``DataFrameWriter.parquet`` (zstd) with dynamic partition
@@ -35,12 +33,6 @@ from pyspark.sql import DataFrame, SparkSession
 PARQUET_CODEC = "zstd"
 
 
-def iceberg_available(spark: SparkSession, catalog: str = "spark_catalog") -> bool:
-    """True when an Iceberg catalog implementation is configured."""
-    impl = spark.conf.get(f"spark.sql.catalog.{catalog}", None)
-    return impl is not None and "iceberg" in impl.lower()
-
-
 def is_table_target(target: str) -> bool:
     """Catalog-table name (db.table) vs filesystem path heuristic: paths
     contain a separator or scheme."""
@@ -59,7 +51,6 @@ def write_partitioned(
     ``df`` (Iceberg ``overwritePartitions``; parquet dynamic partition
     overwrite) — re-running a batch is idempotent, never duplicating.
     """
-    spark = df.sparkSession
     if is_table_target(target):
         writer = df.writeTo(target)
         if mode == "overwrite-partitions":
@@ -69,9 +60,11 @@ def write_partitioned(
         else:
             writer.createOrReplace()
         return
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    # per-write, like the codec: a session-wide overwrite mode would leak
+    # into every later write on a session shared across runs
     (
         df.write.mode("overwrite" if mode != "append" else "append")
+        .option("partitionOverwriteMode", "dynamic")
         .option("compression", PARQUET_CODEC)
         .partitionBy(*partition_cols)
         .parquet(target)

@@ -1,21 +1,29 @@
-"""SparkSession factory.
+"""SparkSession factory: ``get_spark`` builds every engine session.
 
 One place to pin the execution config that the whole engine assumes
-(``ENGINE_CONF``, applied by ``get_spark`` and by the spark-submit jobs'
-``build_session``): AQE on (runtime shuffle coalescing + skew-join
+(``ENGINE_CONF``): AQE on (runtime shuffle coalescing + skew-join
 splitting), Arrow on (vectorized pandas-UDF transfer), UTC session
 timezone (oracle parity with DuckDB), and a generated-code cache that
 holds the engine's whole working set of whole-stage-codegen classes, so a
 warm re-run of a plan finds its classes compiled (``codegen_compiles``
-reads the JVM's compile count). ``get_spark`` also sizes shuffle partitions to cores rather than
-the 200-partition default.
+reads the JVM's compile count).
+
+Under spark-submit (``PYSPARK_GATEWAY_PORT`` is set in the driver's
+environment) the cluster manager owns master, executors, memory and the
+worker environment, so ``get_spark`` applies only the app name,
+``ENGINE_CONF`` and ``extra_conf``. From plain ``python`` it builds a
+``local[N]`` session: N from ``cores`` or ``$SPARK_GRAFT_CPUS``, shuffle
+partitions sized to cores rather than the 200-partition default, the UI
+off, the repo root on the workers' PYTHONPATH and the worker launcher
+below. A session already active in the calling thread is returned as it
+is, so a job run inside another program's session leaves its conf alone.
 
 At 100 TB these same settings hold: AQE picks the real shuffle
 parallelism from map-side statistics, so `spark.sql.shuffle.partitions`
 only needs to be a sane upper bound (cluster cores × 2-3), and skew
 handling is runtime, not hand-tuned.
 
-Python workers start through the package's ``worker_python`` launcher
+Local python workers start through the package's ``worker_python`` launcher
 (``install_worker_launcher``). Spark puts ``$SPARK_HOME/python/lib/
 pyspark.zip`` and the spark-core jar on every worker's PYTHONPATH, and
 PySpark calls ``importlib.invalidate_caches()`` once per task, which on
@@ -42,10 +50,6 @@ from pyspark.sql import SparkSession
 _LAUNCHER = str(_Path(__file__).with_name("worker_python"))
 # where the launcher finds the interpreter PYSPARK_PYTHON named before
 _LAUNCHER_TARGET = "_DPS_WORKER_PYTHON"
-
-
-def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
 def install_worker_launcher() -> None:
@@ -78,7 +82,7 @@ def install_worker_launcher() -> None:
 
 
 # Every engine session's execution config, local or under spark-submit;
-# master, cores, memory and local paths stay with each session builder.
+# master, cores, memory and local paths are get_spark's local mode only.
 ENGINE_CONF = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -129,32 +133,38 @@ def codegen_compiles(spark: SparkSession) -> int:
 def get_spark(
     app_name: str = "data_profiler_spark",
     cores: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) the engine's SparkSession.
+    """The engine's SparkSession: the calling thread's active session if
+    there is one, else a new one (see the module docstring).
 
     ``cores`` controls ``local[N]`` — the two-parallelism scaling bench
     (BASELINE.md north rule) runs the same job at local[8] and local[32]
-    through this one knob.
+    through this one knob. It has no effect under spark-submit.
     """
-    n = cores or default_parallelism()
-    builder = (
-        SparkSession.builder.master(f"local[{n}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or max(2 * n, 8)))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.extraJavaOptions", "-Djava.io.tmpdir=/tmp")
-        # Python workers resolve this package via PYTHONPATH, not driver
-        # sys.path — pin the repo root so pandas UDFs import it anywhere.
-        # On a real cluster, spark-submit --py-files replaces this.
-        .config(
-            "spark.executorEnv.PYTHONPATH",
-            str(_Path(__file__).resolve().parents[1]),
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
+    builder = SparkSession.builder.appName(app_name)
+    local = "PYSPARK_GATEWAY_PORT" not in os.environ
+    if local:
+        n = cores or int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+        builder = (
+            builder.master(f"local[{n}]")
+            .config("spark.sql.shuffle.partitions", str(max(2 * n, 8)))
+            .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+            .config("spark.ui.enabled", "false")
+            .config("spark.driver.extraJavaOptions", "-Djava.io.tmpdir=/tmp")
+            # Python workers resolve this package via PYTHONPATH, not driver
+            # sys.path — pin the repo root so pandas UDFs import it anywhere.
+            # Under spark-submit, --py-files does this instead.
+            .config(
+                "spark.executorEnv.PYTHONPATH",
+                str(_Path(__file__).resolve().parents[1]),
+            )
         )
-    )
-    install_worker_launcher()
+        install_worker_launcher()
     spark = builder.config(map={**ENGINE_CONF, **(extra_conf or {})}).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    if local:
+        spark.sparkContext.setLogLevel("WARN")
     return spark

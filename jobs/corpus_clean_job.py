@@ -46,7 +46,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from pyspark.sql import functions as F
 
-from jobs.quality_filter_job import build_session
+from data_profiler_spark.session import get_spark
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -72,7 +72,6 @@ def main(argv: list[str] | None = None) -> int:
     )
     ap.add_argument("--span-window", type=int, default=15)
     ap.add_argument("--span-stride", type=int, default=5)
-    ap.add_argument("--local-cores", type=int, default=None, help="sandbox only; omit on a cluster")
     ap.add_argument(
         "--stage-counts",
         action="store_true",
@@ -82,7 +81,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     args = ap.parse_args(argv)
 
-    spark = build_session("corpus_clean", args.local_cores)
+    spark = get_spark("corpus_clean")
     from data_profiler_spark.operators import corpus
 
     if args.synth:

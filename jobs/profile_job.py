@@ -45,14 +45,13 @@ def main(argv: list[str] | None = None) -> int:
         default=[],
         help="numeric column to render a 10-bin histogram for (repeatable)",
     )
-    ap.add_argument("--local-cores", type=int, default=None, help="sandbox only")
     args = ap.parse_args(argv)
 
-    from jobs.quality_filter_job import build_session
-
-    spark = build_session("profile", args.local_cores)
     from data_profiler_spark.io import artifacts
     from data_profiler_spark.operators import profiler
+    from data_profiler_spark.session import get_spark
+
+    spark = get_spark("profile")
 
     df = spark.read.table(args.input) if args.table else spark.read.parquet(args.input)
     free_text = {c.strip() for c in args.free_text.split(",") if c.strip()}

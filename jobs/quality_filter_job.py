@@ -10,15 +10,16 @@ Cluster launch (north rule: multi-executor via --py-files):
         --output /data/pages_filtered \
         --run-id run-2026-08-16
 
-The session builder here deliberately sets NO master and no local-only
-config, only the engine's shared ``session.ENGINE_CONF``: spark-submit /
-the cluster manager owns executor topology, so the same file runs at N
-and 4N executors unchanged — the scaling-efficiency evidence in
-BASELINE.md is this job at two parallelism levels. Resume: the run
-manifest lives in --output; re-submitting with the same --run-id skips
-completed batches (QualityFilterPipeline.run).
+Under spark-submit, ``session.get_spark`` sets NO master and no
+local-only config, only the engine's shared ``session.ENGINE_CONF``:
+spark-submit / the cluster manager owns executor topology, so the same
+file runs at N and 4N executors unchanged — the scaling-efficiency
+evidence in BASELINE.md is this job at two parallelism levels. Resume:
+the run manifest lives in --output; re-submitting with the same --run-id
+skips completed batches (QualityFilterPipeline.run).
 
-In-sandbox smoke (no cluster):
+In-sandbox smoke (no cluster; ``local[$SPARK_GRAFT_CPUS]``, from any
+working directory):
     python jobs/quality_filter_job.py --synth 2000 --output /tmp/qf_out
 """
 
@@ -30,21 +31,6 @@ import sys
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
-
-from pyspark.sql import SparkSession
-
-
-def build_session(app_name: str, local_cores: int | None) -> SparkSession:
-    from data_profiler_spark.session import ENGINE_CONF, install_worker_launcher
-
-    b = SparkSession.builder.appName(app_name)
-    if local_cores:  # sandbox/smoke only; omit under spark-submit
-        # local workers start like get_spark's; on a cluster the cluster
-        # owns the worker environment
-        install_worker_launcher()
-        b = b.master(f"local[{local_cores}]")
-    return b.config(map=ENGINE_CONF).getOrCreate()
-
 
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description="web-text quality-filter run")
@@ -64,13 +50,13 @@ def main(argv: list[str] | None = None) -> int:
         "new hashes land at <output>/new_content_hashes for the caller "
         "to append to the maintained table after accepting the run",
     )
-    ap.add_argument("--local-cores", type=int, default=None, help="sandbox only; omit on a cluster")
     args = ap.parse_args(argv)
 
-    spark = build_session("quality_filter", args.local_cores)
     from data_profiler_spark.pipeline import QualityFilterPipeline
+    from data_profiler_spark.session import get_spark
     from data_profiler_spark.synth import pages_df
 
+    spark = get_spark("quality_filter")
     if args.synth:
         pages = pages_df(spark, args.synth)
     elif args.table:

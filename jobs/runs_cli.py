@@ -137,12 +137,6 @@ def cmd_status(args) -> dict:
     return {**_run_status_view(m), "manifest": m, "audit_tail": audit_tail}
 
 
-def _session(cores: int | None):
-    from jobs.quality_filter_job import build_session
-
-    return build_session("runs-cli", cores)
-
-
 def candidate_keys_response(
     spark,
     parquet: str,
@@ -182,9 +176,11 @@ def candidate_keys_response(
 
 
 def cmd_candidate_keys(args) -> dict:
+    from data_profiler_spark.session import get_spark
+
     cols = [c.strip() for c in args.cols.split(",")] if args.cols else None
     return candidate_keys_response(
-        _session(args.local_cores),
+        get_spark("runs-cli"),
         args.parquet,
         cols=cols,
         max_width=args.max_width,
@@ -236,9 +232,11 @@ def confirm_keys_response(
 
 
 def cmd_confirm_keys(args) -> dict:
+    from data_profiler_spark.session import get_spark
+
     key_cols = [c.strip() for c in args.keys.split(",") if c.strip()]
     return confirm_keys_response(
-        _session(args.local_cores),
+        get_spark("runs-cli"),
         args.parquet,
         key_cols,
         id_col=args.id_col,
@@ -268,7 +266,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--min-score", type=float, default=0.5)
     p.add_argument("--top", type=int, default=5)
     p.add_argument("--run-id", default=None, help="run id echoed in the response")
-    p.add_argument("--local-cores", type=int, default=None)
     p.set_defaults(fn=cmd_candidate_keys)
 
     p = sub.add_parser("confirm-keys")
@@ -277,7 +274,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--id-col", default=None)
     p.add_argument("--top", type=int, default=10)
     p.add_argument("--run-id", default=None, help="run id echoed in the response")
-    p.add_argument("--local-cores", type=int, default=None)
     p.set_defaults(fn=cmd_confirm_keys)
 
     args = ap.parse_args(argv)

@@ -31,13 +31,13 @@ Divergences from the reference, by design (documented, not accidental):
 * ``list``/``status``/artifact GETs are pure file reads — polling a long
   run never touches Spark (same property the CLI has).
 
-Spark sessions are built lazily on first key-analysis / create request
-(``ThreadingHTTPServer`` + one shared session: Spark is thread-safe for
-job submission; concurrent requests become concurrent Spark jobs under
-the local scheduler).
+The Spark session is built lazily on first key-analysis / create request
+by ``session.get_spark`` (``local[$SPARK_GRAFT_CPUS]`` from plain python,
+the cluster's topology under spark-submit). ``ThreadingHTTPServer`` + one
+shared session: Spark is thread-safe for job submission; concurrent
+requests become concurrent Spark jobs under the local scheduler.
 
 Usage: python jobs/runs_server.py <workspace_root> [--port 8008]
-       [--local-cores N]
 """
 
 from __future__ import annotations
@@ -69,12 +69,11 @@ _RUN_ID_RE = re.compile(r"^[A-Za-z0-9._-]+$")
 class RunsServer(ThreadingHTTPServer):
     daemon_threads = True
 
-    def __init__(self, addr, workspace_root: str, spark_factory=None, local_cores=None):
+    def __init__(self, addr, workspace_root: str, spark_factory=None):
         super().__init__(addr, _Handler)
         self.workspace_root = workspace_root
         self._spark = None
         self._spark_lock = threading.Lock()
-        self._local_cores = local_cores
         self._spark_factory = spark_factory
 
     def spark(self):
@@ -83,9 +82,9 @@ class RunsServer(ThreadingHTTPServer):
                 if self._spark_factory is not None:
                     self._spark = self._spark_factory()
                 else:
-                    from jobs.quality_filter_job import build_session
+                    from data_profiler_spark.session import get_spark
 
-                    self._spark = build_session("runs-server", self._local_cores)
+                    self._spark = get_spark("runs-server")
             return self._spark
 
     def run_dir(self, run_id: str) -> str | None:
@@ -284,13 +283,10 @@ def serve(
     port: int = 8008,
     host: str = "127.0.0.1",
     spark_factory=None,
-    local_cores: int | None = None,
 ) -> RunsServer:
     """Bind and return the server (caller drives serve_forever — tests run
     it on a thread, ``main`` runs it in the foreground)."""
-    return RunsServer(
-        (host, port), workspace_root, spark_factory=spark_factory, local_cores=local_cores
-    )
+    return RunsServer((host, port), workspace_root, spark_factory=spark_factory)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -298,11 +294,8 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("workspace_root")
     ap.add_argument("--port", type=int, default=8008)
     ap.add_argument("--host", default="127.0.0.1")
-    ap.add_argument("--local-cores", type=int, default=None)
     args = ap.parse_args(argv)
-    srv = serve(
-        args.workspace_root, args.port, args.host, local_cores=args.local_cores
-    )
+    srv = serve(args.workspace_root, args.port, args.host)
     print(f"serving {args.workspace_root} on http://{args.host}:{srv.server_port}/runs")
     srv.serve_forever()
     return 0

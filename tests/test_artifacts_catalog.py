@@ -99,6 +99,18 @@ def test_catalog_parquet_fallback(spark, documents, tmp_path):
     assert catalog.snapshot_history(spark, out) == []  # no manifest here
 
 
+def test_write_partitioned_sets_no_session_conf(spark, documents, tmp_path):
+    """Dynamic partition overwrite is a per-write option: set on the
+    session, it would leak into every later write of a session the runs
+    server shares across concurrent runs."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.unset(key)
+    before = spark.conf.get(key)
+    df = documents.withColumn("part", documents.lang)
+    catalog.write_partitioned(df, str(tmp_path / "t"), ["part"])
+    assert spark.conf.get(key) == before
+
+
 def test_catalog_snapshot_history_manifest(tmp_path):
     os.makedirs(tmp_path / "run", exist_ok=True)
     with open(tmp_path / "run" / "manifest.json", "w") as f:

@@ -68,11 +68,11 @@ def test_status_with_audit_tail(workspace, capsys):
     assert [e["event"] for e in out["audit_tail"]] == ["e17", "e18", "e19"]
 
 
-def test_candidate_and_confirm_keys(spark, tmp_path, capsys, monkeypatch):
+def test_candidate_and_confirm_keys(spark, tmp_path, capsys):
     """candidate-keys must rank the unique id first; confirm-keys on a
     non-key column must surface its duplicate groups and skip-and-count
-    null key rows — same semantics as the underlying A19/A20 operators."""
-    monkeypatch.setattr(runs_cli, "_session", lambda cores: spark)
+    null key rows — same semantics as the underlying A19/A20 operators.
+    Both run on the active session (the test fixture's)."""
     p = str(tmp_path / "t.parquet")
     spark.createDataFrame(
         [(1, "a"), (2, "a"), (3, "b"), (4, None)], "id long, grp string"
@@ -97,6 +97,23 @@ def test_candidate_and_confirm_keys(spark, tmp_path, capsys, monkeypatch):
     assert out["duplicate_count"] == 1
     assert out["total_duplicate_rows"] == 1
     assert out["duplicate_percentage"] == 25.0
+
+
+def test_key_commands_keep_the_active_session_conf(spark, tmp_path, capsys):
+    """The key commands reuse the caller's active session unchanged:
+    get_spark must not re-apply its local builder options to it. The
+    marker value is odd, so no local shuffle-partition default equals it."""
+    key = "spark.sql.shuffle.partitions"
+    fixture_value = spark.conf.get(key)
+    p = str(tmp_path / "t.parquet")
+    spark.createDataFrame([(1, "a"), (2, "b")], "id long, grp string").write.parquet(p)
+    spark.conf.set(key, "13")
+    try:
+        runs_cli.main(["candidate-keys", p, "--cols", "id,grp"])
+        assert spark.conf.get(key) == "13"
+    finally:
+        spark.conf.set(key, fixture_value)
+    capsys.readouterr()
 
 
 # Reference response-model field names, pinned from api/models/run.py —
@@ -137,11 +154,10 @@ def test_list_and_status_field_parity(workspace, capsys):
     assert out["completed_at"] == "2026-01-01T00:00:00Z"
 
 
-def test_keys_field_parity(spark, tmp_path, capsys, monkeypatch):
+def test_keys_field_parity(spark, tmp_path, capsys):
     """candidate-keys (CandidateKeysResponse) and confirm-keys
     (DuplicateDetectionResponse): every reference field name present at
     the response level and inside each nested object."""
-    monkeypatch.setattr(runs_cli, "_session", lambda cores: spark)
     p = str(tmp_path / "t.parquet")
     spark.createDataFrame(
         [(1, "a"), (2, "a"), (3, "b"), (4, None)], "id long, grp string"
