@@ -953,42 +953,33 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_corpus_clean_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full corpus-clean COMPOSITION oracle (jobs/corpus_clean_job.py):
-    exact dedup → benchmark decontamination → normalize → repeated-span
-    drop → cross-corpus line dedup → heuristic quality score, checked as
-    ONE chain because per-stage greenness doesn't imply composed
+    """Full corpus-clean COMPOSITION oracle: exact dedup, then
+    ``corpus.clean_corpus`` (the chain jobs/corpus_clean_job.py runs:
+    benchmark decontamination → normalize → repeated-span drop →
+    cross-corpus line dedup), then the heuristic quality score, checked
+    as ONE chain because per-stage greenness doesn't imply composed
     greenness (e.g. normalization changes the hashes the dedup stages key
     on, and dropping a duplicate family changes every later corpus-wide
     count). Same derived multi-line text and eval split as the per-stage
     oracles; output is the FINAL surviving doc set with clean-text hash,
-    line-dedup counts, and the per-doc score."""
-    from data_profiler_spark.functions.textanalysis import (
-        normalize_text_expr,
-        quality_score_expr,
-    )
+    line-dedup counts, and the per-doc score. The chain's span-stage
+    cache stays with the session: the returned frame is lazy."""
+    from data_profiler_spark.functions.textanalysis import quality_score_expr
     from data_profiler_spark.operators import corpus, dedup
 
     base = _t(spark, sf_dir, "documents").select(
         "doc_id", F.replace(F.col("text"), F.lit(" a "), F.lit("\n")).alias("text")
     )
-    # 1. exact dedup first (cheapest): keep the min-id copy per content
+    # exact dedup first (cheapest): keep the min-id copy per content
     keep0 = dedup.exact_dedup(base).select(F.col("kept_id").alias("doc_id"))
     corp = base.join(keep0, "doc_id")
-    # 2. decontaminate vs the doc_id % 97 == 0 eval slice
+    # decontaminate vs the doc_id % 97 == 0 eval slice
     evl = corp.filter(F.pmod("doc_id", F.lit(97)) == 0)
     corp = corp.filter(F.pmod("doc_id", F.lit(97)) != 0)
-    rep = corpus.contamination_report(corp, evl, n=3)
-    corp = corp.join(rep.filter("contaminated").select("doc_id"), "doc_id", "left_anti")
-    # 3. normalize (whitespace canonicalization changes later dedup keys)
-    corp = corp.select("doc_id", normalize_text_expr(F.col("text")).alias("text"))
-    # 4. drop docs dominated by cross-document repeated spans
-    srep = corpus.duplicated_span_report(corp, window=15, stride=5)
-    corp = corp.join(
-        srep.filter(F.col("dup_frac") >= 0.5).select("doc_id"), "doc_id", "left_anti"
+    cleaned, _ = corpus.clean_corpus(
+        corp, eval_docs=evl, ngram=3, normalize=True, span_dup_threshold=0.5
     )
-    # 5. corpus-wide line dedup over the survivors
-    cleaned = corpus.line_dedup(corp, max_occurrences=1, min_chars=5)
-    # 6. score the cleaned text
+    # score the cleaned text
     return cleaned.select(
         "doc_id",
         F.md5(F.col("clean_text").cast("binary")).alias("clean_hash"),

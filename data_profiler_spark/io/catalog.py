@@ -10,9 +10,6 @@ the same call sites go through this thin seam:
   table, ``DataFrameWriter.parquet`` (zstd) with dynamic partition
   overwrite otherwise (idempotent per-partition replace — the closest
   filesystem-level analog of an Iceberg overwrite snapshot).
-* ``snapshot_history(spark, target)`` — Iceberg ``.snapshots`` metadata
-  table when available; the run-manifest JSON otherwise (the pipeline
-  maintains it either way, so resume logic is engine-independent).
 
 Cluster deployment: pass ``--conf spark.sql.catalog.lake=org.apache.iceberg.spark.SparkCatalog``
 (+ warehouse conf) to spark-submit and address tables as
@@ -22,9 +19,7 @@ Iceberg snapshots with no code change.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 # Codec of the parquet fallback: Iceberg's default Parquet codec, so the
 # sandbox writes what the table target writes. Set on this writer only; a
@@ -69,19 +64,3 @@ def write_partitioned(
         .partitionBy(*partition_cols)
         .parquet(target)
     )
-
-
-def snapshot_history(spark: SparkSession, target: str) -> list[dict]:
-    """Commit history: Iceberg snapshots metadata table, or the pipeline's
-    manifest batches for the parquet fallback."""
-    if is_table_target(target):
-        rows = spark.sql(f"SELECT * FROM {target}.snapshots").collect()
-        return [r.asDict() for r in rows]
-    import json
-
-    manifest = os.path.join(target, "manifest.json")
-    if not os.path.exists(manifest):
-        return []
-    with open(manifest) as f:
-        data = json.load(f)
-    return list(data.get("completed_batches", {}).values())

@@ -16,6 +16,11 @@ same tier as ``operators/dedup.py``):
 * **URL host / registered-domain extraction + blocklist filtering**: the
   first filter every web pipeline applies, before any text is read.
 
+:func:`clean_corpus` chains them (with normalization and the
+repeated-span drop) into the corpus-clean stage that
+``jobs/corpus_clean_job.py``, ``scripts/scale_step.py`` and the
+``corpus_clean_end_to_end`` oracle query all run.
+
 Scale notes (100 TB shapes):
 
 * ``line_dedup`` is explode → hash-keyed count agg → hash join → per-doc
@@ -39,6 +44,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_profiler_spark.functions.textanalysis import normalize_text_expr
 from data_profiler_spark.functions.textstats import words_expr
 from data_profiler_spark.operators.checkpoints import materialize
 
@@ -239,10 +245,10 @@ def line_dedup_within_doc(
 
 def word_ngrams_from_tokens(toks: Column, n: int) -> Column:
     """POSITIONAL word n-grams (not distinct — unlike
-    ``dedup.shingles_expr`` — so ``total_ngrams`` is the true positional
-    denominator for a contamination fraction) from a MATERIALIZED
-    token-array attribute (inline tokenization would re-run per
-    reference — see ``dedup.shingles_from_tokens``). Docs with fewer
+    ``dedup.shingles_from_tokens`` — so ``total_ngrams`` is the true
+    positional denominator for a contamination fraction) from a
+    MATERIALIZED token-array attribute (inline tokenization would re-run
+    per reference, as with the shingles). Docs with fewer
     than ``n`` tokens yield an empty array (no fallback shingle: a
     3-word doc cannot contain a 13-gram)."""
     return F.when(
@@ -497,3 +503,61 @@ def duplicated_span_report(
             6,
         ).alias("dup_frac"),
     )
+
+
+# ---------------------------------------------------------------------------
+# The corpus-clean chain
+# ---------------------------------------------------------------------------
+
+
+def clean_corpus(
+    docs: DataFrame,
+    blocked_domains: list[str] | None = None,
+    eval_docs: DataFrame | None = None,
+    ngram: int = 13,
+    normalize: bool = False,
+    span_dup_threshold: float | None = None,
+) -> tuple[DataFrame, DataFrame | None]:
+    """The corpus-clean stage over ``(doc_id, text[, url, ...])`` docs.
+    Stages, cheapest first; one whose argument is unset is skipped:
+
+    1. ``blocked_domains``: :func:`url_filter` drop (``ValueError`` if
+       ``docs`` has no ``url`` column, rather than keeping every row);
+    2. ``eval_docs``: drop docs sharing a word ``ngram``-gram with them
+       (:func:`contamination_report`);
+    3. ``normalize``: ``normalize_text_expr`` on ``text``;
+    4. ``span_dup_threshold``: drop docs whose
+       :func:`duplicated_span_report` ``dup_frac`` meets it;
+    5. :func:`line_dedup`.
+
+    Returns ``(cleaned, cached)``: ``docs`` minus ``text`` joined to the
+    line-dedup columns, and the frame persisted before stage 4 (None if
+    it is skipped), which the span report and the anti-join both read.
+    A ``persist``, not a ``localCheckpoint``, so lost blocks recompute
+    from lineage. The caller unpersists it once ``cleaned`` is consumed.
+    """
+    if blocked_domains is not None:
+        if "url" not in docs.columns:
+            raise ValueError(
+                f"blocked_domains needs a 'url' column; docs has {docs.columns}"
+            )
+        docs = url_filter(docs, blocked_domains).filter(~F.col("url_blocked")).drop(
+            "url_blocked", "registered_domain"
+        )
+    if eval_docs is not None:
+        rep = contamination_report(docs, eval_docs, n=ngram)
+        docs = docs.join(
+            rep.filter("contaminated").select("doc_id"), "doc_id", "left_anti"
+        )
+    if normalize:
+        docs = docs.withColumn("text", normalize_text_expr(F.col("text")))
+    cached = None
+    if span_dup_threshold is not None:
+        docs = cached = docs.persist()
+        rep = duplicated_span_report(docs)
+        docs = docs.join(
+            rep.filter(F.col("dup_frac") >= span_dup_threshold).select("doc_id"),
+            "doc_id",
+            "left_anti",
+        )
+    return docs.drop("text").join(line_dedup(docs), "doc_id"), cached

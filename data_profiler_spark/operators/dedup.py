@@ -112,13 +112,6 @@ def shingles_from_tokens(toks: Column, n: int = DEFAULT_SHINGLE) -> Column:
     )
 
 
-def shingles_expr(c: Column, n: int = DEFAULT_SHINGLE) -> Column:
-    """Single-expression shingle form (tokenization inline — convenient
-    for tests/oracles; plan-building call sites use ``_shingle_sets`` /
-    :func:`shingles_from_tokens` to tokenize once)."""
-    return shingles_from_tokens(words_expr(c), n)
-
-
 def _minhash_one(sh: Column, perm: int, hash_fn: str = "md5") -> Column:
     """One permutation: min over salted hashes of the shingles.
 

@@ -27,7 +27,7 @@ from itertools import combinations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .profiler import null_like
+from .validators import is_null_like
 
 
 @dataclass
@@ -59,7 +59,7 @@ def candidate_keys(
 
     aggs = [F.count(F.lit(1)).alias("_total")]
     for c in cols:
-        aggs.append(F.sum(null_like(F.col(c)).cast("long")).alias(f"_null_{c}"))
+        aggs.append(F.sum(is_null_like(F.col(c)).cast("long")).alias(f"_null_{c}"))
     for combo in combos:
         key = F.struct(*[F.col(c) for c in combo]) if len(combo) > 1 else F.col(combo[0])
         aggs.append(F.count_distinct(key).alias("_d_" + "\x00".join(combo)))
@@ -90,7 +90,7 @@ def duplicate_groups(
     order (count desc, key asc)."""
     non_null = df
     for c in key_cols:
-        non_null = non_null.filter(~null_like(F.col(c)))
+        non_null = non_null.filter(~is_null_like(F.col(c)))
     aggs = [F.count(F.lit(1)).alias("dup_count")]
     if id_col is not None:
         aggs.append(F.slice(F.array_sort(F.collect_list(id_col)), 1, 5).alias("example_ids"))
@@ -115,7 +115,7 @@ def duplicate_stats(df: DataFrame, key_cols: list[str]) -> dict:
     total_rows = df.count()
     non_null = df
     for c in key_cols:
-        non_null = non_null.filter(~null_like(F.col(c)))
+        non_null = non_null.filter(~is_null_like(F.col(c)))
     dup = (
         non_null.groupBy(*key_cols)
         .agg(F.count(F.lit(1)).alias("n"))
@@ -137,7 +137,7 @@ def duplicate_stats(df: DataFrame, key_cols: list[str]) -> dict:
 def null_key_count(df: DataFrame, key_cols: list[str]) -> int:
     """Count of rows excluded from duplicate grouping for a null key member
     (reference ``keys.py:254-280`` skip-and-count)."""
-    pred = null_like(F.col(key_cols[0]))
+    pred = is_null_like(F.col(key_cols[0]))
     for c in key_cols[1:]:
-        pred = pred | null_like(F.col(c))
+        pred = pred | is_null_like(F.col(c))
     return df.filter(pred).count()

@@ -26,14 +26,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .validators import has_non_ascii, is_null_like
+
 QUANTILES = [0.01, 0.05, 0.25, 0.5, 0.75, 0.95, 0.99]
 QUANTILE_NAMES = ["p1", "p5", "p25", "p50", "p75", "p95", "p99"]
-
-
-def null_like(c: Column) -> Column:
-    """Reference null predicate P1: None or empty-after-strip
-    (``profile.py:504-514``). Works for any input type via string cast."""
-    return c.isNull() | (F.trim(c.cast("string")) == F.lit(""))
 
 
 def numeric_stats_exprs(col: str) -> list[Column]:
@@ -48,7 +44,7 @@ def numeric_stats_exprs(col: str) -> list[Column]:
     c = F.col(col)
     exprs = [
         F.count(c).alias(f"{col}_count"),
-        F.sum(null_like(c).cast("long")).alias(f"{col}_null_count"),
+        F.sum(is_null_like(c).cast("long")).alias(f"{col}_null_count"),
         F.min(c).alias(f"{col}_min"),
         F.max(c).alias(f"{col}_max"),
         F.avg(c).alias(f"{col}_mean"),
@@ -67,11 +63,11 @@ def string_stats_exprs(col: str) -> list[Column]:
     ln = F.length(c)
     return [
         F.count(c).alias(f"{col}_count"),
-        F.sum(null_like(c).cast("long")).alias(f"{col}_null_count"),
+        F.sum(is_null_like(c).cast("long")).alias(f"{col}_null_count"),
         F.min(ln).alias(f"{col}_min_length"),
         F.max(ln).alias(f"{col}_max_length"),
         F.avg(ln).alias(f"{col}_avg_length"),
-        F.max(c.rlike("[^\\x00-\\x7F]").cast("int")).alias(f"{col}_has_non_ascii"),
+        F.max(has_non_ascii(c).cast("int")).alias(f"{col}_has_non_ascii"),
         F.max(c.rlike("[A-Za-z]").cast("int")).alias(f"{col}_has_alpha"),
         F.max(c.rlike("[0-9]").cast("int")).alias(f"{col}_has_digit"),
         F.max(c.rlike("\\s").cast("int")).alias(f"{col}_has_space"),
@@ -153,7 +149,7 @@ def distinct_report(df: DataFrame, cols: list[str], case_sensitive: bool = True)
                 F.when(sc.isNotNull() & (sc != ""), sc)
             ).alias(f"{c}_distinct")
         )
-        aggs.append(F.sum(null_like(F.col(c)).cast("long")).alias(f"{c}_null"))
+        aggs.append(F.sum(is_null_like(F.col(c)).cast("long")).alias(f"{c}_null"))
         aggs.append(F.sum((sc == '""').cast("long")).alias(f"{c}_empty"))
     row = df.agg(*aggs).collect()[0].asDict()
     total = row["_total"]

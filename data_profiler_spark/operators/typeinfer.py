@@ -54,7 +54,7 @@ def _sample_col(df: DataFrame, col: str, n: int = SAMPLE_SIZE) -> DataFrame:
     values per column (``types.py:141-142``). ``limit`` lets Spark
     short-circuit the scan; no shuffle."""
     c = F.trim(F.col(col).cast("string"))
-    return df.select(c.alias("v")).filter(~is_null_like(F.col(col).cast("string"))).limit(n)
+    return df.select(c.alias("v")).filter(~is_null_like(F.col(col))).limit(n)
 
 
 def match_rate_aggs(col_alias: str = "v"):

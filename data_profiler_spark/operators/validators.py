@@ -45,8 +45,10 @@ DD_MM_YYYY = ("DD/MM/YYYY", "^[0-9]{2}/[0-9]{2}/[0-9]{4}$", "dd/MM/yyyy")
 
 
 def is_null_like(c: Column) -> Column:
-    """P1 — ``value is None or value.strip()==''`` (``profile.py:504-514``)."""
-    return c.isNull() | (F.trim(c) == "")
+    """P1 — ``value is None or value.strip()==''`` (``profile.py:504-514``).
+    Any input type, via a string cast (a no-op the optimizer drops on
+    string columns)."""
+    return c.isNull() | (F.trim(c.cast("string")) == "")
 
 
 def is_numeric(c: Column) -> Column:

@@ -15,8 +15,10 @@ What streaming adds on top:
 * **foreachBatch sink** — each micro-batch gets the output contract and
   a salted repartition, then goes through the batch writer
   (``catalog.write_partitioned`` in append mode, zstd parquet or Iceberg
-  append), so exactly-once-per-batch file output and the batch
-  pipeline's layout guarantees carry over.
+  append), so file output is exactly-once per batch. The layout is not
+  the batch pipeline's: the stream writes no ``month`` partitions, and
+  it salts on ``salt_buckets`` (64 by default) where the pipeline uses
+  ``pipeline.SALT_BUCKETS`` (256).
 """
 
 from __future__ import annotations

@@ -16,20 +16,12 @@ Cluster launch:
         --blocklist /data/blocked_domains.txt \
         --eval-set /data/eval_docs_parquet
 
-Stages (each optional, applied in this order):
-1. URL blocklist filter (cheapest — a scan-level isin/broadcast filter,
-   runs before any text is touched).
-2. Benchmark decontamination: drop docs sharing any word ``--ngram``-gram
-   with --eval-set (eval n-grams broadcast; corpus never shuffles them).
-3. ``--normalize``: whitespace/control canonicalization
-   (``textanalysis.normalize_text_expr`` — narrow map) so the dedup keys
-   below ignore crawl-hygiene variation.
-4. ``--span-dup-threshold``: drop docs whose winnowed repeated-span
-   fraction (``corpus.duplicated_span_report``) meets the threshold —
-   the cross-document verbatim-overlap kill.
-5. Cross-corpus line dedup: corpus-duplicated lines survive only at
-   their first occurrence; per-doc kept/dropped counts land in the
-   output.
+Stages (``operators.corpus.clean_corpus``), each optional, in this
+order: ``--blocklist`` URL filter (the input needs a ``url`` column) →
+``--eval-set`` decontamination on word ``--ngram``-grams →
+``--normalize`` → ``--span-dup-threshold`` repeated-span drop →
+cross-corpus line dedup (always). Prints one JSON line of output stats
+read back from the written parquet.
 
 In-sandbox smoke (no cluster):
     python jobs/corpus_clean_job.py --synth 2000 --output /tmp/cc_out
@@ -57,8 +49,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--blocklist", help="text file of blocked registered domains, one per line")
     ap.add_argument("--eval-set", help="parquet of eval docs (text column) for decontamination")
     ap.add_argument("--ngram", type=int, default=13, help="decontamination n-gram order")
-    ap.add_argument("--max-line-occurrences", type=int, default=1)
-    ap.add_argument("--line-min-chars", type=int, default=5)
     ap.add_argument(
         "--normalize",
         action="store_true",
@@ -69,15 +59,6 @@ def main(argv: list[str] | None = None) -> int:
         type=float,
         default=None,
         help="drop docs whose winnowed repeated-span fraction >= this",
-    )
-    ap.add_argument("--span-window", type=int, default=15)
-    ap.add_argument("--span-stride", type=int, default=5)
-    ap.add_argument(
-        "--stage-counts",
-        action="store_true",
-        help="count docs after each stage (one EXTRA full scan per stage — "
-        "diagnostics only; the default single-scan run reports output "
-        "stats from the written parquet read-back)",
     )
     args = ap.parse_args(argv)
 
@@ -93,59 +74,24 @@ def main(argv: list[str] | None = None) -> int:
     else:
         ap.error("one of --input / --synth is required")
 
-    stats: dict[str, int] = {}
-    if args.stage_counts:
-        stats["input_docs"] = docs.count()
-
-    if args.blocklist and "url" in docs.columns:
+    blocked = None
+    if args.blocklist:
         blocked = [
             line.strip()
             for line in Path(args.blocklist).read_text().splitlines()
             if line.strip()
         ]
-        docs = corpus.url_filter(docs, blocked).filter(~F.col("url_blocked")).drop(
-            "url_blocked", "registered_domain"
-        )
-        if args.stage_counts:
-            stats["after_url_filter"] = docs.count()
-
-    if args.eval_set:
-        evl = spark.read.parquet(args.eval_set)
-        rep = corpus.contamination_report(docs, evl, n=args.ngram)
-        docs = docs.join(
-            rep.filter("contaminated").select("doc_id"), "doc_id", "left_anti"
-        )
-        if args.stage_counts:
-            stats["after_decontamination"] = docs.count()
-
-    if args.normalize:
-        from data_profiler_spark.functions.textanalysis import normalize_text_expr
-
-        docs = docs.withColumn("text", normalize_text_expr(F.col("text")))
-
-    if args.span_dup_threshold is not None:
-        # persist: the span report evaluates its upstream (blocklist /
-        # decontamination / normalize) internally, and the anti-join back
-        # against docs would re-run it all a third time otherwise
-        docs = docs.persist()
-        rep = corpus.duplicated_span_report(
-            docs, window=args.span_window, stride=args.span_stride
-        )
-        docs = docs.join(
-            rep.filter(F.col("dup_frac") >= args.span_dup_threshold).select("doc_id"),
-            "doc_id",
-            "left_anti",
-        )
-        if args.stage_counts:
-            stats["after_span_dedup"] = docs.count()
-
-    cleaned = corpus.line_dedup(
+    out, cached = corpus.clean_corpus(
         docs,
-        max_occurrences=args.max_line_occurrences,
-        min_chars=args.line_min_chars,
+        blocked_domains=blocked,
+        eval_docs=spark.read.parquet(args.eval_set) if args.eval_set else None,
+        ngram=args.ngram,
+        normalize=args.normalize,
+        span_dup_threshold=args.span_dup_threshold,
     )
-    out = docs.drop("text").join(cleaned, "doc_id")
     out.write.mode("overwrite").parquet(f"{args.output}/data")
+    if cached is not None:
+        cached.unpersist()
 
     written = spark.read.parquet(f"{args.output}/data")
     agg = written.agg(
@@ -153,11 +99,11 @@ def main(argv: list[str] | None = None) -> int:
         F.sum("lines_kept").alias("lines_kept"),
         F.sum("lines_dropped").alias("lines_dropped"),
     ).first()
-    stats.update(
-        {"output_docs": agg["docs"], "lines_kept": agg["lines_kept"] or 0,
-         "lines_dropped": agg["lines_dropped"] or 0}
-    )
-    print(json.dumps(stats))
+    print(json.dumps({
+        "output_docs": agg["docs"],
+        "lines_kept": agg["lines_kept"] or 0,
+        "lines_dropped": agg["lines_dropped"] or 0,
+    }))
     return 0
 
 

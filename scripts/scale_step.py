@@ -18,9 +18,9 @@ Operators (the VERDICT-named family):
 * ``components`` — ``near_dup_components`` (star engine) over the minhash
   pair graph at that scale (pairs pre-materialized so the components loop
   is isolated from pair generation).
-* ``corpus_clean`` — the 5-stage chain of jobs/corpus_clean_job.py run
-  inline: URL blocklist -> decontamination screen -> normalize ->
-  repeated-span kill -> cross-corpus line dedup (skew_safe).
+* ``corpus_clean`` — ``corpus.clean_corpus``, the 5-stage chain
+  jobs/corpus_clean_job.py runs: URL blocklist -> decontamination
+  screen -> normalize -> repeated-span kill -> cross-corpus line dedup.
 
 Shuffle volume comes from ``bench.stage_metrics`` (job group + Spark's
 status store, UI off): for one run of each op we record the max and
@@ -34,8 +34,8 @@ conventions — on this host, absolute times are only meaningful next to
 same-window markers; the RATIO between scales within one window is the
 robust artifact since both scales share the window).
 
-Usage: python scripts/scale_step.py [--base-n 20000] [--factor 10]
-Prints one JSON line.
+Usage: python scripts/scale_step.py [--base-n 20000] [--factor 10] [--cpus 32]
+(from any working directory). Prints one JSON line.
 """
 
 from __future__ import annotations
@@ -44,8 +44,9 @@ import argparse
 import json
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, ".")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from pyspark.sql import functions as F
 
@@ -100,31 +101,18 @@ def main() -> None:
         return dedup.near_dup_components(pairs).count()
 
     def op_corpus_clean(df, eval_set):
-        docs = df.select("doc_id", "url", "text")
-        docs = corpus.url_filter(docs, ["blocked.example.com"]).filter(
-            ~F.col("url_blocked")
-        ).drop("url_blocked", "registered_domain")
-        rep = corpus.contamination_report(docs, eval_set, n=13)
-        docs = docs.join(
-            rep.filter("contaminated").select("doc_id"), "doc_id", "left_anti"
+        out, cached = corpus.clean_corpus(
+            df.select("doc_id", "url", "text"),
+            blocked_domains=["blocked.example.com"],
+            eval_docs=eval_set,
+            ngram=13,
+            normalize=True,
+            span_dup_threshold=0.8,
         )
-        from data_profiler_spark.functions.textanalysis import normalize_text_expr
-
-        docs = docs.withColumn("text", normalize_text_expr(F.col("text")))
-        # persist before the span stage, as corpus_clean_job.py does: the
-        # report and the anti-join would otherwise re-run the upstream
-        docs = docs.persist()
-        span = corpus.duplicated_span_report(docs, window=15, stride=5)
-        docs = docs.join(
-            span.filter(F.col("dup_frac") >= 0.8).select("doc_id"),
-            "doc_id",
-            "left_anti",
-        )
-        out = corpus.line_dedup(docs, skew_safe=True)
         n = out.agg(
             F.count(F.lit(1)).alias("n"), F.sum("lines_dropped")
         ).collect()[0]["n"]
-        docs.unpersist()
+        cached.unpersist()  # else the timed passes would read this pass's cache
         return n
 
     result: dict = {"base_n": args.base_n, "factor": args.factor, "scales": {}}

@@ -96,7 +96,6 @@ def test_catalog_parquet_fallback(spark, documents, tmp_path):
     assert again.count() == documents.count()
     assert not catalog.is_table_target(out)
     assert catalog.is_table_target("db.pages")
-    assert catalog.snapshot_history(spark, out) == []  # no manifest here
 
 
 def test_write_partitioned_sets_no_session_conf(spark, documents, tmp_path):
@@ -109,11 +108,3 @@ def test_write_partitioned_sets_no_session_conf(spark, documents, tmp_path):
     df = documents.withColumn("part", documents.lang)
     catalog.write_partitioned(df, str(tmp_path / "t"), ["part"])
     assert spark.conf.get(key) == before
-
-
-def test_catalog_snapshot_history_manifest(tmp_path):
-    os.makedirs(tmp_path / "run", exist_ok=True)
-    with open(tmp_path / "run" / "manifest.json", "w") as f:
-        json.dump({"completed_batches": {"2023-01": {"month": "2023-01", "metrics": {"rows": 5}}}}, f)
-    hist = catalog.snapshot_history(None, str(tmp_path / "run"))
-    assert hist == [{"month": "2023-01", "metrics": {"rows": 5}}]
