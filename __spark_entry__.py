@@ -962,10 +962,11 @@ def q_corpus_clean_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     on, and dropping a duplicate family changes every later corpus-wide
     count). Same derived multi-line text and eval split as the per-stage
     oracles; output is the FINAL surviving doc set with clean-text hash,
-    line-dedup counts, and the per-doc score. The chain's span-stage
-    cache stays with the session: the returned frame is lazy."""
+    line-dedup counts, and the per-doc score. The result is materialized
+    so the chain's span-stage caches can be released before it returns."""
     from data_profiler_spark.functions.textanalysis import quality_score_expr
     from data_profiler_spark.operators import corpus, dedup
+    from data_profiler_spark.operators.checkpoints import materialize
 
     base = _t(spark, sf_dir, "documents").select(
         "doc_id", F.replace(F.col("text"), F.lit(" a "), F.lit("\n")).alias("text")
@@ -976,17 +977,23 @@ def q_corpus_clean_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     # decontaminate vs the doc_id % 97 == 0 eval slice
     evl = corp.filter(F.pmod("doc_id", F.lit(97)) == 0)
     corp = corp.filter(F.pmod("doc_id", F.lit(97)) != 0)
-    cleaned, _ = corpus.clean_corpus(
+    cleaned, cached = corpus.clean_corpus(
         corp, eval_docs=evl, ngram=3, normalize=True, span_dup_threshold=0.5
     )
     # score the cleaned text
-    return cleaned.select(
-        "doc_id",
-        F.md5(F.col("clean_text").cast("binary")).alias("clean_hash"),
-        "lines_kept",
-        "lines_dropped",
-        quality_score_expr(F.col("clean_text")).alias("score"),
-    ).orderBy("doc_id")
+    scored = materialize(
+        cleaned.select(
+            "doc_id",
+            F.md5(F.col("clean_text").cast("binary")).alias("clean_hash"),
+            "lines_kept",
+            "lines_dropped",
+            quality_score_expr(F.col("clean_text")).alias("score"),
+        ),
+        eager=True,
+    )
+    for df in cached:
+        df.unpersist()
+    return scored.orderBy("doc_id")
 
 
 def q_quantile_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -517,7 +517,7 @@ def clean_corpus(
     ngram: int = 13,
     normalize: bool = False,
     span_dup_threshold: float | None = None,
-) -> tuple[DataFrame, DataFrame | None]:
+) -> tuple[DataFrame, tuple[DataFrame, ...]]:
     """The corpus-clean stage over ``(doc_id, text[, url, ...])`` docs.
     Stages, cheapest first; one whose argument is unset is skipped:
 
@@ -531,10 +531,12 @@ def clean_corpus(
     5. :func:`line_dedup`.
 
     Returns ``(cleaned, cached)``: ``docs`` minus ``text`` joined to the
-    line-dedup columns, and the frame persisted before stage 4 (None if
-    it is skipped), which the span report and the anti-join both read.
-    A ``persist``, not a ``localCheckpoint``, so lost blocks recompute
-    from lineage. The caller unpersists it once ``cleaned`` is consumed.
+    line-dedup columns, and the frames stage 4 persists (empty if it is
+    skipped): the docs entering it, which the span report and the
+    anti-join both read, and the docs surviving it, which the line
+    explode, the line counts and the final join all read. ``persist``,
+    not ``localCheckpoint``, so lost blocks recompute from lineage. The
+    caller unpersists them once ``cleaned`` is consumed.
     """
     if blocked_domains is not None:
         if "url" not in docs.columns:
@@ -551,13 +553,14 @@ def clean_corpus(
         )
     if normalize:
         docs = docs.withColumn("text", normalize_text_expr(F.col("text")))
-    cached = None
+    cached: tuple[DataFrame, ...] = ()
     if span_dup_threshold is not None:
-        docs = cached = docs.persist()
-        rep = duplicated_span_report(docs)
-        docs = docs.join(
+        spanned = docs.persist()
+        rep = duplicated_span_report(spanned)
+        docs = spanned.join(
             rep.filter(F.col("dup_frac") >= span_dup_threshold).select("doc_id"),
             "doc_id",
             "left_anti",
-        )
+        ).persist()
+        cached = (spanned, docs)
     return docs.drop("text").join(line_dedup(docs), "doc_id"), cached

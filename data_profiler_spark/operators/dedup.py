@@ -644,22 +644,53 @@ def near_dup_components(
     "Connected Components in MapReduce and Beyond", SoCC'14): each round
     re-points every vertex's strictly-larger neighbors (large-star) then
     its smaller-or-equal neighbors (small-star) at the neighborhood
-    minimum — two groupBy-min + join rounds over the EDGE set, provably
-    O(log n) rounds on ANY graph. ``method`` accepts only ``"star"``.
+    minimum — one window minimum per step over the EDGE set, so a round
+    is three shuffles and no join, provably O(log n) rounds on ANY graph.
+    ``method`` accepts only ``"star"``.
 
     A (count, checksum) of the edge set, observed on the round's
     materializing job, detects convergence (inherent to any fixed-point
     loop), so a round runs one job. Each round's state is materialized
     (reliable ``checkpoint`` when a checkpoint dir is configured, else
     ``localCheckpoint`` — see ``operators.checkpoints``) so the plan
-    doesn't grow with iterations. Skewed keys (a giant component
-    concentrates its root's key) are absorbed by AQE skew-join splitting
-    (on in session.py).
+    doesn't grow with iterations; so are the returned labels, so callers
+    that read them twice (collect + keep list) run the label query once.
+    Skew: a window is not skew-split the way AQE splits a join, so a giant
+    component's root puts its whole neighborhood in one window task. The
+    measured cost of a 300k-member star family is in BASELINE.md.
     """
     if method != "star":
         raise ValueError(f"near_dup_components: unknown method {method!r} (only 'star')")
     labels, _ = _star_components_with_rounds(pairs, max_iter)
     return labels
+
+
+def _star_round(e: DataFrame) -> DataFrame:
+    """One large-star + small-star round over edges (u, v) with u > v:
+    two window minima and one ``distinct`` — three shuffles, no join.
+
+    large-star(n): every neighbor x > n re-points to
+    m = min(neighborhood(n) ∪ {n}); the rows and their neighborhood
+    minimum share the window's exchange. No ``distinct`` here: duplicates
+    don't move the small-star minimum. small-star(n): with edges oriented
+    u > v, neighborhood(u) is exactly the smaller neighbors, so u and each
+    of them re-point to m; one ``explode`` emits both, so the window runs
+    once."""
+    bid = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    large = bid.select(
+        "u", "v", F.least(F.min("v").over(Window.partitionBy("u")), F.col("u")).alias("m")
+    ).filter(F.col("v") > F.col("u")).select(F.col("v").alias("u"), F.col("m").alias("v"))
+    small = large.select(
+        "u", "v", F.min("v").over(Window.partitionBy("u")).alias("m")
+    ).select(
+        F.explode(
+            F.array(
+                F.struct(F.col("u"), F.col("m").alias("v")),
+                F.struct(F.col("v").alias("u"), F.col("m").alias("v")),
+            )
+        ).alias("e")
+    )
+    return small.select("e.u", "e.v").filter(F.col("u") != F.col("v")).distinct()
 
 
 def _star_components_with_rounds(
@@ -669,14 +700,13 @@ def _star_components_with_rounds(
     engine — see :func:`near_dup_components`.
 
     Edge invariant: the working set holds directed edges (u, v) with
-    u > v (child → smaller parent). large-star(n): every neighbor x > n
-    re-points to m = min(neighborhood(n) ∪ {n}); small-star(n): every
-    neighbor x ≤ n (and n itself) re-points to m. Both emits preserve
-    u > v, keep connectivity, and strictly shrink the potential function
-    Σ dist-to-root, reaching the star fixed point (every u directly on
-    its component min) in O(log n) rounds. Convergence = (count, xxhash
-    checksum) of the edge set unchanged, observed on the job that
-    materializes the round.
+    u > v (child → smaller parent); :func:`_star_round` keeps it. Both
+    steps keep the vertex set and connectivity and strictly shrink the
+    potential function Σ dist-to-root, reaching the star fixed point
+    (every u directly on its component min) in O(log n) rounds.
+    Convergence = (count, xxhash checksum) of the edge set unchanged,
+    observed on the job that materializes the round. The labels come from
+    the converged edges alone and are materialized once.
     """
     def _materialize(e: DataFrame) -> tuple[DataFrame, tuple]:
         # The (count, checksum) rides the materializing job as an
@@ -704,27 +734,6 @@ def _star_components_with_rounds(
             return out, (0, None)
         return out, (r["n"], r["h"])
 
-    def _large_star(e: DataFrame) -> DataFrame:
-        bid = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = bid.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-        return (
-            bid.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .distinct()
-        )
-
-    def _small_star(e: DataFrame) -> DataFrame:
-        # edges already oriented u > v, so neighborhood(u) here is exactly
-        # the smaller-or-equal neighbors the operator re-points
-        mins = e.groupBy("u").agg(F.min("v").alias("m"))
-        j = e.join(mins, "u")
-        repointed = j.filter(F.col("v") != F.col("m")).select(
-            F.col("v").alias("u"), F.col("m").alias("v")
-        )
-        self_edge = mins.select(F.col("u"), F.col("m").alias("v"))
-        return repointed.unionByName(self_edge).distinct()
-
     edges, sig = _materialize(
         pairs.select(
             F.greatest("id1", "id2").alias("u"), F.least("id1", "id2").alias("v")
@@ -733,26 +742,24 @@ def _star_components_with_rounds(
     rounds = 0
     for _ in range(max_iter):
         rounds += 1
-        edges, new_sig = _materialize(_small_star(_large_star(edges)))
+        edges, new_sig = _materialize(_star_round(edges))
         if new_sig == sig:
             break
         sig = new_sig
-    # star fixed point: every u points straight at its component min; the
-    # roots label themselves. The groupBy-min (a no-op at the fixed point,
-    # where each u has exactly one parent) guards the one-row-per-doc_id
-    # contract if max_iter exhausted before convergence — a non-star edge
-    # set would otherwise fan vertices with several parents into several
-    # conflicting rows, breaking dedup_keep_ids downstream.
-    verts = pairs.select(F.col("id1").alias("doc_id")).unionByName(
-        pairs.select(F.col("id2").alias("doc_id"))
-    ).distinct()
-    parents = edges.groupBy(F.col("u").alias("doc_id")).agg(F.min("v").alias("_p"))
-    return (
-        verts.join(parents, "doc_id", "left").select(
-            "doc_id", F.coalesce(F.col("_p"), F.col("doc_id")).alias("group_id")
-        ),
-        rounds,
+    # star fixed point: every u points straight at its component min, and
+    # (v → v) labels the roots; both steps keep the vertex set, so every
+    # id of a pair is here. The min over a doc's parents (a no-op at the
+    # fixed point, where each u has exactly one) guards the
+    # one-row-per-doc_id contract if max_iter exhausted before convergence
+    # — a non-star edge set would otherwise fan vertices with several
+    # parents into conflicting rows, breaking dedup_keep_ids downstream.
+    labels = (
+        edges.select(F.col("u").alias("doc_id"), F.col("v").alias("group_id"))
+        .unionByName(edges.select(F.col("v").alias("doc_id"), F.col("v").alias("group_id")))
+        .groupBy("doc_id")
+        .agg(F.min("group_id").alias("group_id"))
     )
+    return materialize(labels, eager=True), rounds
 
 
 def dedup_keep_ids(ids: DataFrame, components: DataFrame, id_col: str = "doc_id") -> DataFrame:

@@ -90,8 +90,8 @@ def main(argv: list[str] | None = None) -> int:
         span_dup_threshold=args.span_dup_threshold,
     )
     out.write.mode("overwrite").parquet(f"{args.output}/data")
-    if cached is not None:
-        cached.unpersist()
+    for df in cached:
+        df.unpersist()
 
     written = spark.read.parquet(f"{args.output}/data")
     agg = written.agg(

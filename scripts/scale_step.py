@@ -112,7 +112,8 @@ def main() -> None:
         n = out.agg(
             F.count(F.lit(1)).alias("n"), F.sum("lines_dropped")
         ).collect()[0]["n"]
-        cached.unpersist()  # else the timed passes would read this pass's cache
+        for c in cached:  # else the timed passes would read this pass's cache
+            c.unpersist()
         return n
 
     result: dict = {"base_n": args.base_n, "factor": args.factor, "scales": {}}
@@ -173,10 +174,10 @@ def main() -> None:
 
     lo = result["scales"][str(args.base_n)]["ops"]
     hi = result["scales"][str(args.base_n * args.factor)]["ops"]
-    result["time_ratio_10x"] = {
+    result["time_ratio"] = {
         k: round(hi[k]["sec"] / lo[k]["sec"], 2) for k in lo if lo[k]["sec"] > 0
     }
-    result["shuffle_ratio_10x"] = {
+    result["shuffle_ratio"] = {
         k: round(
             hi[k]["total_shuffle_write_bytes"]
             / max(1, lo[k]["total_shuffle_write_bytes"]),
@@ -186,7 +187,7 @@ def main() -> None:
     }
     lo_rep = result["scales"][str(args.base_n)]["band_report"]
     hi_rep = result["scales"][str(args.base_n * args.factor)]["band_report"]
-    result["candidate_ratio_10x"] = {
+    result["candidate_ratio"] = {
         k: round(int(hi_rep[k]) / max(1, int(lo_rep[k])), 2)
         for k in ("uncapped_candidates", "capped_candidates")
     }

@@ -230,8 +230,11 @@ def _union_find_components(edges):
 def test_star_components_match_union_find(spark, docs):
     """The star engine's components must equal a pure-Python union-find
     over the same edges on: the hand-built graph, a random
-    Erdős–Rényi-ish graph (the adversarial shape star is FOR), and the
-    real fixture's near-dup pairs."""
+    Erdős–Rényi-ish graph (the adversarial shape star is FOR), the
+    real fixture's near-dup pairs, and a hot root: a 5,000-member star
+    family (the shape the MinHash hot-band cap emits) with one member on
+    the end of a 500-edge chain. A window minimum is not skew-split like
+    a join, so the family's whole neighborhood lands in one window task."""
     import random
 
     hand = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "id1 long, id2 long")
@@ -247,12 +250,35 @@ def test_star_components_match_union_find(spark, docs):
     )
     rnd = spark.createDataFrame(rnd_edges, "id1 long, id2 long")
     real = dedup.ngram_jaccard_pairs(docs, threshold=0.8, max_shingle_df=None)
-    for pairs in (hand, rnd, real):
+    hot = spark.createDataFrame(
+        [(10_000, 10_000 + k) for k in range(1, 5_001)]
+        + [(i, i + 1) for i in range(500)]
+        + [(500, 10_003)],
+        "id1 long, id2 long",
+    )
+    for pairs in (hand, rnd, real, hot):
         edges = [(r["id1"], r["id2"]) for r in pairs.collect()]
         star = {r["doc_id"]: r["group_id"] for r in dedup.near_dup_components(pairs).collect()}
         assert star == _union_find_components(edges)
     with pytest.raises(ValueError, match="only 'star'"):
         dedup.near_dup_components(hand, method="label")
+
+
+def test_star_round_plans_three_shuffles_and_no_join(spark):
+    """One large-star + small-star round plans (AQE initial plan) at most
+    three shuffle exchanges and no join: each step's neighborhood minimum
+    is a window that shares its exchange with the rows it re-points, and
+    the round runs one distinct. A groupBy-min joined back on u per step
+    planned 11 exchanges and 4 joins."""
+    import re
+
+    from data_profiler_spark.operators.dedup import _star_round
+
+    edges = spark.createDataFrame([(i + 1, i) for i in range(20)], "u long, v long")
+    plan = _star_round(edges)._jdf.queryExecution().executedPlan().toString()
+    assert plan.startswith("AdaptiveSparkPlan isFinalPlan=false"), plan
+    assert len(re.findall(r"\bExchange ", plan)) <= 3, plan
+    assert not re.search(r"Join|CartesianProduct", plan), plan
 
 
 def test_star_components_chain_rounds(spark):
