@@ -1,39 +1,65 @@
-"""Vectorized pandas UDFs for language-ID and perplexity.
+"""The scoring UDF: language ID, perplexity and the quality signals in one
+Arrow pass.
+
+:data:`score_udf` is a Spark ``arrow_udf``: it receives each batch's
+``text`` column as a ``pyarrow`` string array and returns one struct per
+row — ``lang_pred``, ``margin``, ``log_ppl`` and the 11 signal fields of
+``textstats.SIGNALS_TYPE``. The models read the array's UTF-8 value buffer
+directly (functions/textmodel.py) and the signals come from pyarrow.compute
+kernels plus numpy (functions/textstats.py), so there is no per-row Python
+and each text crosses the JVM/Python boundary once. A null text scores as
+``""``.
 
 The models are trained deterministically from the seeded corpus inside
 each Python worker on first use (``lru_cache``) — equivalent to a
 broadcast of fitted weights (the weights are a pure function of the seed),
-with zero serialization cost. Arrow batches flow in/out; the numpy math
-is batch-vectorized (functions/textmodel.py).
+with zero serialization cost.
 
-This is the engine's only Python in the scoring hot path, per the §2.10
-UDF budget (model inference cannot be expressed as built-ins).
+:data:`langid_udf` and :data:`log_perplexity_udf` run the same model cores
+on their own, for callers that time one model (perfbench's ``langid``
+layer).
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .textmodel import langid_model, perplexity_model
+from .textstats import SIGNALS_TYPE, batch_signals
 
-_LANGID_SCHEMA = T.StructType(
-    [
-        T.StructField("lang_pred", T.StringType()),
-        T.StructField("margin", T.DoubleType()),
-    ]
+_LANGID_FIELDS = [
+    T.StructField("lang_pred", T.StringType()),
+    T.StructField("margin", T.DoubleType()),
+]
+SCORE_TYPE = T.StructType(
+    _LANGID_FIELDS + [T.StructField("log_ppl", T.DoubleType())] + SIGNALS_TYPE.fields
 )
 
 
-@F.pandas_udf(_LANGID_SCHEMA)
-def langid_udf(texts: pd.Series) -> pd.DataFrame:
-    model = langid_model()
-    labels, margins = model.predict_batch(texts.fillna("").tolist())
-    return pd.DataFrame({"lang_pred": labels, "margin": margins})
+def _langid(texts: pa.Array) -> list[pa.Array]:
+    labels, margins = langid_model().predict(texts)
+    return [labels, pa.array(margins, pa.float64())]
 
 
-@F.pandas_udf(T.DoubleType())
-def log_perplexity_udf(texts: pd.Series) -> pd.Series:
-    model = perplexity_model()
-    return pd.Series(model.log_perplexity_batch(texts.fillna("").tolist()))
+def _log_ppl(texts: pa.Array) -> pa.Array:
+    return pa.array(perplexity_model().log_perplexity(texts), pa.float64())
+
+
+@F.arrow_udf(SCORE_TYPE)
+def score_udf(texts: pa.Array) -> pa.Array:
+    return pa.StructArray.from_arrays(
+        [*_langid(texts), _log_ppl(texts), *batch_signals(texts).flatten()],
+        names=SCORE_TYPE.fieldNames(),
+    )
+
+
+@F.arrow_udf(T.StructType(_LANGID_FIELDS))
+def langid_udf(texts: pa.Array) -> pa.Array:
+    return pa.StructArray.from_arrays(_langid(texts), names=["lang_pred", "margin"])
+
+
+@F.arrow_udf(T.DoubleType())
+def log_perplexity_udf(texts: pa.Array) -> pa.Array:
+    return _log_ppl(texts)

@@ -3,7 +3,7 @@ quality scoring, token counting, document fingerprinting.
 
 All pure JVM expressions (no UDFs): each is a narrow map over the text
 column, fused by whole-stage codegen into the scan stage. The model-based
-langid (functions/langid.py pandas UDF) is the precise path; the n-gram
+langid (the scoring Arrow UDF, functions/langid.py) is the precise path; the n-gram
 heuristic here is the cheap pre-gate — at 100 TB you run the heuristic in
 the scan and only send its "uncertain" slice to the model UDF.
 """

@@ -1,29 +1,66 @@
-"""Gopher/C4-style quality signals as pure DataFrame expressions.
+"""Gopher/C4-style quality signals, computed batch-at-a-time over Arrow.
 
-Every signal is a JVM-side Column expression (higher-order array functions
-over split text) — no Python in the hot path, whole-stage codegen applies.
-The single-process reference labeler (tests/reference_labeler.py)
-implements the *same* definitions in Python; the definitions below are
-pinned precisely (split semantics, trim semantics, non-overlapping counts)
-so both sides agree byte-for-byte on the synthetic fixture:
+:func:`batch_signals` takes a ``pyarrow`` string array (the batch Spark's
+Arrow UDF node ships) and computes all 11 signals with pyarrow.compute
+string kernels plus numpy reductions over the flattened words and lines —
+no per-row Python. The scoring UDF (functions/langid.py) calls it next to
+the language-ID and perplexity models, so every text crosses to Python
+once. The single-process reference labeler (tests/reference_labeler.py)
+implements the *same* definitions in plain Python; the definitions below
+are pinned precisely so both sides agree exactly:
 
 * ``words`` = text split on ASCII-whitespace runs ``[ \\t\\n\\x0B\\f\\r]+``,
   empties dropped (Python ``str.split()`` equivalent for ASCII input).
 * ``lines`` = split on ``\\n`` (trailing empties kept), each trimmed of
-  spaces (Spark ``trim`` removes spaces only — the labeler mirrors with
-  ``strip(' ')``), empties dropped.
-* ``'...'`` occurrences counted non-overlapping left-to-right (Java
-  ``replace`` == Python ``str.count``).
+  spaces only (the labeler mirrors with ``strip(' ')``), empties dropped.
+* lengths count code points; ``'...'`` occurrences are counted
+  non-overlapping left-to-right (Python ``str.count``).
+* stopwords match after ASCII-only lowercasing. No non-ASCII character
+  lowercases to a stopword letter in Python or Java, so this agrees with
+  both full case mappings (pyarrow's ``utf8_lower`` does not: it maps
+  ``İ`` to ``i``).
+* distinct lines, 2-grams and stopwords are exact: dictionary codes
+  counted per doc, no hashing.
+* a null text scores as ``""``.
+
+:func:`words_expr` stays a JVM expression: it is the engine's one
+tokenizer for dedup, corpus, textanalysis and the oracle queries.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import rules
 
 _WS = "[ \\t\\n\\x0B\\f\\r]+"
+
+_COUNT_FIELDS = ("word_count", "line_count", "stopword_hits")
+SIGNAL_FIELDS = (
+    "word_count",
+    "line_count",
+    "mean_word_length",
+    "mean_line_length",
+    "symbol_ratio",
+    "bullet_line_fraction",
+    "ellipsis_line_fraction",
+    "stopword_hits",
+    "alpha_word_fraction",
+    "dup_line_fraction",
+    "dup_2gram_fraction",
+)
+SIGNALS_TYPE = T.StructType(
+    [
+        T.StructField(f, T.IntegerType() if f in _COUNT_FIELDS else T.DoubleType())
+        for f in SIGNAL_FIELDS
+    ]
+)
+_STOPWORDS = pa.array(rules.STOPWORDS, pa.string())
 
 
 def words_expr(c: Column) -> Column:
@@ -32,92 +69,117 @@ def words_expr(c: Column) -> Column:
     return F.filter(F.split(c, _WS), lambda w: w != "")
 
 
-def lines_expr(c: Column) -> Column:
-    """Non-empty space-trimmed lines."""
-    return F.filter(
-        F.transform(F.split(c, "\\n", -1), lambda l: F.trim(l)), lambda l: l != ""
+def _pieces(parts: pa.ListArray, strip: str = "") -> tuple[pa.Array, np.ndarray]:
+    """Non-empty strings of a list array, each first trimmed of the
+    characters in ``strip``, and the row each came from."""
+    flat = parts.flatten()
+    if strip:
+        flat = pc.utf8_trim(flat, strip)
+    rows = pc.list_parent_indices(parts).to_numpy()
+    keep = pc.greater(pc.binary_length(flat), 0)
+    return flat.filter(keep), rows[_flags(keep)]
+
+
+def _distinct_per_row(rows: np.ndarray, keys: np.ndarray, n: int) -> np.ndarray:
+    """Number of distinct ``keys`` per row (``rows`` is non-decreasing)."""
+    if rows.size == 0:
+        return np.zeros(n, dtype=np.int64)
+    order = np.lexsort((keys, rows))
+    r, k = rows[order], keys[order]
+    first = np.ones(r.size, dtype=bool)
+    first[1:] = (r[1:] != r[:-1]) | (k[1:] != k[:-1])
+    return np.bincount(r[first], minlength=n)
+
+
+def _codes(strings: pa.Array) -> np.ndarray:
+    """Dense ids, equal strings ⇔ equal ids."""
+    return strings.dictionary_encode().indices.to_numpy().astype(np.int64)
+
+
+def _flags(mask: pa.Array) -> np.ndarray:
+    return mask.to_numpy(zero_copy_only=False)
+
+
+def _per_row(rows: np.ndarray, n: int, weights=None) -> np.ndarray:
+    return np.bincount(rows, weights=weights, minlength=n)
+
+
+def _ratio(num: np.ndarray, den: np.ndarray) -> np.ndarray:
+    """``num / den`` where ``den > 0``, else 0.0 (Python's true division)."""
+    return np.where(den > 0, num / np.maximum(den, 1), 0.0)
+
+
+def batch_signals(texts: pa.Array) -> pa.StructArray:
+    """The 11 quality signals of every text in the batch, as a
+    :data:`SIGNALS_TYPE` struct array."""
+    if texts.null_count:
+        texts = pc.fill_null(texts, "")
+    n = len(texts)
+
+    words, wrow = _pieces(pc.ascii_split_whitespace(texts))
+    wc = _per_row(wrow, n)
+    word_len = _per_row(wrow, n, pc.utf8_length(words).to_numpy())
+    alpha = _per_row(wrow, n, _flags(pc.match_substring_regex(words, "[A-Za-z]")))
+    stop_idx = pc.index_in(pc.ascii_lower(words), value_set=_STOPWORDS)
+    hit = pc.is_valid(stop_idx)
+    stop_hits = _distinct_per_row(wrow[_flags(hit)], stop_idx.filter(hit).to_numpy(), n)
+    # 2-gram (w_i, w_i+1) as one int64 key over the batch's word ids
+    ids = _codes(words)
+    same_row = wrow[1:] == wrow[:-1]
+    grams = (ids[:-1] * (int(ids.max(initial=0)) + 1) + ids[1:])[same_row]
+    distinct_grams = _distinct_per_row(wrow[1:][same_row], grams, n)
+
+    lines, lrow = _pieces(pc.split_pattern(texts, "\n"), strip=" ")
+    lc = _per_row(lrow, n)
+    line_len = _per_row(lrow, n, pc.utf8_length(lines).to_numpy())
+    bullet = pc.or_(
+        pc.or_(pc.starts_with(lines, "-"), pc.starts_with(lines, "*")),
+        pc.starts_with(lines, "\u2022"),
+    )
+    ellipsis = pc.or_(pc.ends_with(lines, "..."), pc.ends_with(lines, "\u2026"))
+    distinct_lines = _distinct_per_row(lrow, _codes(lines), n)
+
+    symbols = (
+        pc.count_substring(texts, "#").to_numpy()
+        + pc.count_substring(texts, "...").to_numpy()
+    )
+    columns = {
+        "word_count": wc,
+        "line_count": lc,
+        "mean_word_length": _ratio(word_len, wc),
+        "mean_line_length": _ratio(line_len, lc),
+        "symbol_ratio": _ratio(symbols, wc),
+        "bullet_line_fraction": _ratio(_per_row(lrow, n, _flags(bullet)), lc),
+        "ellipsis_line_fraction": _ratio(_per_row(lrow, n, _flags(ellipsis)), lc),
+        "stopword_hits": stop_hits,
+        "alpha_word_fraction": _ratio(alpha, wc),
+        "dup_line_fraction": np.where(lc > 0, 1.0 - _ratio(distinct_lines, lc), 0.0),
+        "dup_2gram_fraction": np.where(
+            wc >= 2, 1.0 - _ratio(distinct_grams, wc - 1), 0.0
+        ),
+    }
+    return pa.StructArray.from_arrays(
+        [
+            pa.array(columns[f], pa.int32() if f in _COUNT_FIELDS else pa.float64())
+            for f in SIGNAL_FIELDS
+        ],
+        names=list(SIGNAL_FIELDS),
     )
 
 
-def _count_occurrences(c: Column, token: str) -> Column:
-    """Non-overlapping occurrence count via length delta."""
-    return (F.length(c) - F.length(F.replace(c, F.lit(token), F.lit("")))) / len(token)
+@F.arrow_udf(SIGNALS_TYPE)
+def signals_udf(texts: pa.Array) -> pa.Array:
+    return batch_signals(texts)
 
 
-def signals_from_parts(c: Column, words: Column, lines: Column) -> Column:
-    """Quality-signal struct from (text, words, lines). Pass MATERIALIZED
-    words/lines columns (attribute refs): every signal references them, and
-    inline expressions would be copied into each signal — a ~10× expression
-    tree blow-up that shows up directly as whole-stage-codegen compile time
-    (measured tens of seconds for the inline form)."""
-    wc = F.size(words)
-    lc = F.size(lines)
-    total_word_len = F.aggregate(
-        words, F.lit(0).cast("long"), lambda acc, w: acc + F.length(w)
-    )
-    mean_word_len = F.when(wc > 0, total_word_len / wc).otherwise(F.lit(0.0))
-    total_line_len = F.aggregate(
-        lines, F.lit(0).cast("long"), lambda acc, l: acc + F.length(l)
-    )
-    mean_line_len = F.when(lc > 0, total_line_len / lc).otherwise(F.lit(0.0))
-    symbol_count = _count_occurrences(c, "#") + _count_occurrences(c, "...")
-    symbol_ratio = F.when(wc > 0, symbol_count / wc).otherwise(F.lit(0.0))
-    bullet_lines = F.size(
-        F.filter(lines, lambda l: l.substr(1, 1).isin("-", "*", "•"))
-    )
-    bullet_frac = F.when(lc > 0, bullet_lines / lc).otherwise(F.lit(0.0))
-    ellipsis_lines = F.size(
-        F.filter(lines, lambda l: l.endswith("...") | l.endswith("…"))
-    )
-    ellipsis_frac = F.when(lc > 0, ellipsis_lines / lc).otherwise(F.lit(0.0))
-    lower_words = F.transform(words, F.lower)
-    stopword_hits = F.size(
-        F.array_intersect(F.array(*[F.lit(s) for s in rules.STOPWORDS]), lower_words)
-    )
-    alpha_words = F.size(F.filter(words, lambda w: w.rlike("[A-Za-z]")))
-    alpha_frac = F.when(wc > 0, alpha_words / wc).otherwise(F.lit(0.0))
-    dup_line_frac = F.when(
-        lc > 0, 1.0 - F.size(F.array_distinct(lines)) / lc
-    ).otherwise(F.lit(0.0))
-    # 2-gram repetition: total 2-gram count is just wc-1, so the 2-gram
-    # array is referenced ONCE (inside array_distinct). Zipping two shifted
-    # slices allocates two arrays per doc; a 2-element slice per word
-    # position took ~3x as long at 20k docs (BASELINE.md).
-    n = F.greatest(wc - 1, F.lit(0))
-    two_grams = F.zip_with(
-        F.slice(words, 1, n),
-        F.slice(words, 2, n),
-        lambda a, b: F.concat(a, F.lit(" "), b),
-    )
-    dup_2gram_frac = F.when(
-        wc >= 2, 1.0 - F.size(F.array_distinct(two_grams)) / (wc - 1)
-    ).otherwise(F.lit(0.0))
-    return F.struct(
-        wc.alias("word_count"),
-        lc.alias("line_count"),
-        mean_word_len.cast("double").alias("mean_word_length"),
-        mean_line_len.cast("double").alias("mean_line_length"),
-        symbol_ratio.cast("double").alias("symbol_ratio"),
-        bullet_frac.cast("double").alias("bullet_line_fraction"),
-        ellipsis_frac.cast("double").alias("ellipsis_line_fraction"),
-        stopword_hits.alias("stopword_hits"),
-        alpha_frac.cast("double").alias("alpha_word_fraction"),
-        dup_line_frac.cast("double").alias("dup_line_fraction"),
-        dup_2gram_frac.cast("double").alias("dup_2gram_fraction"),
-    )
+def signals_struct(c: Column) -> Column:
+    """A non-null ``signals`` struct from the signal fields of ``c``."""
+    return F.struct(*[c[f].alias(f) for f in SIGNAL_FIELDS])
 
 
 def with_signals(df: DataFrame, text_col: str = "text", out: str = "signals") -> DataFrame:
-    """Tree-size-friendly path: words/lines land in their own projection
-    (multi-referenced expensive aliases survive CollapseProject), signals
-    reference them as attributes."""
-    c = F.col(text_col)
-    return (
-        df.withColumn("_words", words_expr(c))
-        .withColumn("_lines", lines_expr(c))
-        .withColumn(out, signals_from_parts(c, F.col("_words"), F.col("_lines")))
-        .drop("_words", "_lines")
-    )
+    """``df`` plus the quality-signal struct of ``text_col`` as ``out``."""
+    return df.withColumn(out, signals_struct(signals_udf(F.col(text_col))))
 
 
 def heuristic_drop_reasons_expr(sig: Column) -> Column:
@@ -147,6 +209,7 @@ def heuristic_drop_reasons_expr(sig: Column) -> Column:
         ("dup_lines", sig["dup_line_fraction"] > rules.MAX_DUP_LINE_FRACTION),
         ("dup_2grams", sig["dup_2gram_fraction"] > rules.MAX_DUP_2GRAM_FRACTION),
     ]
-    return F.array_compact(
-        F.array(*[F.when(cond, F.lit(code)) for code, cond in checks])
-    )
+    # concat of one- or zero-element arrays, not array_compact: that is a
+    # lambda (filter) and would run interpreted, outside whole-stage codegen
+    none = F.array().cast("array<string>")
+    return F.concat(*[F.when(cond, F.array(F.lit(code))).otherwise(none) for code, cond in checks])

@@ -3,16 +3,19 @@
 The reference's 8-stage single-file pipeline (``api/services/pipeline.py:141-208``)
 becomes one declarative DataFrame DAG per batch:
 
-    pages → signals (JVM expressions) → langid + perplexity (pandas UDFs)
+    pages → one Arrow UDF pass (language ID, perplexity and the 11 quality
+            signals over each batch's UTF-8 buffer, functions/langid.py)
           → PII scrub + counts (JVM regex chain) → keep/drop decision
           → output contract (raw text/html dropped) → partitioned zstd write
           → per-batch metrics + manifest commit
 
-Scoring is a single narrow map stage — zero shuffles; Catalyst fuses all
-expression work into one whole-stage-codegen span around the two Arrow
-UDF exchanges. The write repartitions by a url-hash salt (north rule:
-defuse host-level skew — a Zipf host distribution otherwise concentrates
-a host's documents in few tasks downstream).
+Scoring is a single narrow map stage — zero shuffles. Each text crosses to
+Python once (one ArrowEvalPython node); the PII chain, the ``signals``
+struct and the drop reasons after it hold no higher-order lambda, so
+Catalyst fuses them into one whole-stage-codegen span. The write
+repartitions by a url-hash salt (north rule: defuse host-level skew — a
+Zipf host distribution otherwise concentrates a host's documents in few
+tasks downstream).
 
 Run lifecycle (reference ``api/storage/workspace.py:206-237`` state machine
 reborn): ONE scoring+write job per run covers every incomplete ``warc_ts``
@@ -39,9 +42,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import Observation
 
 from . import rules
-from .functions.langid import langid_udf, log_perplexity_udf
+from .functions.langid import score_udf
 from .functions.pii import pii_counts_expr, scrub_expr
-from .functions.textstats import heuristic_drop_reasons_expr, with_signals
+from .functions.textstats import heuristic_drop_reasons_expr, signals_struct
 from .io import catalog
 from .io.audit import AuditLog, fingerprint_digest, input_fingerprint_exprs
 
@@ -81,14 +84,18 @@ def score_pages(df: DataFrame, keep_langs: tuple[str, ...] = rules.KEEP_LANGS) -
 
     Column contract (stable output schema):
     signals struct, lang_pred, lang_margin, log_ppl, pii_counts struct,
-    scrubbed_text, drop_reasons array<string>, keep boolean.
+    scrubbed_text, drop_reasons array<string>, keep boolean. A null text
+    scores as ``""``; its ``scrubbed_text`` stays null.
     """
-    out = with_signals(df, "text", "signals")
-    lid = langid_udf(F.col("text"))
-    out = out.withColumn("lang_pred", lid["lang_pred"]).withColumn(
-        "lang_margin", lid["margin"]
+    score = F.col("_score")
+    out = (
+        df.withColumn("_score", score_udf(F.col("text")))
+        .withColumn("signals", signals_struct(score))
+        .withColumn("lang_pred", score["lang_pred"])
+        .withColumn("lang_margin", score["margin"])
+        .withColumn("log_ppl", score["log_ppl"])
+        .drop("_score")
     )
-    out = out.withColumn("log_ppl", log_perplexity_udf(F.col("text")))
     out = out.withColumn("scrubbed_text", scrub_expr(F.col("text"))).withColumn(
         "pii_counts", pii_counts_expr(F.col("text"))
     )

@@ -162,3 +162,23 @@ def test_mean_line_length_rule_fires(spark):
         sig = ref.signals(text)
         got = out[i]["signals"].asDict()["mean_line_length"]
         assert got == pytest.approx(sig["mean_line_length"], abs=1e-9)
+
+
+def test_null_text_scores_as_empty_text(spark):
+    """A null text gets the signals and drop reasons of ``""``; its
+    scrubbed text stays null, so the manifest's ``null_text`` counts it."""
+    df = spark.createDataFrame([(0, None), (1, "")], "doc_id int, text string")
+    rows = {r["doc_id"]: r for r in score_pages(df).collect()}
+    assert rows[0]["signals"] == rows[1]["signals"]
+    assert list(rows[0]["drop_reasons"]) == list(rows[1]["drop_reasons"])
+    assert list(rows[1]["drop_reasons"]) == ref.label_batch([""])[0]["drop_reasons"]
+    assert rows[0]["scrubbed_text"] is None and rows[1]["scrubbed_text"] == ""
+
+
+def test_score_pages_plan_is_one_arrow_pass(pages):
+    """Scoring crosses to Python once (one ArrowEvalPython node for the
+    models and the signals) and leaves no higher-order lambda in the JVM
+    plan: those run interpreted, outside whole-stage codegen."""
+    plan = score_pages(pages)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython ") == 1, plan
+    assert "lambdafunction" not in plan, plan
