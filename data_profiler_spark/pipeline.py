@@ -4,15 +4,15 @@ The reference's 8-stage single-file pipeline (``api/services/pipeline.py:141-208
 becomes one declarative DataFrame DAG per batch:
 
     pages → one Arrow UDF pass (language ID, perplexity and the 11 quality
-            signals over each batch's UTF-8 buffer, functions/langid.py)
-          → PII scrub + counts (JVM regex chain) → keep/drop decision
+            signals over each batch's UTF-8 buffer, plus the PII scrub and
+            its per-category counts, functions/langid.py) → keep/drop decision
           → output contract (raw text/html dropped) → partitioned zstd write
           → per-batch metrics + manifest commit
 
 Scoring is a single narrow map stage — zero shuffles. Each text crosses to
-Python once (one ArrowEvalPython node); the PII chain, the ``signals``
-struct and the drop reasons after it hold no higher-order lambda, so
-Catalyst fuses them into one whole-stage-codegen span. The write
+Python once (one ArrowEvalPython node); the ``signals`` and ``pii_counts``
+structs and the drop reasons after it hold no higher-order lambda and no
+regex, so Catalyst fuses them into one whole-stage-codegen span. The write
 repartitions by a url-hash salt (north rule: defuse host-level skew — a
 Zipf host distribution otherwise concentrates a host's documents in few
 tasks downstream).
@@ -40,10 +40,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark.sql import Observation
+from pyspark.sql.types import StructType
 
 from . import rules
 from .functions.langid import score_udf
-from .functions.pii import pii_counts_expr, scrub_expr
+from .functions.pii import counts_struct
 from .functions.textstats import heuristic_drop_reasons_expr, signals_struct
 from .io import catalog
 from .io.audit import AuditLog, fingerprint_digest, input_fingerprint_exprs
@@ -94,10 +95,9 @@ def score_pages(df: DataFrame, keep_langs: tuple[str, ...] = rules.KEEP_LANGS) -
         .withColumn("lang_pred", score["lang_pred"])
         .withColumn("lang_margin", score["margin"])
         .withColumn("log_ppl", score["log_ppl"])
+        .withColumn("scrubbed_text", score["scrubbed_text"])
+        .withColumn("pii_counts", counts_struct(score["pii_counts"]))
         .drop("_score")
-    )
-    out = out.withColumn("scrubbed_text", scrub_expr(F.col("text"))).withColumn(
-        "pii_counts", pii_counts_expr(F.col("text"))
     )
     lang_fail = F.when(
         ~F.col("lang_pred").isin(*keep_langs), F.array(F.lit("lang"))
@@ -261,11 +261,13 @@ class QualityFilterPipeline:
             )
         return r
 
-    def _read_output(self) -> DataFrame:
+    def _read_output(self, schema: StructType) -> DataFrame:
+        """The written output. The parquet fallback is read with the
+        writing frame's ``schema``, so no schema-inference job runs."""
         target = self.table or os.path.join(self.output_path, "data")
         if catalog.is_table_target(target):
             return self.spark.read.table(target)
-        return self.spark.read.parquet(target)
+        return self.spark.read.schema(schema).parquet(target)
 
     def run(
         self,
@@ -411,8 +413,9 @@ class QualityFilterPipeline:
         # repartition on (month, salt): skew defusal AND at most one file
         # per (month, salt-bucket) — without month in the key every task
         # could hold rows of every month and fan out #tasks × #months files.
+        written = scored.repartition(F.col("month"), F.col("salt")).drop("salt")
         catalog.write_partitioned(
-            scored.repartition(F.col("month"), F.col("salt")).drop("salt"),
+            written,
             self.table or os.path.join(self.output_path, "data"),
             ["month"],
             mode="overwrite-partitions",
@@ -449,13 +452,14 @@ class QualityFilterPipeline:
         self._stage_start(manifest, "metrics")
         pending = sorted(set(months_written) | set(written_only))
         if pending:
-            per_month = (
-                self._read_output()
+            # at most #months rows: sorted here, not by a range-sampled sort
+            per_month = sorted(
+                self._read_output(written.schema)
                 .filter(F.col("month").isin(pending))
                 .groupBy("month")
                 .agg(*_metric_exprs())
-                .orderBy("month")
-                .collect()
+                .collect(),
+                key=lambda r: r["month"],
             )
         else:
             per_month = []

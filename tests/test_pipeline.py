@@ -169,7 +169,7 @@ def test_stage_progress_audit_and_crash_resume(pages, tmp_path):
         pass
 
     orig = QualityFilterPipeline._read_output
-    QualityFilterPipeline._read_output = lambda self: (_ for _ in ()).throw(Crash())
+    QualityFilterPipeline._read_output = lambda self, schema: (_ for _ in ()).throw(Crash())
     try:
         with pytest.raises(Crash):
             pipe.run(pages, run_id="a1", validate_first=True, max_invalid_utf8=pages.count())

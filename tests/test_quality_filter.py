@@ -177,8 +177,11 @@ def test_null_text_scores_as_empty_text(spark):
 
 def test_score_pages_plan_is_one_arrow_pass(pages):
     """Scoring crosses to Python once (one ArrowEvalPython node for the
-    models and the signals) and leaves no higher-order lambda in the JVM
-    plan: those run interpreted, outside whole-stage codegen."""
+    models, the signals and the PII scrub) and leaves no higher-order lambda
+    in the JVM plan: those run interpreted, outside whole-stage codegen.
+    Nor does it leave a JVM regex: the scrub and its counts come from the
+    same Arrow pass, not from a second sweep over UTF-16 copies."""
     plan = score_pages(pages)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("ArrowEvalPython ") == 1, plan
     assert "lambdafunction" not in plan, plan
+    assert "regexp_replace" not in plan and "regexp_count" not in plan, plan
