@@ -104,8 +104,8 @@ def extraction_report(
 
     One row: ``docs``, ``extract_matches`` (extracted == stored text,
     byte-for-byte), ``extract_mismatches``, ``null_html`` — a lineage
-    metric the same shape as the profiler rollups, cheap enough to ride
-    every run (one narrow map + one tiny agg)."""
+    metric the same shape as the profiler rollups, at the cost of one
+    narrow map + one tiny agg. Library API: no run calls it."""
     extracted = decode_html_expr(F.col(html_col))
     return df.select(
         F.col(id_col),

@@ -3,9 +3,9 @@ quality scoring, token counting, document fingerprinting.
 
 All pure JVM expressions (no UDFs): each is a narrow map over the text
 column, fused by whole-stage codegen into the scan stage. The model-based
-langid (the scoring Arrow UDF, functions/langid.py) is the precise path; the n-gram
-heuristic here is the cheap pre-gate — at 100 TB you run the heuristic in
-the scan and only send its "uncertain" slice to the model UDF.
+langid (the scoring Arrow UDF, functions/langid.py) is the precise path and
+scores every document; the n-gram heuristic here is a JVM-only baseline
+(oracle ``lang_guess_confusion``), not a gate in front of the model.
 """
 
 from __future__ import annotations

@@ -41,8 +41,7 @@ def _json_safe(v: Any) -> Any:
 
 def csv_injection_sanitize(value: str) -> str:
     """Prefix ``'`` when a cell starts with ``= + - @`` — reference P11
-    (``runs.py:1012-1036``); the Spark-side expression twin lives in
-    operators.validators.csv_injection_sanitize."""
+    (``runs.py:1012-1036``)."""
     return "'" + value if value[:1] in ("=", "+", "-", "@") else value
 
 

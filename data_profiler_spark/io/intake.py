@@ -6,20 +6,21 @@
   column inside a vectorized pandas UDF (``bytes.decode`` surfaces the
   exact failing offset in ``UnicodeDecodeError.start`` — the same state
   machine outcome without hand-rolling one).
-* **Line-ending detection / normalization** (S3, ``ingest.py:282-448``):
-  pure length-delta expressions, no UDF.
+* **Line-ending detection** (S3, ``ingest.py:282-448``): pure
+  length-delta expressions, no UDF (normalizing is ``NORMALIZE_STEPS[0]``).
 * **Delimiter + quoting sniff** (S4/S5, ``ingest.py:451-665``): driver-side
   over a tiny head sample — the reference samples 8 KB; distributing a
   8 KB problem would be overhead, not parallelism.
-* **Jagged-row detection** (S7, ``ingest.py:873-896``): exact per-line
-  field-count check over ``spark.read.text``, quote-naive fast path plus a
-  PERMISSIVE csv read with ``_corrupt`` rollup for the quoted path.
+* **Jagged-row detection** (S7, ``ingest.py:873-896``): a quote-aware
+  per-line field-count check over ``spark.read.text``
+  (:func:`csv_row_errors`) beside a PERMISSIVE csv read carrying
+  ``_corrupt`` (:func:`read_csv_with_errors`).
 
 Catastrophic-error gating (SURVEY.md §7.3.6): these validators are cheap
-aggregates meant to run BEFORE the expensive scoring stage; the pipeline
-aborts when a catastrophic count > 0 — same observable behavior as the
-reference's stop-at-first-bad-byte, achieved with full-pass counts instead
-of sequential early exit.
+aggregates run BEFORE the expensive stage — ``jobs/profile_job.py`` stops a
+CSV profile before type inference, the pipeline stops scoring on S2 — the
+reference's stop-at-first-bad-byte, with full-pass counts instead of
+sequential early exit.
 """
 
 from __future__ import annotations
@@ -106,11 +107,6 @@ def line_ending_counts_exprs(col: str = "text") -> list[Column]:
     ]
 
 
-def normalize_line_endings(c: Column) -> Column:
-    """All endings → LF (reference ``ingest.py:432-448``)."""
-    return F.regexp_replace(c, "\\r\\n|\\r", "\n")
-
-
 def line_ending_style(agg_row: dict) -> tuple[str, bool]:
     """(majority style, mixed?) from the counts row — driver-side vote.
     A mixed verdict should be recorded as ``W_MIXED_LINE_ENDINGS`` through
@@ -169,8 +165,7 @@ def sniff_quoting(lines: list[str], delimiter: str) -> tuple[bool, float]:
       vote per line.
 
     Confidence is the capped sum; >= 0.2 sniffs quoted. The extra signals
-    fix the round-2 gap where escape-heavy files could mis-sniff on
-    density alone."""
+    keep an escape-heavy file from mis-sniffing on density alone."""
     if not lines:
         return False, 0.0
     import re as _re
@@ -189,11 +184,7 @@ def sniff_quoting(lines: list[str], delimiter: str) -> tuple[bool, float]:
 
 
 def sniff_csv(
-    spark: SparkSession,
-    path: str,
-    sample_lines: int = 20,
-    provided_delimiter: str | None = None,
-    provided_quoted: bool | None = None,
+    spark: SparkSession, path: str, provided_delimiter: str | None = None, provided_quoted: bool | None = None
 ) -> dict:
     """Driver-side sniff of delimiter + quoting from the file head.
 
@@ -206,7 +197,7 @@ def sniff_csv(
     :func:`warnings_df` + ``operators.errors.error_rollup`` to record them
     (both codes are non-catastrophic in ``ERROR_CODES``).
     """
-    lines = [r["value"] for r in spark.read.text(path).limit(sample_lines).collect()]
+    lines = [r["value"] for r in spark.read.text(path).limit(20).collect()]
     delim, dconf = sniff_delimiter(lines)
     quoted, qconf = sniff_quoting(lines, delim)
     warnings: list[str] = []
@@ -219,7 +210,6 @@ def sniff_csv(
         "delimiter_confidence": round(dconf, 4),
         "quoted": quoted,
         "quoting_confidence": round(qconf, 4),
-        "header": lines[0] if lines else None,
         "warnings": warnings,
     }
 
@@ -236,58 +226,28 @@ def warnings_df(spark: SparkSession, warnings: list[str]) -> DataFrame:
 # S6/S7 — CSV parse with jagged-row / corrupt-record rollup
 # --------------------------------------------------------------------------
 
-def jagged_row_report(spark: SparkSession, path: str, delimiter: str) -> DataFrame:
-    """Exact field-count histogram over raw lines (quote-naive path,
-    reference ``E_JAGGED_ROW`` ``ingest.py:873-896``): one narrow scan,
-    groupBy on the tiny field-count domain."""
-    raw = spark.read.text(path)
-    n_fields = F.size(F.split(F.col("value"), F.lit(delimiter), -1))
-    return (
-        raw.select(n_fields.alias("n_fields"))
-        .groupBy("n_fields")
-        .agg(F.count(F.lit(1)).alias("line_count"))
-        .orderBy(F.desc("line_count"), F.asc("n_fields"))
-    )
-
-
-def csv_row_errors(
-    spark: SparkSession,
-    path: str,
-    delimiter: str,
-    quoted: bool = True,
-    expected_cols: int | None = None,
-) -> DataFrame:
+def csv_row_errors(spark: SparkSession, path: str, delimiter: str, quoted: bool = True) -> DataFrame:
     """S7 per-row shape classification with the reference's carve-outs
     (``ingest.py:868-890``), as one narrow scan over raw lines:
 
-    * trailing empty fields beyond the expected count are trimmed first
+    * trailing empty fields beyond the header's count are trimmed first
       (``a|b|c|`` parses clean against a 3-column header);
     * exactly ONE extra column while quoting is enabled →
       ``E_UNQUOTED_DELIM``, non-catastrophic (likely an unquoted delimiter
       inside a value);
     * any other count mismatch → ``E_JAGGED_ROW``, catastrophic.
 
-    Quote-aware field counting without a parser: quoted sections
-    (``"..."`` with ``""`` escapes) are replaced by a ``\\x01`` sentinel
-    before splitting, so a properly-quoted embedded delimiter does not
-    inflate the count while the field still counts as NON-empty — a
-    fully-quoted trailing extra field (``a|b|c|"x"`` against a 3-column
-    header) classifies ``E_UNQUOTED_DELIM`` like the reference, instead of
-    being trimmed away as a trailing empty. Returns
-    ``(code, line_number, column)`` rows (1-based data-row numbers,
-    header excluded) ready for ``operators.errors.error_rollup``.
+    Quoted sections (with ``""`` escapes) become a non-empty ``\\x01``
+    sentinel before the split, so an embedded delimiter does not count and
+    a quoted trailing extra field (``a|b|c|"x"``) is ``E_UNQUOTED_DELIM``,
+    not a trimmed empty. Returns ``(code, line_number, column)`` rows
+    (1-based data-row numbers) for ``operators.errors.error_rollup``.
 
-    ``line_number`` is computed DISTRIBUTED: a partition-local
-    ``row_number`` (window partitioned by ``spark_partition_id``, ordered
-    by ``monotonically_increasing_id`` — exact within a split) plus a
-    driver-computed cumulative offset per split (one count row per
-    partition, broadcast back). No unpartitioned window anywhere — the
-    scan never funnels through one task, so the same code holds on a
-    multi-split file. Split-order assumption: text splits enumerate in
-    file-offset order (the same assumption the previous global
-    ``orderBy(monotonically_increasing_id)`` made, since the id embeds
-    the partition ordinal in its high bits — this version just stops
-    paying a global sort for it).
+    ``line_number`` is a per-split ``row_number`` ordered by
+    ``monotonically_increasing_id`` plus the split's offset (one collected
+    count row per split, broadcast back), so no window funnels the scan
+    through one task. It assumes text splits enumerate in file-offset
+    order, as the id's high bits do.
     """
     import re as _re
 
@@ -313,9 +273,8 @@ def csv_row_errors(
     numbered = raw.withColumn("_lrn", F.row_number().over(w)).join(
         F.broadcast(off_df), "_pid"
     ).withColumn("_rn", (F.col("_lrn") + F.col("_off")).cast("int"))
-    if expected_cols is None:
-        header = numbered.filter(F.col("_rn") == 1).collect()[0]["value"]
-        expected_cols = len(header.split(delimiter))
+    header = numbered.filter(F.col("_rn") == 1).collect()[0]["value"]
+    expected_cols = len(header.split(delimiter))
     data = numbered.filter(F.col("_rn") > 1).select(
         (F.col("_rn") - 1).alias("line_number"), "value"
     )
@@ -344,20 +303,14 @@ def csv_row_errors(
     )
 
 
-def read_csv_with_errors(
-    spark: SparkSession, path: str, delimiter: str = "|", quoted: bool = True,
-    cache: bool = True,
-) -> tuple[DataFrame, Column]:
-    """PERMISSIVE csv read carrying a ``_corrupt`` column; pair with
-    ``F.count(F.col('_corrupt').isNotNull())`` for the reference's
-    count-and-continue error rollup (``ingest.py:953-963``).
+def read_csv_with_errors(spark: SparkSession, path: str, delimiter: str = "|", quoted: bool = True) -> DataFrame:
+    """Cached PERMISSIVE csv read carrying a ``_corrupt`` column (the
+    reference's count-and-continue parse, ``ingest.py:953-963``).
 
-    ``cache=True`` (default) works around Spark's corrupt-column-only-query
-    restriction by caching — right for profiling fixtures that get scanned
-    repeatedly anyway. For a large one-pass file set ``cache=False`` and
-    select at least one data column alongside ``_corrupt`` in every query
-    (the documented Spark requirement) instead of pinning the file in
-    memory."""
+    Spark rejects a query over only the corrupt column of a raw CSV scan
+    (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN); the cache is
+    the documented workaround, and a profile scans the frame several times
+    anyway."""
     # Spark only materializes the corrupt-record column when it appears in
     # an explicit schema; the reference's model is all-strings anyway
     # (SURVEY.md §1.2), so: header sniff → all-string schema + _corrupt.
@@ -369,15 +322,10 @@ def read_csv_with_errors(
         spark.read.option("header", True)
         .option("sep", delimiter)
         .option("quote", '"' if quoted else "\u0000")  # NUL disables quoting
+        .option("escape", '"')  # RFC-4180 doubled quotes, as csv_row_errors counts them
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt")
         .schema(schema)
         .csv(path)
     )
-    # Spark disallows queries referencing ONLY the corrupt column on a raw
-    # CSV scan (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN);
-    # cache() is the documented workaround and the rollup typically follows
-    # a full profiling pass over the same data anyway.
-    if cache:
-        df = df.cache()
-    return df, F.sum(F.col("_corrupt").isNotNull().cast("long")).alias("corrupt_count")
+    return df.cache()

@@ -75,7 +75,7 @@ def string_stats_exprs(col: str) -> list[Column]:
     ]
 
 
-def melted_value_counts(df: DataFrame, cols: list[str], case_sensitive: bool = True) -> DataFrame:
+def melted_value_counts(df: DataFrame, cols: list[str]) -> DataFrame:
     """Every column's exact value frequencies in ONE shuffle.
 
     Replaces the reference's per-column full-file re-scan
@@ -89,24 +89,16 @@ def melted_value_counts(df: DataFrame, cols: list[str], case_sensitive: bool = T
     would put each column on one reducer, so the compound key keeps
     parallelism ∝ value cardinality. Map-side partial aggregation bounds
     shuffle volume by the number of *distinct* (col, value) pairs per task.
-
-    ``case_sensitive=False`` lowercases after trimming (reference
-    ``distincts.py:175-177``) so 'Foo' and 'foo' collapse into one value.
     """
     pairs: list[Column] = []
     for c in cols:
-        v = F.trim(F.col(c).cast("string"))
-        if not case_sensitive:
-            v = F.lower(v)
-        pairs.extend([F.lit(c), v])
+        pairs.extend([F.lit(c), F.trim(F.col(c).cast("string"))])
     melted = df.select(F.explode(F.create_map(*pairs)).alias("column_name", "value"))
     melted = melted.filter(F.col("value").isNotNull() & (F.col("value") != ""))
     return melted.groupBy("column_name", "value").agg(F.count(F.lit(1)).alias("cnt"))
 
 
-def top_n_values(
-    df: DataFrame, cols: list[str], n: int = 10, case_sensitive: bool = True
-) -> DataFrame:
+def top_n_values(df: DataFrame, cols: list[str], n: int = 10) -> DataFrame:
     """Top-N value frequencies per column — reference A9
     (``distincts.py:77-93``) with the pinned deterministic tiebreak
     (count desc, value asc; FIXTURES.md §F4.3).
@@ -117,7 +109,7 @@ def top_n_values(
     """
     from pyspark.sql import Window
 
-    counts = melted_value_counts(df, cols, case_sensitive=case_sensitive)
+    counts = melted_value_counts(df, cols)
     w = Window.partitionBy("column_name").orderBy(F.desc("cnt"), F.asc("value"))
     return (
         counts.withColumn("rank", F.row_number().over(w))
@@ -180,10 +172,10 @@ def distinct_report(df: DataFrame, cols: list[str], case_sensitive: bool = True)
 def histogram(df: DataFrame, col: str, bins: int = 10) -> DataFrame:
     """Exact fixed-bin histogram — reference A6
     (``profile.py:326-359``): bin width ``(max-min)/bins``, max value
-    folded into the last bin, two aggregate passes (min/max then counts).
-    """
+    folded into the last bin, two aggregate passes (min/max then counts);
+    no bins when the column holds no non-null value."""
     r = df.agg(F.min(col).alias("mn"), F.max(col).alias("mx")).collect()[0]
-    mn, mx = float(r["mn"]), float(r["mx"])
+    mn, mx = (0.0, 0.0) if r["mn"] is None else (float(r["mn"]), float(r["mx"]))
     width = (mx - mn) / bins if mx > mn else 1.0
     bin_idx = F.least(
         F.floor((F.col(col) - F.lit(mn)) / F.lit(width)), F.lit(bins - 1)
@@ -257,24 +249,21 @@ def normaltest_pvalue(n: int, m1: float, m2: float, m3: float, m4: float) -> flo
     return math.exp(-k2 / 2.0)
 
 
-def file_totals(df: DataFrame) -> dict:
-    """Row/column totals — reference A21 (``runs.py:764-771``)."""
-    return {"row_count": df.count(), "column_count": len(df.columns)}
-
-
 def profile_table(df: DataFrame, numeric_cols: list[str], string_cols: list[str]) -> dict:
     """Driver-side orchestration of the flagship profile (SURVEY.md §7.1 M1):
     one wide agg + one melted distinct pass + top-10s. Returns a small
     driver dict (counts-not-values discipline: no raw document text leaves
-    the executors except the top-N values, which are bounded)."""
-    exprs: list[Column] = []
+    the executors except the top-N values, which are bounded). The row
+    total (A21, ``runs.py:764-771``) rides in the wide agg as ``rows``."""
+    exprs: list[Column] = [F.count(F.lit(1)).alias("rows")]
     for c in numeric_cols:
         exprs.extend(numeric_stats_exprs(c))
     for c in string_cols:
         exprs.extend(string_stats_exprs(c))
-    wide = df.agg(*exprs).collect()[0].asDict() if exprs else {}
+    wide = df.agg(*exprs).collect()[0].asDict()
+    totals = {"row_count": wide.pop("rows"), "column_count": len(df.columns)}
     report = {r["column_name"]: r.asDict() for r in distinct_report(df, numeric_cols + string_cols).collect()}
     top = {}
     for r in top_n_values(df, string_cols, 10).collect():
         top.setdefault(r["column_name"], []).append((r["value"], r["cnt"]))
-    return {"wide": wide, "distincts": report, "top_values": top, **file_totals(df)}
+    return {"wide": wide, "distincts": report, "top_values": top, **totals}

@@ -22,12 +22,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def host_expr(url: Column) -> Column:
-    """scheme://HOST/... → host (empty string when the url has no
-    authority component). Pure JVM regexp — usable inside any plan."""
-    return F.regexp_extract(url, "^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)", 1)
-
-
 def key_skew_report(df: DataFrame, key: Column) -> DataFrame:
     """Single-row skew summary of ``key``'s row distribution:
 

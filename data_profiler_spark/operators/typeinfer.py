@@ -42,7 +42,6 @@ SAMPLE_SIZE = 100  # types.py:141-142
 
 @dataclass
 class ColumnTypeInfo:
-    name: str
     inferred_type: str
     confidence: float
     sample_size: int
@@ -126,7 +125,6 @@ def infer_column_types(df: DataFrame, cols: list[str] | None = None, sample_size
             row["n"], row["numeric"], row["money"], row["date"], row["alpha"], row["distinct"]
         )
         out[c] = ColumnTypeInfo(
-            name=c,
             inferred_type=t,
             confidence=conf,
             sample_size=row["n"],

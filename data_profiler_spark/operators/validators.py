@@ -68,17 +68,11 @@ def is_alpha(c: Column) -> Column:
 
 
 def is_numeric_with_violations(c: Column) -> Column:
-    """P5 — dirty numeric: contains ``$ , ( )`` but cleans to numeric
-    (``types.py:432-451``)."""
+    """P5/P6 — dirty numeric or money: contains ``$ , ( )`` but cleans to
+    numeric (``types.py:432-479``; the reference's money variant is the
+    same expression)."""
     cleaned = F.regexp_replace(c, "[$,()]", "")
     return c.rlike("[$,()]") & cleaned.rlike(NUMERIC_RE) & (F.length(cleaned) > 0)
-
-
-def is_money_with_violations(c: Column) -> Column:
-    """P6 — violation symbol AND cleaned value money/decimal-like
-    (``types.py:453-479``)."""
-    cleaned = F.regexp_replace(c, "[$,()]", "")
-    return c.rlike("[$,()]") & cleaned.rlike("^[0-9]+(\\.[0-9]+)?$") & (F.length(cleaned) > 0)
 
 
 def parsed_date(c: Column, fmt_pattern: str, spark_fmt: str) -> Column:
@@ -105,19 +99,6 @@ def is_date_in_range(d: Column) -> Column:
 def has_non_ascii(c: Column) -> Column:
     """P9 (``profile.py:441-443``)."""
     return c.rlike("[^\\x00-\\x7F]")
-
-
-def csv_injection_sanitize(c: Column) -> Column:
-    """P11 — prefix ``'`` when cell starts with ``= + - @``
-    (``runs.py:1012-1036``)."""
-    return F.when(
-        F.substring(c, 1, 1).isin("=", "+", "-", "@"), F.concat(F.lit("'"), c)
-    ).otherwise(c)
-
-
-def json_numeric_sanitize(c: Column) -> Column:
-    """P12 — inf/NaN → null (``runs.py:184-208``)."""
-    return F.when(F.isnan(c) | (F.abs(c) == float("inf")), F.lit(None)).otherwise(c)
 
 
 def money_rollup_exprs(col: str, max_examples: int = 3) -> list[Column]:

@@ -188,9 +188,10 @@ class QualityFilterPipeline:
     def _resolve_salt(self, batch: DataFrame, audit: AuditLog, run_id: str) -> int:
         if self.salt_buckets != "auto":
             return int(self.salt_buckets)
-        from .operators.skew import host_expr, key_skew_report, recommend_salt_buckets
+        from .operators.corpus import url_host_expr
+        from .operators.skew import key_skew_report, recommend_salt_buckets
 
-        rep = key_skew_report(batch, host_expr(F.col("url"))).collect()[0].asDict()
+        rep = key_skew_report(batch, url_host_expr(F.col("url"))).collect()[0].asDict()
         n = recommend_salt_buckets(rep)
         audit.event(
             "salt_chosen",

@@ -30,12 +30,6 @@ from ..io import catalog
 from ..pipeline import output_contract, score_pages, url_salt
 
 
-def score_stream(stream_df: DataFrame) -> DataFrame:
-    """Streaming DataFrame in → scored streaming DataFrame out. Stateless:
-    identical plan to the batch path (score_pages is engine-agnostic)."""
-    return score_pages(stream_df)
-
-
 def windowed_keep_metrics(
     scored: DataFrame,
     window: str = "1 hour",

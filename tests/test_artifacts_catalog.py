@@ -6,6 +6,8 @@ import csv
 import json
 import os
 
+from pyspark.sql import functions as F
+
 from data_profiler_spark.io import artifacts, catalog
 from data_profiler_spark.operators import profiler as P
 
@@ -49,6 +51,10 @@ def test_html_report(documents, tmp_path):
     for col in ("n_chars", "lang", "source"):
         assert f"id='col-{col}'" in body  # a card per profiled column
     assert "<svg" in body and body.count("<rect") == len(hist)
+    # an all-null or empty column has no bins
+    nulls = documents.select(F.lit(None).cast("double").alias("x"))
+    assert P.histogram(nulls, "x").collect() == []
+    assert P.histogram(nulls.limit(0), "x").collect() == []
     assert "E_X" in body and "W_Y" in body
     # top-value tables present for the string columns
     for v, _ in prof["top_values"]["lang"][:3]:
@@ -76,9 +82,9 @@ def test_html_report_escapes_values(tmp_path):
 
 
 def test_json_safe_and_injection():
-    assert artifacts._json_safe({"a": float("nan"), "b": [float("inf"), 1]}) == {
+    assert artifacts._json_safe({"a": float("nan"), "b": [float("inf"), float("-inf"), 1]}) == {
         "a": None,
-        "b": [None, 1],
+        "b": [None, None, 1],
     }
     assert artifacts.csv_injection_sanitize("=cmd()") == "'=cmd()"
     assert artifacts.csv_injection_sanitize("safe") == "safe"

@@ -243,25 +243,15 @@ def test_predicate_semantics(spark):
         "v",
         V.is_numeric(c).alias("num"),
         V.is_numeric_with_violations(c).alias("dirty_num"),
-        V.is_money_with_violations(c).alias("dirty_money"),
         V.is_alpha(c).alias("alpha"),
-        V.csv_injection_sanitize(c).alias("san"),
     ).collect()
     by = {r["v"]: r for r in got}
     assert by["123"]["num"] and by["12.5"]["num"]  # unsigned decimal both match
     assert by["$1,234.00"]["dirty_num"] and not by["$1,234.00"]["num"]
     assert by["(42)"]["dirty_num"]
-    # P6: a violation symbol AND a money-like cleaned value
-    assert by["$1,234.00"]["dirty_money"] and by["(42)"]["dirty_money"]
-    assert not any(by[v]["dirty_money"] for v in ("123", "abc", "=cmd", "  "))
+    # P5/P6: a violation symbol AND a numeric cleaned value
+    assert not any(by[v]["dirty_num"] for v in ("123", "abc", "=cmd", "  "))
     assert by["abc"]["alpha"]
-    assert by["=cmd"]["san"] == "'=cmd"
     # A5: the whitespace-only row is null-like; every bucket is non-zero
     counts = df.agg(*V.validity_counts_exprs("v", V.is_numeric(c))).first()
     assert (counts["v_null_count"], counts["v_valid_count"], counts["v_invalid_count"]) == (1, 2, 4)
-    # P12: NaN and ±inf become null, finite values pass through
-    nums = spark.createDataFrame(
-        [(0, 1.5), (1, float("nan")), (2, float("inf")), (3, float("-inf"))], "i int, x double"
-    )
-    clean = nums.select("i", V.json_numeric_sanitize(F.col("x")).alias("x")).orderBy("i")
-    assert [r["x"] for r in clean.collect()] == [1.5, None, None, None]

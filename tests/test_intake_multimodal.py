@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from data_profiler_spark.functions.textanalysis import normalize_text_expr
 from data_profiler_spark.io import intake
 from data_profiler_spark.operators import errors as E
 from data_profiler_spark.operators import multimodal as mm
@@ -55,8 +56,9 @@ def test_line_ending_counts_and_normalize(spark):
     assert (row["crlf_count"], row["lf_count"], row["cr_count"]) == (3, 1, 1)
     style, mixed = intake.line_ending_style(row.asDict())
     assert style == "crlf" and mixed
-    normed = df.select(intake.normalize_line_endings(F.col("text")).alias("t")).collect()
-    assert all("\r" not in r["t"] for r in normed)
+    # normalization is the first clean-corpus step, CRLF/CR → LF
+    normed = df.select(normalize_text_expr(F.col("text")).alias("t")).collect()
+    assert [r["t"] for r in normed] == ["a\nb\nc", "x\ny", "p\nq"]
 
 
 # --------------------------------------------------------------------------
@@ -81,13 +83,6 @@ def test_sniff_quoting_escape_and_embedded_evidence():
     plain = ["id|note", "1|hello", "2|world"]
     q2, c2 = intake.sniff_quoting(plain, "|")
     assert not q2 and c2 < 0.2
-
-
-def test_jagged_row_report(spark, tmp_path):
-    p = tmp_path / "jag.csv"
-    p.write_text("a|b|c\n1|2|3\n4|5\n6|7|8|9\n")
-    rep = {r["n_fields"]: r["line_count"] for r in intake.jagged_row_report(spark, str(p), "\\|").collect()}
-    assert rep == {3: 2, 2: 1, 4: 1}
 
 
 def test_mixed_line_ending_warning(spark):
@@ -223,11 +218,12 @@ def test_gzip_csv_intake(spark, tmp_path):
 
 def test_read_csv_with_errors(spark, tmp_path):
     p = tmp_path / "q.csv"
-    p.write_text('a|b\n1|"ok"\n2|"broken\n')
-    df, corrupt = intake.read_csv_with_errors(spark, str(p), "|", quoted=True)
-    n_corrupt = df.agg(corrupt).collect()[0]["corrupt_count"]
-    assert df.count() >= 1
-    assert n_corrupt is not None
+    p.write_text('a|b\n1|"ok"\n2|x|y\n3|"say ""hi"""\n')
+    df = intake.read_csv_with_errors(spark, str(p), "|", quoted=True)
+    # an extra field keeps the first two and flags the raw line in _corrupt;
+    # a doubled quote inside quotes is one literal quote (RFC 4180)
+    got = {r["a"]: (r["b"], r["_corrupt"]) for r in df.collect()}
+    assert got == {"1": ("ok", None), "2": ("x", "2|x|y"), "3": ('say "hi"', None)}
 
 
 # --------------------------------------------------------------------------

@@ -300,13 +300,10 @@ def test_key_skew_report_and_salt_recommendation(pages):
     """Skew measurement on the synthetic Zipf host distribution: hot hosts
     show up in skew_ratio, and the recommendation flattens them to a
     bounded multiple of the average key."""
-    from data_profiler_spark.operators.skew import (
-        host_expr,
-        key_skew_report,
-        recommend_salt_buckets,
-    )
+    from data_profiler_spark.operators.corpus import url_host_expr
+    from data_profiler_spark.operators.skew import key_skew_report, recommend_salt_buckets
 
-    rep = key_skew_report(pages, host_expr(F.col("url"))).collect()[0].asDict()
+    rep = key_skew_report(pages, url_host_expr(F.col("url"))).collect()[0].asDict()
     assert rep["total_rows"] == pages.count()
     assert rep["n_keys"] > 1
     assert rep["max_cnt"] >= rep["avg_cnt"]
@@ -319,8 +316,11 @@ def test_key_skew_report_and_salt_recommendation(pages):
     # a 1000x-hot key wants ~512 buckets at the default target
     assert recommend_salt_buckets({"skew_ratio": 1000.0}) == 512
     # host extraction sanity
-    hosts = pages.select(host_expr(F.col("url")).alias("h")).limit(5).collect()
+    hosts = pages.select(url_host_expr(F.col("url")).alias("h")).limit(5).collect()
     assert all(r["h"] and "/" not in r["h"] for r in hosts)
+    # port and case do not split one host into two salt keys
+    pair = pages.sparkSession.createDataFrame([("http://A.com:80/x",), ("http://a.com/y",)], "url string")
+    assert key_skew_report(pair, url_host_expr(F.col("url"))).first()["n_keys"] == 1
 
 
 def test_run_on_empty_input(pages, tmp_path):

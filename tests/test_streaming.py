@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pytest
 
+from data_profiler_spark.pipeline import score_pages
 from data_profiler_spark.streaming import scoring
 
 
@@ -99,7 +100,7 @@ def test_dedup_state_bounded_for_hot_keys():
 def test_windowed_keep_metrics(spark, pages_dir, tmp_path):
     schema = spark.read.parquet(pages_dir).schema
     stream = spark.readStream.schema(schema).parquet(pages_dir)
-    metrics = scoring.windowed_keep_metrics(scoring.score_stream(stream), "24 hours", "48 hours")
+    metrics = scoring.windowed_keep_metrics(score_pages(stream), "24 hours", "48 hours")
     q = (
         metrics.writeStream.format("memory")
         .queryName("keep_metrics")
@@ -124,7 +125,7 @@ def test_stream_batch_scoring_parity(spark, pages_dir, tmp_path):
     batch side goes through the same output contract), including the
     model scores, which must be per-row deterministic regardless of
     partitioning."""
-    from data_profiler_spark.pipeline import output_contract, score_pages
+    from data_profiler_spark.pipeline import output_contract
 
     out = str(tmp_path / "parity_out")
     ckpt = str(tmp_path / "parity_ckpt")
