@@ -24,7 +24,8 @@ are pinned precisely so both sides agree exactly:
 * a null text scores as ``""``.
 
 :func:`words_expr` stays a JVM expression: it is the engine's one
-tokenizer for dedup, corpus, textanalysis and the oracle queries.
+tokenizer for dedup, corpus, textanalysis and the oracle queries. The
+dedup shingle regex (``dedup._shingle_sets``) splits on the same ``_WS``.
 """
 
 from __future__ import annotations

@@ -273,7 +273,8 @@ def csv_row_errors(spark: SparkSession, path: str, delimiter: str, quoted: bool 
     numbered = raw.withColumn("_lrn", F.row_number().over(w)).join(
         F.broadcast(off_df), "_pid"
     ).withColumn("_rn", (F.col("_lrn") + F.col("_off")).cast("int"))
-    header = numbered.filter(F.col("_rn") == 1).collect()[0]["value"]
+    # line 1 is split 0's first row: a limit(1) read, not a pass over the plan
+    header = spark.read.text(path).limit(1).collect()[0]["value"]
     expected_cols = len(header.split(delimiter))
     data = numbered.filter(F.col("_rn") > 1).select(
         (F.col("_rn") - 1).alias("line_number"), "value"

@@ -2,8 +2,8 @@
 
 Several operators cut a DataFrame's lineage on purpose — either so two
 consumers don't recompute an expensive upstream (``minhash_lsh_pairs``'s
-band projection) or so AQE sees plain shuffle stages it can skew-split
-(``line_dedup(skew_safe=True)``). ``localCheckpoint`` is the cheap way to
+shingle sets and band keys) or so AQE sees plain shuffle stages it can
+skew-split (``line_dedup(skew_safe=True)``). ``localCheckpoint`` is the cheap way to
 do that, but its blocks live in executor storage and are NOT fault
 tolerant: on a multi-executor cluster, losing an executor AFTER
 materialization fails the job instead of recomputing (the lineage is

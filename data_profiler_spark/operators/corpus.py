@@ -244,11 +244,11 @@ def line_dedup_within_doc(
 
 
 def word_ngrams_from_tokens(toks: Column, n: int) -> Column:
-    """POSITIONAL word n-grams (not distinct — unlike
-    ``dedup.shingles_from_tokens`` — so ``total_ngrams`` is the true
+    """POSITIONAL word n-grams (not distinct, unlike the dedup shingle
+    sets of ``dedup._shingle_sets``, so ``total_ngrams`` is the true
     positional denominator for a contamination fraction) from a
-    MATERIALIZED token-array attribute (inline tokenization would re-run
-    per reference, as with the shingles). Docs with fewer
+    MATERIALIZED token-array attribute (an inline tokenization would be
+    re-run once per reference). Docs with fewer
     than ``n`` tokens yield an empty array (no fallback shingle: a
     3-word doc cannot contain a 13-gram)."""
     return F.when(

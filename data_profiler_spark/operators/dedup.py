@@ -13,7 +13,9 @@ Design for 10^12 documents:
   → band keys → bucket self-join (shuffle on band key, cardinality ≈
   num_bands × docs) → candidate pairs → exact-Jaccard verification on the
   candidates only. Cost is O(docs × bands + candidate_pairs), never
-  O(docs²).
+  O(docs²). The shingle sets come from one regex over the normalized
+  text (no lambda), and each doc's shingle set and band keys are
+  materialized once, so the text is scanned and hashed once per run.
 * **SimHash** — banded Hamming join. With the 64-bit signature split into
   ``SIMHASH_PAIR_BANDS`` equal slices, any pair with Hamming distance <
   that band count shares at least one identical slice (pigeonhole), so the
@@ -45,7 +47,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-from data_profiler_spark.functions.textstats import words_expr
+from data_profiler_spark.functions.textstats import _WS, words_expr
 from data_profiler_spark.operators.checkpoints import materialize
 
 DEFAULT_NUM_PERM = 16
@@ -96,22 +98,6 @@ def _widen(df: DataFrame) -> DataFrame:
     return df
 
 
-def shingles_from_tokens(toks: Column, n: int = DEFAULT_SHINGLE) -> Column:
-    """Distinct word n-gram shingles from a MATERIALIZED token-array
-    attribute; docs shorter than n words fall back to one whole-text
-    shingle (so short docs still dedup exactly). Pass an attribute, not
-    an inline tokenization — this expression references the array ~4
-    times (sizes, slice lambda, fallback) and codegen re-evaluates
-    inline subtrees per reference (measured 5.4× at sf0.1)."""
-    ngrams = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-    )
-    return F.array_distinct(
-        F.when(F.size(toks) >= n, ngrams).otherwise(F.array(F.concat_ws(" ", toks)))
-    )
-
-
 def _minhash_one(sh: Column, perm: int, hash_fn: str = "md5") -> Column:
     """One permutation: min over salted hashes of the shingles.
 
@@ -140,19 +126,11 @@ def lsh_band_keys_expr(sig: Column, num_perm: int, rows_per_band: int) -> Column
     (stringified — works for hex and numeric signatures alike; cost is
     per-document, not per-shingle). Pr[band match] = J^rows_per_band per
     band."""
-    bands = num_perm // rows_per_band
+    r = rows_per_band
     return F.array(
         *[
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    F.transform(
-                        F.slice(sig, b * rows_per_band + 1, rows_per_band),
-                        lambda x: x.cast("string"),
-                    ),
-                )
-            )
-            for b in range(bands)
+            F.md5(F.concat_ws("|", *[sig[i].cast("string") for i in range(b * r, (b + 1) * r)]))
+            for b in range(num_perm // r)
         ]
     )
 
@@ -163,10 +141,56 @@ def jaccard_expr(a: Column, b: Column) -> Column:
 
 
 def _shingle_sets(df: DataFrame, id_col: str, text_col: str, shingle: int) -> DataFrame:
-    toks = _widen(df).select(
-        F.col(id_col).alias("_id"), words_expr(F.col(text_col)).alias("_tk")
+    """(_id, _sh): each doc's distinct word ``shingle``-grams in first-seen
+    order, with no lambda. The text's ``words_expr`` tokens are joined by
+    single spaces (a null text is ``""``), and one regex takes the n-gram
+    that starts at each token: the lookahead captures it without consuming
+    it, so the grams overlap. The ends are stripped with ``trim`` (spaces
+    only, all that is left after the collapse), not a ``$`` regex: Java's
+    ``$`` also matches before a final ``\\u0085``, which is not a token
+    separator here. A doc shorter than ``shingle`` words is one whole-text
+    shingle, so short docs still dedup exactly. Each step is its own
+    projection because the next one references its result twice, and an
+    inline subtree would be evaluated once per reference."""
+    grams = " ".join(["[^ ]+"] * shingle)
+    norm = _widen(df).select(
+        F.col(id_col).alias("_id"),
+        F.trim(F.regexp_replace(F.coalesce(F.col(text_col), F.lit("")), _WS, " ")).alias("_n"),
     )
-    return toks.select("_id", shingles_from_tokens(F.col("_tk"), shingle).alias("_sh"))
+    found = norm.select(
+        "_id", "_n", F.regexp_extract_all("_n", F.lit(f"(?:\\A| )(?=({grams}))"), 1).alias("_g")
+    )
+    return found.select(
+        "_id",
+        F.array_distinct(
+            F.when(F.size("_g") > 0, F.col("_g")).otherwise(F.array("_n"))
+        ).alias("_sh"),
+    )
+
+
+def _band_sets(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    num_perm: int,
+    rows_per_band: int,
+    shingle: int,
+    hash_fn: str,
+) -> DataFrame:
+    """(_id, _sh, _bands): each doc's shingle set and its LSH band keys.
+    Two projections (signature, then bands) so each band key references
+    the signature ATTRIBUTE, not a copy of its expression: inlining the
+    16-perm signature into all 8 band keys would blow the expression tree
+    up ~128× (whole-stage codegen compile measured in tens of seconds).
+    CollapseProject keeps multi-referenced expensive aliases materialized,
+    so these stay separate projections."""
+    sets = _shingle_sets(df, id_col, text_col, shingle)
+    sig = sets.select(
+        "_id", "_sh", minhash_signature_expr(F.col("_sh"), num_perm, hash_fn).alias("_sig")
+    )
+    return sig.select(
+        "_id", "_sh", lsh_band_keys_expr(F.col("_sig"), num_perm, rows_per_band).alias("_bands")
+    )
 
 
 def _verify_pairs(cand: DataFrame, sets: DataFrame, id_col: str, threshold: float) -> DataFrame:
@@ -235,17 +259,16 @@ def minhash_lsh_pairs(
     :func:`band_df_report` (``hot_buckets == 0`` ⇒ the capped run is
     exactly the uncapped result). Pass ``None`` to disable.
 
-    Cost shape with the cap on: the hot-bucket agg is a SECOND consumer
-    of the band stream (the self-join's a/b exchanges canonicalize and
-    reuse, so they count as one), which would re-run the dominant
-    shingle→minhash computation over the full text. To avoid that, the
-    per-doc ``bands`` projection (num_perm longs + band keys, ~hundreds
-    of bytes/doc vs the ~KB text it derives from) is materialized via
+    Cost shape: the per-doc projection ``(_id, _sh, _bands)`` — the
+    shingle set (about the size of the text) and the band keys — is
+    materialized via
     :func:`~data_profiler_spark.operators.checkpoints.materialize` (lazy
     ``localCheckpoint``, or a reliable ``checkpoint`` when the session has
-    a checkpoint dir — executor-loss-safe on clusters) so every consumer
-    reads it instead of recomputing. The uncapped path has a single
-    consumer chain and skips the checkpoint entirely.
+    a checkpoint dir — executor-loss-safe on clusters), capped or not.
+    The hot-bucket agg, the band self-join (its a/b exchanges canonicalize
+    and reuse, so they count as one), the exact candidates and the verify
+    join all read that one copy, so the dominant shingle → minhash
+    computation runs once over the text instead of once per consumer.
 
     **The default guard is lazy** — plan construction runs NO Spark job
     (``explain()``/plan inspection stays free; building the DataFrame
@@ -256,31 +279,9 @@ def minhash_lsh_pairs(
     that AQE broadcast-converts, every row unmarked, result identical to
     skipping the join).
     """
-    sets = _shingle_sets(df, id_col, text_col, shingle)
-    # Two-step projection (shingles → signature → bands) so each band key
-    # references the signature ATTRIBUTE, not a copy of its expression:
-    # inlining the 16-perm signature into all 8 band keys would blow the
-    # expression tree up ~128× (whole-stage codegen compile measured in
-    # tens of seconds). CollapseProject keeps multi-referenced expensive
-    # aliases materialized, so these stay separate projections.
-    sig = sets.select(
-        "_id", minhash_signature_expr(F.col("_sh"), num_perm, hash_fn).alias("_sig")
-    )
-    bands = sig.select(
-        "_id", lsh_band_keys_expr(F.col("_sig"), num_perm, rows_per_band).alias("_bands")
-    )
-    # posexplode_OUTER: plain posexplode adds an implicit `size(_bands) > 0`
-    # filter whose predicate embeds the ENTIRE minhash expression; predicate
-    # pushdown then drags that below the repartition exchange and evaluates
-    # it on the raw (possibly single-partition) scan — serializing the whole
-    # signature computation. The bands array is a literal-width F.array, so
-    # the outer variant is semantically identical and keeps the heavy
-    # expression above the exchange.
-    if max_band_df is not None:
-        # Two consumers below (guard agg + self-join) — materialize the
-        # small per-doc band projection so neither re-runs the minhash.
-        bands = materialize(bands)
-    melted = bands.select("_id", F.posexplode_outer("_bands").alias("band_id", "key"))
+    # one copy for every consumer below (see "Cost shape")
+    sets = materialize(_band_sets(df, id_col, text_col, num_perm, rows_per_band, shingle, hash_fn))
+    melted = sets.select("_id", F.posexplode_outer("_bands").alias("band_id", "key"))
     star = None
     if max_band_df is not None:
         # Hot-bucket split. The bucket-size agg is count-shaped and
@@ -341,13 +342,12 @@ def band_df_report(
     defuses. Same one-cheap-agg shape as :func:`shingle_df_report` /
     ``similarity.grid_occupancy_report``.
     """
-    sets = _shingle_sets(df, id_col, text_col, shingle)
-    sig = sets.select(
-        "_id", minhash_signature_expr(F.col("_sh"), num_perm, hash_fn).alias("_sig")
-    )
-    bands = sig.select(
-        "_id", lsh_band_keys_expr(F.col("_sig"), num_perm, rows_per_band).alias("_bands")
-    )
+    bands = _band_sets(df, id_col, text_col, num_perm, rows_per_band, shingle, hash_fn)
+    # posexplode_OUTER: plain posexplode adds an implicit `size(_bands) > 0`
+    # filter whose predicate embeds the ENTIRE minhash expression; predicate
+    # pushdown then drags that below _widen's repartition exchange and
+    # evaluates it on the raw (possibly single-partition) scan. The bands
+    # array is a literal-width F.array, so the outer variant is the same.
     melted = bands.select("_id", F.posexplode_outer("_bands").alias("band_id", "key"))
     freq = melted.groupBy("band_id", "key").agg(F.count(F.lit(1)).alias("bdf"))
     # C(df,2) is carried in decimal(38,0), not long: one 10^10-doc duplicate
@@ -436,7 +436,7 @@ def ngram_jaccard_pairs(
     """
     sets = _shingle_sets(df, id_col, text_col, shingle)
     # explode_outer + null-filter: see the posexplode_outer note in
-    # minhash_lsh_pairs — plain explode's implicit size()>0 filter would
+    # band_df_report — plain explode's implicit size()>0 filter would
     # push the whole shingle expression below the repartition exchange.
     inv = sets.select("_id", F.explode_outer("_sh").alias("shingle")).filter(
         F.col("shingle").isNotNull()

@@ -68,7 +68,8 @@ def _line_endings(spark, path: str) -> dict:
 
 def _profile_csv(spark, path: str, free_text: set[str]):
     """The CSV chain: (profile, typed frame or None after a catastrophic
-    error, {column: its numeric column in the frame})."""
+    error, {column: its numeric column in the frame}, the cached parse
+    that the typed frame reads, for the caller to unpersist)."""
     from pyspark.sql import functions as F
 
     from data_profiler_spark.io import intake
@@ -77,7 +78,8 @@ def _profile_csv(spark, path: str, free_text: set[str]):
 
     sniff = intake.sniff_csv(spark, path)
     delim, quoted = sniff["delimiter"], sniff["quoted"]
-    df = intake.read_csv_with_errors(spark, path, delim, quoted).drop("_corrupt")
+    parsed = intake.read_csv_with_errors(spark, path, delim, quoted)
+    df = parsed.drop("_corrupt")
     cols = [c for c in df.columns if c not in free_text]
     rows, endings = df.count(), _line_endings(spark, path)
     events = intake.csv_row_errors(spark, path, delim, quoted).unionByName(
@@ -92,8 +94,10 @@ def _profile_csv(spark, path: str, free_text: set[str]):
         "errors": [i for i in issues if i["code"].startswith("E_")],
         "warnings": [i for i in issues if i["code"].startswith("W_")],
     }
-    if errors.any_catastrophic(rollup):
-        return prof, None, {}
+    catastrophic = errors.any_catastrophic(rollup)
+    rollup.unpersist()
+    if catastrophic:
+        return prof, None, {}, parsed
 
     types = typeinfer.infer_column_types(df, cols)
     kind = {c: types[c].inferred_type for c in cols}
@@ -113,7 +117,7 @@ def _profile_csv(spark, path: str, free_text: set[str]):
     fmts = {c: {"date_format": V.detect_date_format(wide, c)} for c in cols if kind[c] == "date"}
     prof["types"] = {c: asdict(types[c]) | fmts.get(c, {}) for c in cols}
     distincts = {r["column_name"]: r.asDict() for r in profiler.distinct_report(df, cols).collect()}
-    return {"wide": wide, "distincts": distincts, "top_values": top, **prof}, typed, numeric
+    return {"wide": wide, "distincts": distincts, "top_values": top, **prof}, typed, numeric, parsed
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -142,8 +146,9 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark("profile")
 
     free_text = {c.strip() for c in args.free_text.split(",") if c.strip()}
+    parsed = None  # the CSV path's cached parse, released after the histograms
     if not args.table and args.input.endswith((".csv", ".csv.gz")):
-        prof, df, numeric = _profile_csv(spark, args.input, free_text)
+        prof, df, numeric, parsed = _profile_csv(spark, args.input, free_text)
     else:
         df = spark.read.table(args.input) if args.table else spark.read.parquet(args.input)
         numeric = {c: c for c, t in df.dtypes if t.startswith(NUMERIC_TYPES)}
@@ -161,6 +166,8 @@ def main(argv: list[str] | None = None) -> int:
         for c in args.histogram
         if c in numeric
     }
+    if parsed is not None:
+        parsed.unpersist()
     paths = artifacts.write_profile_artifacts(prof, args.output)
     paths["report.html"] = artifacts.write_html_report(
         prof, args.output, run_id=args.run_id, histograms=hists,

@@ -4,6 +4,8 @@ invariants."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -104,6 +106,117 @@ def test_minhash_union_exact_is_deterministic(docs):
     unioned = _pairs(dedup.minhash_lsh_pairs(docs, threshold=0.8, union_exact_candidates=True))
     exact = _pairs(dedup.ngram_jaccard_pairs(docs, threshold=0.8, max_shingle_df=None))
     assert unioned == exact
+
+
+def _lambda_shingle_sets(df, id_col, text_col, shingle):
+    """The spec of dedup._shingle_sets: words_expr tokens, one slice per
+    start position joined by spaces, array_distinct, and the whole text as
+    one shingle for docs shorter than ``shingle`` words."""
+    toks = df.select(F.col(id_col).alias("_id"), words_expr(F.col(text_col)).alias("_tk"))
+    tk = F.col("_tk")
+    grams = F.transform(
+        F.sequence(F.lit(1), F.size(tk) - (shingle - 1)),
+        lambda i: F.concat_ws(" ", F.slice(tk, i, shingle)),
+    )
+    return toks.select(
+        "_id",
+        F.array_distinct(
+            F.when(F.size(tk) >= shingle, grams).otherwise(F.array(F.concat_ws(" ", tk)))
+        ).alias("_sh"),
+    )
+
+
+def _lambda_band_keys(sig, num_perm, rows_per_band):
+    """The spec of dedup.lsh_band_keys_expr: md5 of each signature slice,
+    stringified by a transform."""
+    return F.array(*[
+        F.md5(F.concat_ws("|", F.transform(
+            F.slice(sig, b * rows_per_band + 1, rows_per_band), lambda x: x.cast("string")
+        )))
+        for b in range(num_perm // rows_per_band)
+    ])
+
+
+# null, empty, whitespace only, 1 and 2 tokens, repeated shingles, non-ASCII
+# letters, NBSP (a letter here, not a separator), \x0B/\f/\r\n runs, leading
+# and trailing whitespace, text ending in \u0085 or \u2028 (Java's `$`
+# matches before both)
+_EDGE_TEXTS = [
+    None, "", " \t\n\x0B\f\r ", "one", "one two", "a b c a b c a b c",
+    "héllo wörld ünïcode straße ok", "nb\u00a0sp one two three",
+    "x\x0By\fz\r\n\r\nw  v", "\n\t lead and trail \r\n ", "abc def \u0085",
+    "abc def ghi \u2028", "a\u0085 b c d", "\u0085",
+]
+
+
+def _skew_and_edge_docs(spark, seed, n=300):
+    from data_profiler_spark.synth import skew_doc
+
+    rows = [(i, t) for i, t in enumerate(_EDGE_TEXTS)]
+    rows += [(100 + i, skew_doc(i, seed, dup_family_frac=0.2)["text"]) for i in range(n)]
+    return spark.createDataFrame(rows, "doc_id long, text string").repartition(4)
+
+
+@pytest.mark.parametrize("seed", [1, 2])
+def test_shingle_sets_equal_lambda_spec(spark, seed):
+    """The regex shingle sets equal the lambda chain array for array, order
+    included, on skewed synth pages and the edge inputs."""
+    df = _skew_and_edge_docs(spark, seed).cache()
+    for n in (3, 2):
+        new = dedup._shingle_sets(df, "doc_id", "text", n)
+        spec = _lambda_shingle_sets(df, "doc_id", "text", n)
+        assert new.exceptAll(spec).count() == 0 and spec.exceptAll(new).count() == 0, n
+    edge = {r["_id"]: r["_sh"] for r in dedup._shingle_sets(df, "doc_id", "text", 3).collect()}
+    assert edge[0] == edge[1] == edge[2] == [""]
+    assert edge[5] == ["a b c", "b c a", "c a b"]
+    assert edge[7] == ["nb\u00a0sp one two", "one two three"]
+    assert edge[10] == ["abc def \u0085"]
+    assert edge[11] == ["abc def ghi", "def ghi \u2028"]
+    df.unpersist()
+
+
+@pytest.mark.parametrize("max_band_df", [256, None])
+def test_minhash_pairs_equal_lambda_chain(spark, monkeypatch, max_band_df):
+    """xxhash64 pairs from the regex shingles and lambda-free band keys
+    equal the lambda chain's, with the hot-band cap live and off."""
+    from data_profiler_spark.synth import skew_doc
+
+    rows = [skew_doc(i, 3, dup_family_frac=0.2) for i in range(1500)]
+    assert sum(r["quality_class"] == "dup_family" for r in rows) > 256  # cap is live
+    df = spark.createDataFrame([(r["doc_id"], r["text"]) for r in rows], "doc_id long, text string")
+    args = dict(hash_fn="xxhash64", threshold=0.8, max_band_df=max_band_df)
+    new = dedup.minhash_lsh_pairs(df, **args).cache()
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "_shingle_sets", _lambda_shingle_sets)
+        m.setattr(dedup, "lsh_band_keys_expr", _lambda_band_keys)
+        spec = dedup.minhash_lsh_pairs(df, **args).cache()
+    assert new.count() > 0
+    assert new.exceptAll(spec).count() == 0 and spec.exceptAll(new).count() == 0
+    new.unpersist()
+    spec.unpersist()
+
+
+@pytest.mark.parametrize("max_band_df", [dedup.DEFAULT_MAX_BAND_DF, None])
+def test_minhash_projections_hold_no_lambda_and_read_input_once(spark, tmp_path, max_band_df):
+    """The shingle and band-key projections plan no lambda function, and
+    the executed pairs plan never scans the input: the hot-bucket guard,
+    the band self-join and verify all read the one materialized
+    (_id, _sh, _bands) projection, capped or not."""
+    src = str(tmp_path / "docs")
+    _skew_and_edge_docs(spark, 1).write.parquet(src)
+    df = spark.read.parquet(src)
+    sets = dedup._shingle_sets(df, "doc_id", "text", 3)
+    assert "lambdafunction" not in sets._jdf.queryExecution().analyzed().toString()
+    sig = spark.createDataFrame([([1, 2, 3, 4],)], "sig array<long>")
+    bands = sig.select(dedup.lsh_band_keys_expr(F.col("sig"), 4, 2).alias("b"))
+    assert "lambdafunction" not in bands._jdf.queryExecution().analyzed().toString()
+
+    pairs = dedup.minhash_lsh_pairs(df, hash_fn="xxhash64", max_band_df=max_band_df)
+    assert pairs.count() > 0
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan" not in plan, plan
+    scans = re.findall(r"Scan ExistingRDD\[(\w+)#\d+L?,(\w+)#\d+,(\w+)#\d+\]", plan)
+    assert scans and set(scans) == {("_id", "_sh", "_bands")}, plan
 
 
 def test_shingle_df_report_quantifies_cap(spark):
@@ -270,8 +383,6 @@ def test_star_round_plans_three_shuffles_and_no_join(spark):
     is a window that shares its exchange with the rows it re-points, and
     the round runs one distinct. A groupBy-min joined back on u per step
     planned 11 exchanges and 4 joins."""
-    import re
-
     from data_profiler_spark.operators.dedup import _star_round
 
     edges = spark.createDataFrame([(i + 1, i) for i in range(20)], "u long, v long")

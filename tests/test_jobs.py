@@ -164,6 +164,23 @@ def test_profile_job_csv_chain(spark, tmp_path, capsys):
     assert "<svg" in report  # the money column's histogram
 
 
+def test_profile_job_csv_releases_its_cache(spark, tmp_path):
+    """An in-process CSV profile leaves no cached frame behind in the
+    session, on the full path and on the catastrophic stop: the parse
+    and the error rollup are unpersisted before ``main`` returns."""
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    clean = "".join(line + end for line, end in _ORDERS).encode()
+    for name, data, code in (("ok", clean, 0), ("jagged", clean + b'\n16|"sybil"\n', 1)):
+        src = tmp_path / f"{name}.csv"
+        src.write_bytes(data)
+        before = persisted()
+        argv = ["--input", str(src), "--output", str(tmp_path / name), "--histogram", "amount"]
+        assert profile_job.main(argv) == code
+        assert persisted() - before == set(), name
+
+
 def test_profile_job_csv_jagged_row_stops_before_types(spark, tmp_path):
     """A jagged row is catastrophic: the run stops before type inference
     and exits non-zero, with the error in profile.json and no column
