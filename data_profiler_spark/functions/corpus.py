@@ -65,9 +65,15 @@ def make_paragraphs(rng: random.Random, lang: str, n_lines: int, words_per_line:
     )
 
 
-def training_corpus(lang: str, n_docs: int = 200, seed: int = 7) -> list[str]:
+# Size and seed of each language's training corpus; the model weights
+# depend on both, so a change here needs a new textmodel._MODEL_VERSION.
+TRAINING_DOCS = 200
+TRAINING_SEED = 7
+
+
+def training_corpus(lang: str) -> list[str]:
     """Deterministic training docs for model fitting — a different seed
     stream than the evaluation fixture (synth.py uses seed=42 keyed by
     doc_id), so models generalize rather than memorize exact docs."""
-    rng = random.Random(f"train:{lang}:{seed}")
-    return [make_paragraphs(rng, lang, rng.randint(3, 8), (6, 14)) for _ in range(n_docs)]
+    rng = random.Random(f"train:{lang}:{TRAINING_SEED}")
+    return [make_paragraphs(rng, lang, rng.randint(3, 8), (6, 14)) for _ in range(TRAINING_DOCS)]

@@ -83,15 +83,16 @@ def html_to_text_expr(html_str: Column, block_newlines: bool = False) -> Column:
     return out
 
 
-def decode_html_expr(html_bin: Column, block_newlines: bool = False) -> Column:
+def decode_html_expr(html_bin: Column) -> Column:
     """Extracted text of the ``html:binary`` column. UTF-8 decode happens
     first via ``cast(string)`` — invalid bytes decode to U+FFFD (Spark 4's
     ``decode`` builtin instead THROWS on malformed input unless a legacy
     conf is set), which is why the pipeline runs the exact-byte-offset
     UTF-8 gate (``io/intake.py::utf8_report``) BEFORE trusting
     extraction — same ordering as the reference's catastrophic-encoding
-    gate."""
-    return html_to_text_expr(html_bin.cast("string"), block_newlines)
+    gate. Block tags get no newlines: the stored text is the flat
+    extraction."""
+    return html_to_text_expr(html_bin.cast("string"))
 
 
 def extraction_report(

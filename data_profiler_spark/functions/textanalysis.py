@@ -78,25 +78,32 @@ def quality_score_expr(c: Column) -> Column:
     return F.round((len_band + stop_part + alpha_part + punct_part) / 4.0, 6)
 
 
-def chargram_minhash_fingerprint_expr(c: Column, n: int = 5, k: int = 4) -> Column:
+# Character n-gram width and sketch size of the document fingerprint.
+FINGERPRINT_CHARS = 5
+FINGERPRINT_K = 4
+
+
+def chargram_minhash_fingerprint_expr(c: Column) -> Column:
     """Document fingerprint: min-k sketch over rolling character n-grams.
 
-    The rolling window is ``substring(text, i, n)`` for every offset —
-    hashed (md5-hex, fixed width so lexicographic = numeric order) and
-    reduced to the k smallest values, concatenated. Two documents share a
-    fingerprint component iff they share a char n-gram that hashes into the
-    global minimum region — a winnowing-style content signature robust to
-    small edits (unlike sha2 of the whole text).
+    The rolling window is ``substring(text, i, n)`` for every offset, with
+    n = :data:`FINGERPRINT_CHARS` — hashed (md5-hex, fixed width so
+    lexicographic = numeric order) and reduced to the k =
+    :data:`FINGERPRINT_K` smallest values, concatenated. Two documents
+    share a fingerprint component iff they share a char n-gram that hashes
+    into the global minimum region — a winnowing-style content signature
+    robust to small edits (unlike sha2 of the whole text).
 
     Cost: one array of (len-n+1) hashes per doc in the scan stage; at
     web scale sample offsets (stride) to bound it.
     """
+    n = FINGERPRINT_CHARS
     grams = F.transform(
         F.sequence(F.lit(1), F.greatest(F.length(c) - (n - 1), F.lit(1))),
         lambda i: c.substr(i, F.lit(n)),
     )
     hashes = F.array_sort(F.array_distinct(F.transform(grams, lambda g: F.substring(F.md5(g), 1, 16))))
-    return F.concat_ws("|", F.slice(hashes, 1, k))
+    return F.concat_ws("|", F.slice(hashes, 1, FINGERPRINT_K))
 
 
 # normalization chain shared (pattern-for-pattern) with the DuckDB oracle;

@@ -84,10 +84,10 @@ def _ngram_buckets(texts: pa.Array, n: int, dim: int) -> tuple[np.ndarray, np.nd
 _DOC_CHUNK = 2048  # bounds the (chunk × dim) dense matrix to ~32 MB
 
 
-def doc_matrix(texts: pa.Array, dim: int = LANGID_DIM) -> np.ndarray:
-    """(N, dim) L2-normalized hashed-trigram matrix, one row per text
-    (empty docs stay zero)."""
-    N = len(texts)
+def doc_matrix(texts: pa.Array) -> np.ndarray:
+    """(N, LANGID_DIM) L2-normalized hashed-trigram matrix, one row per
+    text (empty docs stay zero)."""
+    N, dim = len(texts), LANGID_DIM
     M = np.zeros((N, dim), dtype=np.float64)
     for lo in range(0, N, _DOC_CHUNK):
         chunk = texts.slice(lo, _DOC_CHUNK)

@@ -70,8 +70,9 @@ class AuditLog:
     ``audit.py:67-103``). Appends are atomic at the line level (single
     ``write`` of one line, O_APPEND)."""
 
-    def __init__(self, output_path: str, filename: str = "audit.jsonl"):
-        self.path = os.path.join(output_path, filename)
+    def __init__(self, output_path: str):
+        # jobs/runs_cli.py reads the status audit tail from this name
+        self.path = os.path.join(output_path, "audit.jsonl")
 
     def event(self, event_type: str, run_id: str, **fields) -> dict:
         rec = {

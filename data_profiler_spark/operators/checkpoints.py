@@ -52,5 +52,13 @@ def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
         out = df.checkpoint(eager=eager)
         if eager:
             df.unpersist()
-        return out
-    return df.localCheckpoint(eager=eager)
+            return out
+    else:
+        out = df.localCheckpoint(eager=eager)
+    if not eager:
+        # A lazy checkpoint is filled by the first job on ``out``, whose
+        # tasks report SQL metrics owned by ``df``'s plan. If ``df`` were
+        # garbage-collected first, the DAGScheduler would log "non-existent
+        # accumulator" errors, so ``out`` keeps it alive.
+        out._checkpoint_source = df
+    return out

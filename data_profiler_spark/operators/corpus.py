@@ -189,7 +189,6 @@ def line_dedup_within_doc(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    min_chars: int = DEFAULT_LINE_MIN_CHARS,
 ) -> DataFrame:
     """Per-document line dedup: each line survives only at its FIRST
     occurrence within its own document (repeated boilerplate inside one
@@ -198,10 +197,10 @@ def line_dedup_within_doc(
     composes into any scoring pipeline for free.
 
     Keep rule: line *i* kept iff it is structural (shorter than
-    ``min_chars`` — blank paragraph separators, "-" rules, headers; the
-    same exemption as :func:`line_dedup`, without which every multi-
-    paragraph document would lose its blank separators and silently
-    reflow) or ``array_position(lines, lines[i]) == i+1`` (first index
+    :data:`DEFAULT_LINE_MIN_CHARS` — blank paragraph separators, "-"
+    rules, headers; the same exemption as :func:`line_dedup`, without
+    which every multi-paragraph document would lose its blank separators
+    and silently reflow) or ``array_position(lines, lines[i]) == i+1`` (first index
     of that exact text). ``array_position`` is O(L) per line → O(L²) per
     doc in line count — fine for real documents (hundreds of lines);
     corpus-wide repetition is the scale problem and lives in
@@ -214,7 +213,7 @@ def line_dedup_within_doc(
     base = df.select(F.col(id_col), lines.alias("_ls"))
     kept = F.filter(
         F.transform(F.col("_ls"), lambda x, i: F.struct(x.alias("l"), i.alias("p"))),
-        lambda s: (F.length(s["l"]) < min_chars)
+        lambda s: (F.length(s["l"]) < DEFAULT_LINE_MIN_CHARS)
         | (F.array_position(F.col("_ls"), s["l"]) == s["p"] + 1),
     )
     marked = base.select(
@@ -394,6 +393,8 @@ DEFAULT_SPAN_STRIDE = 5
 # Cap the analyzed prefix — standard practice for overlap detection, and
 # 50k tokens ≫ any real web page.
 DEFAULT_SPAN_MAX_TOKENS = 50_000
+# A span fingerprint is duplicated once this many distinct docs hold it.
+SPAN_MIN_DOCS = 2
 
 
 def all_span_hashes_from_tokens(toks: Column, window: int) -> Column:
@@ -445,7 +446,6 @@ def duplicated_span_report(
     text_col: str = "text",
     window: int = DEFAULT_SPAN_TOKENS,
     stride: int = DEFAULT_SPAN_STRIDE,
-    min_docs: int = 2,
     max_tokens: int = DEFAULT_SPAN_MAX_TOKENS,
 ) -> DataFrame:
     """Per-document fraction of winnowed span fingerprints that also
@@ -459,9 +459,9 @@ def duplicated_span_report(
     Returns ``(id, spans, dup_spans, dup_frac)`` for every doc —
     ``spans`` = selected fingerprints (0 for docs shorter than
     ``window`` tokens). A fingerprint counts as duplicated when it
-    appears in ≥ ``min_docs`` DISTINCT documents — within-doc repetition
-    is the cheap narrow-map rule (``textstats.dup_2gram_fraction``), not
-    this operator's job.
+    appears in ≥ :data:`SPAN_MIN_DOCS` DISTINCT documents — within-doc
+    repetition is the cheap narrow-map rule
+    (``textstats.dup_2gram_fraction``), not this operator's job.
 
     Plan shape (the ``line_dedup`` family): tokens → window hashes →
     winnow (both materialized attributes — the selection slices
@@ -492,14 +492,12 @@ def duplicated_span_report(
         .agg(F.count_distinct(id_col).alias("_docs"))
     )
     per_span = spans.join(counts, "_h", "left")
+    dup = F.sum(F.when(F.col("_docs") >= SPAN_MIN_DOCS, 1).otherwise(0))
     return per_span.groupBy(id_col).agg(
         F.count("_h").cast("long").alias("spans"),
-        F.sum(F.when(F.col("_docs") >= min_docs, 1).otherwise(0)).cast("long").alias("dup_spans"),
+        dup.cast("long").alias("dup_spans"),
         F.round(
-            F.when(
-                F.count("_h") > 0,
-                F.sum(F.when(F.col("_docs") >= min_docs, 1).otherwise(0)) / F.count("_h"),
-            ).otherwise(F.lit(0.0)),
+            F.when(F.count("_h") > 0, dup / F.count("_h")).otherwise(F.lit(0.0)),
             6,
         ).alias("dup_frac"),
     )

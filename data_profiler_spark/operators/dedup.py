@@ -135,11 +135,6 @@ def lsh_band_keys_expr(sig: Column, num_perm: int, rows_per_band: int) -> Column
     )
 
 
-def jaccard_expr(a: Column, b: Column) -> Column:
-    """Exact Jaccard over two distinct-element arrays."""
-    return F.size(F.array_intersect(a, b)) / F.size(F.array_union(a, b))
-
-
 def _shingle_sets(df: DataFrame, id_col: str, text_col: str, shingle: int) -> DataFrame:
     """(_id, _sh): each doc's distinct word ``shingle``-grams in first-seen
     order, with no lambda. The text's ``words_expr`` tokens are joined by
@@ -168,43 +163,47 @@ def _shingle_sets(df: DataFrame, id_col: str, text_col: str, shingle: int) -> Da
     )
 
 
-def _band_sets(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_perm: int,
-    rows_per_band: int,
-    shingle: int,
-    hash_fn: str,
-) -> DataFrame:
-    """(_id, _sh, _bands): each doc's shingle set and its LSH band keys.
+def _band_sets(df: DataFrame, id_col: str, text_col: str, hash_fn: str) -> DataFrame:
+    """(_id, _sh, _bands): each doc's :data:`DEFAULT_SHINGLE`-word shingle
+    set and its LSH band keys (:data:`DEFAULT_NUM_PERM` permutations,
+    :data:`DEFAULT_ROWS_PER_BAND` rows per band).
     Two projections (signature, then bands) so each band key references
     the signature ATTRIBUTE, not a copy of its expression: inlining the
     16-perm signature into all 8 band keys would blow the expression tree
     up ~128× (whole-stage codegen compile measured in tens of seconds).
     CollapseProject keeps multi-referenced expensive aliases materialized,
     so these stay separate projections."""
-    sets = _shingle_sets(df, id_col, text_col, shingle)
+    sets = _shingle_sets(df, id_col, text_col, DEFAULT_SHINGLE)
     sig = sets.select(
-        "_id", "_sh", minhash_signature_expr(F.col("_sh"), num_perm, hash_fn).alias("_sig")
+        "_id", "_sh", minhash_signature_expr(F.col("_sh"), DEFAULT_NUM_PERM, hash_fn).alias("_sig")
     )
-    return sig.select(
-        "_id", "_sh", lsh_band_keys_expr(F.col("_sig"), num_perm, rows_per_band).alias("_bands")
-    )
+    bands = lsh_band_keys_expr(F.col("_sig"), DEFAULT_NUM_PERM, DEFAULT_ROWS_PER_BAND)
+    return sig.select("_id", "_sh", bands.alias("_bands"))
 
 
-def _verify_pairs(cand: DataFrame, sets: DataFrame, id_col: str, threshold: float) -> DataFrame:
+def _verify_pairs(cand: DataFrame, sets: DataFrame, threshold: float) -> DataFrame:
     """Join candidate (id1, id2) pairs back to shingle sets and keep exact
     Jaccard >= threshold. Both joins shuffle on the id — at scale sets is
-    the big side and candidates the small one; AQE broadcasts candidates."""
+    the big side and candidates the small one; AQE broadcasts candidates.
+
+    The sets are distinct, so |A ∪ B| = |A| + |B| - |A ∩ B| and one
+    ``array_intersect`` per pair gives the Jaccard. The sizes come out of
+    an ``inline_outer`` of a one-element array, an identity the optimizer
+    does not see through: the threshold filter stays above it instead of
+    being copied into the join condition, where the intersection would
+    run a second time."""
     s1 = sets.select(F.col("_id").alias("id1"), F.col("_sh").alias("_sh1"))
     s2 = sets.select(F.col("_id").alias("id2"), F.col("_sh").alias("_sh2"))
-    return (
-        cand.join(s1, "id1")
-        .join(s2, "id2")
-        .withColumn("jaccard", jaccard_expr(F.col("_sh1"), F.col("_sh2")))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id1", "id2", F.round("jaccard", 6).alias("jaccard"))
+    sizes = F.struct(
+        F.size(F.array_intersect("_sh1", "_sh2")).alias("_i"),
+        (F.size("_sh1") + F.size("_sh2")).alias("_n"),
+    )
+    joined = cand.join(s1, "id1").join(s2, "id2").select(
+        "id1", "id2", F.inline_outer(F.array(sizes))
+    )
+    jaccard = F.col("_i") / (F.col("_n") - F.col("_i"))
+    return joined.filter(jaccard >= threshold).select(
+        "id1", "id2", F.round(jaccard, 6).alias("jaccard")
     )
 
 
@@ -215,9 +214,6 @@ def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_perm: int = DEFAULT_NUM_PERM,
-    rows_per_band: int = DEFAULT_ROWS_PER_BAND,
-    shingle: int = DEFAULT_SHINGLE,
     threshold: float = 0.8,
     union_exact_candidates: bool = False,
     hash_fn: str = "md5",
@@ -280,7 +276,7 @@ def minhash_lsh_pairs(
     skipping the join).
     """
     # one copy for every consumer below (see "Cost shape")
-    sets = materialize(_band_sets(df, id_col, text_col, num_perm, rows_per_band, shingle, hash_fn))
+    sets = materialize(_band_sets(df, id_col, text_col, hash_fn))
     melted = sets.select("_id", F.posexplode_outer("_bands").alias("band_id", "key"))
     star = None
     if max_band_df is not None:
@@ -319,16 +315,13 @@ def minhash_lsh_pairs(
             ia.join(ib, "shingle").filter(F.col("id1") < F.col("id2")).select("id1", "id2")
         )
         cand = cand.unionByName(exact_cand).distinct()
-    return _verify_pairs(cand, sets, id_col, threshold)
+    return _verify_pairs(cand, sets, threshold)
 
 
 def band_df_report(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_perm: int = DEFAULT_NUM_PERM,
-    rows_per_band: int = DEFAULT_ROWS_PER_BAND,
-    shingle: int = DEFAULT_SHINGLE,
     max_band_df: int | None = DEFAULT_MAX_BAND_DF,
     hash_fn: str = "md5",
 ) -> DataFrame:
@@ -342,7 +335,7 @@ def band_df_report(
     defuses. Same one-cheap-agg shape as :func:`shingle_df_report` /
     ``similarity.grid_occupancy_report``.
     """
-    bands = _band_sets(df, id_col, text_col, num_perm, rows_per_band, shingle, hash_fn)
+    bands = _band_sets(df, id_col, text_col, hash_fn)
     # posexplode_OUTER: plain posexplode adds an implicit `size(_bands) > 0`
     # filter whose predicate embeds the ENTIRE minhash expression; predicate
     # pushdown then drags that below _widen's repartition exchange and
@@ -376,7 +369,6 @@ def shingle_df_report(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    shingle: int = DEFAULT_SHINGLE,
     max_shingle_df: int | None = DEFAULT_MAX_SHINGLE_DF,
 ) -> DataFrame:
     """Dropped-shingle-mass report for the ``max_shingle_df`` cap: one row
@@ -385,7 +377,7 @@ def shingle_df_report(
     capped :func:`ngram_jaccard_pairs` run explicit — a pair is missed only
     if EVERY shared shingle is above the cap, so ``dropped_shingles == 0``
     certifies the capped run exact."""
-    sets = _shingle_sets(df, id_col, text_col, shingle)
+    sets = _shingle_sets(df, id_col, text_col, DEFAULT_SHINGLE)
     inv = sets.select("_id", F.explode_outer("_sh").alias("shingle")).filter(
         F.col("shingle").isNotNull()
     )
@@ -406,7 +398,6 @@ def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    shingle: int = DEFAULT_SHINGLE,
     threshold: float = 0.8,
     max_shingle_df: int | None = DEFAULT_MAX_SHINGLE_DF,
 ) -> DataFrame:
@@ -434,28 +425,14 @@ def ngram_jaccard_pairs(
     is exactly the uncapped result). Pass ``None`` to force the uncapped
     single-self-join path.
     """
-    sets = _shingle_sets(df, id_col, text_col, shingle)
+    sets = _shingle_sets(df, id_col, text_col, DEFAULT_SHINGLE)
     # explode_outer + null-filter: see the posexplode_outer note in
     # band_df_report — plain explode's implicit size()>0 filter would
     # push the whole shingle expression below the repartition exchange.
     inv = sets.select("_id", F.explode_outer("_sh").alias("shingle")).filter(
         F.col("shingle").isNotNull()
     )
-    sizes = sets.select("_id", F.size("_sh").alias("_sz"))
-    s1 = sizes.select(F.col("_id").alias("id1"), F.col("_sz").alias("_sz1"))
-    s2 = sizes.select(F.col("_id").alias("id2"), F.col("_sz").alias("_sz2"))
-
-    def _from_shared(shared: DataFrame) -> DataFrame:
-        return (
-            shared.join(s1, "id1")
-            .join(s2, "id2")
-            .withColumn(
-                "jaccard", F.col("_shared") / (F.col("_sz1") + F.col("_sz2") - F.col("_shared"))
-            )
-            .filter(F.col("jaccard") >= threshold)
-            .select("id1", "id2", F.round("jaccard", 6).alias("jaccard"))
-        )
-
+    kept = inv
     if max_shingle_df is not None:
         # Count-shaped even WITH the cap: candidate generation self-joins
         # only the pruned (rare-shingle) postings; the dropped (hot-shingle)
@@ -467,41 +444,42 @@ def ngram_jaccard_pairs(
         # (quantify with shingle_df_report).
         freq = inv.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
         kept = inv.join(freq.filter(F.col("df") <= max_shingle_df).select("shingle"), "shingle")
-        dropped = inv.join(freq.filter(F.col("df") > max_shingle_df).select("shingle"), "shingle")
-        a = kept.select(F.col("_id").alias("id1"), "shingle")
-        b = kept.select(F.col("_id").alias("id2"), "shingle")
-        shared_kept = (
-            a.join(b, "shingle")
-            .filter(F.col("id1") < F.col("id2"))
-            .groupBy("id1", "id2")
-            .agg(F.count(F.lit(1)).alias("_shared_kept"))
-        )
-        d1 = dropped.select(F.col("_id").alias("id1"), "shingle")
-        d2 = dropped.select(F.col("_id").alias("id2"), "shingle")
-        shared_dropped = (
-            shared_kept.select("id1", "id2")
-            .join(d1, "id1")
-            .join(d2, ["id2", "shingle"])
-            .groupBy("id1", "id2")
-            .agg(F.count(F.lit(1)).alias("_shared_dropped"))
-        )
-        shared = shared_kept.join(shared_dropped, ["id1", "id2"], "left").select(
-            "id1",
-            "id2",
-            (F.col("_shared_kept") + F.coalesce(F.col("_shared_dropped"), F.lit(0))).alias(
-                "_shared"
-            ),
-        )
-        return _from_shared(shared)
-    a = inv.select(F.col("_id").alias("id1"), "shingle")
-    b = inv.select(F.col("_id").alias("id2"), "shingle")
+    a = kept.select(F.col("_id").alias("id1"), "shingle")
+    b = kept.select(F.col("_id").alias("id2"), "shingle")
     shared = (
         a.join(b, "shingle")
         .filter(F.col("id1") < F.col("id2"))
         .groupBy("id1", "id2")
         .agg(F.count(F.lit(1)).alias("_shared"))
     )
-    return _from_shared(shared)
+    if max_shingle_df is not None:
+        dropped = inv.join(freq.filter(F.col("df") > max_shingle_df).select("shingle"), "shingle")
+        d1 = dropped.select(F.col("_id").alias("id1"), "shingle")
+        d2 = dropped.select(F.col("_id").alias("id2"), "shingle")
+        shared_dropped = (
+            shared.select("id1", "id2")
+            .join(d1, "id1")
+            .join(d2, ["id2", "shingle"])
+            .groupBy("id1", "id2")
+            .agg(F.count(F.lit(1)).alias("_shared_dropped"))
+        )
+        shared = shared.join(shared_dropped, ["id1", "id2"], "left").select(
+            "id1",
+            "id2",
+            (F.col("_shared") + F.coalesce(F.col("_shared_dropped"), F.lit(0))).alias("_shared"),
+        )
+    sizes = sets.select("_id", F.size("_sh").alias("_sz"))
+    s1 = sizes.select(F.col("_id").alias("id1"), F.col("_sz").alias("_sz1"))
+    s2 = sizes.select(F.col("_id").alias("id2"), F.col("_sz").alias("_sz2"))
+    return (
+        shared.join(s1, "id1")
+        .join(s2, "id2")
+        .withColumn(
+            "jaccard", F.col("_shared") / (F.col("_sz1") + F.col("_sz2") - F.col("_shared"))
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("id1", "id2", F.round("jaccard", 6).alias("jaccard"))
+    )
 
 
 # --------------------------------------------------------------------------
@@ -512,17 +490,17 @@ SIMHASH_BITS = 16
 _HI_HEX = ("8", "9", "a", "b", "c", "d", "e", "f")
 
 
-def simhash_from_hashes(hx: Column, n: Column, bits: int = SIMHASH_BITS) -> Column:
-    """SimHash as a ``bits``-char '0'/'1' string from a MATERIALIZED array
-    of md5-hex token hashes (``transform(toks, md5)`` aliased in a prior
-    projection) and the token count: bit *i* = majority vote over tokens
-    of the high bit of hex char *i*. Hashing runs once per token instead
-    of once per (token, bit). This md5-string form exists for the
+def simhash_from_hashes(hx: Column, n: Column) -> Column:
+    """SimHash as a :data:`SIMHASH_BITS`-char '0'/'1' string from a
+    MATERIALIZED array of md5-hex token hashes (``transform(toks, md5)``
+    aliased in a prior projection) and the token count: bit *i* =
+    majority vote over tokens of the high bit of hex char *i*. Hashing
+    runs once per token instead of once per (token, bit). This md5-string form exists for the
     oracle-checked ``simhash_signatures`` query; :func:`simhash_pairs`
     uses the packed xxhash64 signature."""
     votes = [
         F.size(F.filter(hx, lambda h: F.substring(h, i + 1, 1).isin(*_HI_HEX)))
-        for i in range(bits)
+        for i in range(SIMHASH_BITS)
     ]
     return F.concat(*[F.when(v * 2 > n, F.lit("1")).otherwise(F.lit("0")) for v in votes])
 
@@ -531,7 +509,7 @@ SIMHASH_PAIR_BITS = 64
 SIMHASH_PAIR_BANDS = 8
 
 
-def simhash64_from_tokens(toks: Column, bits: int = SIMHASH_PAIR_BITS) -> Column:
+def simhash64_from_tokens(toks: Column) -> Column:
     """Packed simhash as ONE long: bit *i* = majority vote over tokens of
     bit *i* of ``xxhash64(token)`` — 64 independent vote bits from a single
     JVM-native hash per token (no md5, no strings).
@@ -542,18 +520,15 @@ def simhash64_from_tokens(toks: Column, bits: int = SIMHASH_PAIR_BITS) -> Column
     hash array as its own projection and call
     :func:`simhash64_from_hashes`; this form stays for single-expression
     contexts and tests."""
-    return simhash64_from_hashes(
-        F.transform(toks, lambda t: F.xxhash64(t)), F.size(toks), bits
-    )
+    return simhash64_from_hashes(F.transform(toks, lambda t: F.xxhash64(t)), F.size(toks))
 
 
-def simhash64_from_hashes(hs: Column, n: Column, bits: int = SIMHASH_PAIR_BITS) -> Column:
+def simhash64_from_hashes(hs: Column, n: Column) -> Column:
     """Packed 64-bit simhash from a MATERIALIZED ``array<long>`` of
     xxhash64 token hashes and the token count — hashing runs once per
     token, the 64 vote filters reference the array attribute."""
-    assert bits <= 64
     sig = F.lit(0).cast("long")
-    for i in range(bits):
+    for i in range(SIMHASH_PAIR_BITS):
         vote = F.size(
             F.filter(hs, lambda h: F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1)
         )
@@ -631,9 +606,11 @@ def simhash_pairs(
 # Near-dup components (pair graph → clusters → keep list)
 # --------------------------------------------------------------------------
 
-def near_dup_components(
-    pairs: DataFrame, max_iter: int = 50, method: str = "star"
-) -> DataFrame:
+# Round cap of the star engine; real graphs converge in O(log n) rounds.
+MAX_STAR_ROUNDS = 50
+
+
+def near_dup_components(pairs: DataFrame, method: str = "star") -> DataFrame:
     """Connected components over a near-dup pair graph: (doc_id, group_id)
     for every id that appears in >= 1 pair, with ``group_id`` = the min id
     of its component — the step between pair generation
@@ -646,7 +623,9 @@ def near_dup_components(
     its smaller-or-equal neighbors (small-star) at the neighborhood
     minimum — one window minimum per step over the EDGE set, so a round
     is three shuffles and no join, provably O(log n) rounds on ANY graph.
-    ``method`` accepts only ``"star"``.
+    ``method`` accepts only ``"star"``. At most :data:`MAX_STAR_ROUNDS`
+    rounds run; if they run out first, each doc still gets one row
+    (its min parent, see :func:`_star_components_with_rounds`).
 
     A (count, checksum) of the edge set, observed on the round's
     materializing job, detects convergence (inherent to any fixed-point
@@ -661,7 +640,7 @@ def near_dup_components(
     """
     if method != "star":
         raise ValueError(f"near_dup_components: unknown method {method!r} (only 'star')")
-    labels, _ = _star_components_with_rounds(pairs, max_iter)
+    labels, _ = _star_components_with_rounds(pairs)
     return labels
 
 
@@ -694,7 +673,7 @@ def _star_round(e: DataFrame) -> DataFrame:
 
 
 def _star_components_with_rounds(
-    pairs: DataFrame, max_iter: int = 50
+    pairs: DataFrame, max_iter: int = MAX_STAR_ROUNDS
 ) -> tuple[DataFrame, int]:
     """(components, rounds-to-converge) for the large-star/small-star
     engine — see :func:`near_dup_components`.

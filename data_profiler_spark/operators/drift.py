@@ -31,6 +31,8 @@ from pyspark.sql import functions as F
 # Proportion floor for empty bins — the standard PSI smoothing constant;
 # shared verbatim with the DuckDB oracle (__spark_entry__).
 PSI_EPS = 1e-6
+# Decimal places of every rounded output, as in the oracle SQL.
+ROUND_DIGITS = 6
 
 
 def _resolve_bounds(
@@ -67,7 +69,6 @@ def distribution_drift(
     bins: int = 10,
     lo: float | None = None,
     hi: float | None = None,
-    round_to: int = 6,
 ) -> DataFrame:
     """Per-bin drift table between ``df_a`` (baseline) and ``df_b``
     (current) on numeric ``col``: one row per bin —
@@ -93,13 +94,13 @@ def distribution_drift(
     pb = F.greatest(raw_pb, F.lit(PSI_EPS))
     return tot.select(
         "bin",
-        F.round(F.lit(lo) + F.col("bin") * F.lit(width), round_to).alias("bin_lo"),
-        F.round(F.lit(lo) + (F.col("bin") + 1) * F.lit(width), round_to).alias("bin_hi"),
+        F.round(F.lit(lo) + F.col("bin") * F.lit(width), ROUND_DIGITS).alias("bin_lo"),
+        F.round(F.lit(lo) + (F.col("bin") + 1) * F.lit(width), ROUND_DIGITS).alias("bin_hi"),
         "cnt_a",
         "cnt_b",
-        F.round(raw_pa, round_to).alias("p_a"),
-        F.round(raw_pb, round_to).alias("p_b"),
-        F.round((pa - pb) * F.log(pa / pb), round_to).alias("psi_contrib"),
+        F.round(raw_pa, ROUND_DIGITS).alias("p_a"),
+        F.round(raw_pb, ROUND_DIGITS).alias("p_b"),
+        F.round((pa - pb) * F.log(pa / pb), ROUND_DIGITS).alias("psi_contrib"),
     ).orderBy("bin")
 
 
@@ -146,7 +147,7 @@ def drift_summary(
     bins: int = 10,
     lo: float | None = None,
     hi: float | None = None,
-    round_to: int = 6,
+    round_to: int = ROUND_DIGITS,
 ) -> DataFrame:
     """One-row drift verdict: ``(n_a, n_b, psi, tvd)`` — PSI summed over
     unrounded per-bin contributions (rounded once here) and
@@ -189,7 +190,6 @@ def threshold_sweep(
     df: DataFrame,
     score,
     thresholds: list[float],
-    round_to: int = 6,
 ) -> DataFrame:
     """Keep-rate sensitivity of a gating threshold: one row per candidate
     threshold — ``(threshold, kept, total, keep_rate)`` — from ONE scan
@@ -217,7 +217,7 @@ def threshold_sweep(
             "total",
             F.round(
                 F.when(F.col("total") > 0, F.col("s.kept") / F.col("total")).otherwise(0.0),
-                round_to,
+                ROUND_DIGITS,
             ).alias("keep_rate"),
         )
         .orderBy("threshold")
@@ -229,7 +229,6 @@ def quantile_buckets(
     score,
     k: int = 10,
     id_col: str = "doc_id",
-    round_to: int = 6,
 ) -> DataFrame:
     """Exact quantile-bucket assignment: ``(id, score, bucket)`` with
     ``bucket`` in [0, k-1] — bucket b holds the docs strictly above the
@@ -253,12 +252,12 @@ def quantile_buckets(
         row = scored.agg(
             F.percentile("_s", F.array(*[F.lit(q) for q in qs])).alias("c")
         ).collect()[0]
-        # cutpoints rounded to round_to before comparing: scores carry
-        # that precision anyway, and it removes any 1-ulp interpolation
+        # cutpoints rounded to ROUND_DIGITS places before comparing: scores
+        # carry that precision anyway, and it removes any 1-ulp interpolation
         # skew between engines from the bucket boundaries. HALF_UP, not
         # Python's banker's round — DuckDB/Spark round() are half-away-
         # from-zero and the oracle must round IDENTICALLY.
-        q10 = Decimal(10) ** -round_to
+        q10 = Decimal(10) ** -ROUND_DIGITS
         cuts = [
             float(Decimal(repr(float(c))).quantize(q10, rounding=ROUND_HALF_UP))
             for c in (row["c"] or [])
@@ -268,6 +267,6 @@ def quantile_buckets(
         bucket = bucket + (F.col("_s") > F.lit(c)).cast("int")
     return scored.filter(F.col("_s").isNotNull()).select(
         F.col(id_col),
-        F.round(F.col("_s"), round_to).alias("score"),
+        F.round(F.col("_s"), ROUND_DIGITS).alias("score"),
         bucket.cast("int").alias("bucket"),
     )

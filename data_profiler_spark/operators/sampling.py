@@ -30,6 +30,8 @@ DEFAULT_BINS = 4096
 # so hash-bucket arithmetic never loses precision.
 _HASH_BITS = 52
 _HASH_LEVEL_BITS = 12  # 4096 buckets per hash refinement level
+# Backstop on refinement levels; real inputs need O(log n) of them.
+MAX_REFINE_LEVELS = 20
 
 
 def token_budget_sample(
@@ -42,7 +44,6 @@ def token_budget_sample(
     lo: float = 0.0,
     hi: float = 1.0,
     boundary_cutoff: int = 100_000,
-    max_levels: int = 20,
 ) -> DataFrame:
     """Select documents in priority order until the token budget is spent.
 
@@ -70,7 +71,8 @@ def token_budget_sample(
        candidates ~4096× per level regardless of data skew.
     4. The final ≤ ``boundary_cutoff`` candidates get the only sort — a
        single bounded task. Driver state stays ≤ ``bins`` rows per
-       level; levels are O(log(n)) with a ``max_levels`` backstop.
+       level; levels are O(log(n)), with a backstop of
+       :data:`MAX_REFINE_LEVELS`.
 
     This keeps the selection EXACT under the adversarial-but-realistic
     case of heavily tied priorities (quantized quality scores), where a
@@ -103,7 +105,7 @@ def token_budget_sample(
     hash_shift = _HASH_BITS - _HASH_LEVEL_BITS
     boundary_rows: int | None = None  # unknown before the first histogram
 
-    for _level in range(max_levels):
+    for _level in range(MAX_REFINE_LEVELS):
         if boundary_rows is not None and boundary_rows <= boundary_cutoff:
             break
         if mode == "prio":
@@ -371,7 +373,6 @@ def mixture_sample(
     weights: dict,
     total: int,
     id_col: str = "doc_id",
-    max_window_rows: int = 1_000_000,
 ) -> DataFrame:
     """Sample a training mix: ``total`` rows distributed across strata
     (domains / languages / sources) toward target ``weights`` — the
@@ -400,6 +401,4 @@ def mixture_sample(
     alloc = mixture_allocation(sizes, weights, total)
     if not alloc:
         return pool.limit(0)
-    return stratified_sample_exact(
-        pool, strata_col, alloc, id_col=id_col, max_window_rows=max_window_rows
-    )
+    return stratified_sample_exact(pool, strata_col, alloc, id_col=id_col)

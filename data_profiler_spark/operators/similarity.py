@@ -28,6 +28,9 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# Decimal places of rounded centroids and cosines, as in the oracle SQL.
+ROUND_DIGITS = 6
+
 
 def _as_double(v: Column) -> Column:
     return F.transform(v, lambda x: x.cast("double"))
@@ -149,7 +152,6 @@ def kmeans_centroids(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
-    round_to: int = 6,
 ) -> list[tuple[int, list[float]]]:
     """Unsupervised IVF codebook: seeded spherical Lloyd k-means, fully
     deterministic and ANSI-reproducible (the DuckDB oracle runs the
@@ -166,8 +168,8 @@ def kmeans_centroids(
       narrow map over literal centroids (k×d floats broadcast in the
       plan), ties broken toward the higher cell id in both engines.
     * **Re-centroid**: dimension-wise mean via posexplode → groupBy(cell,
-      dim) → avg (shuffle cardinality k×d, tiny), ROUNDED to ``round_to``
-      decimals each iteration — the rounding pins the fixed point so two
+      dim) → avg (shuffle cardinality k×d, tiny), ROUNDED to
+      :data:`ROUND_DIGITS` decimals each iteration — the rounding pins the fixed point so two
       engines summing in different orders stay bit-identical.
     * **Fixed ``iters``** (not convergence-tested): deterministic cost and
       a finitely-unrollable oracle. Cells that lose all members drop out.
@@ -203,7 +205,8 @@ def kmeans_centroids(
             per_dim.groupBy("cell")
             .agg(F.array_sort(F.collect_list(F.struct("dim", "m"))).alias("p"))
             .select(
-                "cell", F.transform("p", lambda q: F.round(q["m"], round_to)).alias("c")
+                "cell",
+                F.transform("p", lambda q: F.round(q["m"], ROUND_DIGITS)).alias("c"),
             )
             .collect()
         )
@@ -371,7 +374,7 @@ def embedding_near_dup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_projections: int = 2,
-    round_to: int = 6,
+    round_to: int = ROUND_DIGITS,
     method: str = "grid",
     dim: int | None = None,
     verify_salt: int = 1,

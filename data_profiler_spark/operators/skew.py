@@ -21,6 +21,11 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# The salted hottest key may hold this many times the average key's rows.
+SALT_TARGET_RATIO = 2.0
+# More salt buckets than cluster tasks only adds tiny files.
+MAX_SALT_BUCKETS = 4096
+
 
 def key_skew_report(df: DataFrame, key: Column) -> DataFrame:
     """Single-row skew summary of ``key``'s row distribution:
@@ -43,11 +48,11 @@ def key_skew_report(df: DataFrame, key: Column) -> DataFrame:
     )
 
 
-def recommend_salt_buckets(report_row: dict, target_ratio: float = 2.0, cap: int = 4096) -> int:
-    """Salt buckets that flatten the hottest key to ``target_ratio`` × the
-    average key's row count (driver-side pure function over the
-    :func:`key_skew_report` row). Power-of-two, capped — more buckets than
-    cluster tasks only adds tiny files."""
+def recommend_salt_buckets(report_row: dict) -> int:
+    """Salt buckets that flatten the hottest key to
+    :data:`SALT_TARGET_RATIO` × the average key's row count (driver-side
+    pure function over the :func:`key_skew_report` row). Power-of-two,
+    capped at :data:`MAX_SALT_BUCKETS`."""
     ratio = float(report_row.get("skew_ratio") or 1.0)
-    need = max(1.0, ratio / target_ratio)
-    return int(min(cap, 2 ** math.ceil(math.log2(need)) if need > 1 else 1))
+    need = max(1.0, ratio / SALT_TARGET_RATIO)
+    return int(min(MAX_SALT_BUCKETS, 2 ** math.ceil(math.log2(need)) if need > 1 else 1))

@@ -48,17 +48,18 @@ class ColumnTypeInfo:
     match_rates: dict
 
 
-def _sample_col(df: DataFrame, col: str, n: int = SAMPLE_SIZE) -> DataFrame:
-    """First-n non-null sample — reference stores the first 100 non-null
-    values per column (``types.py:141-142``). ``limit`` lets Spark
-    short-circuit the scan; no shuffle."""
+def _sample_col(df: DataFrame, col: str) -> DataFrame:
+    """First-:data:`SAMPLE_SIZE` non-null sample, as column ``v`` — the
+    reference stores the first 100 non-null values per column
+    (``types.py:141-142``). ``limit`` lets Spark short-circuit the scan;
+    no shuffle."""
     c = F.trim(F.col(col).cast("string"))
-    return df.select(c.alias("v")).filter(~is_null_like(F.col(col))).limit(n)
+    return df.select(c.alias("v")).filter(~is_null_like(F.col(col))).limit(SAMPLE_SIZE)
 
 
-def match_rate_aggs(col_alias: str = "v"):
-    """Per-type match-count expressions over the sampled values."""
-    c = F.col(col_alias)
+def match_rate_aggs():
+    """Per-type match-count expressions over the sampled values ``v``."""
+    c = F.col("v")
     return [
         F.count(c).alias("n"),
         F.sum(c.rlike(NUMERIC_RE).cast("long")).alias("numeric"),
@@ -111,7 +112,7 @@ def decide_type(n: int, numeric: int, money: int, date: int, alpha: int, distinc
     return "varchar", 1.0 - max(rates.values(), default=0.0)
 
 
-def infer_column_types(df: DataFrame, cols: list[str] | None = None, sample_size: int = SAMPLE_SIZE) -> dict[str, ColumnTypeInfo]:
+def infer_column_types(df: DataFrame, cols: list[str] | None = None) -> dict[str, ColumnTypeInfo]:
     """Infer the reference's 8-type classification for each column.
 
     One small job per column (sample → one agg). At 100 TB this stays
@@ -120,7 +121,7 @@ def infer_column_types(df: DataFrame, cols: list[str] | None = None, sample_size
     cols = cols or df.columns
     out: dict[str, ColumnTypeInfo] = {}
     for c in cols:
-        row = _sample_col(df, c, sample_size).agg(*match_rate_aggs()).collect()[0]
+        row = _sample_col(df, c).agg(*match_rate_aggs()).collect()[0]
         t, conf = decide_type(
             row["n"], row["numeric"], row["money"], row["date"], row["alpha"], row["distinct"]
         )

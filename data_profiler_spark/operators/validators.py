@@ -43,6 +43,9 @@ DATE_FORMATS = [
 # interpretation instead of silently counting as invalid.
 DD_MM_YYYY = ("DD/MM/YYYY", "^[0-9]{2}/[0-9]{2}/[0-9]{4}$", "dd/MM/yyyy")
 
+# Examples kept per money-violation category (profile.py:585-673).
+MONEY_MAX_EXAMPLES = 3
+
 
 def is_null_like(c: Column) -> Column:
     """P1 — ``value is None or value.strip()==''`` (``profile.py:504-514``).
@@ -101,11 +104,12 @@ def has_non_ascii(c: Column) -> Column:
     return c.rlike("[^\\x00-\\x7F]")
 
 
-def money_rollup_exprs(col: str, max_examples: int = 3) -> list[Column]:
+def money_rollup_exprs(col: str) -> list[Column]:
     """A11 — categorized money-violation counts + bounded examples +
     min/max of valid values (``profile.py:585-673``).
 
-    dollar_sign / comma / parentheses / wrong_decimals, ≤3 examples each,
+    dollar_sign / comma / parentheses / wrong_decimals, the first
+    :data:`MONEY_MAX_EXAMPLES` sorted examples each,
     all in one agg pass.
     """
     c = F.col(col)
@@ -129,7 +133,7 @@ def money_rollup_exprs(col: str, max_examples: int = 3) -> list[Column]:
         exprs.append(F.sum(cond.cast("long")).alias(f"{col}_{name}_count"))
         exprs.append(
             F.slice(
-                F.sort_array(F.collect_set(F.when(cond, c))), 1, max_examples
+                F.sort_array(F.collect_set(F.when(cond, c))), 1, MONEY_MAX_EXAMPLES
             ).alias(f"{col}_{name}_examples")
         )
     return exprs

@@ -151,9 +151,8 @@ def gen_doc(doc_id: int, seed: int = SEED) -> dict:
     }
 
 
-def pages_pandas(n: int, seed: int = SEED, start: int = 0) -> pd.DataFrame:
-    rows = [gen_doc(i, seed) for i in range(start, start + n)]
-    return pd.DataFrame(rows)
+def pages_pandas(n: int, seed: int = SEED) -> pd.DataFrame:
+    return pd.DataFrame([gen_doc(i, seed) for i in range(n)])
 
 
 PAGES_SCHEMA = (
@@ -201,14 +200,12 @@ DUP_FAMILY_TEXT = (
     "subscribe to our newsletter for the latest updates and special offers"
 )
 
+# Shares of pages forced onto the hot host and given boilerplate lines.
+SKEW_HOT_HOST_FRAC = 0.2
+SKEW_BOILER_RATE = 0.5
 
-def skew_doc(
-    doc_id: int,
-    seed: int = SEED,
-    hot_host_frac: float = 0.2,
-    boiler_rate: float = 0.5,
-    dup_family_frac: float = 0.1,
-) -> dict:
+
+def skew_doc(doc_id: int, seed: int = SEED, dup_family_frac: float = 0.1) -> dict:
     """Pure (seed, doc_id) → skew-stressed page row (same schema as
     :func:`gen_doc`, derived from it)."""
     row = gen_doc(doc_id, seed)
@@ -216,13 +213,13 @@ def skew_doc(
     if rng.random() < dup_family_frac:
         row["text"] = DUP_FAMILY_TEXT
         row["quality_class"] = "dup_family"
-    elif rng.random() < boiler_rate:
+    elif rng.random() < SKEW_BOILER_RATE:
         extra = [
             BOILERPLATE_LINES[rng.randrange(len(BOILERPLATE_LINES))]
             for _ in range(rng.randint(1, 3))
         ]
         row["text"] = "\n".join(row["text"].split("\n") + extra)
-    if rng.random() < hot_host_frac:
+    if rng.random() < SKEW_HOT_HOST_FRAC:
         # forced on top of the base Zipf draw (host0 already ~19 %), so
         # the hot host carries ~35 % of the crawl
         row["url"] = f"https://host0.example/p/{doc_id}"
@@ -230,25 +227,12 @@ def skew_doc(
     return row
 
 
-def skewed_pages_df(
-    spark,
-    n: int,
-    seed: int = SEED,
-    partitions: int | None = None,
-    hot_host_frac: float = 0.2,
-    boiler_rate: float = 0.5,
-    dup_family_frac: float = 0.1,
-):
+def skewed_pages_df(spark, n: int, seed: int = SEED, partitions: int | None = None):
     """Distributed skew-stress generation; same shape as :func:`pages_df`."""
     parts = partitions or spark.sparkContext.defaultParallelism
 
     def gen(batches):
         for pdf in batches:
-            yield pd.DataFrame(
-                [
-                    skew_doc(i, seed, hot_host_frac, boiler_rate, dup_family_frac)
-                    for i in pdf["id"].tolist()
-                ]
-            )
+            yield pd.DataFrame([skew_doc(i, seed) for i in pdf["id"].tolist()])
 
     return spark.range(0, n, 1, parts).mapInPandas(gen, PAGES_SCHEMA)

@@ -6,6 +6,8 @@ configuration is never mutated."""
 
 from __future__ import annotations
 
+import gc
+import weakref
 from unittest.mock import MagicMock
 
 from data_profiler_spark.operators.checkpoints import materialize
@@ -48,3 +50,16 @@ def test_materialize_falls_back_to_local_checkpoint():
     materialize(df)
     df.localCheckpoint.assert_called_once_with(eager=False)
     df.checkpoint.assert_not_called()
+
+
+def test_lazy_checkpoint_keeps_its_source_alive(spark):
+    """A lazy checkpoint is filled by the first job on the returned frame,
+    whose tasks report SQL metrics owned by the source's plan; the source
+    must outlive that job, so the returned frame holds it."""
+    src = spark.range(100).selectExpr("id", "id * 2 AS twice")
+    ref = weakref.ref(src)
+    out = materialize(src)
+    del src
+    gc.collect()
+    assert ref() is not None
+    assert out.count() == 100

@@ -201,7 +201,8 @@ def test_minhash_projections_hold_no_lambda_and_read_input_once(spark, tmp_path,
     """The shingle and band-key projections plan no lambda function, and
     the executed pairs plan never scans the input: the hot-bucket guard,
     the band self-join and verify all read the one materialized
-    (_id, _sh, _bands) projection, capped or not."""
+    (_id, _sh, _bands) projection, capped or not. Verify intersects each
+    candidate's sets once and never unions them."""
     src = str(tmp_path / "docs")
     _skew_and_edge_docs(spark, 1).write.parquet(src)
     df = spark.read.parquet(src)
@@ -217,6 +218,7 @@ def test_minhash_projections_hold_no_lambda_and_read_input_once(spark, tmp_path,
     assert "FileScan" not in plan, plan
     scans = re.findall(r"Scan ExistingRDD\[(\w+)#\d+L?,(\w+)#\d+,(\w+)#\d+\]", plan)
     assert scans and set(scans) == {("_id", "_sh", "_bands")}, plan
+    assert plan.count("array_intersect(") == 1 and "array_union(" not in plan, plan
 
 
 def test_shingle_df_report_quantifies_cap(spark):
