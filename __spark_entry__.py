@@ -367,19 +367,16 @@ def q_candidate_key_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def q_minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup pairs, exact-Jaccard verified. The oracle is an
-    exact brute-force threshold join, so the LSH candidates are unioned
-    with the exact inverted-index candidates before verification — the
-    result is DETERMINISTICALLY equal to the oracle on any fixture/seed
-    (LSH band recall alone is probabilistic, ~(1-J^2)^8 per-pair miss);
-    the pure-LSH recall contract is gate-checked in
-    tests/test_dedup_similarity.py instead."""
+    """MinHash+LSH near-dup pairs, exact-Jaccard verified: the band
+    candidates alone, with the default ``max_band_df`` (md5 scheme, so
+    DuckDB can replay it). The oracle replays the md5 minhash and band keys
+    and verifies those candidates, so a fault in the band path changes the
+    rows. The replay equals the capped plan while no bucket is hot: every
+    gate fixture is far below ``DEFAULT_MAX_BAND_DF``."""
     from data_profiler_spark.operators import dedup
 
     df = _t(spark, sf_dir, "documents")
-    return dedup.minhash_lsh_pairs(
-        df, "doc_id", "text", threshold=0.8, union_exact_candidates=True
-    ).orderBy("id1", "id2")
+    return dedup.minhash_lsh_pairs(df, "doc_id", "text", threshold=0.8).orderBy("id1", "id2")
 
 
 def q_band_df_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1105,6 +1102,18 @@ def _html_extract_sql(col: str) -> str:
 # oracle SQL (DuckDB)
 # ---------------------------------------------------------------------------
 
+# The synthetic mixed-format date column ``ds`` of _date_col, as a CTE.
+_DATE_DS_CTE = """d AS (
+  SELECT CASE
+           WHEN o_orderkey % 50 = 0 THEN '1899' || strftime(o_orderdate, '%m%d')
+           WHEN o_orderkey % 4 = 0 THEN strftime(o_orderdate, '%Y%m%d')
+           WHEN o_orderkey % 4 = 1 THEN strftime(o_orderdate, '%Y-%m-%d')
+           WHEN o_orderkey % 4 = 2 THEN strftime(o_orderdate, '%m/%d/%Y')
+           ELSE strftime(o_orderdate, '%m-%d-%Y')
+         END AS ds
+  FROM orders
+)"""
+
 _ORACLE: dict[str, str] = {
     "profile_nchars": """
         SELECT count(n_chars) AS cnt,
@@ -1189,17 +1198,7 @@ _ORACLE: dict[str, str] = {
                max(CASE WHEN regexp_matches(amount, '^[0-9]+\\.[0-9]{2}$') THEN amount::DECIMAL(18,2) END)::DOUBLE AS max_valid
         FROM m
     """,
-    "date_formats": """
-        WITH d AS (
-          SELECT CASE
-                   WHEN o_orderkey % 50 = 0 THEN '1899' || strftime(o_orderdate, '%m%d')
-                   WHEN o_orderkey % 4 = 0 THEN strftime(o_orderdate, '%Y%m%d')
-                   WHEN o_orderkey % 4 = 1 THEN strftime(o_orderdate, '%Y-%m-%d')
-                   WHEN o_orderkey % 4 = 2 THEN strftime(o_orderdate, '%m/%d/%Y')
-                   ELSE strftime(o_orderdate, '%m-%d-%Y')
-                 END AS ds
-          FROM orders
-        )
+    "date_formats": "WITH " + _DATE_DS_CTE + """
         SELECT sum(CASE WHEN regexp_matches(ds, '^[0-9]{8}$') AND try_strptime(ds, '%Y%m%d') IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS fmt_yyyymmdd,
                sum(CASE WHEN regexp_matches(ds, '^[0-9]{4}-[0-9]{2}-[0-9]{2}$') AND try_strptime(ds, '%Y-%m-%d') IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS fmt_iso,
                sum(CASE WHEN regexp_matches(ds, '^[0-9]{2}/[0-9]{2}/[0-9]{4}$') AND try_strptime(ds, '%m/%d/%Y') IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS fmt_mdy_slash,
@@ -1265,17 +1264,7 @@ _ORACLE: dict[str, str] = {
                     THEN 1 ELSE 0 END AS has_ambiguity
         FROM c
     """,
-    "date_distribution_month": """
-        WITH d AS (
-          SELECT CASE
-                   WHEN o_orderkey % 50 = 0 THEN '1899' || strftime(o_orderdate, '%m%d')
-                   WHEN o_orderkey % 4 = 0 THEN strftime(o_orderdate, '%Y%m%d')
-                   WHEN o_orderkey % 4 = 1 THEN strftime(o_orderdate, '%Y-%m-%d')
-                   WHEN o_orderkey % 4 = 2 THEN strftime(o_orderdate, '%m/%d/%Y')
-                   ELSE strftime(o_orderdate, '%m-%d-%Y')
-                 END AS ds
-          FROM orders
-        ), p AS (
+    "date_distribution_month": "WITH " + _DATE_DS_CTE + """, p AS (
           SELECT CASE
                    WHEN regexp_matches(ds, '^[0-9]{8}$') THEN try_strptime(ds, '%Y%m%d')
                    WHEN regexp_matches(ds, '^[0-9]{4}-[0-9]{2}-[0-9]{2}$') THEN try_strptime(ds, '%Y-%m-%d')
@@ -1386,11 +1375,14 @@ WITH s AS (
 _JACCARD = "len(list_intersect(a.sh, b.sh))::DOUBLE / len(list_distinct(a.sh || b.sh))"
 
 
-def _band_df_report_sql(num_perm: int = 16, rows_per_band: int = 2, cap: int = 3) -> str:
-    """DuckDB replay of dedup.band_df_report's md5-mode minhash + banding:
-    per-perm min over substr(md5('p{p}:' || shingle), 1, 16), band key =
-    the '|'-joined signature slice (Spark md5's the joined slice; grouping
-    by the raw slice partitions docs identically)."""
+def _minhash_bands_sql() -> str:
+    """Shingle sets ``s``, then the DuckDB replay of dedup's md5-mode
+    minhash + banding (16 perms, 2 rows per band): per-perm min over
+    substr(md5('p{p}:' || shingle), 1, 16) in ``sig``, and ``b`` =
+    (doc_id, band_id, key) with key = the '|'-joined signature slice
+    (Spark md5's the joined slice; grouping or joining by the raw slice
+    partitions docs identically)."""
+    num_perm, rows_per_band = 16, 2
     mins = ",\n           ".join(
         f"list_min(list_transform(sh, x -> substr(md5('p{p}:' || x), 1, 16))) AS m{p}"
         for p in range(num_perm)
@@ -1407,7 +1399,13 @@ def _band_df_report_sql(num_perm: int = 16, rows_per_band: int = 2, cap: int = 3
     b AS (
       SELECT doc_id, generate_subscripts(bands, 1) AS band_id, unnest(bands) AS key
       FROM (SELECT doc_id, [{bands_list}] AS bands FROM sig)
-    ),
+    )"""
+
+
+def _band_df_report_sql(cap: int) -> str:
+    """dedup.band_df_report over the replayed band buckets."""
+    return f"""
+    {_minhash_bands_sql()},
     f AS (SELECT band_id, key, count(*) AS bdf FROM b GROUP BY band_id, key)
     SELECT count(*)::BIGINT AS total_buckets,
            sum(CASE WHEN bdf > {cap} THEN 1 ELSE 0 END)::BIGINT AS hot_buckets,
@@ -1416,6 +1414,22 @@ def _band_df_report_sql(num_perm: int = 16, rows_per_band: int = 2, cap: int = 3
            sum(CASE WHEN bdf > {cap} THEN bdf - 1
                     ELSE bdf * (bdf - 1) // 2 END)::DECIMAL(38,0)::VARCHAR AS capped_candidates
     FROM f
+    """
+
+
+def _minhash_lsh_pairs_sql(threshold: float) -> str:
+    """dedup.minhash_lsh_pairs with no hot bucket: every pair that shares
+    a (band_id, key) bucket is a candidate, verified by exact Jaccard."""
+    return f"""
+    {_minhash_bands_sql()},
+    cand AS (
+      SELECT DISTINCT x.doc_id AS id1, y.doc_id AS id2
+      FROM b x JOIN b y ON x.band_id = y.band_id AND x.key = y.key AND x.doc_id < y.doc_id
+    )
+    SELECT a.doc_id AS id1, b.doc_id AS id2, round({_JACCARD}, 6) AS jaccard
+    FROM cand JOIN s a ON a.doc_id = cand.id1 JOIN s b ON b.doc_id = cand.id2
+    WHERE {_JACCARD} >= {threshold}
+    ORDER BY id1, id2
     """
 
 
@@ -1465,6 +1479,27 @@ def _lang_markers_sql() -> str:
 _BPE_RE_SQL = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \\t\\n\\x0B\\f\\r]"
 _PUNCT_RE_SQL = "[^A-Za-z0-9 \\t\\n\\x0B\\f\\r]"
 _STOP10_SQL = "['the','be','to','of','and','that','have','with','a','in']"
+
+
+def _score_tokens_sql(cols: str, text: str, src: str) -> str:
+    """SELECT of ``cols`` of ``src`` plus the ``toks`` and ``punct`` of
+    ``text`` that :data:`_SCORE_SQL` reads."""
+    return f"""SELECT {cols},
+         list_filter(string_split_regex({text}, '[ \\t\\n\\x0B\\f\\r]+'), x -> x <> '') AS toks,
+         len(regexp_extract_all({text}, '{_PUNCT_RE_SQL}')) AS punct
+  FROM {src}"""
+
+
+# textanalysis.quality_score_expr over a row of _score_tokens_sql
+_SCORE_SQL = f"""round((
+    (CASE WHEN len(toks) BETWEEN 10 AND 20000 THEN 1.0 ELSE 0.0 END)
+    + least(len(list_intersect({_STOP10_SQL}, list_transform(toks, x -> lower(x))))::DOUBLE / 5.0, 1.0)
+    + (CASE WHEN len(toks) > 0
+            THEN len(list_filter(toks, w -> regexp_matches(w, '[A-Za-z]')))::DOUBLE / len(toks)
+            ELSE 0.0 END)
+    + greatest(0.0, 1.0 - (CASE WHEN len(toks) > 0 THEN punct::DOUBLE / len(toks) ELSE 1.0 END))
+  ) / 4.0, 6)"""
+_DOC_TOKENS_SQL = _score_tokens_sql("source", "text", "documents")
 
 _FP_SQL = (
     "array_to_string(list_sort(list_distinct(list_transform("
@@ -1611,9 +1646,52 @@ def _near_dup_keep_sql(threshold: float) -> str:
     """
 
 
+# Line-dedup keep rules: corpus.line_dedup (max_occurrences=1,
+# min_chars=5) and corpus.line_dedup_within_doc.
+_LINE_KEEP_CORPUS = """CASE WHEN len(line) < 5 THEN TRUE
+              WHEN count(*) OVER (PARTITION BY line) <= 1 THEN TRUE
+              WHEN row_number() OVER (PARTITION BY line ORDER BY doc_id, pos) = 1 THEN TRUE
+              ELSE FALSE END"""
+_LINE_KEEP_WITHIN = """(length(line) < 5 OR
+          row_number() OVER (PARTITION BY doc_id, line ORDER BY pos) = 1)"""
+
+
+def _line_dedup_sql(src: str, keep: str) -> tuple[str, str]:
+    """(CTEs ``l``, ``k``, ``agg``; regroup SELECT) of a line dedup over
+    ``src``'s (doc_id, text): split on newlines, mark each line with the
+    ``keep`` rule, re-join the kept lines in order. The regroup LEFT JOINs
+    from ``src`` (aliased by its initial), so a null-text doc keeps its row
+    (see the line_dedup_docs comment)."""
+    ctes = f"""l AS (
+      SELECT doc_id,
+             generate_subscripts(string_split(text, chr(10)), 1) AS pos,
+             unnest(string_split(text, chr(10))) AS line
+      FROM {src} WHERE text IS NOT NULL
+    ), k AS (
+      SELECT doc_id, pos, line,
+             {keep} AS keep
+      FROM l
+    ), agg AS (
+      SELECT doc_id,
+             coalesce(string_agg(line, chr(10) ORDER BY pos) FILTER (WHERE keep), '') AS clean_text,
+             count(*) FILTER (WHERE keep) AS lines_kept,
+             count(*) FILTER (WHERE NOT keep) AS lines_dropped
+      FROM k GROUP BY doc_id
+    )"""
+    a = src[0]
+    regroup = f"""SELECT {a}.doc_id, a.clean_text,
+             coalesce(a.lines_kept, 0) AS lines_kept,
+             coalesce(a.lines_dropped, 0) AS lines_dropped
+      FROM {src} {a} LEFT JOIN agg a USING (doc_id)"""
+    return ctes, regroup
+
+
+_LINES_CTES, _LINES_REGROUP = _line_dedup_sql("base", _LINE_KEEP_CORPUS)
+_LINES_WITHIN_CTES, _ = _line_dedup_sql("base", _LINE_KEEP_WITHIN)
+
 _ORACLE.update(
     {
-        "minhash_lsh_dedup": _jaccard_pairs_sql(0.8),
+        "minhash_lsh_dedup": _minhash_lsh_pairs_sql(0.8),
         "band_df_report": _band_df_report_sql(cap=3),
         "near_dup_components": _near_dup_components_sql(0.8),
         "near_dup_keep": _near_dup_keep_sql(0.8),
@@ -1673,19 +1751,9 @@ _ORACLE.update(
         """,
         "quality_score_by_source": f"""
             WITH t AS (
-              SELECT source,
-                     list_filter(string_split_regex(text, '[ \\t\\n\\x0B\\f\\r]+'), x -> x <> '') AS toks,
-                     len(regexp_extract_all(text, '{_PUNCT_RE_SQL}')) AS punct
-              FROM documents
+              {_DOC_TOKENS_SQL}
             ), sc AS (
-              SELECT source, round((
-                  (CASE WHEN len(toks) BETWEEN 10 AND 20000 THEN 1.0 ELSE 0.0 END)
-                  + least(len(list_intersect({_STOP10_SQL}, list_transform(toks, x -> lower(x))))::DOUBLE / 5.0, 1.0)
-                  + (CASE WHEN len(toks) > 0
-                          THEN len(list_filter(toks, w -> regexp_matches(w, '[A-Za-z]')))::DOUBLE / len(toks)
-                          ELSE 0.0 END)
-                  + greatest(0.0, 1.0 - (CASE WHEN len(toks) > 0 THEN punct::DOUBLE / len(toks) ELSE 1.0 END))
-                ) / 4.0, 6) AS score
+              SELECT source, {_SCORE_SQL} AS score
               FROM t
             )
             SELECT source, round(avg(score), 4) AS avg_score,
@@ -1770,64 +1838,24 @@ _ORACLE.update(
             FROM e ASOF LEFT JOIN o ON e.user_id = o.o_custkey AND o.t <= e.t
             GROUP BY e.user_id
         """,
-        "line_dedup_docs": """
+        "line_dedup_docs": f"""
             -- LEFT JOIN from the base table so null-text docs survive with
             -- NULL clean_text and 0/0 counts, matching the Spark operator's
             -- posexplode_outer marker row (string_split(NULL) unnests to
             -- zero rows, which would otherwise drop those docs entirely).
             WITH base AS (
               SELECT doc_id, replace(text, ' a ', chr(10)) AS text FROM documents
-            ), l AS (
-              SELECT doc_id,
-                     generate_subscripts(string_split(text, chr(10)), 1) AS pos,
-                     unnest(string_split(text, chr(10))) AS line
-              FROM base WHERE text IS NOT NULL
-            ), k AS (
-              SELECT doc_id, pos, line,
-                     CASE WHEN len(line) < 5 THEN TRUE
-                          WHEN count(*) OVER (PARTITION BY line) <= 1 THEN TRUE
-                          WHEN row_number() OVER (PARTITION BY line ORDER BY doc_id, pos) = 1 THEN TRUE
-                          ELSE FALSE END AS keep
-              FROM l
-            ), agg AS (
-              SELECT doc_id,
-                     coalesce(string_agg(line, chr(10) ORDER BY pos) FILTER (WHERE keep), '') AS clean_text,
-                     count(*) FILTER (WHERE keep) AS lines_kept,
-                     count(*) FILTER (WHERE NOT keep) AS lines_dropped
-              FROM k GROUP BY doc_id
-            )
-            SELECT b.doc_id, a.clean_text,
-                   coalesce(a.lines_kept, 0) AS lines_kept,
-                   coalesce(a.lines_dropped, 0) AS lines_dropped
-            FROM base b LEFT JOIN agg a USING (doc_id) ORDER BY b.doc_id
+            ), {_LINES_CTES}
+            {_LINES_REGROUP} ORDER BY b.doc_id
         """,
-        "line_dedup_within": """
+        "line_dedup_within": f"""
             -- LEFT JOIN from the base table: null-text docs keep NULL
             -- clean_text and 0/0 counts (parity with the Spark operator;
             -- see line_dedup_docs).
             WITH base AS (
               SELECT doc_id, replace(text, ' a ', chr(10)) AS text FROM documents
-            ), l AS (
-              SELECT doc_id,
-                     generate_subscripts(string_split(text, chr(10)), 1) AS pos,
-                     unnest(string_split(text, chr(10))) AS line
-              FROM base WHERE text IS NOT NULL
-            ), k AS (
-              SELECT doc_id, pos, line,
-                     (length(line) < 5 OR
-                      row_number() OVER (PARTITION BY doc_id, line ORDER BY pos) = 1) AS keep
-              FROM l
-            ), agg AS (
-              SELECT doc_id,
-                     coalesce(string_agg(line, chr(10) ORDER BY pos) FILTER (WHERE keep), '') AS clean_text,
-                     count(*) FILTER (WHERE keep) AS lines_kept,
-                     count(*) FILTER (WHERE NOT keep) AS lines_dropped
-              FROM k GROUP BY doc_id
-            )
-            SELECT b.doc_id, a.clean_text,
-                   coalesce(a.lines_kept, 0) AS lines_kept,
-                   coalesce(a.lines_dropped, 0) AS lines_dropped
-            FROM base b LEFT JOIN agg a USING (doc_id) ORDER BY b.doc_id
+            ), {_LINES_WITHIN_CTES}
+            {_LINES_REGROUP} ORDER BY b.doc_id
         """,
         "contamination_screen": """
             WITH toks AS (
@@ -1991,19 +2019,9 @@ _ORACLE["mixture_sample"] = """
 
 _ORACLE["threshold_sweep"] = f"""
     WITH t AS (
-      SELECT source,
-             list_filter(string_split_regex(text, '[ \\t\\n\\x0B\\f\\r]+'), x -> x <> '') AS toks,
-             len(regexp_extract_all(text, '{_PUNCT_RE_SQL}')) AS punct
-      FROM documents
+      {_DOC_TOKENS_SQL}
     ), sc AS (
-      SELECT round((
-          (CASE WHEN len(toks) BETWEEN 10 AND 20000 THEN 1.0 ELSE 0.0 END)
-          + least(len(list_intersect({_STOP10_SQL}, list_transform(toks, x -> lower(x))))::DOUBLE / 5.0, 1.0)
-          + (CASE WHEN len(toks) > 0
-                  THEN len(list_filter(toks, w -> regexp_matches(w, '[A-Za-z]')))::DOUBLE / len(toks)
-                  ELSE 0.0 END)
-          + greatest(0.0, 1.0 - (CASE WHEN len(toks) > 0 THEN punct::DOUBLE / len(toks) ELSE 1.0 END))
-        ) / 4.0, 6) AS score
+      SELECT {_SCORE_SQL} AS score
       FROM t
     ), th(threshold) AS (VALUES (0.25), (0.5), (0.75), (0.9))
     SELECT th.threshold::DOUBLE AS threshold,
@@ -2036,19 +2054,23 @@ _ORACLE["normalize_text_stats"] = f"""
 """
 
 
-_ORACLE["duplicated_spans"] = """
-    WITH toks AS (
+def _winnow_sql(name: str, src: str) -> str:
+    """CTEs of corpus.duplicated_span_report over ``src``'s (doc_id, text):
+    ``name`` = the first 50,000 tokens, 15-token span md5s winnowed with stride
+    5 (``sp``), then per-doc span and duplicated-span counts
+    (``per``; a span is duplicated when >= 2 docs hold it)."""
+    return f"""{name} AS (
       SELECT doc_id,
              (list_filter(string_split_regex(text, '[ \\t\\n\\x0B\\f\\r]+'),
                           x -> x <> ''))[1:50000] AS t
-      FROM documents
+      FROM {src}
     ), hs AS (
       SELECT doc_id,
              CASE WHEN len(t) >= 15
                   THEN list_transform(range(1, len(t) - 13),
                                       i -> md5(array_to_string(t[i:i+14], ' ')))
                   ELSE CAST([] AS VARCHAR[]) END AS hall
-      FROM toks
+      FROM {name}
     ), sp AS (
       SELECT doc_id,
              CASE WHEN len(hall) = 0 THEN CAST([] AS VARCHAR[])
@@ -2065,7 +2087,11 @@ _ORACLE["duplicated_spans"] = """
       SELECT e.doc_id, count(*) AS spans,
              sum(CASE WHEN c.docs >= 2 THEN 1 ELSE 0 END) AS dup
       FROM e JOIN c USING (h) GROUP BY e.doc_id
-    )
+    )"""
+
+
+_ORACLE["duplicated_spans"] = f"""
+    WITH {_winnow_sql("toks", "documents")}
     SELECT t.doc_id,
            coalesce(per.spans, 0)::BIGINT AS spans,
            coalesce(per.dup, 0)::BIGINT AS dup_spans,
@@ -2110,6 +2136,10 @@ _ORACLE["quantile_buckets"] = """
 """
 
 
+_CLEAN_LINES_CTES, _CLEAN_LINES_REGROUP = _line_dedup_sql("surv2", _LINE_KEEP_CORPUS)
+_CLEAN_TOKENS_SQL = _score_tokens_sql(
+    "doc_id, clean_text, lines_kept, lines_dropped", "clean_text", "final"
+)
 _ORACLE["corpus_clean_end_to_end"] = f"""
     -- replay of the FULL corpus-clean chain (exact dedup → decontaminate
     -- → normalize → span drop → line dedup → score); each stage's CTEs
@@ -2142,77 +2172,18 @@ _ORACLE["corpus_clean_end_to_end"] = f"""
       WHERE k.doc_id % 97 <> 0 AND k.doc_id NOT IN (SELECT doc_id FROM cont)
     ), norm AS (
       SELECT doc_id, {_normalize_sql("text")} AS text FROM surv1
-    ), stoks AS (
-      SELECT doc_id,
-             (list_filter(string_split_regex(text, '[ \\t\\n\\x0B\\f\\r]+'),
-                          x -> x <> ''))[1:50000] AS t
-      FROM norm
-    ), hs AS (
-      SELECT doc_id,
-             CASE WHEN len(t) >= 15
-                  THEN list_transform(range(1, len(t) - 13),
-                                      i -> md5(array_to_string(t[i:i+14], ' ')))
-                  ELSE CAST([] AS VARCHAR[]) END AS hall
-      FROM stoks
-    ), sp AS (
-      SELECT doc_id,
-             CASE WHEN len(hall) = 0 THEN CAST([] AS VARCHAR[])
-                  WHEN len(hall) <= 5 THEN [list_min(hall)]
-                  ELSE list_distinct(list_transform(range(1, len(hall) - 3),
-                                                    j -> list_min(hall[j:j+4])))
-             END AS fps
-      FROM hs
-    ), e AS (
-      SELECT doc_id, unnest(fps) AS h FROM sp
-    ), c AS (
-      SELECT h, count(DISTINCT doc_id) AS docs FROM e GROUP BY h
-    ), per AS (
-      SELECT e.doc_id, count(*) AS spans,
-             sum(CASE WHEN c.docs >= 2 THEN 1 ELSE 0 END) AS dup
-      FROM e JOIN c USING (h) GROUP BY e.doc_id
-    ), surv2 AS (
+    ), {_winnow_sql("stoks", "norm")}, surv2 AS (
       SELECT n.doc_id, n.text
       FROM norm n LEFT JOIN per USING (doc_id)
       WHERE CASE WHEN coalesce(per.spans, 0) > 0
                  THEN per.dup::DOUBLE / per.spans ELSE 0.0 END < 0.5
-    ), l AS (
-      SELECT doc_id,
-             generate_subscripts(string_split(text, chr(10)), 1) AS pos,
-             unnest(string_split(text, chr(10))) AS line
-      FROM surv2 WHERE text IS NOT NULL
-    ), k AS (
-      SELECT doc_id, pos, line,
-             CASE WHEN len(line) < 5 THEN TRUE
-                  WHEN count(*) OVER (PARTITION BY line) <= 1 THEN TRUE
-                  WHEN row_number() OVER (PARTITION BY line ORDER BY doc_id, pos) = 1 THEN TRUE
-                  ELSE FALSE END AS keep
-      FROM l
-    ), agg AS (
-      SELECT doc_id,
-             coalesce(string_agg(line, chr(10) ORDER BY pos) FILTER (WHERE keep), '') AS clean_text,
-             count(*) FILTER (WHERE keep) AS lines_kept,
-             count(*) FILTER (WHERE NOT keep) AS lines_dropped
-      FROM k GROUP BY doc_id
-    ), final AS (
-      SELECT s.doc_id, a.clean_text,
-             coalesce(a.lines_kept, 0) AS lines_kept,
-             coalesce(a.lines_dropped, 0) AS lines_dropped
-      FROM surv2 s LEFT JOIN agg a USING (doc_id)
+    ), {_CLEAN_LINES_CTES}, final AS (
+      {_CLEAN_LINES_REGROUP}
     ), qt AS (
-      SELECT doc_id, clean_text, lines_kept, lines_dropped,
-             list_filter(string_split_regex(clean_text, '[ \\t\\n\\x0B\\f\\r]+'), x -> x <> '') AS toks,
-             len(regexp_extract_all(clean_text, '{_PUNCT_RE_SQL}')) AS punct
-      FROM final
+      {_CLEAN_TOKENS_SQL}
     )
     SELECT doc_id, md5(clean_text) AS clean_hash, lines_kept, lines_dropped,
-           round((
-             (CASE WHEN len(toks) BETWEEN 10 AND 20000 THEN 1.0 ELSE 0.0 END)
-             + least(len(list_intersect({_STOP10_SQL}, list_transform(toks, x -> lower(x))))::DOUBLE / 5.0, 1.0)
-             + (CASE WHEN len(toks) > 0
-                     THEN len(list_filter(toks, w -> regexp_matches(w, '[A-Za-z]')))::DOUBLE / len(toks)
-                     ELSE 0.0 END)
-             + greatest(0.0, 1.0 - (CASE WHEN len(toks) > 0 THEN punct::DOUBLE / len(toks) ELSE 1.0 END))
-           ) / 4.0, 6) AS score
+           {_SCORE_SQL} AS score
     FROM qt ORDER BY doc_id
 """
 

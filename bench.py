@@ -75,9 +75,8 @@ QUERIES_PATH = "bench_queries.json"
 def _minhash_prod(spark, sf_dir):
     """Production-config MinHash+LSH: xxhash64 numeric minhashes, pure
     banded candidates + exact-Jaccard verify. The queries() entry uses md5
-    (oracle-expressible) plus an exact-candidate union so the DuckDB
-    correctness gate is deterministic — fixture-scale shims, not the
-    at-scale path — so the bench times the production configuration."""
+    (oracle-expressible, so the DuckDB gate can replay the bands), so the
+    bench times the production configuration."""
     from data_profiler_spark.operators import dedup
 
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")

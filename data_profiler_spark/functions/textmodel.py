@@ -81,7 +81,7 @@ def _ngram_buckets(texts: pa.Array, n: int, dim: int) -> tuple[np.ndarray, np.nd
     return doc_of[:m][valid], acc[valid] % dim
 
 
-_DOC_CHUNK = 2048  # bounds the (chunk × dim) dense matrix to ~32 MB
+_DOC_CHUNK = 128  # bounds the bincount temporaries to (chunk × dim) int64, 2 MB
 
 
 def doc_matrix(texts: pa.Array) -> np.ndarray:

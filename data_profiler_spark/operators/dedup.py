@@ -215,7 +215,6 @@ def minhash_lsh_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.8,
-    union_exact_candidates: bool = False,
     hash_fn: str = "md5",
     max_band_df: int | None = DEFAULT_MAX_BAND_DF,
 ) -> DataFrame:
@@ -225,15 +224,6 @@ def minhash_lsh_pairs(
     probabilistic (Pr[detect] = 1-(1-J^r)^b), verification exact — false
     positives are impossible, false negatives exponentially unlikely above
     the (r, b) S-curve threshold.
-
-    ``union_exact_candidates=True`` unions the LSH band candidates with the
-    exact inverted-index candidates (shared-shingle pairs) before the
-    verification join, making the RESULT deterministic and exactly equal to
-    the brute-force threshold join — the LSH path is still fully exercised,
-    but a correctness gate comparing against an exact oracle can't flap on
-    the ~(1-J^r)^b per-pair miss probability. Costs one extra self-join at
-    fixture scale; leave off at web scale where the S-curve miss rate is
-    the accepted contract.
 
     ``max_band_df`` is the hot-band guardrail (ON by default, mirroring
     ``ngram_jaccard_pairs``'s ``max_shingle_df``): a corpus with massive
@@ -262,9 +252,9 @@ def minhash_lsh_pairs(
     ``localCheckpoint``, or a reliable ``checkpoint`` when the session has
     a checkpoint dir — executor-loss-safe on clusters), capped or not.
     The hot-bucket agg, the band self-join (its a/b exchanges canonicalize
-    and reuse, so they count as one), the exact candidates and the verify
-    join all read that one copy, so the dominant shingle → minhash
-    computation runs once over the text instead of once per consumer.
+    and reuse, so they count as one) and the verify join all read that one
+    copy, so the dominant shingle → minhash computation runs once over the
+    text instead of once per consumer.
 
     **The default guard is lazy** — plan construction runs NO Spark job
     (``explain()``/plan inspection stays free; building the DataFrame
@@ -304,18 +294,7 @@ def minhash_lsh_pairs(
     cand = a.join(b, ["band_id", "key"]).filter(F.col("id1") < F.col("id2")).select("id1", "id2")
     if star is not None:
         cand = cand.unionByName(star)
-    cand = cand.distinct()
-    if union_exact_candidates:
-        inv = sets.select("_id", F.explode_outer("_sh").alias("shingle")).filter(
-            F.col("shingle").isNotNull()
-        )
-        ia = inv.select(F.col("_id").alias("id1"), "shingle")
-        ib = inv.select(F.col("_id").alias("id2"), "shingle")
-        exact_cand = (
-            ia.join(ib, "shingle").filter(F.col("id1") < F.col("id2")).select("id1", "id2")
-        )
-        cand = cand.unionByName(exact_cand).distinct()
-    return _verify_pairs(cand, sets, threshold)
+    return _verify_pairs(cand.distinct(), sets, threshold)
 
 
 def band_df_report(
@@ -365,6 +344,24 @@ def band_df_report(
 DEFAULT_MAX_SHINGLE_DF = 10_000
 
 
+def _shingle_postings(
+    df: DataFrame, id_col: str, text_col: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(sets, postings, freq): each doc's shingle set, its (_id, shingle)
+    inverted-index postings and each shingle's document frequency ``df`` —
+    the one inverted index :func:`shingle_df_report` and
+    :func:`ngram_jaccard_pairs` read. ``freq`` is lazy, so a caller that
+    does not read it pays nothing. explode_outer + null-filter: see the
+    posexplode_outer note in :func:`band_df_report` — plain explode's
+    implicit size()>0 filter would push the whole shingle expression below
+    the repartition exchange."""
+    sets = _shingle_sets(df, id_col, text_col, DEFAULT_SHINGLE)
+    inv = sets.select("_id", F.explode_outer("_sh").alias("shingle")).filter(
+        F.col("shingle").isNotNull()
+    )
+    return sets, inv, inv.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
+
+
 def shingle_df_report(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -377,11 +374,7 @@ def shingle_df_report(
     capped :func:`ngram_jaccard_pairs` run explicit — a pair is missed only
     if EVERY shared shingle is above the cap, so ``dropped_shingles == 0``
     certifies the capped run exact."""
-    sets = _shingle_sets(df, id_col, text_col, DEFAULT_SHINGLE)
-    inv = sets.select("_id", F.explode_outer("_sh").alias("shingle")).filter(
-        F.col("shingle").isNotNull()
-    )
-    freq = inv.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
+    _, _, freq = _shingle_postings(df, id_col, text_col)
     cap = F.lit(max_shingle_df if max_shingle_df is not None else 2**62)
     return freq.agg(
         F.count(F.lit(1)).alias("total_shingles"),
@@ -425,13 +418,7 @@ def ngram_jaccard_pairs(
     is exactly the uncapped result). Pass ``None`` to force the uncapped
     single-self-join path.
     """
-    sets = _shingle_sets(df, id_col, text_col, DEFAULT_SHINGLE)
-    # explode_outer + null-filter: see the posexplode_outer note in
-    # band_df_report — plain explode's implicit size()>0 filter would
-    # push the whole shingle expression below the repartition exchange.
-    inv = sets.select("_id", F.explode_outer("_sh").alias("shingle")).filter(
-        F.col("shingle").isNotNull()
-    )
+    sets, inv, freq = _shingle_postings(df, id_col, text_col)
     kept = inv
     if max_shingle_df is not None:
         # Count-shaped even WITH the cap: candidate generation self-joins
@@ -442,7 +429,6 @@ def ngram_jaccard_pairs(
         # and NO shingle array ever crosses a shuffle. Exactness bound
         # unchanged: only pairs whose EVERY shared shingle is hot are missed
         # (quantify with shingle_df_report).
-        freq = inv.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
         kept = inv.join(freq.filter(F.col("df") <= max_shingle_df).select("shingle"), "shingle")
     a = kept.select(F.col("_id").alias("id1"), "shingle")
     b = kept.select(F.col("_id").alias("id2"), "shingle")

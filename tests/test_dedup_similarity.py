@@ -100,12 +100,41 @@ def test_minhash_xxhash64_production_config(docs):
     assert len(xx) >= 0.9 * len(exact), f"recall {len(xx)}/{len(exact)}"
 
 
-def test_minhash_union_exact_is_deterministic(docs):
-    """union_exact_candidates must yield exactly the brute-force threshold
-    join regardless of LSH band luck (the oracle-checked configuration)."""
-    unioned = _pairs(dedup.minhash_lsh_pairs(docs, threshold=0.8, union_exact_candidates=True))
-    exact = _pairs(dedup.ngram_jaccard_pairs(docs, threshold=0.8, max_shingle_df=None))
-    assert unioned == exact
+def test_minhash_gate_sees_the_band_path(spark, monkeypatch):
+    """The minhash_lsh_dedup gate checks the LSH band path itself: the
+    query equals the oracle's DuckDB replay of the md5 bands, and per-row
+    unique band keys (no doc shares a bucket) change its rows. The replay
+    equals the capped plan only while no bucket is hot."""
+    import duckdb
+
+    from __spark_entry__ import oracle_sql, queries
+    from scripts.check_oracle import SF_DIR as ORACLE_SF_DIR, canon
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{ORACLE_SF_DIR}/documents.parquet')"
+    )
+    rel = con.sql(oracle_sql()["minhash_lsh_dedup"])
+    oracle = canon([dict(zip(rel.columns, row)) for row in rel.fetchall()])
+
+    def run():
+        df = queries()["minhash_lsh_dedup"](spark, ORACLE_SF_DIR)
+        return canon([r.asDict() for r in df.collect()])
+
+    assert len(oracle) > 0
+    assert run() == oracle
+
+    def unique_keys(sig, num_perm, rows_per_band):
+        row = F.monotonically_increasing_id().cast("string")
+        return F.array(*[F.concat(F.lit(f"{b}:"), row) for b in range(num_perm // rows_per_band)])
+
+    monkeypatch.setattr(dedup, "lsh_band_keys_expr", unique_keys)
+    assert run() != oracle
+    monkeypatch.undo()
+
+    docs = spark.read.parquet(f"{ORACLE_SF_DIR}/documents.parquet")
+    assert dedup.band_df_report(docs).collect()[0]["hot_buckets"] == 0
 
 
 def _lambda_shingle_sets(df, id_col, text_col, shingle):
