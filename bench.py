@@ -85,14 +85,14 @@ def _minhash_prod(spark, sf_dir):
 
 def _simhash_prod(spark, sf_dir):
     """Production simhash near-dup pairs: packed 64-bit xxhash64
-    signatures, 8 bands (the scale-safe default; the oracle's
-    simhash_signatures entry keeps the ANSI-expressible 16-bit md5
-    config). Bench-only: the two weak-flagged round-2 paths must be
+    signatures, 4 bands of 16 bits (2^16 key values per band). The
+    oracle's simhash_signatures entry keeps the ANSI-expressible 16-bit md5
+    config. Bench-only: the two weak-flagged round-2 paths must be
     bench-visible at their production operating points."""
     from data_profiler_spark.operators import dedup
 
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return dedup.simhash_pairs(df, "doc_id", "text", max_hamming=3)
+    return dedup.simhash_pairs(df, "doc_id", "text")
 
 
 def _ngram_jaccard_prod(spark, sf_dir):

@@ -17,10 +17,9 @@ Design for 10^12 documents:
   text (no lambda), and each doc's shingle set and band keys are
   materialized once, so the text is scanned and hashed once per run.
 * **SimHash** — banded Hamming join. With the 64-bit signature split into
-  ``SIMHASH_PAIR_BANDS`` equal slices, any pair with Hamming distance <
-  that band count shares at least one identical slice (pigeonhole), so the
-  banded join is **lossless** for ``max_hamming <= bands - 1`` — exact
-  result, join-shaped cost.
+  ``SIMHASH_MAX_HAMMING + 1`` = 4 slices of 16 bits (2^16 key values per
+  band), any pair within ``SIMHASH_MAX_HAMMING`` bits shares at least one
+  slice (pigeonhole), so the banded join is **lossless** — exact result.
 * **n-gram Jaccard (exact all-pairs)** — inverted-index join on shingle
   (explode → self-join → distinct pairs → verify). Exact for any
   threshold > 0 since J(a,b) > 0 requires a shared shingle. At web scale,
@@ -96,6 +95,21 @@ def _widen(df: DataFrame) -> DataFrame:
     if splits < target:
         return df.repartition(target)
     return df
+
+
+def _key_pairs(
+    left: DataFrame, right: DataFrame, keys: list[str], carry: tuple[str, ...] = ()
+) -> DataFrame:
+    """(id1, id2, <carry>1…, <carry>2…): ``left ⋈ right`` on ``keys`` with
+    ``id1 < id2`` — the one pair join of the banded near-dup family. Both
+    sides hold ``_id``, ``keys`` and ``carry``; a self-join passes the
+    same frame twice."""
+    a, b = (
+        df.select(F.col("_id").alias(f"id{n}"), *[F.col(c).alias(f"{c}{n}") for c in carry], *keys)
+        for df, n in ((left, 1), (right, 2))
+    )
+    paired = a.join(b, keys).filter(F.col("id1") < F.col("id2"))
+    return paired.select("id1", "id2", *[f"{c}{n}" for n in (1, 2) for c in carry])
 
 
 def _minhash_one(sh: Column, perm: int, hash_fn: str = "md5") -> Column:
@@ -289,9 +303,7 @@ def minhash_lsh_pairs(
             .select(F.col("_rep").alias("id1"), F.col("_id").alias("id2"))
         )
         melted = marked.filter(F.col("_rep").isNull()).select("_id", "band_id", "key")
-    a = melted.select(F.col("_id").alias("id1"), "band_id", "key")
-    b = melted.select(F.col("_id").alias("id2"), "band_id", "key")
-    cand = a.join(b, ["band_id", "key"]).filter(F.col("id1") < F.col("id2")).select("id1", "id2")
+    cand = _key_pairs(melted, melted, ["band_id", "key"])
     if star is not None:
         cand = cand.unionByName(star)
     return _verify_pairs(cand.distinct(), sets, threshold)
@@ -430,11 +442,8 @@ def ngram_jaccard_pairs(
         # unchanged: only pairs whose EVERY shared shingle is hot are missed
         # (quantify with shingle_df_report).
         kept = inv.join(freq.filter(F.col("df") <= max_shingle_df).select("shingle"), "shingle")
-    a = kept.select(F.col("_id").alias("id1"), "shingle")
-    b = kept.select(F.col("_id").alias("id2"), "shingle")
     shared = (
-        a.join(b, "shingle")
-        .filter(F.col("id1") < F.col("id2"))
+        _key_pairs(kept, kept, ["shingle"])
         .groupBy("id1", "id2")
         .agg(F.count(F.lit(1)).alias("_shared"))
     )
@@ -492,7 +501,10 @@ def simhash_from_hashes(hx: Column, n: Column) -> Column:
 
 
 SIMHASH_PAIR_BITS = 64
-SIMHASH_PAIR_BANDS = 8
+# Largest Hamming distance simhash_pairs returns, and the pigeonhole minimum
+# of bands that keeps its band join lossless.
+SIMHASH_MAX_HAMMING = 3
+SIMHASH_PAIR_BANDS = SIMHASH_MAX_HAMMING + 1
 
 
 def simhash64_from_tokens(toks: Column) -> Column:
@@ -526,29 +538,36 @@ def simhash64_from_hashes(hs: Column, n: Column) -> Column:
     return sig
 
 
-def simhash_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Near-dup pairs with simhash Hamming distance <= max_hamming.
+def simhash_band_keys_expr(sig: Column) -> Column:
+    """The :data:`SIMHASH_PAIR_BANDS` band keys of a packed 64-bit simhash:
+    band *b* is bits ``[b·w, (b+1)·w)`` with ``w = SIMHASH_PAIR_BITS //
+    SIMHASH_PAIR_BANDS``, tagged with ``b + 1`` above them so no two bands
+    share a key. Pure long arithmetic, no strings."""
+    w = SIMHASH_PAIR_BITS // SIMHASH_PAIR_BANDS
+    return F.array(
+        *[
+            F.shiftright(sig, b * w).bitwiseAND(F.lit((1 << w) - 1)).bitwiseOR(F.lit((b + 1) << w))
+            for b in range(SIMHASH_PAIR_BANDS)
+        ]
+    )
 
-    Banded join: ``SIMHASH_PAIR_BANDS`` equal slices of the signature; a
-    pair within ``max_hamming <= bands - 1`` differing bits must agree on
-    >= 1 whole slice (pigeonhole) — candidate generation is LOSSLESS, so
-    the result equals the brute-force O(n^2) scan at join cost.
+
+def simhash_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+    """Near-dup pairs with simhash Hamming distance <= :data:`SIMHASH_MAX_HAMMING`.
+
+    Banded join: ``SIMHASH_PAIR_BANDS = SIMHASH_MAX_HAMMING + 1`` equal
+    slices of the signature; a pair within ``SIMHASH_MAX_HAMMING``
+    differing bits must agree on >= 1 whole slice (pigeonhole) — candidate
+    generation is LOSSLESS, so the result equals the brute-force O(n^2)
+    scan at join cost. More bands would only narrow the keys (Manku, Jain
+    and Das Sarma, WWW'07).
 
     Signatures are 64-bit packed longs (:func:`simhash64_from_hashes`
-    over xxhash64 token hashes), 8 bands of 8 bits — each band key ranges
-    over 2^8 values so a corpus of n docs self-joins ~n²/(2·2^8) per band
-    WHEN signatures are uniform, vs the ~n²/64 joined rows at ANY corpus
-    size that 4-bit band keys (16 values) would give. Band keys and the
-    Hamming verdict are pure long arithmetic (``shiftright``/``bit_count``),
-    no strings."""
-    bands = SIMHASH_PAIR_BANDS
-    assert max_hamming <= bands - 1, "banded join only lossless for max_hamming <= bands-1"
-    width = SIMHASH_PAIR_BITS // bands
+    over xxhash64 token hashes), 4 bands of 16 bits — each band key ranges
+    over 2^16 values, so a corpus of n docs self-joins ~n²/(2·2^16) per
+    band WHEN signatures are uniform. The band keys
+    (:func:`simhash_band_keys_expr`) and the Hamming verdict are long
+    arithmetic (``shiftright``/``bit_count``), no strings."""
     toks = (
         _widen(df)
         .select(
@@ -564,27 +583,17 @@ def simhash_pairs(
         F.size("_toks").alias("_n"),
     )
     sh = hashed.select("_id", simhash64_from_hashes(F.col("_hs"), F.col("_n")).alias("_sim"))
-    mask = F.lit((1 << width) - 1)
-    band_cols = F.array(
-        *[
-            F.shiftright(F.col("_sim"), b * width)
-            .bitwiseAND(mask)
-            .bitwiseOR(F.lit((b + 1) << width))
-            for b in range(bands)
-        ]
-    )
-    hamming = F.bit_count(F.col("_s1").bitwiseXOR(F.col("_s2")))
+    hamming = F.bit_count(F.col("_sim1").bitwiseXOR(F.col("_sim2")))
     # explode_outer: see minhash_lsh_pairs — avoids the implicit size()>0
     # pushdown filter that would serialize simhash computation at the scan.
-    melted = sh.select("_id", "_sim", F.explode_outer(band_cols).alias("key"))
-    a = melted.select(F.col("_id").alias("id1"), F.col("_sim").alias("_s1"), "key")
-    b = melted.select(F.col("_id").alias("id2"), F.col("_sim").alias("_s2"), "key")
+    melted = sh.select(
+        "_id", "_sim", F.explode_outer(simhash_band_keys_expr(F.col("_sim"))).alias("key")
+    )
     return (
-        a.join(b, "key")
-        .filter(F.col("id1") < F.col("id2"))
+        _key_pairs(melted, melted, ["key"], carry=("_sim",))
         .select("id1", "id2", hamming.alias("hamming"))
         .distinct()
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
     )
 
 

@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import _key_pairs, _widen
+
 # Decimal places of rounded centroids and cosines, as in the oracle SQL.
 ROUND_DIGITS = 6
 
@@ -313,6 +315,32 @@ LSH_BANDS = 16
 LSH_SEED = 7
 
 
+def _vector_dim(df: DataFrame, vec_col: str, dim: int | None) -> int | None:
+    """``dim`` when the caller gives it, else the first vector's length
+    (one ``first()`` driver job); None when the input is empty."""
+    if dim is None:
+        first = df.select(vec_col).first()
+        if first is None or first[0] is None:
+            return None
+        dim = len(first[0])
+    return dim
+
+
+def _verified_cosine(pairs: DataFrame, dim: int, threshold: float, round_to: int) -> DataFrame:
+    """(id1, id2, cosine) of the candidate pairs ``(id1, id2, _v1, _n1,
+    _v2, _n2)`` whose cosine reaches ``threshold``. The per-pair dot
+    product is the unrolled codegen-able form, and the division matches
+    :func:`cosine_expr`, so the result is bit-identical to the brute-force
+    reference. The filter reads the RAW cosine; rounding happens once, in
+    the final select."""
+    cos = dot_expr_fixed(F.col("_v1"), F.col("_v2"), dim) / (F.col("_n1") * F.col("_n2"))
+    return (
+        pairs.withColumn("_cos", cos)
+        .filter(F.col("_cos") >= threshold)
+        .select("id1", "id2", F.round("_cos", round_to).alias("cosine"))
+    )
+
+
 def _resolve_grid(
     df: DataFrame,
     threshold: float,
@@ -326,11 +354,9 @@ def _resolve_grid(
     when the input is empty. ``dim`` given by the caller skips the extra
     ``first()`` driver job; explicit ``directions`` skip direction fitting."""
     width = max((2.0 - 2.0 * threshold), 1e-12) ** 0.5
+    dim = _vector_dim(df, vec_col, dim)
     if dim is None:
-        first = df.select(vec_col).first()
-        if first is None or first[0] is None:
-            return None
-        dim = len(first[0])
+        return None
     if directions is not None:
         dirs = directions[:n_projections]
     elif direction_mode == "pca":
@@ -446,13 +472,9 @@ def embedding_near_dup_pairs(
     id_type = df.schema[id_col].dataType.simpleString()
     empty_schema = f"id1 {id_type}, id2 {id_type}, cosine double"
     if method == "lsh":
+        dim = _vector_dim(df, vec_col, dim)
         if dim is None:
-            first = df.select(vec_col).first()
-            if first is None or first[0] is None:
-                return df.sparkSession.createDataFrame([], empty_schema)
-            dim = len(first[0])
-        from .dedup import _widen
-
+            return df.sparkSession.createDataFrame([], empty_schema)
         base = _widen(base)
         # p·b sign projections per vector as ONE Arrow-batched numpy matmul
         # (n×d @ d×(p·b) per batch): expressing 128 unrolled codegen dots
@@ -481,32 +503,13 @@ def embedding_near_dup_pairs(
 
         keyed = base.select(
             "_id", "_v", norm_expr(F.col("_v")).alias("_n"), _band_keys("_v").alias("_keys")
-        )
-        a = keyed.select(
-            F.col("_id").alias("id1"),
-            F.col("_v").alias("_v1"),
-            F.col("_n").alias("_n1"),
-            F.explode_outer("_keys").alias("_k"),
-        )
-        b = keyed.select(
-            F.col("_id").alias("id2"),
-            F.col("_v").alias("_v2"),
-            F.col("_n").alias("_n2"),
-            F.explode_outer("_keys").alias("_k"),
-        )
-        cos = dot_expr_fixed(F.col("_v1"), F.col("_v2"), dim) / (F.col("_n1") * F.col("_n2"))
+        ).select("_id", "_v", "_n", F.explode_outer("_keys").alias("_k"))
         # verification fused into the band join (same shape as the grid
         # path); a pair colliding in k bands is verified k times and
         # deduped AFTER the threshold filter, so the distinct shuffles only
         # the (tiny) surviving output, never the candidate stream
-        return (
-            a.join(b, "_k")
-            .filter(F.col("id1") < F.col("id2"))
-            .withColumn("_cos", cos)
-            .filter(F.col("_cos") >= threshold)
-            .select("id1", "id2", F.round("_cos", round_to).alias("cosine"))
-            .distinct()
-        )
+        pairs = _key_pairs(keyed, keyed, ["_k"], carry=("_v", "_n"))
+        return _verified_cosine(pairs, dim, threshold, round_to).distinct()
     grid = _resolve_grid(
         df, threshold, vec_col, n_projections, dim, directions=None, direction_mode="pca"
     )
@@ -518,8 +521,6 @@ def embedding_near_dup_pairs(
     # (a broadcast join inherits the probe side's partitioning). Widening
     # the thin (id, vector) rows is a negligible shuffle; large inputs
     # don't pay it (no-op when the scan already has enough splits).
-    from .dedup import _widen
-
     base = _widen(base)
     # Materialize the projections as their own attribute before deriving the
     # 2^m keys from them — inlining the m dot products into every key would
@@ -561,37 +562,18 @@ def embedding_near_dup_pairs(
     )
     cell_key = _cell_key(n_projections, salt_col)
     neighbor_keys = _neighbor_keys(n_projections, verify_salt)
-    a = proj.select(
-        F.col("_id").alias("id1"),
-        F.col("_v").alias("_v1"),
-        F.col("_n").alias("_n1"),
-        cell_key.alias("_k"),
-    )
+    own = proj.select("_id", "_v", "_n", cell_key.alias("_k"))
     # explode_outer: keeps the projection expression above the exchange
     # (same implicit-size()>0 pushdown trap as operators/dedup.py).
-    b = proj.select(
-        F.col("_id").alias("id2"),
-        F.col("_v").alias("_v2"),
-        F.col("_n").alias("_n2"),
-        F.explode_outer(neighbor_keys).alias("_k"),
-    )
+    neighbors = proj.select("_id", "_v", "_n", F.explode_outer(neighbor_keys).alias("_k"))
     # ONE join does blocking AND verification: the cosine filter fuses into
     # the join condition, so the n²-ish candidate stream is generated,
     # verified, and reduced to surviving pairs inside a single stage — it is
     # never shuffled (the old cand→join(v1)→join(v2) shape re-shuffled the
     # candidate stream twice at scale just to re-attach vectors). Shuffle
     # volume is O(n·3^m·dim) input rows, independent of candidate count.
-    # The per-pair dot product is the unrolled codegen-able form; the
-    # division/order of operations matches cosine_expr exactly, so the
-    # result is bit-identical to the brute-force reference.
-    cos = dot_expr_fixed(F.col("_v1"), F.col("_v2"), dim) / (F.col("_n1") * F.col("_n2"))
-    return (
-        a.join(b, "_k")
-        .filter(F.col("id1") < F.col("id2"))
-        .withColumn("_cos", cos)
-        .filter(F.col("_cos") >= threshold)
-        .select("id1", "id2", F.round("_cos", round_to).alias("cosine"))
-    )
+    pairs = _key_pairs(own, neighbors, ["_k"], carry=("_v", "_n"))
+    return _verified_cosine(pairs, dim, threshold, round_to)
 
 
 def grid_occupancy_report(

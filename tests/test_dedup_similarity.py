@@ -270,13 +270,13 @@ def test_shingle_df_report_quantifies_cap(spark):
 
 
 def test_simhash_banded_join_is_lossless(spark, docs):
-    """Banded simhash join (pigeonhole-lossless for hamming <= bands-1)
-    must equal the brute-force O(n^2) scan over the packed 64-bit
-    xxhash64 signatures, 8 bands."""
+    """Banded simhash join (pigeonhole-lossless with
+    SIMHASH_MAX_HAMMING + 1 bands) must equal the brute-force O(n^2) scan
+    over the packed 64-bit xxhash64 signatures."""
     sub = docs.limit(80).cache()
     banded = {
         (r["id1"], r["id2"], r["hamming"])
-        for r in dedup.simhash_pairs(sub, max_hamming=3).collect()
+        for r in dedup.simhash_pairs(sub).collect()
     }
     sh = sub.select(
         F.col("doc_id").alias("_id"),
@@ -291,7 +291,7 @@ def test_simhash_banded_join_is_lossless(spark, docs):
         for r in a.crossJoin(b)
         .filter(F.col("id1") < F.col("id2"))
         .select("id1", "id2", F.bit_count(F.col("s1").bitwiseXOR(F.col("s2"))).alias("hamming"))
-        .filter(F.col("hamming") <= 3)
+        .filter(F.col("hamming") <= dedup.SIMHASH_MAX_HAMMING)
         .collect()
     }
     assert banded == brute
@@ -307,30 +307,36 @@ def test_simhash_band_key_space_scales_with_bits(docs):
         SIMHASH_PAIR_BITS,
     )
 
-    assert SIMHASH_PAIR_BITS // SIMHASH_PAIR_BANDS == 8  # 2^8 values per band
-    sub = docs.limit(200)
-    sh = sub.select(
+    width = SIMHASH_PAIR_BITS // SIMHASH_PAIR_BANDS
+    assert width == 16  # 2^16 values per band
+    sh = docs.limit(200).select(
         dedup.simhash64_from_tokens(
             F.array_distinct(words_expr(F.col("text")))
         ).alias("s")
     )
-    width = SIMHASH_PAIR_BITS // SIMHASH_PAIR_BANDS
-    keys = sh.select(
-        F.explode(
-            F.array(
-                *[
-                    F.shiftright(F.col("s"), b * width)
-                    .bitwiseAND(F.lit((1 << width) - 1))
-                    .bitwiseOR(F.lit((b + 1) << width))
-                    for b in range(SIMHASH_PAIR_BANDS)
-                ]
-            )
-        ).alias("k")
-    )
+    keys = sh.select(F.explode(dedup.simhash_band_keys_expr(F.col("s"))).alias("k"))
     n_distinct = keys.distinct().count()
     # 200 diverse docs spread over far more than the legacy 4x16=64 keys
     assert n_distinct > 64, f"band keys not spreading: {n_distinct}"
     assert n_distinct <= SIMHASH_PAIR_BANDS * (1 << width)
+
+
+def test_simhash_bands_sit_at_the_pigeonhole_minimum(spark):
+    """SIMHASH_MAX_HAMMING differing bits, one per band, leave exactly one
+    band key shared; one more differing bit in the last band leaves none,
+    so the bands are exactly SIMHASH_MAX_HAMMING + 1 slices of 16 bits."""
+    assert dedup.SIMHASH_PAIR_BANDS == dedup.SIMHASH_MAX_HAMMING + 1 == 4
+    three = (1 << 0) | (1 << 16) | (1 << 32)
+    four = three | (1 << 48)
+
+    def shared(x: int, y: int) -> int:
+        keys = [dedup.simhash_band_keys_expr(F.lit(v).cast("long")) for v in (x, y)]
+        return spark.range(1).select(F.size(F.array_intersect(*keys))).first()[0]
+
+    for base in (0x0123456789ABCDEF, -1):
+        assert shared(base, base) == 4
+        assert shared(base, base ^ three) == 1
+        assert shared(base, base ^ four) == 0
 
 
 def test_near_dup_components_and_keep_list(spark, docs):
