@@ -509,9 +509,7 @@ def q_grid_occupancy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_profiler_spark.operators import similarity
 
     df = _t(spark, sf_dir, "embeddings")
-    return similarity.grid_occupancy_report(
-        df, threshold=0.9, n_projections=2, direction_mode="random", dim=64
-    )
+    return similarity.grid_occupancy_report(df, threshold=0.9, direction_mode="random", dim=64)
 
 
 def q_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -44,11 +44,6 @@ _DROP_BLOCKS = (
     "(?s)<!--.*?-->",
 )
 
-# Tags whose END (or self-closing occurrence) marks a line break when
-# ``block_newlines=True``: paragraph-level structure a text view should
-# preserve as "\n". Explicit alternation, ASCII classes only.
-_BLOCK_TAG_RE = "(?i)<(?:br[ ]?/?|/p|/div|/h[1-6]|/li|/tr|/table|/blockquote|/pre)>"
-
 # Any remaining tag. [^>]* cannot backtrack pathologically and parses the
 # same under both engines.
 _ANY_TAG_RE = "(?s)</?[A-Za-z!][^>]*>"
@@ -66,17 +61,15 @@ ENTITIES: tuple[tuple[str, str], ...] = (
 )
 
 
-def html_to_text_expr(html_str: Column, block_newlines: bool = False) -> Column:
+def html_to_text_expr(html_str: Column) -> Column:
     """Extracted text of an HTML STRING column (use :func:`decode_html_expr`
-    for the binary column). Pipeline order — drop non-content blocks, mark
-    block boundaries (optional), strip tags, decode entities — mirrors
-    every classic extractor; each step is one ``regexp_replace``/
-    ``replace`` so the whole chain fuses into a single projection."""
+    for the binary column). Pipeline order — drop non-content blocks, strip
+    tags, decode entities — mirrors every classic extractor; each step is
+    one ``regexp_replace``/``replace`` so the whole chain fuses into a
+    single projection."""
     out = html_str
     for pat in _DROP_BLOCKS:
         out = F.regexp_replace(out, pat, "")
-    if block_newlines:
-        out = F.regexp_replace(out, _BLOCK_TAG_RE, "\n")
     out = F.regexp_replace(out, _ANY_TAG_RE, "")
     for ent, ch in ENTITIES:
         out = F.replace(out, F.lit(ent), F.lit(ch))
@@ -90,8 +83,7 @@ def decode_html_expr(html_bin: Column) -> Column:
     conf is set), which is why the pipeline runs the exact-byte-offset
     UTF-8 gate (``io/intake.py::utf8_report``) BEFORE trusting
     extraction — same ordering as the reference's catastrophic-encoding
-    gate. Block tags get no newlines: the stored text is the flat
-    extraction."""
+    gate."""
     return html_to_text_expr(html_bin.cast("string"))
 
 

@@ -62,6 +62,12 @@ def fingerprint_digest(row: dict) -> dict:
     }
 
 
+def utc_now() -> str:
+    """The current UTC time as ``YYYY-MM-DDTHH:MM:SSZ``: the one timestamp
+    format of audit events and run manifests."""
+    return time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
+
+
 class AuditLog:
     """Append-only JSONL event stream for one run workspace.
 
@@ -76,7 +82,7 @@ class AuditLog:
 
     def event(self, event_type: str, run_id: str, **fields) -> dict:
         rec = {
-            "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+            "ts": utc_now(),
             "event": event_type,
             "run_id": run_id,
             **fields,

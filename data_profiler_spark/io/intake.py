@@ -122,7 +122,7 @@ def line_ending_style(agg_row: dict) -> tuple[str, bool]:
 
 def line_ending_warnings(agg_row: dict) -> list[str]:
     """Warning codes from the S3 counts row — feeds ``warnings_df`` →
-    ``error_rollup`` alongside the sniff mismatch warnings."""
+    ``error_rollup``."""
     _, mixed = line_ending_style(agg_row)
     return ["W_MIXED_LINE_ENDINGS"] if mixed else []
 
@@ -183,40 +183,25 @@ def sniff_quoting(lines: list[str], delimiter: str) -> tuple[bool, float]:
     return conf >= 0.2, round(conf, 4)
 
 
-def sniff_csv(
-    spark: SparkSession, path: str, provided_delimiter: str | None = None, provided_quoted: bool | None = None
-) -> dict:
-    """Driver-side sniff of delimiter + quoting from the file head.
-
-    When the caller supplies its configured ``provided_delimiter`` /
-    ``provided_quoted``, detections are compared against them (reference
-    ``runs.py:630-691``): a high-confidence (>0.7) disagreement emits
-    ``W_DELIMITER_MISMATCH`` / ``W_QUOTING_MISMATCH`` in ``warnings`` and
-    the DETECTED value wins — ``delimiter``/``quoted`` in the returned dict
-    are always what downstream parsing should use. Feed ``warnings`` to
-    :func:`warnings_df` + ``operators.errors.error_rollup`` to record them
-    (both codes are non-catastrophic in ``ERROR_CODES``).
-    """
+def sniff_csv(spark: SparkSession, path: str) -> dict:
+    """Driver-side sniff of delimiter + quoting from the file head:
+    ``delimiter``/``quoted`` are what downstream parsing should use, with
+    their vote confidences."""
     lines = [r["value"] for r in spark.read.text(path).limit(20).collect()]
     delim, dconf = sniff_delimiter(lines)
     quoted, qconf = sniff_quoting(lines, delim)
-    warnings: list[str] = []
-    if provided_delimiter is not None and delim != provided_delimiter and dconf > 0.7:
-        warnings.append("W_DELIMITER_MISMATCH")
-    if provided_quoted is not None and quoted != provided_quoted and qconf > 0.7:
-        warnings.append("W_QUOTING_MISMATCH")
     return {
         "delimiter": delim,
         "delimiter_confidence": round(dconf, 4),
         "quoted": quoted,
         "quoting_confidence": round(qconf, 4),
-        "warnings": warnings,
     }
 
 
 def warnings_df(spark: SparkSession, warnings: list[str]) -> DataFrame:
-    """Sniff warnings as error-schema rows (line 0 = file-level) so they
-    flow through the same ``error_rollup`` as parse errors."""
+    """File-level warnings (:func:`line_ending_warnings`) as error-schema
+    rows (line 0 = file-level) so they flow through the same
+    ``error_rollup`` as parse errors."""
     from ..operators.errors import ERROR_SCHEMA
 
     return spark.createDataFrame([(w, 0, None) for w in warnings], ERROR_SCHEMA)

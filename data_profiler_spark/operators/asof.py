@@ -23,7 +23,7 @@ broken by preferring the right row (side order 0 < 1), matching the
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -34,16 +34,14 @@ def asof_join(
     by_left: str,
     by_right: str,
     value_cols: list[str],
-    tolerance: Column | None = None,
 ) -> DataFrame:
     """Left as-of join: for each left row, the latest right row with
     ``right[on] <= left[on]`` and matching key.
 
     on: timestamp/ordering column name (present in both sides).
     by_left / by_right: equality key column names.
-    value_cols: right-side columns to carry (null when no prior right row).
-    tolerance: optional max age (e.g. ``F.expr("interval 30 days")``) —
-    matches older than ``left[on] - tolerance`` are nulled out.
+    value_cols: right-side columns to carry (null when no prior right row),
+    as ``_asof_<col>``, beside the match's timestamp ``_asof_ts``.
     """
     lt = left.withColumn("_side", F.lit(1)).withColumn("_key", F.col(by_left))
     rt = (
@@ -73,10 +71,5 @@ def asof_join(
         .alias("_asof_ts"),
     )
     out = carried.filter(F.col("_side") == 1)
-    if tolerance is not None:
-        fresh = F.col("_asof_ts") >= F.col(on) - tolerance
-        for c in value_cols:
-            out = out.withColumn(f"_asof_{c}", F.when(fresh, F.col(f"_asof_{c}")))
-        out = out.withColumn("_asof_ts", F.when(fresh, F.col("_asof_ts")))
     drop = ["_side", "_key"] + value_cols
     return out.drop(*[c for c in drop if c in out.columns and c not in left.columns])

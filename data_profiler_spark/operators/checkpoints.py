@@ -3,13 +3,13 @@
 Several operators cut a DataFrame's lineage on purpose — either so two
 consumers don't recompute an expensive upstream (``minhash_lsh_pairs``'s
 shingle sets and band keys) or so AQE sees plain shuffle stages it can
-skew-split (``line_dedup(skew_safe=True)``). ``localCheckpoint`` is the cheap way to
-do that, but its blocks live in executor storage and are NOT fault
-tolerant: on a multi-executor cluster, losing an executor AFTER
-materialization fails the job instead of recomputing (the lineage is
-gone). That is acceptable on a single-JVM run and often acceptable for
-short-lived intermediates, but a 100 TB run should prefer a RELIABLE
-checkpoint when one is available.
+skew-split (``line_dedup``'s over-threshold line counts).
+``localCheckpoint`` is the cheap way to do that, but its blocks live in
+executor storage and are NOT fault tolerant: on a multi-executor cluster,
+losing an executor AFTER materialization fails the job instead of
+recomputing (the lineage is gone). That is acceptable on a single-JVM run
+and often acceptable for short-lived intermediates, but a 100 TB run
+should prefer a RELIABLE checkpoint when one is available.
 
 :func:`materialize` encodes the policy in one place: if the session has a
 reliable checkpoint directory configured (``sc.setCheckpointDir`` — on a

@@ -102,7 +102,6 @@ def line_dedup(
     text_col: str = "text",
     max_occurrences: int = 1,
     min_chars: int = DEFAULT_LINE_MIN_CHARS,
-    skew_safe: bool = False,
 ) -> DataFrame:
     """Drop corpus-duplicated lines from every document (C4 §2.2 rule,
     re-expressed corpus-wide): a line with more than ``max_occurrences``
@@ -116,29 +115,30 @@ def line_dedup(
     the surviving lines re-joined with ``\\n`` in original order (null
     text stays null).
 
-    Plan shape: explode → count agg (partial-agg, skew-safe) → hash join
-    back → per-doc regroup. Line text crosses the wire once per stage;
-    the join is keyed on ``md5(line)`` so the build side carries no text
-    payload. The build side is pre-filtered to OVER-THRESHOLD lines only
-    (a singleton line is kept by definition, so ``NULL`` after the left
-    join means keep): on real corpora the overwhelming majority of lines
-    are singletons, so the join's build side shrinks from |distinct
-    lines| to |duplicated lines| and AQE routinely broadcast-converts it.
+    Plan shape: explode → count agg (partial-agg, skew-safe) →
+    materialized over-threshold counts → hash join back → per-doc
+    regroup. Line text crosses the wire once per stage; the join is keyed
+    on ``md5(line)`` so the build side carries no text payload. The build
+    side is pre-filtered to OVER-THRESHOLD lines only (a singleton line is
+    kept by definition, so ``NULL`` after the left join means keep): on
+    real corpora the overwhelming majority of lines are singletons, so the
+    join's build side shrinks from |distinct lines| to |duplicated lines|
+    and AQE routinely broadcast-converts it.
 
-    ``skew_safe=True`` additionally materializes the filtered counts
-    before the join (reliable ``checkpoint`` when the session has a
-    checkpoint dir — the executor-loss-safe cluster configuration — else
-    ``localCheckpoint``; see ``operators.checkpoints``). Measured finding (tests/test_skew_stress.py):
-    AQE's skew-join split only matches an SMJ whose children are BOTH
-    ``Sort(ShuffleQueryStage)`` — with the count aggregate's final
-    HashAggregate sitting between Sort and the shuffle stage, the rule
-    can't split even the PROBE side, and one boilerplate line at 10^12
-    docs pins its whole partition on one task. Checkpointing materializes
-    the (small, duplicates-only) counts so both join children become
-    plain shuffle stages and the hot ``md5(line)`` partitions split.
-    Costs one extra materialization + shuffle of the duplicates table —
-    pay it on boilerplate-heavy corpora, skip it when the build side
-    broadcasts anyway.
+    The filtered counts are materialized before the join (reliable
+    ``checkpoint`` when the session has a checkpoint dir — the
+    executor-loss-safe cluster configuration — else ``localCheckpoint``;
+    see ``operators.checkpoints``). Measured finding
+    (tests/test_skew_stress.py): AQE's skew-join split only matches an SMJ
+    whose children are BOTH ``Sort(ShuffleQueryStage)`` — with the count
+    aggregate's final HashAggregate sitting between Sort and the shuffle
+    stage, the rule can't split even the PROBE side, and one boilerplate
+    line at 10^12 docs pins its whole partition on one task. Materializing
+    the (small, duplicates-only) counts makes both join children plain
+    shuffle stages, so the hot ``md5(line)`` partitions split. On 10,000
+    uniform or skewed bench pages at local[4], where the build side
+    broadcasts, the materialized shape runs the same 9 stages as the plain
+    join, at a median wall time within run-to-run noise (BASELINE.md).
     """
     lines = _lines(df, id_col, text_col)
     counts = (
@@ -146,8 +146,7 @@ def line_dedup(
         .filter(F.col("n_occurrences") > max_occurrences)
         .select("line_hash", "first_id", "first_pos")
     )
-    if skew_safe:
-        counts = materialize(counts)
+    counts = materialize(counts)
     joined = lines.join(
         counts, F.md5(F.col("line")) == counts["line_hash"], "left"
     )
@@ -446,7 +445,6 @@ def duplicated_span_report(
     text_col: str = "text",
     window: int = DEFAULT_SPAN_TOKENS,
     stride: int = DEFAULT_SPAN_STRIDE,
-    max_tokens: int = DEFAULT_SPAN_MAX_TOKENS,
 ) -> DataFrame:
     """Per-document fraction of winnowed span fingerprints that also
     occur in OTHER documents — the repeated-substring signal behind
@@ -469,15 +467,15 @@ def duplicated_span_report(
     (map-side combinable, 32-char keys) → join back → per-doc rollup.
     The count agg is immune to hot spans (partial agg); the join back is
     probe-side skewed on boilerplate spans, which AQE skew-split handles.
-    Only the first ``max_tokens`` tokens per document are analyzed
-    (:data:`DEFAULT_SPAN_MAX_TOKENS`) — the window-hash array is one md5
-    per token position IN THE ROW, so an unbounded pathological page
-    would be a multi-hundred-MB row; 50k tokens exceeds any real web
-    page and overlap detection on a long prefix is standard practice.
+    Only the first :data:`DEFAULT_SPAN_MAX_TOKENS` tokens per document
+    are analyzed — the window-hash array is one md5 per token position IN
+    THE ROW, so an unbounded pathological page would be a multi-hundred-MB
+    row; 50k tokens exceeds any real web page and overlap detection on a
+    long prefix is standard practice.
     """
     toks = df.select(
         F.col(id_col),
-        F.slice(words_expr(F.col(text_col)), 1, max_tokens).alias("_tk"),
+        F.slice(words_expr(F.col(text_col)), 1, DEFAULT_SPAN_MAX_TOKENS).alias("_tk"),
     )
     hashed = toks.select(
         F.col(id_col), all_span_hashes_from_tokens(F.col("_tk"), window).alias("_hs")

@@ -13,9 +13,9 @@ bounded companion.
 Engine shape: per side one filter + one ≤ ``bins``-key aggregate (map-side
 combinable — no skew exposure at any size), then a bins-sized outer join
 and pure arithmetic. The only driver action is the shared min/max bounds
-resolution (one union agg), skipped entirely when the caller pins
-``lo``/``hi`` (the deployment shape: bounds fixed once per metric so runs
-are comparable across months).
+resolution (one union agg), skipped entirely when a
+:func:`drift_summary` caller pins ``lo``/``hi`` (the deployment shape:
+bounds fixed once per metric so runs are comparable across months).
 
 Binning matches ``profiler.histogram`` (reference A6 semantics): width
 ``(hi-lo)/bins``, max folded into the last bin; values outside
@@ -67,8 +67,6 @@ def distribution_drift(
     df_b: DataFrame,
     col: str,
     bins: int = 10,
-    lo: float | None = None,
-    hi: float | None = None,
 ) -> DataFrame:
     """Per-bin drift table between ``df_a`` (baseline) and ``df_b``
     (current) on numeric ``col``: one row per bin —
@@ -78,8 +76,8 @@ def distribution_drift(
     are clamped to :data:`PSI_EPS` inside the log AND the difference —
     the standard smoothing, kept identical in the oracle so the numbers
     hash-match. Sum ``psi_contrib`` for the index (:func:`drift_summary`
-    does, plus TVD)."""
-    lo, hi, width, j = _joined_bins(df_a, df_b, col, bins, lo, hi)
+    does, plus TVD). The bounds are the pooled min/max of both sides."""
+    lo, hi, width, j = _joined_bins(df_a, df_b, col, bins, None, None)
     tot = j.select(
         "*",
         F.sum("cnt_a").over(_all()).alias("_na"),

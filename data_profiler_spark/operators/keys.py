@@ -24,7 +24,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from itertools import combinations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .validators import is_null_like
@@ -79,6 +79,16 @@ def candidate_keys(
     return out[:top]
 
 
+def _null_key(key_cols: list[str]) -> Column:
+    """True when any key member is null-like: the rows that duplicate
+    grouping skips. ``is_null_like`` is never null, so the negation keeps
+    exactly the rows with every member present."""
+    pred = is_null_like(F.col(key_cols[0]))
+    for c in key_cols[1:]:
+        pred = pred | is_null_like(F.col(c))
+    return pred
+
+
 def duplicate_groups(
     df: DataFrame, key_cols: list[str], top: int = 10, id_col: str | None = None
 ) -> DataFrame:
@@ -88,9 +98,7 @@ def duplicate_groups(
 
     Returns (key columns..., dup_count[, example_ids]) — deterministic
     order (count desc, key asc)."""
-    non_null = df
-    for c in key_cols:
-        non_null = non_null.filter(~is_null_like(F.col(c)))
+    non_null = df.filter(~_null_key(key_cols))
     aggs = [F.count(F.lit(1)).alias("dup_count")]
     if id_col is not None:
         aggs.append(F.slice(F.array_sort(F.collect_list(id_col)), 1, 5).alias("example_ids"))
@@ -113,9 +121,7 @@ def duplicate_stats(df: DataFrame, key_cols: list[str]) -> dict:
     ``total_rows`` before its null skip). One count + one groupBy agg;
     aggregates only, never per-key rows on the driver."""
     total_rows = df.count()
-    non_null = df
-    for c in key_cols:
-        non_null = non_null.filter(~is_null_like(F.col(c)))
+    non_null = df.filter(~_null_key(key_cols))
     dup = (
         non_null.groupBy(*key_cols)
         .agg(F.count(F.lit(1)).alias("n"))
@@ -137,7 +143,4 @@ def duplicate_stats(df: DataFrame, key_cols: list[str]) -> dict:
 def null_key_count(df: DataFrame, key_cols: list[str]) -> int:
     """Count of rows excluded from duplicate grouping for a null key member
     (reference ``keys.py:254-280`` skip-and-count)."""
-    pred = is_null_like(F.col(key_cols[0]))
-    for c in key_cols[1:]:
-        pred = pred | is_null_like(F.col(c))
-    return df.filter(pred).count()
+    return df.filter(_null_key(key_cols)).count()

@@ -14,8 +14,7 @@ broadcast of a whole side. This operator makes the range join join-shaped
 Every true (point, interval) pair shares the point's bucket by
 construction, so the join is LOSSLESS; cost is one shuffle on bucket keys
 with fan-out |intervals| × (len/w + 1). AQE's skew-join splitting handles
-a bucket that happens to be hot. An optional equi-key (e.g. user id) rides
-along in the join key, shrinking buckets further.
+a bucket that happens to be hot.
 
 Reference parity note: the reference has no range join (single-table
 profiler); this is part of the training-data-pipeline extension surface
@@ -24,7 +23,7 @@ profiler); this is part of the training-data-pipeline extension surface
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -35,12 +34,11 @@ def point_in_interval_join(
     start_col: str,
     end_col: str,
     bucket_width: float,
-    by: str | None = None,
 ) -> DataFrame:
     """Inner-join point rows to every interval row with
     ``start <= point <= end`` (numeric columns; cast timestamps to epoch
-    first). ``by`` adds an equality key to the join (left-outer semantics
-    belong to :mod:`.asof`-style carry-forward, not here).
+    first). Left-outer semantics belong to :mod:`.asof`-style
+    carry-forward, not here.
 
     Column collisions: interval columns that also exist on the points side
     must be renamed by the caller (standard join hygiene).
@@ -56,6 +54,5 @@ def point_in_interval_join(
             )
         ),
     )
-    keys = ["_rb"] + ([by] if by else [])
     cond = (F.col(point_col) >= F.col(start_col)) & (F.col(point_col) <= F.col(end_col))
-    return p.join(iv, keys).filter(cond).drop("_rb")
+    return p.join(iv, "_rb").filter(cond).drop("_rb")

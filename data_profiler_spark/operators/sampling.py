@@ -32,6 +32,12 @@ _HASH_BITS = 52
 _HASH_LEVEL_BITS = 12  # 4096 buckets per hash refinement level
 # Backstop on refinement levels; real inputs need O(log n) of them.
 MAX_REFINE_LEVELS = 20
+# token_budget_sample refines its boundary bin until it holds at most this
+# many rows, then sorts them in one task.
+BOUNDARY_CUTOFF = 100_000
+# stratified_sample_exact ranks a stratum of at most this many rows in one
+# window task; larger strata take the hash-threshold path first.
+MAX_WINDOW_ROWS = 1_000_000
 
 
 def token_budget_sample(
@@ -41,27 +47,24 @@ def token_budget_sample(
     tokens: Column,
     id_col: str = "doc_id",
     bins: int = DEFAULT_BINS,
-    lo: float = 0.0,
-    hi: float = 1.0,
-    boundary_cutoff: int = 100_000,
 ) -> DataFrame:
     """Select documents in priority order until the token budget is spent.
 
     Exact semantics (matched by the DuckDB oracle): order all docs by
     (priority DESC, md5(id) ASC); keep each doc whose running token total
     INCLUDING itself is ≤ ``budget_tokens``. Null priorities sort last
-    (coalesced to ``lo``).
+    (coalesced to 0).
 
     Scale shape — ITERATIVE HISTOGRAM REFINEMENT, never a global sort
     (the naive ``Window.orderBy`` cumsum runs on a single partition):
 
-    1. Bin candidates by priority over [``lo``, ``hi``) into ``bins``
+    1. Bin candidates by priority over [0, 1) into ``bins``
        buckets; one map-side-combinable agg → per-bin token totals +
        row counts (≤ ``bins`` rows on the driver).
     2. Driver scans bins highest-first: bins whose cumulative total fits
        the budget are selected WHOLE (a pure filter); the single
        boundary bin gets the leftover budget.
-    3. If the boundary bin still holds > ``boundary_cutoff`` rows, ZOOM:
+    3. If the boundary bin still holds > :data:`BOUNDARY_CUTOFF` rows, ZOOM:
        re-bin just those rows over the bin's own priority sub-range and
        repeat. Equal priorities never separate under zoom, so when the
        boundary bin collapses to ONE distinct priority (tracked in the
@@ -69,7 +72,7 @@ def token_budget_sample(
        uniform by construction, bucketed by 12-bit prefix ranges
        (order-compatible with the ``_tb ASC`` tie-break) — which cuts
        candidates ~4096× per level regardless of data skew.
-    4. The final ≤ ``boundary_cutoff`` candidates get the only sort — a
+    4. The final ≤ :data:`BOUNDARY_CUTOFF` candidates get the only sort — a
        single bounded task. Driver state stays ≤ ``bins`` rows per
        level; levels are O(log(n)), with a backstop of
        :data:`MAX_REFINE_LEVELS`.
@@ -79,15 +82,12 @@ def token_budget_sample(
     single-level histogram would funnel most of the corpus into one
     boundary bin and sort it on one task.
 
-    Returns ``(id, priority, tokens)`` for the selected docs. ``lo`` /
-    ``hi`` bound the priority range (default [0, 1] — the engine's
-    quality-score range); out-of-range values clamp into the edge bins,
-    which stays exact because zoom and the final sort use the raw
-    priority, not the bin.
+    Returns ``(id, priority, tokens)`` for the selected docs. The first
+    histogram spans [0, 1], the engine's quality-score range; out-of-range
+    priorities clamp into the edge bins, which stays exact because zoom
+    and the final sort use the raw priority, not the bin.
     """
-    if not (float(hi) > float(lo)):
-        raise ValueError("token_budget_sample needs hi > lo (a zero-width priority range cannot bin)")
-    prio = F.coalesce(priority.cast("double"), F.lit(float(lo)))
+    prio = F.coalesce(priority.cast("double"), F.lit(0.0))
     base = df.select(
         F.col(id_col),
         prio.alias("priority"),
@@ -101,12 +101,12 @@ def token_budget_sample(
     cand = base
     budget_left = int(budget_tokens)
     mode = "prio"
-    cur_lo, cur_hi = float(lo), float(hi)
+    cur_lo, cur_hi = 0.0, 1.0
     hash_shift = _HASH_BITS - _HASH_LEVEL_BITS
     boundary_rows: int | None = None  # unknown before the first histogram
 
     for _level in range(MAX_REFINE_LEVELS):
-        if boundary_rows is not None and boundary_rows <= boundary_cutoff:
+        if boundary_rows is not None and boundary_rows <= BOUNDARY_CUTOFF:
             break
         if mode == "prio":
             span = cur_hi - cur_lo
@@ -230,12 +230,22 @@ def _ranked_quota_filter(
     )
 
 
+def _stratum_counts(df: DataFrame, strata_col: str) -> dict:
+    """``{stratum: row count}`` of ``df``, one row per stratum on the
+    driver (a NULL stratum is the key ``None``)."""
+    return {
+        r["s"]: r["c"]
+        for r in df.groupBy(F.col(strata_col).alias("s"))
+        .agg(F.count(F.lit(1)).alias("c"))
+        .collect()
+    }
+
+
 def stratified_sample_exact(
     df: DataFrame,
     strata_col: str,
     n_per_stratum: int | dict,
     id_col: str = "doc_id",
-    max_window_rows: int = 1_000_000,
 ) -> DataFrame:
     """Exactly ``min(n, stratum size)`` rows per stratum, chosen by
     md5-hash rank of the id — deterministic, seedless, and uniform-ish
@@ -248,7 +258,7 @@ def stratified_sample_exact(
     Skew shape: the per-stratum ranking window funnels each stratum onto
     one task, so a corpus-dominating stratum (80% one language) would
     sort a near-corpus-sized partition. Strata larger than
-    ``max_window_rows`` therefore take a HASH-THRESHOLD path first: keep
+    :data:`MAX_WINDOW_ROWS` therefore take a HASH-THRESHOLD path first: keep
     only rows whose 52-bit hash prefix < t where
     ``t ≈ 4·n/|stratum|`` of the hash space — the n smallest hashes are
     all below t whenever ≥ n rows survive, so ranking the ~4n survivors
@@ -264,13 +274,8 @@ def stratified_sample_exact(
             return int(n_per_stratum.get(s, 0))
         return int(n_per_stratum)
 
-    sizes = {
-        r["s"]: r["c"]
-        for r in df.groupBy(F.col(strata_col).alias("s"))
-        .agg(F.count(F.lit(1)).alias("c"))
-        .collect()
-    }
-    big = {s for s, c in sizes.items() if c > max_window_rows}
+    sizes = _stratum_counts(df, strata_col)
+    big = {s for s, c in sizes.items() if c > MAX_WINDOW_ROWS}
     if not big:
         return _ranked_quota_filter(df, strata_col, n_per_stratum, w)
 
@@ -305,12 +310,7 @@ def stratified_sample_exact(
             c = match(s) & (hash_key < thresholds[s])
             cond = c if cond is None else (cond | c)
         survivors = df.filter(cond)
-        got = {
-            r["s"]: r["c"]
-            for r in survivors.groupBy(F.col(strata_col).alias("s"))
-            .agg(F.count(F.lit(1)).alias("c"))
-            .collect()
-        }
+        got = _stratum_counts(survivors, strata_col)
         short = [
             s for s in big
             if got.get(s, 0) < min(n_of(s), sizes[s]) and thresholds[s] < space
@@ -392,12 +392,7 @@ def mixture_sample(
     if None in weights:
         cond = cond | F.col(strata_col).isNull()
     pool = df.filter(cond)
-    sizes = {
-        r["s"]: r["c"]
-        for r in pool.groupBy(F.col(strata_col).alias("s"))
-        .agg(F.count(F.lit(1)).alias("c"))
-        .collect()
-    }
+    sizes = _stratum_counts(pool, strata_col)
     alloc = mixture_allocation(sizes, weights, total)
     if not alloc:
         return pool.limit(0)

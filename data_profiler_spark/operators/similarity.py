@@ -309,6 +309,11 @@ def principal_directions(
     return out
 
 
+# method="grid" projects onto m directions and joins each cell to its 3^m
+# neighbors; the pairs and grid_occupancy_report share this one m, so the
+# report always describes the grid the pairs run.
+GRID_PROJECTIONS = 2
+
 # method="lsh" banding: p sign planes per band, b bands, seeded planes
 LSH_PLANES_PER_BAND = 8
 LSH_BANDS = 16
@@ -345,47 +350,43 @@ def _resolve_grid(
     df: DataFrame,
     threshold: float,
     vec_col: str,
-    n_projections: int,
     dim: int | None,
-    directions: list[list[float]] | None,
     direction_mode: str,
 ) -> tuple[float, int, list[list[float]]] | None:
-    """(cell width, dim, unit directions) for the projection grid, or None
-    when the input is empty. ``dim`` given by the caller skips the extra
-    ``first()`` driver job; explicit ``directions`` skip direction fitting."""
+    """(cell width, dim, :data:`GRID_PROJECTIONS` unit directions) for the
+    projection grid, or None when the input is empty. ``dim`` given by the
+    caller skips the extra ``first()`` driver job."""
     width = max((2.0 - 2.0 * threshold), 1e-12) ** 0.5
     dim = _vector_dim(df, vec_col, dim)
     if dim is None:
         return None
-    if directions is not None:
-        dirs = directions[:n_projections]
-    elif direction_mode == "pca":
-        dirs = principal_directions(df, vec_col, n_projections, dim)
+    if direction_mode == "pca":
+        dirs = principal_directions(df, vec_col, GRID_PROJECTIONS, dim)
         if dirs is None:
             return None
     else:
-        dirs = projection_directions(dim, n_projections)
+        dirs = projection_directions(dim, GRID_PROJECTIONS)
     return width, dim, dirs
 
 
-def _cell_key(n_projections: int, salt_col: Column | None = None) -> Column:
+def _cell_key(salt_col: Column | None = None) -> Column:
     """String key of the own grid cell from the ``_c`` coordinate array;
     ``salt_col`` appends a salt component (see ``verify_salt``)."""
-    parts = [F.element_at(F.col("_c"), j + 1).cast("string") for j in range(n_projections)]
+    parts = [F.element_at(F.col("_c"), j + 1).cast("string") for j in range(GRID_PROJECTIONS)]
     if salt_col is not None:
         parts.append(salt_col.cast("string"))
     return F.concat_ws(",", *parts)
 
 
-def _neighbor_keys(n_projections: int, salts: int = 1) -> Column:
+def _neighbor_keys(salts: int = 1) -> Column:
     """All 3^m neighbor-cell keys (own cell included) from ``_c``; with
     ``salts`` > 1 each neighbor key is replicated once per salt value (the
     right side of a salted hot-cell join)."""
     keys = []
-    for e in itertools.product((-1, 0, 1), repeat=n_projections):
+    for e in itertools.product((-1, 0, 1), repeat=GRID_PROJECTIONS):
         parts = [
             (F.element_at(F.col("_c"), j + 1) + F.lit(e[j])).cast("string")
-            for j in range(n_projections)
+            for j in range(GRID_PROJECTIONS)
         ]
         if salts > 1:
             keys.extend(F.concat_ws(",", *parts, F.lit(str(s))) for s in range(salts))
@@ -399,7 +400,6 @@ def embedding_near_dup_pairs(
     threshold: float = 0.45,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_projections: int = 2,
     round_to: int = ROUND_DIGITS,
     method: str = "grid",
     dim: int | None = None,
@@ -408,8 +408,9 @@ def embedding_near_dup_pairs(
     """Embedding-cosine near-dup pairs via LOSSLESS projection-grid blocking.
 
     Default ``method='grid'``: project each L2-normalized vector onto
-    ``n_projections`` fixed unit directions; ``cosine(a,b) >= t`` implies
-    ``||â-b̂|| <= sqrt(2-2t) =: w`` (unit sphere chord), and a 1-Lipschitz
+    :data:`GRID_PROJECTIONS` (m = 2) fixed unit directions;
+    ``cosine(a,b) >= t`` implies ``||â-b̂|| <= sqrt(2-2t) =: w`` (unit
+    sphere chord), and a 1-Lipschitz
     projection therefore moves by at most ``w`` — so a qualifying pair lands
     in the same or an adjacent cell of a width-``w`` grid in EVERY
     projection. The blocking join is asymmetric: the left side keys on its
@@ -429,7 +430,7 @@ def embedding_near_dup_pairs(
     any unit directions (lossless blocking); only the join cost changes.
     Check the blocking factor BEFORE paying the join with
     :func:`grid_occupancy_report` (same grid; it also takes seeded random
-    or precomputed directions — the analog of ``dedup.shingle_df_report``).
+    directions — the analog of ``dedup.shingle_df_report``).
 
     Pass ``dim=`` when known (skips a ``first()`` driver job); an empty
     input returns an empty pairs DataFrame either way. NULL embeddings
@@ -510,9 +511,7 @@ def embedding_near_dup_pairs(
         # the (tiny) surviving output, never the candidate stream
         pairs = _key_pairs(keyed, keyed, ["_k"], carry=("_v", "_n"))
         return _verified_cosine(pairs, dim, threshold, round_to).distinct()
-    grid = _resolve_grid(
-        df, threshold, vec_col, n_projections, dim, directions=None, direction_mode="pca"
-    )
+    grid = _resolve_grid(df, threshold, vec_col, dim, direction_mode="pca")
     if grid is None:
         return df.sparkSession.createDataFrame([], empty_schema)
     width, dim, dirs = grid
@@ -560,8 +559,8 @@ def embedding_near_dup_pairs(
     salt_col = (
         F.pmod(F.xxhash64(F.col("_id")), F.lit(verify_salt)) if verify_salt > 1 else None
     )
-    cell_key = _cell_key(n_projections, salt_col)
-    neighbor_keys = _neighbor_keys(n_projections, verify_salt)
+    cell_key = _cell_key(salt_col)
+    neighbor_keys = _neighbor_keys(verify_salt)
     own = proj.select("_id", "_v", "_n", cell_key.alias("_k"))
     # explode_outer: keeps the projection expression above the exchange
     # (same implicit-size()>0 pushdown trap as operators/dedup.py).
@@ -580,9 +579,7 @@ def grid_occupancy_report(
     df: DataFrame,
     threshold: float = 0.9,
     vec_col: str = "embedding",
-    n_projections: int = 2,
     dim: int | None = None,
-    directions: list[list[float]] | None = None,
     direction_mode: str = "pca",
 ) -> DataFrame:
     """Blocking-factor report for :func:`embedding_near_dup_pairs`' grid —
@@ -596,11 +593,11 @@ def grid_occupancy_report(
     the 3^m neighbor keys, cost |cells|·3^m, never touching vectors),
     ``total_pairs`` (n·(n-1)/2) and ``blocking_factor`` =
     candidate_pairs / total_pairs (1.0 = degraded to all-pairs). Uses the
-    same directions/width resolution as the pairs function, so the numbers
-    are exact for the run they predict. NULL embeddings are excluded,
-    matching the pairs function."""
+    same :data:`GRID_PROJECTIONS`, directions and width resolution as the
+    pairs function, so the numbers are exact for the run they predict.
+    NULL embeddings are excluded, matching the pairs function."""
     df = df.filter(F.col(vec_col).isNotNull())
-    grid = _resolve_grid(df, threshold, vec_col, n_projections, dim, directions, direction_mode)
+    grid = _resolve_grid(df, threshold, vec_col, dim, direction_mode)
     spark = df.sparkSession
     if grid is None:
         return spark.range(1).select(
@@ -634,10 +631,8 @@ def grid_occupancy_report(
     )
     # ordered collision count T = Σ_a Σ_{b∈N27(a)} c_a·c_b (self included);
     # the asymmetric join emits each unordered pair once → (T - n) / 2
-    ka = cells.select(_cell_key(n_projections).alias("_k"), F.col("_cnt").alias("_ca"))
-    kb = cells.select(
-        F.explode_outer(_neighbor_keys(n_projections)).alias("_k"), F.col("_cnt").alias("_cb")
-    )
+    ka = cells.select(_cell_key().alias("_k"), F.col("_cnt").alias("_ca"))
+    kb = cells.select(F.explode_outer(_neighbor_keys()).alias("_k"), F.col("_cnt").alias("_cb"))
     t = ka.join(kb, "_k").agg(F.sum(F.col("_ca") * F.col("_cb")).alias("_t"))
     return (
         occ.crossJoin(t)

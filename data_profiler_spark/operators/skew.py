@@ -1,30 +1,21 @@
-"""Key-skew measurement — the evidence behind the pipeline's salting.
+"""Key-skew measurement: how unevenly a key spreads a table's rows.
 
 The north rule requires "partitioning / shuffle / skew handled
-explicitly": ``pipeline.url_salt`` defuses host-level skew, and this
-module MEASURES the skew so the salt-bucket count is chosen from data
-instead of folklore. One groupBy on the key (map-side partial agg) plus
-one tiny summary agg — cost is one shuffle whose volume is the number of
-distinct keys per task.
+explicitly": ``pipeline.url_salt`` defuses host-level skew with a fixed
+bucket count (``pipeline.SALT_BUCKETS``), and this module MEASURES the
+skew that salting answers. One groupBy on the key (map-side partial agg)
+plus one tiny summary agg — cost is one shuffle whose volume is the
+number of distinct keys per task.
 
 A Zipf host distribution (typical for web crawls) shows up here as
 ``skew_ratio`` (max/avg rows per key) in the hundreds-to-millions: that
-is the straggler multiplier a key-partitioned stage would suffer, and
-directly the number of salt buckets needed to flatten the hottest key to
-average-task size.
+is the straggler multiplier a key-partitioned stage would suffer.
 """
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-# The salted hottest key may hold this many times the average key's rows.
-SALT_TARGET_RATIO = 2.0
-# More salt buckets than cluster tasks only adds tiny files.
-MAX_SALT_BUCKETS = 4096
 
 
 def key_skew_report(df: DataFrame, key: Column) -> DataFrame:
@@ -46,13 +37,3 @@ def key_skew_report(df: DataFrame, key: Column) -> DataFrame:
         F.round(F.max("cnt") / F.avg("cnt"), 6).alias("skew_ratio"),
         F.round(F.max("cnt") / F.sum("cnt"), 6).alias("top1_share"),
     )
-
-
-def recommend_salt_buckets(report_row: dict) -> int:
-    """Salt buckets that flatten the hottest key to
-    :data:`SALT_TARGET_RATIO` × the average key's row count (driver-side
-    pure function over the :func:`key_skew_report` row). Power-of-two,
-    capped at :data:`MAX_SALT_BUCKETS`."""
-    ratio = float(report_row.get("skew_ratio") or 1.0)
-    need = max(1.0, ratio / SALT_TARGET_RATIO)
-    return int(min(MAX_SALT_BUCKETS, 2 ** math.ceil(math.log2(need)) if need > 1 else 1))

@@ -160,7 +160,7 @@ def date_format_counts_exprs(col: str) -> list[Column]:
     return exprs
 
 
-def detect_date_format(agg_row: dict, col: str, prefer_format: str | None = None) -> dict:
+def detect_date_format(agg_row: dict, col: str) -> dict:
     """Majority vote over the A12 aggregate row — most-common format wins,
     confidence = matched share (``profile.py:826-887``). Driver-side pure
     function (testable).
@@ -182,9 +182,8 @@ def detect_date_format(agg_row: dict, col: str, prefer_format: str | None = None
     * ``has_ambiguity`` is true when any slash-date interpretation matched
       (every MM/DD value is lexically also a DD/MM candidate) or when more
       than one format matched.
-    * ``prefer_format`` breaks exact count ties (reference's
-      ``prefer_format`` hint, profile.py:701-720); otherwise reference
-      preference order wins.
+    * exact count ties go to the earlier format in reference preference
+      order.
 
     Returned dict keys: format, confidence, ambiguous (legacy alias),
     has_ambiguity.
@@ -199,7 +198,7 @@ def detect_date_format(agg_row: dict, col: str, prefer_format: str | None = None
         return {"format": None, "confidence": 0.0, "ambiguous": False, "has_ambiguity": False}
     best = max(
         matched,
-        key=lambda k: (matched[k], k == prefer_format, -order.index(k)),
+        key=lambda k: (matched[k], -order.index(k)),
     )
     has_ambiguity = (
         counts["MM/DD/YYYY"] > 0 or counts[DD_MM_YYYY[0]] > 0 or len(matched) > 1
@@ -215,15 +214,12 @@ def detect_date_format(agg_row: dict, col: str, prefer_format: str | None = None
     }
 
 
-def date_distribution(df: DataFrame, col: str, fmt: str | None = None) -> dict[str, DataFrame]:
+def date_distribution(df: DataFrame, col: str) -> dict[str, DataFrame]:
     """A13 — counts by month / year / day-of-week over parsed dates
-    (``profile.py:889-998``). Three independent groupBys over the
+    (``profile.py:889-998``), each value parsed by its first matching
+    format (:func:`date_any_format`). Three independent groupBys over the
     already-parsed date column; each is a small-cardinality exact agg."""
-    d = date_any_format(F.col(col)) if fmt is None else parsed_date(
-        F.col(col), dict((n, p) for n, p, _ in DATE_FORMATS)[fmt],
-        dict((n, s) for n, _, s in DATE_FORMATS)[fmt],
-    )
-    parsed = df.select(d.alias("d")).filter(F.col("d").isNotNull())
+    parsed = df.select(date_any_format(F.col(col)).alias("d")).filter(F.col("d").isNotNull())
     return {
         "by_month": parsed.groupBy(F.date_format("d", "yyyy-MM").alias("month")).agg(
             F.count(F.lit(1)).alias("cnt")

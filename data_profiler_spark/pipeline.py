@@ -47,7 +47,7 @@ from .functions.langid import score_udf
 from .functions.pii import counts_struct
 from .functions.textstats import heuristic_drop_reasons_expr, signals_struct
 from .io import catalog
-from .io.audit import AuditLog, fingerprint_digest, input_fingerprint_exprs
+from .io.audit import AuditLog, fingerprint_digest, input_fingerprint_exprs, utc_now
 
 SALT_BUCKETS = 256
 
@@ -167,7 +167,7 @@ class QualityFilterPipeline:
         spark: SparkSession,
         output_path: str,
         keep_langs: tuple[str, ...] = rules.KEEP_LANGS,
-        salt_buckets: int | str = SALT_BUCKETS,
+        salt_buckets: int = SALT_BUCKETS,
         table: str | None = None,
     ):
         """``output_path`` holds the run manifest (+ parquet data in the
@@ -175,32 +175,13 @@ class QualityFilterPipeline:
         to commit batches to an Iceberg catalog table instead — each batch
         then lands as one ``overwritePartitions`` snapshot (io/catalog.py).
 
-        ``salt_buckets='auto'`` measures the host-key skew of each run's
-        batch (one column-pruned groupBy pass, ``operators.skew``) and
-        sizes the salt from the measured ``skew_ratio`` instead of the
-        static default — the chosen value is recorded in the audit log."""
+        ``salt_buckets`` is the bucket count of the url-hash salt that the
+        write repartitions on (:func:`url_salt`)."""
         self.spark = spark
         self.output_path = output_path
         self.keep_langs = keep_langs
         self.salt_buckets = salt_buckets
         self.table = table
-
-    def _resolve_salt(self, batch: DataFrame, audit: AuditLog, run_id: str) -> int:
-        if self.salt_buckets != "auto":
-            return int(self.salt_buckets)
-        from .operators.corpus import url_host_expr
-        from .operators.skew import key_skew_report, recommend_salt_buckets
-
-        rep = key_skew_report(batch, url_host_expr(F.col("url"))).collect()[0].asDict()
-        n = recommend_salt_buckets(rep)
-        audit.event(
-            "salt_chosen",
-            run_id,
-            buckets=n,
-            skew_ratio=rep.get("skew_ratio"),
-            n_keys=rep.get("n_keys"),
-        )
-        return n
 
     # -- manifest (run workspace, reference workspace.py:71-357 analog) --
     def _manifest_path(self) -> str:
@@ -226,7 +207,7 @@ class QualityFilterPipeline:
     _STAGES = ("validate", "score_write", "metrics")
 
     def _stage_start(self, manifest: dict, stage: str) -> None:
-        now = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
+        now = utc_now()
         manifest.setdefault("stages", []).append(
             {"stage": stage, "state": "running", "started_at": now, "finished_at": None}
         )
@@ -235,7 +216,7 @@ class QualityFilterPipeline:
         self._save_manifest(manifest)
 
     def _stage_finish(self, manifest: dict, stage: str) -> None:
-        now = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
+        now = utc_now()
         for entry in reversed(manifest.get("stages", [])):
             if entry["stage"] == stage and entry["state"] == "running":
                 entry["state"] = "completed"
@@ -354,7 +335,7 @@ class QualityFilterPipeline:
         truncated to 300 chars and is exception text only (error codes,
         column names, plan fragments) — never row data, keeping the
         manifest/audit PII-free."""
-        now = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
+        now = utc_now()
         for entry in manifest.get("stages", []):
             if entry["state"] == "running":
                 entry["state"] = "failed"
@@ -404,7 +385,7 @@ class QualityFilterPipeline:
         scored = output_contract(
             score_pages(batch, self.keep_langs)
             .withColumn("month", month)
-            .withColumn("salt", url_salt(self._resolve_salt(batch, audit, run_id)))
+            .withColumn("salt", url_salt(self.salt_buckets))
             .observe(
                 obs,
                 F.collect_set("month").alias("months"),
@@ -422,7 +403,7 @@ class QualityFilterPipeline:
             mode="overwrite-partitions",
         )
         elapsed = round(time.time() - t0, 3)
-        committed_at = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
+        committed_at = utc_now()
         try:
             obs_row = obs.get
         except Exception:

@@ -5,7 +5,7 @@ and ``report.html`` (``api/services/report.py:11-902``) into --output.
 
 A ``.csv``/``.csv.gz`` input (the suffix picks the codec, as in S1) runs the
 reference's CSV chain (SURVEY.md §3.1): ``sniff_csv`` → ``read_csv_with_errors``
-→ ``csv_row_errors`` and the sniff and line-ending warnings through
+→ ``csv_row_errors`` and the line-ending warnings through
 ``error_rollup`` (``E_*`` to ``profile["errors"]``, ``W_*`` to
 ``profile["warnings"]``) → on a catastrophic error, artifacts without column
 profiles and exit 1, where the reference stops (``ingest.py:884-896``) →
@@ -83,14 +83,14 @@ def _profile_csv(spark, path: str, free_text: set[str]):
     cols = [c for c in df.columns if c not in free_text]
     rows, endings = df.count(), _line_endings(spark, path)
     events = intake.csv_row_errors(spark, path, delim, quoted).unionByName(
-        intake.warnings_df(spark, sniff["warnings"] + intake.line_ending_warnings(endings))
+        intake.warnings_df(spark, intake.line_ending_warnings(endings))
     )
     rollup = errors.error_rollup(events, rows).cache()
     issues = [r.asDict() for r in rollup.collect()]
     prof = {
         "row_count": rows,
         "column_count": len(df.columns),
-        "csv": {**{k: v for k, v in sniff.items() if k != "warnings"}, "line_endings": endings},
+        "csv": {**sniff, "line_endings": endings},
         "errors": [i for i in issues if i["code"].startswith("E_")],
         "warnings": [i for i in issues if i["code"].startswith("W_")],
     }

@@ -1,10 +1,8 @@
-"""As-of join operator: matching, ties, missing matches, tolerance."""
+"""As-of join operator: matching, ties, missing matches, match age."""
 
 from __future__ import annotations
 
 import datetime as dt
-
-from pyspark.sql import functions as F
 
 from data_profiler_spark.operators.asof import asof_join
 
@@ -43,6 +41,8 @@ def test_asof_join_semantics(spark):
 
 
 def test_asof_join_tolerance(spark):
+    """The join has no maximum match age: a right row months older than
+    the left row is still its as-of match."""
     left = spark.createDataFrame(
         [(1, "k", _ts("2024-03-01T00:00:00"))], "id int, key string, t timestamp"
     )
@@ -51,10 +51,6 @@ def test_asof_join_tolerance(spark):
     )
     loose = asof_join(left, right, "t", "key", "rkey", ["val"])
     assert loose.first()["_asof_val"] == 9
-    tight = asof_join(
-        left, right, "t", "key", "rkey", ["val"], tolerance=F.expr("interval 30 days")
-    )
-    assert tight.first()["_asof_val"] is None  # match older than tolerance nulled
 
 
 def test_point_in_interval_join_lossless_and_join_shaped(spark):
@@ -85,12 +81,3 @@ def test_point_in_interval_join_lossless_and_join_shaped(spark):
     assert fast == naive and len(fast) > 0
     plan = point_in_interval_join(points, intervals, "p", "s", "e", 10.0)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoop" not in plan and "CartesianProduct" not in plan
-    # equi-key variant stays lossless
-    pk = points.withColumn("k", F.pmod("pid", F.lit(3)))
-    ik = intervals.withColumn("k", F.pmod("iid", F.lit(3)))
-    fast_k = {
-        (r["pid"], r["iid"])
-        for r in point_in_interval_join(pk, ik, "p", "s", "e", 10.0, by="k").collect()
-    }
-    naive_k = {(p, i) for (p, i) in naive if p % 3 == i % 3}
-    assert fast_k == naive_k

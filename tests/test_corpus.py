@@ -292,7 +292,7 @@ def test_duplicated_span_alignment_guarantee(spark):
         assert got[0] >= 1 and got[1] >= 1, f"missed at offset {offset}"
 
 
-def test_duplicated_span_max_tokens_cap(spark):
+def test_duplicated_span_max_tokens_cap(spark, monkeypatch):
     """Overlap beyond the analyzed prefix is (by design) invisible; the
     cap bounds per-row state for pathological documents."""
     span = " ".join(f"z{i}" for i in range(25))
@@ -300,9 +300,9 @@ def test_duplicated_span_max_tokens_cap(spark):
     docs = [(0, head + " " + span), (1, span + " tail text here now")]
     df = spark.createDataFrame(docs, "doc_id long, text string")
     full = {r["doc_id"]: r["dup_spans"] for r in corpus.duplicated_span_report(df).collect()}
+    monkeypatch.setattr(corpus, "DEFAULT_SPAN_MAX_TOKENS", 30)
     capped = {
-        r["doc_id"]: r["dup_spans"]
-        for r in corpus.duplicated_span_report(df, max_tokens=30).collect()
+        r["doc_id"]: r["dup_spans"] for r in corpus.duplicated_span_report(df).collect()
     }
     assert full[0] >= 1 and full[1] >= 1      # overlap seen uncapped
     assert capped[0] == 0                     # doc 0's copy lies past the cap

@@ -621,20 +621,16 @@ def test_principal_directions_beat_random_on_anisotropic(clustered):
     directions spread them to the data's actual extent and recover real
     pruning — with the result still exactly equal to brute force."""
     rep_pca = similarity.grid_occupancy_report(
-        clustered, threshold=0.9, n_projections=3, direction_mode="pca", dim=64
+        clustered, threshold=0.9, direction_mode="pca", dim=64
     ).collect()[0]
     rep_rnd = similarity.grid_occupancy_report(
-        clustered, threshold=0.9, n_projections=3, direction_mode="random", dim=64
+        clustered, threshold=0.9, direction_mode="random", dim=64
     ).collect()[0]
     assert rep_rnd["blocking_factor"] > 0.9, "random dirs unexpectedly pruned"
     assert rep_pca["blocking_factor"] < 0.6, "pca dirs failed to prune clusters"
     assert rep_pca["candidate_pairs"] < 0.6 * rep_pca["total_pairs"]
     # losslessness is direction-independent: pca-grid == exact
-    grid = _pairs(
-        similarity.embedding_near_dup_pairs(
-            clustered, threshold=0.9, n_projections=3, dim=64
-        )
-    )
+    grid = _pairs(similarity.embedding_near_dup_pairs(clustered, threshold=0.9, dim=64))
     exact = _pairs(
         similarity.embedding_near_dup_pairs(clustered, threshold=0.9, method="exact")
     )
@@ -643,17 +639,16 @@ def test_principal_directions_beat_random_on_anisotropic(clustered):
 
 def test_grid_occupancy_report_agrees_with_ground_truth(clustered):
     """The report's candidate_pairs must equal an independent driver-side
-    recount of the same grid (cells → 3^m neighbor collisions)."""
+    recount of the same grid (cells → 3^m neighbor collisions, m fixed at
+    GRID_PROJECTIONS)."""
     import itertools
     from collections import Counter
 
     import numpy as np
 
-    m, t = 3, 0.9
+    m, t = similarity.GRID_PROJECTIONS, 0.9
     dirs = similarity.principal_directions(clustered, "embedding", m, dim=64)
-    rep = similarity.grid_occupancy_report(
-        clustered, threshold=t, n_projections=m, directions=dirs, dim=64
-    ).collect()[0]
+    rep = similarity.grid_occupancy_report(clustered, threshold=t, dim=64).collect()[0]
     pts = np.stack([np.array(r["embedding"]) for r in clustered.collect()]).astype(float)
     pts /= np.linalg.norm(pts, axis=1, keepdims=True)
     w = float(np.sqrt(2 - 2 * t))

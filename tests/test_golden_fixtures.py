@@ -138,21 +138,18 @@ def test_dd_mm_yyyy_ambiguity_flip(spark, tmp_path):
 
 
 def test_prefer_format_breaks_ties(spark, tmp_path):
-    """prefer_format hint (reference profile.py:701-720) breaks exact count
-    ties; reference preference order wins otherwise."""
+    """Exact format-count ties go to the earlier format in reference
+    preference order (profile.py:701-720)."""
     rows = ["1|20240115", "2|2024-02-16"]
     df = _csv_df(spark, tmp_path, "tie.csv", "ID|D", rows)
     agg = df.agg(*V.date_format_counts_exprs("D")).collect()[0].asDict()
     assert V.detect_date_format(agg, "D")["format"] == "YYYYMMDD"  # pref order
-    assert (
-        V.detect_date_format(agg, "D", prefer_format="YYYY-MM-DD")["format"] == "YYYY-MM-DD"
-    )
 
 
 def test_date_distribution(spark, tmp_path):
     rows = ["1|20240101", "2|20240102", "3|20240201", "4|20250101"]
     df = _csv_df(spark, tmp_path, "dd.csv", "ID|D", rows)
-    dists = V.date_distribution(df, "D", "YYYYMMDD")
+    dists = V.date_distribution(df, "D")
     by_year = {r["year"]: r["cnt"] for r in dists["by_year"].collect()}
     assert by_year == {2024: 3, 2025: 1}
     by_month = {r["month"]: r["cnt"] for r in dists["by_month"].collect()}

@@ -22,7 +22,7 @@ from data_profiler_spark.functions.html import (
 from data_profiler_spark.io.intake import utf8_validity_udf
 
 
-def _py_reference_extract(html: str, block_newlines: bool = False) -> str:
+def _py_reference_extract(html: str) -> str:
     """Independent single-process extractor with the module's documented
     semantics (same chain, Python re instead of JVM regex)."""
     out = html
@@ -33,8 +33,6 @@ def _py_reference_extract(html: str, block_newlines: bool = False) -> str:
         r"(?s)<!--.*?-->",
     ):
         out = re.sub(pat, "", out)
-    if block_newlines:
-        out = re.sub(r"(?i)<(?:br ?/?|/p|/div|/h[1-6]|/li|/tr|/table|/blockquote|/pre)>", "\n", out)
     out = re.sub(r"(?s)</?[A-Za-z!][^>]*>", "", out)
     for ent, ch in ENTITIES:
         out = out.replace(ent, ch)
@@ -77,22 +75,17 @@ def test_extraction_matches_python_reference_on_messy_markup(spark):
     ]
     df = spark.createDataFrame([(i, c) for i, c in enumerate(cases)], "i long, h string")
     got = {
-        r["i"]: (r["plain"], r["block"])
-        for r in df.select(
-            "i",
-            html_to_text_expr(F.col("h")).alias("plain"),
-            html_to_text_expr(F.col("h"), block_newlines=True).alias("block"),
-        ).collect()
+        r["i"]: r["plain"]
+        for r in df.select("i", html_to_text_expr(F.col("h")).alias("plain")).collect()
     }
     for i, c in enumerate(cases):
-        assert got[i][0] == _py_reference_extract(c), c
-        assert got[i][1] == _py_reference_extract(c, block_newlines=True), c
+        assert got[i] == _py_reference_extract(c), c
     # semantic spot checks, independent of the reference impl
-    assert got[0][0] == "kept text"
-    assert got[1][0] == "after"
-    assert got[4][1] == "first\nsecond\n"
-    assert got[5][0] == '5 < 7 && 9 > 3, "quoted", it\'s, a space'
-    assert got[6][0] == "literal ampersand escape: &lt; stays as entity text"
+    assert got[0] == "kept text"
+    assert got[1] == "after"
+    assert got[4] == "firstsecond"
+    assert got[5] == '5 < 7 && 9 > 3, "quoted", it\'s, a space'
+    assert got[6] == "literal ampersand escape: &lt; stays as entity text"
 
 
 def test_extraction_is_narrow_jvm_plan(pages):

@@ -182,27 +182,6 @@ def test_csv_row_errors_multisplit_line_numbers(spark, tmp_path):
     assert single == expected
 
 
-def test_sniff_mismatch_warnings(spark, tmp_path):
-    """Reference runs.py:630-691: high-confidence detected-vs-configured
-    disagreement emits W_*_MISMATCH, detected wins, non-catastrophic."""
-    p = tmp_path / "mm.csv"
-    p.write_text('id|name|amount\n1|"alice"|10.00\n2|"bob"|20.00\n3|"eve"|30.00\n')
-    sniff = intake.sniff_csv(
-        spark, str(p), provided_delimiter=",", provided_quoted=False
-    )
-    assert sniff["delimiter"] == "|"  # detected wins
-    assert sniff["quoted"] is True
-    assert set(sniff["warnings"]) == {"W_DELIMITER_MISMATCH", "W_QUOTING_MISMATCH"}
-    rolled = E.error_rollup(intake.warnings_df(spark, sniff["warnings"]), 3)
-    assert not E.any_catastrophic(rolled)
-    assert {r["code"] for r in rolled.collect()} == set(sniff["warnings"])
-    # agreement (or no provided setting) → no warnings
-    assert intake.sniff_csv(spark, str(p), provided_delimiter="|", provided_quoted=True)[
-        "warnings"
-    ] == []
-    assert intake.sniff_csv(spark, str(p))["warnings"] == []
-
-
 def test_gzip_csv_intake(spark, tmp_path):
     """S1: codec auto-detection by extension — gzipped CSVs read
     transparently (reference decompresses by suffix/magic,

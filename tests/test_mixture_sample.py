@@ -4,6 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from data_profiler_spark.operators import sampling
 from data_profiler_spark.operators.sampling import (
     mixture_allocation,
     mixture_sample,
@@ -100,8 +101,8 @@ def test_quota_dict_broadcast_path_many_strata(spark):
     assert "BroadcastHashJoin" not in small_plan
 
 
-def test_stratified_null_stratum_big_path(spark):
-    """A NULL stratum above max_window_rows must neither vanish nor
+def test_stratified_null_stratum_big_path(spark, monkeypatch):
+    """A NULL stratum above MAX_WINDOW_ROWS must neither vanish nor
     poison the small strata (`~isin` over a set containing None is NULL
     for every non-member)."""
     rows = (
@@ -110,7 +111,8 @@ def test_stratified_null_stratum_big_path(spark):
         + [(2000 + i, "fr") for i in range(20)]
     )
     df = spark.createDataFrame(rows, "doc_id long, lang string")
-    out = stratified_sample_exact(df, "lang", 10, max_window_rows=100)
+    monkeypatch.setattr(sampling, "MAX_WINDOW_ROWS", 100)
+    out = stratified_sample_exact(df, "lang", 10)
     got = {
         r["lang"]: r["c"]
         for r in out.groupBy("lang").agg(F.count(F.lit(1)).alias("c")).collect()
@@ -118,7 +120,8 @@ def test_stratified_null_stratum_big_path(spark):
     assert got == {None: 10, "en": 10, "fr": 10}
     # and the selection equals the pure-window path (exactness under the
     # hash-threshold prefilter, null statum included)
-    plain = stratified_sample_exact(df, "lang", 10, max_window_rows=10**9)
+    monkeypatch.setattr(sampling, "MAX_WINDOW_ROWS", 10**9)
+    plain = stratified_sample_exact(df, "lang", 10)
     assert sorted(r["doc_id"] for r in out.collect()) == sorted(
         r["doc_id"] for r in plain.collect()
     )

@@ -12,8 +12,9 @@ passes. No Spark session is needed.
 
 The same rule holds for options: every defaulted parameter of a public
 function, or of a public class's ``__init__`` or public method, is set by
-some call in the repo (tests included), or is exempt by
-``EXEMPT_OPTIONS``. An option nothing sets is a constant; make it one.
+some call outside ``tests/``, or is exempt by ``EXEMPT_OPTIONS``. An
+option nothing but a test sets is a constant; make it one (a test that
+needs another value ``monkeypatch``-es the module constant).
 """
 
 from __future__ import annotations
@@ -44,6 +45,16 @@ EXEMPT_OPTIONS = (
     "streaming.scoring:start_scoring_stream.*",
     "streaming.stateful:dedup_stream.*",
     "operators.drift:drift_summary.*",
+    "streaming.scoring:windowed_keep_metrics.*",
+    # a COVERAGE.md test-reference fixture builder, whose callers are tests
+    "operators.multimodal:synth_media_df.*",
+    # a fixture's seed picks test data
+    "synth:skewed_pages_df.seed",
+    # a deployment's input-trust policy: the S2 UTF-8 gate costs a full
+    # python-UDF pass over html, so only a caller that distrusts its input
+    # turns it on
+    "pipeline:QualityFilterPipeline.run.validate_first",
+    "pipeline:QualityFilterPipeline.run.max_invalid_utf8",
 )
 
 
@@ -205,7 +216,7 @@ def _package_sources() -> dict[str, str]:
 
 
 def test_every_public_option_is_set_somewhere():
-    callers = [f.read_text() for p in CALLERS + [ROOT / "tests"] for f in _py_files(p)]
+    callers = [f.read_text() for p in CALLERS for f in _py_files(p)]
     unset = unset_options(_package_sources(), callers)
     assert not unset, (
         "defaulted parameters that no call sets; make each a constant: " + ", ".join(unset)

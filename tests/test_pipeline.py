@@ -280,28 +280,11 @@ def test_null_month_rows_survive_resume(pages, tmp_path):
     assert spark.read.parquet(os.path.join(out, "data")).count() == n
 
 
-def test_auto_salt_sizing_from_measured_skew(pages, tmp_path):
-    """salt_buckets='auto': the salt comes from the batch's measured
-    host-key skew (Zipf synth hosts → >1 power-of-two buckets), and the
-    choice is recorded in the audit log."""
-    from data_profiler_spark.io.audit import AuditLog
-
-    out = str(tmp_path / "autosalt")
-    sub = pages.filter(F.col("warc_ts") < F.lit("2023-02-01")).cache()
-    pipe = QualityFilterPipeline(pages.sparkSession, out, salt_buckets="auto")
-    res = pipe.run(sub, run_id="as1")
-    assert res.batches
-    ev = next(e for e in AuditLog(out).events() if e["event"] == "salt_chosen")
-    n = ev["buckets"]
-    assert n >= 1 and (n & (n - 1)) == 0 and ev["skew_ratio"] > 1.0
-
-
 def test_key_skew_report_and_salt_recommendation(pages):
     """Skew measurement on the synthetic Zipf host distribution: hot hosts
-    show up in skew_ratio, and the recommendation flattens them to a
-    bounded multiple of the average key."""
+    show up in skew_ratio, and one host is one salt key."""
     from data_profiler_spark.operators.corpus import url_host_expr
-    from data_profiler_spark.operators.skew import key_skew_report, recommend_salt_buckets
+    from data_profiler_spark.operators.skew import key_skew_report
 
     rep = key_skew_report(pages, url_host_expr(F.col("url"))).collect()[0].asDict()
     assert rep["total_rows"] == pages.count()
@@ -309,12 +292,6 @@ def test_key_skew_report_and_salt_recommendation(pages):
     assert rep["max_cnt"] >= rep["avg_cnt"]
     assert rep["skew_ratio"] > 1.0  # Zipf hosts are skewed
     assert 0 < rep["top1_share"] < 1
-    n = recommend_salt_buckets(rep)
-    assert 1 <= n <= 4096 and (n & (n - 1)) == 0  # power of two
-    # a perfectly uniform key needs no salting
-    assert recommend_salt_buckets({"skew_ratio": 1.0}) == 1
-    # a 1000x-hot key wants ~512 buckets at the default target
-    assert recommend_salt_buckets({"skew_ratio": 1000.0}) == 512
     # host extraction sanity
     hosts = pages.select(url_host_expr(F.col("url")).alias("h")).limit(5).collect()
     assert all(r["h"] and "/" not in r["h"] for r in hosts)

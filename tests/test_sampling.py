@@ -79,11 +79,12 @@ def test_token_budget_sample_null_priority_sorts_last(spark):
     assert {r["doc_id"] for r in got.collect()} == {1, 3}
 
 
-def test_token_budget_tied_priorities_hash_refinement(spark):
+def test_token_budget_tied_priorities_hash_refinement(spark, monkeypatch):
     """All-equal priorities (quantized quality scores): priority zoom can
     never separate them, so the operator must switch to md5-hash-range
-    refinement. boundary_cutoff=8 forces several refinement levels on a
-    300-row fixture; the answer must still equal the global prefix."""
+    refinement. A boundary cutoff of 8 forces several refinement levels on
+    a 300-row fixture; the answer must still equal the global prefix."""
+    monkeypatch.setattr(sampling, "BOUNDARY_CUTOFF", 8)
     df = spark.range(300).select(
         F.col("id").alias("doc_id"),
         F.lit(0.5).alias("prio"),
@@ -91,17 +92,17 @@ def test_token_budget_tied_priorities_hash_refinement(spark):
     )
     rows = df.collect()
     got = sampling.token_budget_sample(
-        df, 4000, priority=F.col("prio"), tokens=F.col("toks"),
-        bins=16, boundary_cutoff=8,
+        df, 4000, priority=F.col("prio"), tokens=F.col("toks"), bins=16
     ).collect()
     want_ids, want_cum = _global_prefix(rows, 4000)
     assert {r["doc_id"] for r in got} == want_ids
     assert sum(r["tokens"] for r in got) == want_cum
 
 
-def test_token_budget_zoom_refinement_close_priorities(spark):
+def test_token_budget_zoom_refinement_close_priorities(spark, monkeypatch):
     """Distinct but tightly clustered priorities: a small cutoff forces
     the priority-range zoom levels; exactness must hold."""
+    monkeypatch.setattr(sampling, "BOUNDARY_CUTOFF", 5)
     df = spark.range(200).select(
         F.col("id").alias("doc_id"),
         (0.5 + F.col("id") / 1e9).alias("prio"),
@@ -109,8 +110,7 @@ def test_token_budget_zoom_refinement_close_priorities(spark):
     )
     rows = df.collect()
     got = sampling.token_budget_sample(
-        df, 1500, priority=F.col("prio"), tokens=F.col("toks"),
-        bins=16, boundary_cutoff=5,
+        df, 1500, priority=F.col("prio"), tokens=F.col("toks"), bins=16
     ).collect()
     want_ids, want_cum = _global_prefix(rows, 1500)
     assert {r["doc_id"] for r in got} == want_ids
@@ -138,31 +138,27 @@ def test_stratified_sample_exact_counts_and_determinism(spark, documents):
     )
 
 
-def test_stratified_sample_hash_threshold_path_is_exact(spark, documents):
+def test_stratified_sample_hash_threshold_path_is_exact(spark, documents, monkeypatch):
     """Force every stratum down the big-stratum hash-threshold path
-    (max_window_rows=10) and one mixed run (only the largest stratum is
+    (MAX_WINDOW_ROWS=10) and one mixed run (only the largest stratum is
     'big'); both must equal the plain window answer."""
     plain = sorted(
         r["doc_id"]
         for r in sampling.stratified_sample_exact(documents, "lang", 7).collect()
     )
+    monkeypatch.setattr(sampling, "MAX_WINDOW_ROWS", 10)
     all_big = sorted(
-        r["doc_id"]
-        for r in sampling.stratified_sample_exact(
-            documents, "lang", 7, max_window_rows=10
-        ).collect()
+        r["doc_id"] for r in sampling.stratified_sample_exact(documents, "lang", 7).collect()
     )
     assert all_big == plain
     sizes = sorted(
         r["c"]
         for r in documents.groupBy("lang").agg(F.count("*").alias("c")).collect()
     )
-    mixed_cut = sizes[-1] - 1  # only the largest stratum exceeds it
+    # only the largest stratum exceeds the cut
+    monkeypatch.setattr(sampling, "MAX_WINDOW_ROWS", sizes[-1] - 1)
     mixed = sorted(
-        r["doc_id"]
-        for r in sampling.stratified_sample_exact(
-            documents, "lang", 7, max_window_rows=mixed_cut
-        ).collect()
+        r["doc_id"] for r in sampling.stratified_sample_exact(documents, "lang", 7).collect()
     )
     assert mixed == plain
 
@@ -179,25 +175,19 @@ def test_token_budget_histogram_is_bounded(spark):
     assert df.select(b.alias("b")).distinct().count() <= 16
 
 
-def test_token_budget_null_token_bins_and_bad_range(spark):
+def test_token_budget_null_token_bins_and_bad_range(spark, monkeypatch):
     """A bin whose docs all have NULL token counts must not crash the
-    driver scan (NULL tokens consume no budget, like the oracle's SUM);
-    lo >= hi is a caller error, reported as such."""
-    import pytest
-
-    from data_profiler_spark.operators import sampling
-
+    driver scan (NULL tokens consume no budget, like the oracle's SUM)."""
+    monkeypatch.setattr(sampling, "BOUNDARY_CUTOFF", 2)
     rows = [(i, 0.05, None) for i in range(40)] + [
         (100 + i, 0.9, 10) for i in range(5)
     ]
     df = spark.createDataFrame(rows, "doc_id long, p double, tk int")
     out = sampling.token_budget_sample(
-        df, 100, priority=F.col("p"), tokens=F.col("tk"), bins=8, boundary_cutoff=2
+        df, 100, priority=F.col("p"), tokens=F.col("tk"), bins=8
     )
     got = sorted(r["doc_id"] for r in out.collect())
     # all 5 real-token docs fit (50 <= 100); the 40 null-token docs also
     # fit (they consume nothing) — selection must not TypeError
     assert set(range(100, 105)).issubset(got)
     assert len(got) == 45
-    with pytest.raises(ValueError):
-        sampling.token_budget_sample(df, 10, priority=F.col("p"), tokens=F.col("tk"), lo=0.5, hi=0.5)

@@ -67,7 +67,7 @@ def test_line_dedup_aqe_splits_hot_line_key(spark):
     show the skew-split marker — proving the operator's join SHAPE is one
     AQE can defuse, which is the transferable 100-TB property.
 
-    This needs ``skew_safe=True``: AQE's OptimizeSkewedJoin only matches
+    This needs the materialized counts: AQE's OptimizeSkewedJoin only matches
     ``SMJ(Sort(ShuffleStage), Sort(ShuffleStage))``, and the count
     aggregate's final HashAggregate between Sort and the stage blocks the
     rule entirely (measured in this sandbox: a forced-skew join against a
@@ -113,7 +113,7 @@ def test_line_dedup_aqe_splits_hot_line_key(spark):
     try:
         for k, v in confs.items():
             spark.conf.set(k, v)
-        out = corpus.line_dedup(docs, skew_safe=True)
+        out = corpus.line_dedup(docs)
         rows = out.collect()
         assert len(rows) == 3000
         # correctness under the split: hot line survives only in doc 0
